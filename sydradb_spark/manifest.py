@@ -150,9 +150,9 @@ def read_txn(path: str, app_id: str) -> int | None:
     return None if val is None else int(val)
 
 
-def read_ledger(path: str) -> dict[str, int]:
-    """The full txn ledger of the latest version ({} when absent)."""
-    v = latest_version(path)
+def read_ledger(path: str, version: int | None = None) -> dict[str, int]:
+    """The full txn ledger of ``version`` (default: latest; {} when absent)."""
+    v = version if version is not None else latest_version(path)
     if v is None:
         return {}
     return {k: int(t) for k, t in (_read_doc(path, v).get("txn") or {}).items()}
@@ -390,6 +390,14 @@ def vacuum(
         if (mdir / f"v{kv}.json").exists()
         and (kv > v - keep_versions or _young(mdir / f"v{kv}.json"))
     }
+    if not kept_versions:
+        # LATEST names a version but no version file is listed: without a
+        # keep-set every data file past the age window would be reclaimed,
+        # committed ones included
+        raise RuntimeError(
+            f"vacuum({path!r}): no manifest version file is listed under "
+            f"LATEST={v} — refusing to reclaim data files without a keep-set"
+        )
     for kv in kept_versions:
         try:
             keep.update(read_files(path, kv))

@@ -42,6 +42,18 @@ POINTS_SCHEMA = StructType(
 )
 
 
+# the (series, tags, ts, value) shape an ingest batch arrives in
+INPUT_SCHEMA = "series string, tags map<string,string>, ts long, value double"
+
+
+def driver_batch(spark, rows: list) -> DataFrame:
+    """A driver-built (series, tags, ts, value) batch as ONE slice.
+    ``createDataFrame(rows)`` would split the rows across the default
+    parallelism; one slice lets ``storage.write_points`` write the batch in
+    one task without a shuffle (the HTTP ingest route and sydraQL INSERT)."""
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), INPUT_SCHEMA)
+
+
 def canonical_tags_json(tags: Column) -> Column:
     """Deterministic JSON for a tags map: entries sorted by key.
 

@@ -231,9 +231,11 @@ def read_txn(store: ObjectStore, table: str, app_id: str) -> int | None:
     return None if val is None else int(val)
 
 
-def read_ledger(store: ObjectStore, table: str) -> dict[str, int]:
-    """The full txn ledger of the latest version ({} when absent)."""
-    v = latest_version(store, table)
+def read_ledger(
+    store: ObjectStore, table: str, version: int | None = None
+) -> dict[str, int]:
+    """The full txn ledger of ``version`` (default: latest; {} when absent)."""
+    v = version if version is not None else latest_version(store, table)
     if v is None:
         return {}
     return {k: int(t) for k, t in (_read_doc(store, table, v).get("txn") or {}).items()}

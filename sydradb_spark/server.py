@@ -228,10 +228,9 @@ class _Handler(BaseHTTPRequestHandler):
                 (series, {str(k): str(v) for k, v in tags.items()}, ts, value)
             )
         if rows:
-            new = self.app.engine.spark.createDataFrame(
-                rows, "series string, tags map<string,string>, ts long, value double"
-            )
-            self.app.engine.ingest_points(new)
+            from sydradb_spark.model import driver_batch
+
+            self.app.engine.ingest_points(driver_batch(self.app.engine.spark, rows))
             from sydradb_spark import metrics
 
             metrics.inc("sydra_points_ingested_total", len(rows))

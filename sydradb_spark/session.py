@@ -107,6 +107,13 @@ def get_spark(app_name: str = "sydradb-spark", master: str | None = None) -> Spa
             os.environ.get("SYDRA_MAX_RESULT", "8g"),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # list up to 1024 read paths on the driver instead of in a Spark
+        # job: storage opens the points table from its manifest's exact file
+        # list, and above the default 32 paths every engine open and every
+        # post-ingest refresh ran a listing job that fought the readers for
+        # the same local cores. Here the job's tasks stat the same local
+        # disk the driver would; see DEPLOY.md for the cluster setting.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     return builder.getOrCreate()
 
@@ -141,6 +148,7 @@ def cluster_conf(
         # publishes, so skip v1's serial driver-side job-commit rename pass
         "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
         # hour-partitioned tables can reach 10^5+ partitions over a decade;
-        # driver-side listing must stay parallel
+        # listing must stay parallel (get_spark raises this for one host;
+        # DEPLOY.md "Session configuration" says why the two differ)
         "spark.sql.sources.parallelPartitionDiscovery.threshold": "32",
     }

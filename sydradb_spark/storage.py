@@ -4,10 +4,17 @@ Reference write path (engine.zig:317-369, storage/segment.zig:11-57): sort
 points by ts, split by UTC hour, write compressed segments + manifest entry.
 Spark-first translation:
 
-- ``write_points``: repartition by hour_bucket, sort within partitions by
-  (series_id, ts), ``partitionBy("hour_bucket")`` Parquet. Parquet row-group
-  min/max stats on (series_id, ts) replace the manifest; the partition
-  directory listing replaces manifest pruning.
+- ``write_points``: sort within tasks by (hour_bucket, series_id, ts),
+  ``partitionBy("hour_bucket")`` Parquet, one file per hour per write. A
+  multi-partition input is first shuffled by hour_bucket so each hour is
+  written by one task; a one-partition input (a driver-built HTTP or
+  INSERT batch) is already in one task and skips the shuffle. Every
+  committed file is listed in the manifest; Parquet row-group min/max
+  stats on (series_id, ts) prune within files.
+- ``read_points`` / ``read_points_version``: open one manifest version —
+  its exact file list, listed on the driver and read with a declared
+  schema (one footer's stored columns, read on the driver, plus
+  ``hour_bucket``), so a POSIX table opens without a Spark job.
 - ``hour_bucket_bounds``: the ONE rewrite Catalyst cannot do for us (SURVEY
   §4.1): derive hour_bucket partition predicates from ts predicates so a
   time-ranged query prunes partitions instead of scanning all of them.
@@ -136,6 +143,51 @@ def _write_tasks(spark: SparkSession) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
 
 
+def _one_partition(df: DataFrame) -> bool:
+    """True when one task already sees every row of ``df``. Read from the
+    executed plan's RDD without running a job. Plans whose RDD cannot be
+    built without running upstream work count as multi-partition untried:
+    an exchange, an adaptive plan (which only wraps exchanges and
+    subqueries) and a cached relation (its first use builds the cache)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if "Exchange" in name or name in ("AdaptiveSparkPlanExec", "InMemoryTableScanExec"):
+            return False
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return plan.execute().getNumPartitions() <= 1
+
+
+def _shaped(df: DataFrame):
+    """The table's one write shaping: canonical columns first, then rows
+    sorted by (hour_bucket, series_id, ts) within each task and written
+    ``partitionBy("hour_bucket")`` — one file per hour per task, sorted by
+    (series_id, ts). A multi-partition input is shuffled by hour_bucket
+    first so each hour is written by ONE task; a one-partition input (a
+    driver-built ingest batch) already is, and the shuffle would add a
+    stage and a job without changing a byte of the layout.
+
+    The sort key MUST lead with the partition column (r16): Spark's planned
+    write (V1Writes, default-on in 3.4+) requires child ordering
+    [hour_bucket] for a partitionBy write — a child sorted only by
+    (series_id, ts) does not satisfy it, so the planner stacked its own
+    Sort[hour_bucket] on top and EliminateSorts then dropped the user sort
+    entirely: files were written hour-clustered but NOT (series_id,
+    ts)-sorted. Leading with hour_bucket satisfies the required ordering
+    (no extra sort inserted) AND keeps the within-file (series_id, ts)
+    order — one sort, the intended layout."""
+    df = df.select(*POINT_COLS, *[c for c in df.columns if c not in POINT_COLS])
+    if not _one_partition(df):
+        df = df.repartition(_write_tasks(df.sparkSession), F.col("hour_bucket"))
+    return (
+        df.sortWithinPartitions("hour_bucket", "series_id", "ts")
+        .write.partitionBy("hour_bucket")
+    )
+
+
 def write_points(
     df: DataFrame,
     path: str,
@@ -143,9 +195,14 @@ def write_points(
     txn: tuple[str, int] | None = None,
     store=None,
 ) -> None:
-    """Hour-partitioned write, ts-sorted within files (reference segment
-    writer). One shuffle on hour_bucket; files within a partition are sorted
-    so Parquet page stats make ts-range reads skip pages.
+    """Hour-partitioned write, (series_id, ts)-sorted within files
+    (reference segment writer), one file per hour per write, so Parquet page
+    stats make ts-range reads skip pages. The shuffle on hour_bucket runs
+    only when it can change the layout: a multi-partition input (a bulk
+    load, a rewrite) is shuffled so each hour is written by one task; a
+    one-partition input — the HTTP ingest route and sydraQL INSERT build
+    their driver-side batch as one slice — is only sorted, and a 240-point
+    append is one job with one task (``_shaped``).
 
     Commits a file manifest (sydradb_spark.manifest) so readers flip between
     consistent versions atomically: overwrite and new-table writes always
@@ -217,24 +274,7 @@ def write_points(
         last = _pm_read_txn(path, store, txn[0])
         if last is not None and last >= txn[1]:
             return  # replayed batch — this txn is already durable
-    # the sort key MUST lead with the partition column (r16): Spark's
-    # planned write (V1Writes, default-on in 3.4+) requires child ordering
-    # [hour_bucket] for a partitionBy write — a child sorted only by
-    # (series_id, ts) does not satisfy it, so the planner stacked its own
-    # Sort[hour_bucket] on top and EliminateSorts then dropped the user
-    # sort entirely: files were written hour-clustered but NOT
-    # (series_id, ts)-sorted, silently voiding the row-group-stats skipping
-    # the layout contract promises (verified against the executed
-    # WriteFiles plan: one Sort[hour_bucket] node, user sort gone).
-    # Leading with hour_bucket satisfies the required ordering (no extra
-    # sort inserted) AND restores the within-partition (series_id, ts)
-    # order — one sort, the intended layout.
-    shaped = (
-        df.select(*POINT_COLS, *[c for c in df.columns if c not in POINT_COLS])
-        .repartition(_write_tasks(df.sparkSession), F.col("hour_bucket"))
-        .sortWithinPartitions("hour_bucket", "series_id", "ts")
-        .write.partitionBy("hour_bucket")
-    )
+    shaped = _shaped(df)
     if store is not None:
         moved = _publish_staged(shaped, path, df.sparkSession)
         if mode == "append" and manifested:
@@ -352,6 +392,16 @@ def _publish_staged(shaped_writer, path: str, spark: SparkSession) -> list[str]:
     return _stage_and_publish_hadoop(shaped_writer, path, spark)
 
 
+def table_version(path: str, store=None) -> int | None:
+    """The table's LATEST manifest version; None for a pre-manifest table
+    (or a URI location read without its store, which cannot carry a POSIX
+    manifest)."""
+    local = _posix_table_path(path)
+    if store is None and local is None:
+        return None
+    return _pm_latest(path if store is not None else local, store)
+
+
 def read_points(spark: SparkSession, path: str, store=None) -> DataFrame:
     """Read the table's LATEST manifest version (plain directory read for
     pre-manifest tables). ``store=`` reads a store-manifested table's
@@ -359,44 +409,7 @@ def read_points(spark: SparkSession, path: str, store=None) -> DataFrame:
     store reads as a plain directory (no POSIX manifest can exist there —
     a store-manifested URI table must be read with its store, or the read
     would include uncommitted staged orphans)."""
-    from sydradb_spark import manifest as mf
-    from sydradb_spark.model import POINTS_SCHEMA
-
-    local = _posix_table_path(path)
-    if store is not None:
-        if _pm_latest(path, store) is None:
-            return spark.createDataFrame([], POINTS_SCHEMA)
-        files = _pm_files(path, store)
-        if not files:
-            return spark.createDataFrame([], POINTS_SCHEMA)
-        df = (
-            spark.read.option("basePath", path)
-            .parquet(*[f"{path.rstrip('/')}/{f}" for f in files])
-        )
-    elif local is None:
-        df = spark.read.parquet(path)  # plain URI directory
-    elif mf.has_manifest(local):
-        path = str(local)
-        files = mf.read_files(path)
-        if not files:
-            return spark.createDataFrame([], POINTS_SCHEMA)
-        df = (
-            spark.read.option("basePath", path)
-            .parquet(*[f"{path}/{f}" for f in files])
-        )
-    else:
-        df = spark.read.parquet(str(local))
-    extra = [c for c in df.columns if c not in POINT_COLS]
-    # the partition column comes back as the inferred directory-value type
-    return df.select(
-        "series_id",
-        "series",
-        "tags",
-        "ts",
-        "value",
-        F.col("hour_bucket").cast("long").alias("hour_bucket"),
-        *extra,
-    )
+    return _open(spark, path, store)
 
 
 def read_points_version(
@@ -404,16 +417,87 @@ def read_points_version(
 ) -> DataFrame:
     """Time travel: read a specific committed manifest version (files are
     immutable and retained until vacuum). Both manifest backends."""
+    if store is None:
+        _require_posix(path, "read_points_version(store=None)")
+    return _open(spark, path, store, version)
+
+
+def _open(
+    spark: SparkSession, path: str, store, version: int | None = None
+) -> DataFrame:
+    """The one way to open the table: ``version`` (default LATEST) of the
+    manifest gives the exact file list, read by ``_read_files``. On a
+    POSIX table that runs no Spark job: the manifest replaces the
+    directory listing and the declared schema replaces footer inference.
+    Tables without a manifest read as a plain directory."""
     from sydradb_spark.model import POINTS_SCHEMA
 
+    local = _posix_table_path(path)
     if store is None:
-        path = str(_require_posix(path, "read_points_version(store=None)"))
+        if local is None:
+            return _canonical(spark.read.parquet(path))  # plain URI directory
+        path = str(local)
+    if version is None:
+        version = _pm_latest(path, store)
+        if version is None:
+            if store is not None:
+                return spark.createDataFrame([], POINTS_SCHEMA)
+            return _canonical(spark.read.parquet(path))  # pre-manifest table
     files = _pm_files(path, store, version=version)
     if not files:
         return spark.createDataFrame([], POINTS_SCHEMA)
-    df = spark.read.option("basePath", path).parquet(
-        *[f"{path.rstrip('/')}/{f}" for f in files]
+    return _read_files(spark, path, files)
+
+
+def _read_files(spark: SparkSession, path: str, files: list[str]) -> DataFrame:
+    """Read exactly ``files`` (relative to the table root ``path``) with a
+    declared schema (``_declared_schema``), so Spark infers nothing.
+    Listing the files stays on the driver as long as their count is under
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (raised in
+    ``session.get_spark``; see DEPLOY.md)."""
+    root = path.rstrip("/")
+    paths = [f"{root}/{f}" for f in files]
+    df = (
+        spark.read.schema(_declared_schema(spark, paths[0]))
+        .option("basePath", path)
+        .parquet(*paths)
     )
+    return _canonical(df)
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _declared_schema(spark: SparkSession, data_file: str):
+    """The stored columns of ``data_file`` plus ``hour_bucket`` as long —
+    the schema Spark's inference returns (it reads ONE footer without
+    mergeSchema), without its Spark job: a local file's footer is read on
+    the driver with pyarrow, where Spark's writer stores the Spark schema
+    of the written columns. A URI file, or one not written by Spark, falls
+    back to Spark's inference over that one file."""
+    import json
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    stored = None
+    local = _posix_table_path(data_file)
+    if local is not None:
+        import pyarrow.parquet as pq
+
+        raw = (pq.read_schema(local).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        if raw:
+            stored = StructType.fromJson(json.loads(raw))
+    if stored is None:
+        stored = spark.read.parquet(data_file).schema
+    return StructType(
+        [f for f in stored.fields if f.name != "hour_bucket"]
+        + [StructField("hour_bucket", LongType(), False)]
+    )
+
+
+def _canonical(df: DataFrame) -> DataFrame:
+    """Canonical column order, extra stored columns last; an inferred
+    partition column comes back as the directory-value type."""
     extra = [c for c in df.columns if c not in POINT_COLS]
     return df.select(
         *POINT_COLS[:5],
@@ -536,14 +620,7 @@ def compact_storage(
         compacted = compact_points(
             read_points_version(spark, path, snap_v, store=store), order_col
         )
-        extra = [c for c in compacted.columns if c not in POINT_COLS]
-        shaped = (
-            compacted.select(*POINT_COLS, *extra)
-            .repartition(_write_tasks(spark), F.col("hour_bucket"))
-            .sortWithinPartitions("hour_bucket", "series_id", "ts")
-            .write.partitionBy("hour_bucket")
-        )
-        moved = _publish_staged(shaped, path, spark)
+        moved = _publish_staged(_shaped(compacted), path, spark)
         rewritten = set(_pm_files(path, store, version=snap_v))
         _pm_commit(
             path,
@@ -664,20 +741,7 @@ def optimize_partitions(
     if not targets:
         return []
     target_files = [f for b in targets for f in by_part[b]]
-    df = spark.read.option("basePath", path).parquet(
-        *[f"{path.rstrip('/')}/{f}" for f in target_files]
-    )
-    extra = [c for c in df.columns if c not in POINT_COLS]
-    shaped = (
-        df.select(
-            *POINT_COLS[:5],
-            F.col("hour_bucket").cast("long").alias("hour_bucket"),
-            *extra,
-        )
-        .repartition(_write_tasks(spark), F.col("hour_bucket"))
-        .sortWithinPartitions("hour_bucket", "series_id", "ts")
-        .write.partitionBy("hour_bucket")
-    )
+    shaped = _shaped(_read_files(spark, path, target_files))
     # private staging + exact moved list (r13 review): a direct
     # mode("append") with a before/after data_files() diff both shares
     # Hadoop's _temporary/0 with concurrent appenders AND double-commits
@@ -716,7 +780,12 @@ def snapshot(path: str, dest: str, store=None) -> None:
         shutil.copytree(path, dest)
         return
     src_root, dst_root = Path(path), Path(dest)
-    files = _pm_files(path, store)
+    # ONE pinned version for the file list AND the ledger: resolving LATEST
+    # twice lets a commit landing in between pair version N's files with
+    # version N+1's ledger — a replay guard claiming batches whose rows the
+    # snapshot does not hold
+    version = _pm_latest(path, store)
+    files = _pm_files(path, store, version=version)
     dst_root.mkdir(parents=True)
     import os
 
@@ -733,9 +802,9 @@ def snapshot(path: str, dest: str, store=None) -> None:
     # batch would re-append after the restore. Same reason compact_storage
     # carries it through whole-table rewrites.
     ledger = (
-        mf.read_ledger(path)
+        mf.read_ledger(path, version)
         if store is None
-        else obs.read_ledger(store, POINTS_STORE_TABLE)
+        else obs.read_ledger(store, POINTS_STORE_TABLE, version)
     )
     mf.commit_replace(dest, files, ledger)
 
@@ -854,14 +923,7 @@ def delete_where(
             for f in _pm_files(path, store, version=snapshot_version)
             if f.startswith(affected_dirs)
         }
-        extra = [c for c in remaining.columns if c not in POINT_COLS]
-        shaped = (
-            remaining.select(*POINT_COLS, *extra)
-            .repartition(_write_tasks(remaining.sparkSession), F.col("hour_bucket"))
-            .sortWithinPartitions("hour_bucket", "series_id", "ts")
-            .write.partitionBy("hour_bucket")
-        )
-        new = _publish_staged(shaped, path, spark)
+        new = _publish_staged(_shaped(remaining), path, spark)
         _pm_commit(
             path,
             store,
@@ -917,14 +979,24 @@ def vacuum_points(
 
     obs.vacuum_versions(store, POINTS_STORE_TABLE, keep_versions=keep_versions)
     kept: set[str] = set()
+    read_versions = 0
     pre = f"{POINTS_STORE_TABLE}/_manifest/"
     for key in store.list(pre + "v"):
         try:
             kept.update(
                 obs.read_files(store, POINTS_STORE_TABLE, int(key[len(pre) + 1 : -5]))
             )
+            read_versions += 1
         except (ValueError, FileNotFoundError):
             continue  # racing a concurrent vacuum
+    if not read_versions:
+        # no readable version = no keep-set at all, not an empty table: an
+        # emptied or failed listing would otherwise reclaim EVERY data file
+        # past the age window, committed ones included
+        raise RuntimeError(
+            f"vacuum_points({path!r}): the store lists no readable manifest "
+            "version — refusing to reclaim data files without a keep-set"
+        )
     now = time.time()
     removed: list[str] = []
     local = _posix_table_path(path)

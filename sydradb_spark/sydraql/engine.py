@@ -7,6 +7,7 @@ reference's stats block (http.zig:270-295).
 
 from __future__ import annotations
 
+import threading
 import time
 from dataclasses import dataclass, field
 
@@ -65,11 +66,16 @@ class SydraQLEngine:
         self.storage_path = storage_path
         self.store = store
         self._storage = storage_mod
-        if points is None:
-            if storage_path is None:
-                raise ValueError("need points or storage_path")
-            points = storage_mod.read_points(spark, storage_path, store=store)
-        self.points = points
+        # the manifest version self.points serves (a lower bound: the read
+        # resolves LATEST again); None = unknown or a pre-manifest table
+        self._version: int | None = None
+        self._refresh_lock = threading.Lock()
+        if points is not None:
+            self.points = points
+        elif storage_path is None:
+            raise ValueError("need points or storage_path")
+        else:
+            self._refresh()
         # materialized rollup (rollup.build_rollup at rollup_step): eligible
         # bucketed aggregates are served from it (translator._try_rollup).
         # Lazy localCheckpoint = build-once-serve-many: the rollup plan
@@ -90,6 +96,23 @@ class SydraQLEngine:
         # checkpoint every K mutations so lineage depth stays bounded
         self._mutations = 0
         self._checkpoint_every = 16
+
+    def _refresh(self) -> None:
+        """Open the stored table, and re-open it after this engine committed
+        a write. Two concurrent HTTP ingests can finish write → read → assign
+        interleaved, and the slower re-read may hold the OLDER version:
+        assigning it would hide the other request's acknowledged points
+        from this engine. Refreshes run one at a time and only ever move
+        ``self.points`` to a newer manifest version — a version that is
+        not newer already holds this engine's commit."""
+        with self._refresh_lock:
+            latest = self._storage.table_version(self.storage_path, store=self.store)
+            if latest is not None and self._version is not None and latest <= self._version:
+                return
+            self.points = self._storage.read_points(
+                self.spark, self.storage_path, store=self.store
+            )
+            self._version = latest
 
     def _after_mutation(self) -> None:
         self.rollup = None
@@ -198,9 +221,7 @@ class SydraQLEngine:
             self._storage.write_points(
                 new, self.storage_path, mode="append", store=self.store
             )
-            self.points = self._storage.read_points(
-                self.spark, self.storage_path, store=self.store
-            )
+            self._refresh()
         else:
             if "__ns" in self.points.columns:
                 new = new.withColumn(
@@ -247,11 +268,9 @@ class SydraQLEngine:
                 # null-valued points only enter via ingest sources
                 raise ValidationError("INSERT requires non-null time and value")
             rows.append((stmt.target, {}, int(vals["ts"]), float(vals["value"])))
-        self.ingest_points(
-            self.spark.createDataFrame(
-                rows, "series string, tags map<string,string>, ts long, value double"
-            )
-        )
+        from sydradb_spark.model import driver_batch
+
+        self.ingest_points(driver_batch(self.spark, rows))
         count = len(rows)
         from sydradb_spark import metrics
 
@@ -282,9 +301,7 @@ class SydraQLEngine:
                 self.spark, self.storage_path, pred, ts_min=mn, ts_max=mx,
                 store=self.store,
             )
-            self.points = self._storage.read_points(
-                self.spark, self.storage_path, store=self.store
-            )
+            self._refresh()
         else:
             # Null-safe negation: where the predicate evaluates to NULL (e.g.
             # tag.host = 'x' on rows missing that tag), ~NULL is NULL and a
