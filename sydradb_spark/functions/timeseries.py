@@ -212,6 +212,71 @@ def anomalies_zscore(
     )
 
 
+_pickle_by_value_registered = False
+
+
+def _register_pickle_by_value() -> None:
+    """Ship this module's code with UDF closures, so the ``lttb`` kernel
+    unpickles on workers that cannot import sydradb_spark (the pattern of
+    ``pipeline/events.py``). Once per process."""
+    global _pickle_by_value_registered
+    if _pickle_by_value_registered:
+        return
+    from pyspark import cloudpickle
+
+    import sydradb_spark.functions.timeseries as _mod
+
+    cloudpickle.register_pickle_by_value(_mod)
+    _pickle_by_value_registered = True
+
+
+def lttb_indices(t, v, n_out: int):
+    """The one LTTB kernel: positions (into ``t`` and ``v``) of the
+    Largest-Triangle-Three-Buckets picks, in (ts, value) order — first and
+    last point kept, each of the ``n_out - 2`` interior buckets keeping the
+    point forming the largest triangle with the previous pick and the next
+    bucket's centroid. A series of at most ``n_out`` points keeps all of
+    them. The input need not be sorted: a stable (ts, value) sort with NaN
+    values last comes first, so duplicate timestamps pick the same points
+    on every request. ``lttb`` (per series, in an Arrow task) and the HTTP
+    range route (on the driver, over one bounded collect) both call it."""
+    import numpy as np
+
+    t = np.asarray(t)
+    v = np.asarray(v, dtype="float64")
+    order = np.lexsort((v, t))
+    n = len(order)
+    if n <= n_out:
+        return order
+    t = t[order].astype("float64")
+    v = v[order]
+    # n_out-2 interior buckets over points 1..n-2
+    edges = np.linspace(1, n - 1, n_out - 1).astype(int)
+    keep = [0]
+    prev = 0
+
+    def _seq_mean(a: np.ndarray) -> float:
+        # strict left-to-right summation: cumsum's last prefix is by
+        # construction the sequential fold, unlike ndarray.mean's
+        # 8-way-unrolled pairwise sum (ADVICE r12) — this makes the
+        # centroid bit-reproducible against any engine that folds
+        # left-to-right (the DuckDB oracle twin uses list_reduce)
+        return float(np.cumsum(a)[-1]) / len(a)
+
+    for b in range(n_out - 2):
+        s, e = edges[b], edges[b + 1]
+        nxt_s, nxt_e = edges[b + 1], (edges[b + 2] if b + 2 < len(edges) else n)
+        cx = _seq_mean(t[nxt_s:nxt_e]) if nxt_e > nxt_s else t[e - 1]
+        cy = _seq_mean(v[nxt_s:nxt_e]) if nxt_e > nxt_s else v[e - 1]
+        area = np.abs(
+            (t[prev] - cx) * (v[s:e] - v[prev]) - (t[prev] - t[s:e]) * (cy - v[prev])
+        )
+        prev = s + int(area.argmax())
+        keep.append(prev)
+    keep.append(n - 1)
+    return order[keep]
+
+
 def lttb(
     df: DataFrame,
     n_out: int,
@@ -220,61 +285,27 @@ def lttb(
     value_col: str = "value",
 ) -> DataFrame:
     """Largest-Triangle-Three-Buckets downsampling to ``n_out`` points per
-    series — the standard chart-serving downsampler (TimescaleDB ships the
-    same op): first/last points kept, each interior bucket keeps the point
-    forming the largest triangle with the previous pick and the next
-    bucket's centroid, preserving visual extremes where averaging flattens
-    them. Beyond-reference (the reference serves raw ranges).
+    series (``lttb_indices``) — the standard chart-serving downsampler
+    (TimescaleDB ships the same op), preserving visual extremes where
+    averaging flattens them. Beyond-reference (the reference serves raw
+    ranges).
 
     Scale/usage note: the selection is sequential over a series' points, so
     each (series) group runs in one Arrow task — this operator is for
-    SERVING bounded chart ranges (apply AFTER the pruned time-range scan,
-    where a range holds at most hours-to-days of points), not for
-    corpus-wide batch rewriting; the chunked-window machinery does not
-    apply because bucket picks depend on the previous pick.
+    bounded ranges, not corpus-wide batch rewriting; the chunked-window
+    machinery does not apply because bucket picks depend on the previous
+    pick. One bounded single-series range is cheaper on the driver: the
+    HTTP range route collects it and calls ``lttb_indices`` directly.
     """
-    import numpy as np
-    import pandas as pd
-
     if n_out < 3:
         raise ValueError("n_out must be >= 3 (first + last + interior)")
+    _register_pickle_by_value()
 
     def pick(pdf: pd.DataFrame) -> pd.DataFrame:
-        # stable sort with the repo's standard (ts, value) tiebreak —
-        # duplicate timestamps must not make repeated chart requests
-        # return different point sets
-        pdf = pdf.sort_values([ts_col, value_col], kind="mergesort").reset_index(
-            drop=True
+        idx = lttb_indices(
+            pdf[ts_col].to_numpy(), pdf[value_col].to_numpy(dtype="float64"), n_out
         )
-        n = len(pdf)
-        if n <= n_out:
-            return pdf
-        t = pdf[ts_col].to_numpy(dtype="float64")
-        v = pdf[value_col].to_numpy(dtype="float64")
-        # n_out-2 interior buckets over points 1..n-2
-        edges = np.linspace(1, n - 1, n_out - 1).astype(int)
-        keep = [0]
-        prev = 0
-        def _seq_mean(a: np.ndarray) -> float:
-            # strict left-to-right summation: cumsum's last prefix is by
-            # construction the sequential fold, unlike ndarray.mean's
-            # 8-way-unrolled pairwise sum (ADVICE r12) — this makes the
-            # centroid bit-reproducible against any engine that folds
-            # left-to-right (the DuckDB oracle twin uses list_reduce)
-            return float(np.cumsum(a)[-1]) / len(a)
-
-        for b in range(n_out - 2):
-            s, e = edges[b], edges[b + 1]
-            nxt_s, nxt_e = edges[b + 1], (edges[b + 2] if b + 2 < len(edges) else n)
-            cx = _seq_mean(t[nxt_s:nxt_e]) if nxt_e > nxt_s else t[e - 1]
-            cy = _seq_mean(v[nxt_s:nxt_e]) if nxt_e > nxt_s else v[e - 1]
-            area = np.abs(
-                (t[prev] - cx) * (v[s:e] - v[prev]) - (t[prev] - t[s:e]) * (cy - v[prev])
-            )
-            prev = s + int(area.argmax())
-            keep.append(prev)
-        keep.append(n - 1)
-        return pdf.iloc[keep]
+        return pdf.iloc[idx]
 
     return df.groupBy(partition_col).applyInPandas(pick, df.schema)
 

@@ -4,7 +4,7 @@ src/sydra/http.zig:452-477).
 The reference exposes process counters (queries served, points ingested,
 storage size) in the exposition format. Here the counters are a small
 process-local registry fed by the engine and ingest paths, plus storage
-gauges computed on demand; ``to_prometheus_text()`` renders the standard
+gauges read on demand from the table's manifest; ``to_prometheus_text()`` renders the standard
 ``# HELP`` / ``# TYPE`` / sample lines an unmodified Prometheus scraper
 accepts. Serving them over HTTP is one `http.server` handler away — kept
 out so the engine has no server dependency (SURVEY calls the sink
@@ -47,21 +47,49 @@ def reset() -> None:
         _COUNTERS.clear()
 
 
-def storage_gauges(path: str | None) -> dict[str, float]:
-    """On-demand storage gauges for a stored table (partition count, bytes) —
-    metadata-only, no data read."""
-    if not path or not Path(path).exists():
+def storage_gauges(
+    path: str | None, version: int | None = None, store=None
+) -> dict[str, float]:
+    """On-demand storage gauges for a stored table — metadata-only, no data
+    read. A manifested table reports manifest ``version`` (LATEST by
+    default; the HTTP server passes the engine's served version): its
+    number, live files, hour partitions and bytes. Files no version
+    references — orphans, staged leftovers, files waiting for vacuum — are
+    not counted. A pre-manifest table is its directory."""
+    from sydradb_spark import storage
+
+    if not path:
         return {}
-    parts = [d for d in Path(path).glob("hour_bucket=*") if d.is_dir()]
-    n_bytes = sum(f.stat().st_size for d in parts for f in d.glob("*.parquet"))
-    return {
-        "sydra_storage_partitions": float(len(parts)),
-        "sydra_storage_bytes": float(n_bytes),
+    local = storage._posix_table_path(path)
+    if version is None:
+        version = storage.table_version(path, store=store)
+    if version is None:
+        if local is None or not Path(local).exists():
+            return {}
+        files = [
+            str(f.relative_to(local)) for f in Path(local).glob("hour_bucket=*/*.parquet")
+        ]
+    else:
+        files = storage._pm_files(path if store is not None else local, store, version)
+    out = {
+        "sydra_storage_partitions": float(len({f.split("/", 1)[0] for f in files})),
+        "sydra_storage_files": float(len(files)),
     }
+    if version is not None:
+        out["sydra_storage_version"] = float(version)
+    if local is not None:
+        root = Path(local)
+        out["sydra_storage_bytes"] = float(
+            sum((root / f).stat().st_size for f in files if (root / f).exists())
+        )
+    return out
 
 
-def to_prometheus_text(storage_path: str | None = None) -> str:
-    """Render all counters + storage gauges in Prometheus exposition format."""
+def to_prometheus_text(
+    storage_path: str | None = None, version: int | None = None, store=None
+) -> str:
+    """Render all counters + storage gauges (``storage_gauges``) in
+    Prometheus exposition format."""
     with _LOCK:
         counters = dict(_COUNTERS)
     lines: list[str] = []
@@ -76,7 +104,7 @@ def to_prometheus_text(storage_path: str | None = None) -> str:
             lines.append(f"# TYPE {base} counter")
         if name in counters or "{" not in name:
             lines.append(f"{name} {counters.get(name, 0.0):g}")
-    for name, value in sorted(storage_gauges(storage_path).items()):
+    for name, value in sorted(storage_gauges(storage_path, version, store).items()):
         lines.append(f"# HELP {name} {name.replace('_', ' ')}")
         lines.append(f"# TYPE {name} gauge")
         lines.append(f"{name} {value:g}")

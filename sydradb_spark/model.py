@@ -60,8 +60,14 @@ def canonical_tags_json(tags: Column) -> Column:
     The reference hashes the raw tags JSON string; for a stable identity we
     canonicalize (sorted keys, no spaces) so the same logical tag set always
     hashes identically regardless of ingest order.
+
+    ``sort_array`` (not ``array_sort``, whose comparator lambda Catalyst
+    cannot fold) orders the entries: they are non-null structs with unique
+    keys, so both sort by key and give the same JSON. Over literal
+    arguments the whole identity then folds to a constant at planning time
+    (see ``series_id_literal``).
     """
-    sorted_map = F.map_from_entries(F.array_sort(F.map_entries(tags)))
+    sorted_map = F.map_from_entries(F.sort_array(F.map_entries(tags)))
     return F.when(tags.isNull() | (F.size(F.map_entries(tags)) == 0), F.lit("{}")).otherwise(
         F.to_json(sorted_map)
     )
@@ -74,6 +80,17 @@ def series_id(series: Column, tags: Column) -> Column:
     value parity is not required — only that (series, tags) maps 1:1).
     """
     return F.xxhash64(F.concat(series, F.lit("|"), canonical_tags_json(tags)))
+
+
+def series_id_literal(series: str, tags: dict) -> Column:
+    """``series_id`` of one literal (series, tags): a constant Catalyst
+    folds while planning, so a filter on it pushes into the scan as
+    ``series_id = <long>`` and hashing the name runs no Spark job."""
+    items = [F.lit(str(x)) for kv in sorted(tags.items()) for x in kv]
+    tag_col = (
+        F.create_map(*items) if items else F.create_map().cast("map<string,string>")
+    )
+    return series_id(F.lit(series), tag_col)
 
 
 def hour_bucket(ts: Column) -> Column:

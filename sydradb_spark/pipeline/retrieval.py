@@ -99,6 +99,11 @@ def term_bucket(term: Column) -> Column:
     return F.pmod(F.xxhash64(term), F.lit(BM25_TERM_BUCKETS)).cast("int")
 
 
+# On-disk layout version of bm25_write_index, written to its
+# ``_INDEX_VERSION`` commit marker.
+BM25_INDEX_VERSION = 1
+
+
 def bm25_write_index(docs: DataFrame, path: str, text_col: str = "text") -> None:
     """Write the postings TERM-HASH-PARTITIONED — the default written
     layout at scale: ``{path}/tb=<bucket>/part-*.parquet``. A search then
@@ -106,7 +111,18 @@ def bm25_write_index(docs: DataFrame, path: str, text_col: str = "text") -> None
     pruning does the inverted-index seek; ``bm25_scores`` adds the bucket
     filter automatically when it sees the ``tb`` column). Postings are
     doc-local, so append-only maintenance (``bm25_index(new).withColumn(
-    'tb', term_bucket(...)).write.mode('append')``) stays exact."""
+    'tb', term_bucket(...)).write.mode('append')``) stays exact.
+
+    The ``_INDEX_VERSION`` sidecar is the commit marker: removed before
+    the postings are written and written last, so an interrupted build
+    leaves an index ``bm25_read_index`` refuses."""
+    import os
+
+    from sydradb_spark.util import write_marker
+
+    marker = os.path.join(path, "_INDEX_VERSION")
+    if os.path.exists(marker):
+        os.remove(marker)
     idx = bm25_index(docs, text_col).withColumn("tb", term_bucket(F.col("term")))
     # cluster by the partition column before the partitioned write (r16,
     # guide §6 small files): unshuffled, every upstream task writes into
@@ -123,11 +139,30 @@ def bm25_write_index(docs: DataFrame, path: str, text_col: str = "text") -> None
         .partitionBy("tb")
         .parquet(path)
     )
+    write_marker(marker, f"{BM25_INDEX_VERSION}\n")
 
 
 def bm25_read_index(spark, path: str) -> DataFrame:
     """Read a ``bm25_write_index`` layout (carries the ``tb`` partition
-    column that activates pruning in ``bm25_scores``)."""
+    column that activates pruning in ``bm25_scores``). Fails fast when the
+    commit marker is missing (an interrupted or pre-marker build) or names
+    a layout this build doesn't read."""
+    import os
+
+    marker = os.path.join(path, "_INDEX_VERSION")
+    if not os.path.exists(marker):
+        raise FileNotFoundError(
+            f"bm25 index at {path} has no commit marker (_INDEX_VERSION): "
+            "its build did not finish — rebuild it with bm25_write_index"
+        )
+    with open(marker) as fh:
+        ver = fh.read().strip()
+    if ver != str(BM25_INDEX_VERSION):
+        raise ValueError(
+            f"bm25 index at {path} has layout version {ver}, this build "
+            f"reads version {BM25_INDEX_VERSION} — rebuild it with "
+            "bm25_write_index"
+        )
     return spark.read.parquet(path)
 
 

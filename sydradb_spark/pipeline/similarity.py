@@ -607,10 +607,20 @@ def write_ivf_index(
     cross-engine-exact ``assign_cluster`` expression, fully distributed.
     Incremental maintenance on ingest is an append of newly assigned rows
     into their cluster partitions; re-training (centroid drift) is a
-    rebuild, exactly like any IVF implementation. Returns the centroids."""
+    rebuild, exactly like any IVF implementation. Returns the centroids.
+
+    ``centroids.json`` is the commit marker: removed before the
+    assignments are written and written last (temp file + rename), so an
+    interrupted build leaves an index ``read_ivf_index`` refuses instead of
+    new assignments beside stale centroids."""
     import json
     import os
 
+    from sydradb_spark.util import write_marker
+
+    marker = os.path.join(path, "centroids.json")
+    if os.path.exists(marker):
+        os.remove(marker)
     sample_x = [
         list(r["__e"])
         for r in corpus.select(
@@ -641,18 +651,24 @@ def write_ivf_index(
         .partitionBy("cluster")
         .parquet(os.path.join(path, "assignments"))
     )
-    with open(os.path.join(path, "centroids.json"), "w") as f:
-        json.dump(centroids, f)
+    write_marker(marker, json.dumps(centroids))
     return centroids
 
 
 def read_ivf_index(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
     """Load a ``write_ivf_index`` table: (assignments frame with its
-    cluster partition column, centroid list)."""
+    cluster partition column, centroid list). Fails fast when the
+    ``centroids.json`` commit marker is missing: the build did not finish."""
     import json
     import os
 
-    with open(os.path.join(path, "centroids.json")) as f:
+    marker = os.path.join(path, "centroids.json")
+    if not os.path.exists(marker):
+        raise FileNotFoundError(
+            f"IVF index at {path} has no commit marker (centroids.json): "
+            "its build did not finish — rebuild it with write_ivf_index"
+        )
+    with open(marker) as f:
         centroids = json.load(f)
     df = spark.read.parquet(os.path.join(path, "assignments"))
     return df, [[float(v) for v in c] for c in centroids]

@@ -17,6 +17,18 @@ Routes (http.zig:64-120 dispatch):
 Bearer auth guards ``/api/*`` when a token is configured (http.zig:74-85);
 payload caps mirror the reference (256 KiB sydraql, 64 KiB range/find).
 
+Read-route plans (DEPLOY.md "Query execution"):
+
+- range, raw or ``max_points``: ONE Spark job. A (series, tags) identity
+  is a literal column Catalyst folds, so the scan filters on
+  ``series_id = <long>`` with the hour partitions pruned; the route
+  collects at most ``max_rows + 1`` points in (ts, value) order, and
+  ``max_points`` runs LTTB on the driver over those rows
+  (``functions.timeseries.lttb_indices``). Only a range over the cap
+  thins in Spark first, per time bucket, to about ``max_rows`` rows.
+- find: two jobs — one filter on tag-map lookups, deduplicated per series
+  (``tagindex.find_series``).
+
 Production posture (DEPLOY.md): this is the driver-side control/compat
 surface — interactive queries and trickle ingest. Bulk traffic belongs on
 Structured Streaming ingest and Spark Connect/Thrift.
@@ -126,11 +138,11 @@ class _Handler(BaseHTTPRequestHandler):
         elif url.path == "/metrics":
             from sydradb_spark import metrics
 
-            self._send(
-                200,
-                metrics.to_prometheus_text(self.app.engine.storage_path).encode(),
-                "text/plain; version=0.0.4",
+            eng = self.app.engine
+            text = metrics.to_prometheus_text(
+                eng.storage_path, version=eng.version, store=eng.store
             )
+            self._send(200, text.encode(), "text/plain; version=0.0.4")
         elif url.path == "/debug/compat/stats":
             from sydradb_spark.compat.translator import STATS
 
@@ -250,14 +262,18 @@ class _Handler(BaseHTTPRequestHandler):
             if not isinstance(tags, dict):
                 self._error(400, "tags must be a JSON object")
                 return
-            sid = self.app.series_id_for(str(params["series"]), tags)
+            from sydradb_spark.model import series_id_literal
+
+            # a constant the planner folds: the scan filters on the hashed
+            # id without a job to compute it
+            sid = series_id_literal(str(params["series"]), tags)
         else:
             self._error(400, "missing series identifier")
             return
         # optional chart downsampling: max_points=N applies LTTB to the
-        # range BEFORE the driver collect (beyond the reference, which only
-        # serves raw ranges) — spikes survive where bucket-averaging loses
-        # them, and the response size is bounded by N instead of max_rows
+        # range (beyond the reference, which only serves raw ranges) —
+        # spikes survive where bucket-averaging loses them, and the
+        # response size is bounded by N instead of max_rows
         max_points = params.get("max_points")
         if max_points is not None:
             try:
@@ -277,100 +293,71 @@ class _Handler(BaseHTTPRequestHandler):
                     400, f"max_points must be <= {self.app.max_rows}"
                 )
                 return
-        from pyspark.sql import functions as F
+        from sydradb_spark.storage import where_range
 
-        eng = self.app.engine
-        pts = (
-            eng.points.where(F.col("series_id") == sid)
-            .where((F.col("ts") >= start) & (F.col("ts") <= end))
-        )
-        # hard per-request work cap: the engine never hands LTTB (which
-        # materializes its whole input in one pandas group) or the raw
-        # collect more than ~max_rows points, however wide [start, end] is.
-        # Any point dropped beyond what the client asked for is SIGNALED
-        # (X-Sydra-Truncated) — the r07 shape limit()'d the earliest
-        # max_rows slice before LTTB, silently downsampling only the start
-        # of a wide window.
+        pts = where_range(self.app.engine.points, sid, start, end)
+        # hard per-request work cap: the driver never collects more than
+        # max_rows + 1 points, however wide [start, end] is. Both paths
+        # fetch one past the cap so truncation is detected, not guessed,
+        # and any point dropped beyond what the client asked for is
+        # SIGNALED (X-Sydra-Truncated).
         max_rows = self.app.max_rows
-        truncated = False
+        rows = _collect_range(pts, max_rows + 1)
+        truncated = len(rows) > max_rows
         covered_end = None
         if max_points is not None:
-            # one range traversal serves both the size probe and LTTB:
-            # persist the pruned scan, count it from the cache, thin only
-            # when over the cap, release in-call
-            from pyspark import StorageLevel
+            if truncated:
+                # bound LTTB input PER TIME-BUCKET so the downsample
+                # still spans the full requested range: max_points
+                # buckets over [start, end], keep the earliest
+                # max_rows/max_points rows of each — ~max_rows total,
+                # full-range coverage
+                from pyspark.sql import Window
+                from pyspark.sql import functions as F
 
-            pts = pts.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                total = pts.count()
-                src = pts
-                if total > max_rows:
-                    # bound LTTB input PER TIME-BUCKET so the downsample
-                    # still spans the full requested range: max_points
-                    # buckets over [start, end], keep the earliest
-                    # max_rows/max_points rows of each — ~max_rows total,
-                    # full-range coverage
-                    from pyspark.sql import Window
-
-                    n_buckets = max_points
-                    cap = max(max_rows // n_buckets, 1)
-                    span = max(end - start + 1, 1)
-                    bucket = F.least(
-                        F.lit(n_buckets - 1),
-                        F.floor(
-                            (F.col("ts") - F.lit(start))
-                            * F.lit(n_buckets)
-                            / F.lit(span)
-                        ),
-                    )
-                    w = Window.partitionBy("__b").orderBy("ts", "value")
-                    src = (
-                        pts.withColumn("__b", bucket)
-                        .withColumn("__rn", F.row_number().over(w))
-                        .where(F.col("__rn") <= cap)
-                        .drop("__b", "__rn")
-                    )
-                    truncated = True
-                from sydradb_spark.functions.timeseries import lttb
-
-                rows = (
-                    lttb(src, max_points)
-                    .orderBy("ts", "value")
-                    .select("ts", "value")
-                    .collect()
+                n_buckets = max_points
+                cap = max(max_rows // n_buckets, 1)
+                span = max(end - start + 1, 1)
+                bucket = F.least(
+                    F.lit(n_buckets - 1),
+                    F.floor(
+                        (F.col("ts") - F.lit(start)) * F.lit(n_buckets) / F.lit(span)
+                    ),
                 )
-            finally:
-                pts.unpersist()
-        else:
-            # raw range: fetch one past the cap so truncation is detected,
-            # not guessed
-            rows = (
-                pts.orderBy("ts", "value")
-                .limit(max_rows + 1)
-                .select("ts", "value")
-                .collect()
+                w = Window.partitionBy("__b").orderBy("ts", "value")
+                rows = _collect_range(
+                    pts.withColumn("__b", bucket)
+                    .withColumn("__rn", F.row_number().over(w))
+                    .where(F.col("__rn") <= cap),
+                    None,
+                )
+            from sydradb_spark.functions.timeseries import lttb_indices
+
+            picks = lttb_indices(
+                [r["ts"] for r in rows],
+                [r["value"] for r in rows],
+                max_points,
             )
-            if len(rows) > max_rows:
-                nxt = rows[max_rows]
-                rows = rows[:max_rows]
-                truncated = True
-                # covered-end is the last FULLY-served timestamp: if the
-                # cut falls inside a run of equal timestamps (sort is
-                # (ts, value)), that ts is only partially served — report
-                # the previous second so a client resuming from
-                # covered_end + 1 misses nothing (it may re-fetch the
-                # partial second's served rows, never lose the dropped
-                # ones)
-                last_ts = rows[-1]["ts"]
-                covered_end = last_ts - 1 if nxt["ts"] == last_ts else last_ts
-                if covered_end < start:
-                    # a single timestamp at the window start holds more
-                    # than max_rows rows: covered_end - 1 would send a
-                    # resuming client back to the identical request (r8
-                    # ADVICE). Signal the overflow distinctly instead of
-                    # a covered-end that cannot make progress.
-                    covered_end = None
-                    overflow_ts = last_ts
+            rows = [rows[i] for i in sorted(picks)]
+        elif truncated:
+            nxt = rows[max_rows]
+            rows = rows[:max_rows]
+            # covered-end is the last FULLY-served timestamp: if the cut
+            # falls inside a run of equal timestamps (sort is (ts,
+            # value)), that ts is only partially served — report the
+            # previous second so a client resuming from covered_end + 1
+            # misses nothing (it may re-fetch the partial second's served
+            # rows, never lose the dropped ones)
+            last_ts = rows[-1]["ts"]
+            covered_end = last_ts - 1 if nxt["ts"] == last_ts else last_ts
+            if covered_end < start:
+                # a single timestamp at the window start holds more than
+                # max_rows rows: covered_end - 1 would send a resuming
+                # client back to the identical request (r8 ADVICE).
+                # Signal the overflow distinctly instead of a covered-end
+                # that cannot make progress.
+                covered_end = None
+                overflow_ts = last_ts
         headers = None
         if truncated:
             headers = {"X-Sydra-Truncated": "true"}
@@ -406,6 +393,15 @@ class _Handler(BaseHTTPRequestHandler):
         self._send_json(200, sorted(r["series_id"] for r in found.collect()))
 
 
+def _collect_range(pts, limit: int | None) -> list:
+    """(ts, value) rows of a range frame, in (ts, value) order, at most
+    ``limit`` of them."""
+    out = pts.orderBy("ts", "value")
+    if limit is not None:
+        out = out.limit(limit)
+    return out.select("ts", "value").collect()
+
+
 class SydraHttpServer:
     """Threaded HTTP server over one SydraQLEngine. ``port=0`` → ephemeral."""
 
@@ -429,21 +425,13 @@ class SydraHttpServer:
         self._thread: threading.Thread | None = None
 
     def series_id_for(self, series: str, tags: dict) -> int:
-        """(series, tags) → series_id via the model's own hash expression —
-        one tiny JVM job, bit-identical to ingest-side identity."""
-        from pyspark.sql import functions as F
+        """(series, tags) → series_id: the same literal column the range
+        route filters on, evaluated in one tiny job."""
+        from sydradb_spark.model import series_id_literal
 
-        from sydradb_spark.model import series_id
-
-        tag_items = [x for kv in sorted(tags.items()) for x in kv]
-        tag_col = (
-            F.create_map(*[F.lit(str(x)) for x in tag_items])
-            if tag_items
-            else F.create_map().cast("map<string,string>")
-        )
         row = (
             self.engine.spark.range(1)
-            .select(series_id(F.lit(series), tag_col).alias("sid"))
+            .select(series_id_literal(series, tags).alias("sid"))
             .collect()
         )
         return row[0]["sid"]

@@ -402,14 +402,17 @@ def table_version(path: str, store=None) -> int | None:
     return _pm_latest(path if store is not None else local, store)
 
 
-def read_points(spark: SparkSession, path: str, store=None) -> DataFrame:
-    """Read the table's LATEST manifest version (plain directory read for
-    pre-manifest tables). ``store=`` reads a store-manifested table's
-    entry list through the objectstore protocol; a URI path WITHOUT a
-    store reads as a plain directory (no POSIX manifest can exist there —
-    a store-manifested URI table must be read with its store, or the read
-    would include uncommitted staged orphans)."""
-    return _open(spark, path, store)
+def read_points(
+    spark: SparkSession, path: str, store=None, version: int | None = None
+) -> DataFrame:
+    """Read the table's manifest ``version``, LATEST by default (plain
+    directory read for pre-manifest tables). ``store=`` reads a
+    store-manifested table's entry list through the objectstore protocol;
+    a URI path WITHOUT a store reads as a plain directory (no POSIX
+    manifest can exist there — a store-manifested URI table must be read
+    with its store, or the read would include uncommitted staged
+    orphans)."""
+    return _open(spark, path, store, version)
 
 
 def read_points_version(
@@ -537,8 +540,20 @@ def scan_range(
 ) -> DataFrame:
     """Engine.queryRange (engine.zig:376-378): partition pruning via derived
     hour_bucket bounds + row-group skipping via the (series_id, ts) sort."""
-    df = read_points(spark, path, store=store)
-    hb = hour_bucket_bounds(start, end)
+    return where_range(read_points(spark, path, store=store), series_id, start, end)
+
+
+def where_range(
+    df: DataFrame,
+    series_id: int | Column | None = None,
+    start: int | None = None,
+    end: int | None = None,
+) -> DataFrame:
+    """One series over ``ts`` ∈ [start, end]: the series_id and ts filters,
+    plus the derived hour_bucket bounds when ``df`` has that column.
+    ``series_id`` may be a constant Column (``model.series_id_literal``);
+    Catalyst folds it, so the scan still filters on a pushed literal."""
+    hb = hour_bucket_bounds(start, end) if "hour_bucket" in df.columns else None
     if hb is not None:
         df = df.where(hb)
     if series_id is not None:

@@ -66,9 +66,9 @@ class SydraQLEngine:
         self.storage_path = storage_path
         self.store = store
         self._storage = storage_mod
-        # the manifest version self.points serves (a lower bound: the read
-        # resolves LATEST again); None = unknown or a pre-manifest table
-        self._version: int | None = None
+        # the manifest version self.points serves; None = in-memory points,
+        # a pre-manifest table or a URI table read without its store
+        self.version: int | None = None
         self._refresh_lock = threading.Lock()
         if points is not None:
             self.points = points
@@ -107,12 +107,12 @@ class SydraQLEngine:
         not newer already holds this engine's commit."""
         with self._refresh_lock:
             latest = self._storage.table_version(self.storage_path, store=self.store)
-            if latest is not None and self._version is not None and latest <= self._version:
+            if latest is not None and self.version is not None and latest <= self.version:
                 return
             self.points = self._storage.read_points(
-                self.spark, self.storage_path, store=self.store
+                self.spark, self.storage_path, store=self.store, version=latest
             )
-            self._version = latest
+            self.version = latest
 
     def _after_mutation(self) -> None:
         self.rollup = None

@@ -4,11 +4,10 @@ Reference: tags.zig:4-50 maintains ``"k=v" → [series_id]``; /api/v1/find
 (http.zig:832-912) intersects (AND) or unions (OR) those sets.
 
 Spark-first: the index is a *derived* DataFrame (explode the tags map,
-distinct) — never a second source of truth to keep in sync. AND/OR become a
-single aggregation over the exploded matches: a series matches AND when it
-hits all requested pairs (count distinct == #pairs), OR when it hits any.
-That is one shuffle on series_id regardless of how many pairs are requested —
-no iterative set intersection.
+distinct) — never a second source of truth to keep in sync. Find does not
+need the index: every row carries its series' tags map, so AND/OR is one
+filter on map lookups (``tags[k] = v`` per requested pair) over a single
+scan, deduplicated to one row per series.
 """
 
 from __future__ import annotations
@@ -61,14 +60,9 @@ def find_series(
     items = list(match.items()) if isinstance(match, dict) else list(dict.fromkeys(match))
     if not items:
         raise ValueError("empty match set")
-    pairs = tag_pairs(points)
-    cond = None
-    for k, v in items:
-        c = (F.col("tag_key") == k) & (F.col("tag_value") == v)
-        cond = c if cond is None else (cond | c)
-    hits = pairs.where(cond).groupBy("series_id").agg(
-        F.countDistinct("tag_key", "tag_value").alias("__hits")
-    )
-    needed = len(items) if mode == "and" else 1
-    matched = hits.where(F.col("__hits") >= needed).select("series_id")
-    return series_catalog(points).join(matched, on="series_id", how="semi")
+    # a missing key or a null map looks up null: no match, not null
+    hits = [F.coalesce(F.col("tags")[k] == v, F.lit(False)) for k, v in items]
+    cond = hits[0]
+    for h in hits[1:]:
+        cond = (cond & h) if mode == "and" else (cond | h)
+    return series_catalog(points.where(cond))

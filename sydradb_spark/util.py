@@ -18,6 +18,22 @@ def hadoop_fs(spark, path: str):
     return jvm, jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
+def write_marker(path: str, text: str) -> None:
+    """Write the file ``path`` whole or not at all: a temp file beside it,
+    then ``os.replace``. An index writes its commit marker this way AFTER
+    its data (and removes the old marker before it), so a reader that
+    finds the marker finds complete data, and a crash in between leaves no
+    marker."""
+    import os
+
+    tmp = f"{path}.tmp-{os.getpid()}"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+
+
 def spread(df: DataFrame) -> DataFrame:
     """Repartition up to the cluster's parallelism when the input arrives in
     fewer splits (e.g. one small parquet file below maxPartitionBytes) —
