@@ -269,7 +269,7 @@ def main() -> None:
 
     # final maintenance pass quiesced, then the verdicts
     storage.optimize_partitions(spark, table, args.optimize_max_files)
-    mf.vacuum(table, keep_versions=2, min_age_seconds=0)
+    storage.vacuum_points(table, keep_versions=2, min_age_seconds=0)
 
     # --- verdict 1: multiset equality modulo the recorded deletions ---------
     del_pred = F.lit(False)

@@ -316,10 +316,13 @@ def main() -> None:
     if manifested:
         # bound check over the MANIFEST (what readers see), then a final
         # min_age=0 vacuum must leave disk == manifest (orphans reclaimed)
-        from sydradb_spark.streaming.rollup_stream import _mf_files
+        from sydradb_spark import manifest as mf
+        from sydradb_spark.streaming.rollup_stream import STORE_TABLE
 
         live_dirs = sorted(
-            n for n in (_mf_files(roll, store) or []) if n.startswith("b_")
+            n
+            for n in mf.read_files(roll, store=store, key=STORE_TABLE)
+            if n.startswith("b_")
         )
         vacuum_rollup(roll, store, keep_versions=1, min_age_seconds=0)
         on_disk = {
@@ -327,7 +330,7 @@ def main() -> None:
             for p in Path(roll).iterdir()
             if p.is_dir() and p.name[0] in "bc" and p.name[1] == "_"
         }
-        manifest_now = set(_mf_files(roll, store) or [])
+        manifest_now = set(mf.read_files(roll, store=store, key=STORE_TABLE))
         orphans_reclaimed = on_disk == manifest_now
     else:
         live_dirs = sorted(p.name for p in Path(roll).glob("b_*") if p.is_dir())

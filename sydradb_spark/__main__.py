@@ -25,7 +25,7 @@ def build_parser() -> argparse.ArgumentParser:
             default=None,
             help="objectstore root for the table's manifest "
             "(LocalFSObjectStore; r14 — required when --storage is a "
-            "non-POSIX URI, where the link-CAS protocol is rejected)",
+            "non-POSIX URI, where no manifest can live beside the data)",
         )
 
     serve = sub.add_parser("serve", help="run HTTP + pgwire front-ends")

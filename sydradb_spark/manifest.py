@@ -1,298 +1,233 @@
-"""Versioned file manifests: atomic commits for the stored points table.
+"""Versioned file manifests: the one atomic-commit protocol of every table.
 
 The reference tracks live segments in a MANIFEST and swaps it atomically
 (src/sydra/storage/manifest.zig); the Spark translation is the same idea a
-table format (Delta/Iceberg) uses — a JSON file list per version plus ONE
-atomic pointer rename:
+table format (Delta/Iceberg) uses — a JSON file list per version plus a
+pointer hint:
 
-    <table>/_manifest/v1.json   {"version": 1, "files": ["hour_bucket=0/..."]}
-    <table>/_manifest/v2.json
-    <table>/_manifest/LATEST    "2"          <- rename() = the commit point
+    <prefix>v1.json   {"version": 1, "files": ["hour_bucket=0/..."], "txn": {...}}
+    <prefix>v2.json
+    <prefix>LATEST    "2"
 
-Writers stage new data files into the normal ``hour_bucket=*/`` layout
-(Parquet part files have unique names, so appends never collide), then
-commit the next version. The COMMIT POINT is the atomic exclusive
-``link(2)`` of a fully-written temp file to ``v{N+1}.json`` — exactly one
-committer can win a version (CAS), a loser re-reads and retries, and a
-crash before the link leaves the table at the previous version; readers
-never observe a partial rewrite. ``LATEST`` is a monotonic pointer HINT
-advanced after the link (readers take ``max(pointer, listed versions)``,
-so a stale or briefly regressed pointer is harmless). Same-host committers
-additionally serialize on an advisory flock — cheap, and it keeps local
-retry loops short — but correctness under multi-host concurrency rests on
-the link CAS, which works on shared POSIX filesystems (incl. NFS) where
-flock historically does not. Old version files stay on disk until
-``vacuum`` (which also gives cheap time travel via ``read_version``).
+The protocol is written once, against the five primitives of an
+``objectstore.ObjectStore``. The COMMIT POINT is ``put_if_absent`` of
+``v{N+1}.json``: exactly one committer can win a version (CAS), a loser
+re-reads and retries, and a crash before it leaves the table at the
+previous version; readers never observe a partial rewrite. ``LATEST`` is a
+monotonic pointer HINT advanced after the win (readers take ``max(pointer,
+listed versions)``, so a stale, regressed or corrupt pointer is harmless).
+There are no locks: contention is absorbed by the retry loop, on one host
+and across hosts alike. Old versions stay until ``prune_versions`` (which
+also gives cheap time travel via ``read_files(path, version)``).
+
+Where the manifest lives (``_at``, the one resolver):
+
+- a POSIX table (a plain or ``file://`` path, ``store=None``) is a
+  ``LocalFSObjectStore`` over the table directory with prefix
+  ``_manifest/`` — ``put_if_absent`` there is write-temp + exclusive
+  ``link(2)``, atomic on local filesystems and NFS;
+- a caller-supplied store (S3/GCS/Azure client, or any ``ObjectStore``)
+  keeps it under ``<key>/_manifest/`` — ``points`` for the points table,
+  ``rollup`` for the streaming rollup — while the data files live wherever
+  the table path points.
+
+A URI path without a store is rejected: a local manifest for an
+object-store table would commit the exactly-once ledger to a relative
+local ``s3a:/...`` directory while the data went to the store.
+
+The txn ledger (``txn``: app id → highest committed batch) is the
+idempotent-sink log of Structured Streaming (SIGMOD 2018) and the twin of
+the reference's WAL highwater replay cutoff (engine.zig:406-437): a commit
+whose batch is already in the ledger is a no-op. Every commit carries the
+ledger forward; ``commit_replace`` (restore) replaces it.
 
 Managed-table alternative: the same storage layout drops into Delta or
-Iceberg by replacing this module's commit with the format's conditional
-commit (their optimistic transaction log is this file's CAS, generalized);
-``storage.write_points`` is the single seam that would change.
-
-Object-store deployments (S3/GCS/Azure — no link, no rename, no flock):
-``sydradb_spark.objectstore`` carries this exact protocol with the CAS
-re-based on the stores' native conditional PUT (If-None-Match /
-if-generation-match:0); same version race, same retry, same pointer-hint
-semantics, concurrency-tested against the same two-committer barrier race.
-
-Tables without a ``_manifest`` dir keep the plain directory semantics —
-``storage.read_points`` falls back transparently.
+Iceberg by replacing ``commit`` with the format's conditional commit;
+``storage.write_points`` is the single seam that would change. Tables
+without a manifest keep plain directory semantics in ``storage``.
 """
 
 from __future__ import annotations
 
 import json
-from pathlib import Path
+import time
+
+from sydradb_spark.objectstore import LocalFSObjectStore, ObjectStore
 
 MANIFEST_DIR = "_manifest"
+POINTS_KEY = "points"  # a caller-supplied store's key for the points table
 
 
-def _root(path: str) -> Path:
-    # non-POSIX triage (VERDICT r13 item 1): Path('s3a://bucket/tbl') is a
-    # RELATIVE local path 's3a:/bucket/tbl' on which mkdir/link/flock all
-    # SUCCEED — the exactly-once ledger would land on the driver's local
-    # disk while the data goes to the store, silently voiding the
-    # guarantee (a second driver gets a fresh empty ledger). This module's
-    # link(2)-CAS protocol is POSIX-only by construction; object-store
-    # tables route their manifest through ``sydradb_spark.objectstore``
-    # (storage.write_points ``store=``). file:// URIs are local paths.
+def _at(
+    path: str, store: ObjectStore | None = None, key: str = POINTS_KEY
+) -> tuple[ObjectStore, str]:
+    """(store, key prefix) holding the manifest of the table at ``path``."""
+    if store is not None:
+        return store, f"{key}/{MANIFEST_DIR}/"
     from sydradb_spark.ingest import _posix_checkpoint_path
 
     local = _posix_checkpoint_path(path)
     if local is None:
         raise ValueError(
-            f"the POSIX manifest protocol cannot live on {path!r}: link(2) "
-            "has no object-store equivalent — pass store= (an "
-            "objectstore.ObjectStore scoped to this table) so the manifest "
-            "commits through the store's conditional PUT"
+            f"{path!r} is not a POSIX path, so its manifest cannot live beside "
+            "the data: pass store= (an objectstore.ObjectStore scoped to this "
+            "table) so the manifest commits through the object-store's "
+            "conditional PUT"
         )
-    return Path(local)
+    return LocalFSObjectStore(local), f"{MANIFEST_DIR}/"
 
 
-def _mdir(path: str) -> Path:
-    return _root(path) / MANIFEST_DIR
-
-
-def _tree_mtime(root: Path) -> float:
-    """Newest mtime anywhere inside ``root`` (the dir itself included).
-    A long-running Spark write into a staging tree advances only LEAF
-    mtimes — judging liveness by the root dir's own mtime would let a
-    vacuum rmtree a live writer's staging mid-write (ADVICE r12). Missing
-    entries (racing their creator/deleter) count as 'now' = maximally
-    young, so races always err toward keeping."""
-    import time
-
-    newest = 0.0
-    try:
-        newest = root.stat().st_mtime
-        for p in root.rglob("*"):
+def _versions(st: ObjectStore, pre: str) -> dict[int, str]:
+    """Listed version number → key."""
+    out = {}
+    for k in st.list(pre + "v"):
+        name = k[len(pre):]
+        if name.endswith(".json"):
             try:
-                m = p.stat().st_mtime
-            except FileNotFoundError:
-                return time.time()
-            if m > newest:
-                newest = m
-    except FileNotFoundError:
-        return time.time()
-    return newest
+                out[int(name[1:-5])] = k
+            except ValueError:
+                pass
+    return out
 
 
-def has_manifest(path: str) -> bool:
-    mdir = _mdir(path)
-    return (mdir / "LATEST").exists() or any(mdir.glob("v*.json"))
-
-
-def latest_version(path: str) -> int | None:
+def latest_version(
+    path: str, *, store: ObjectStore | None = None, key: str = POINTS_KEY
+) -> int | None:
     """Newest committed version: max of the pointer hint and the listed
-    version files. The listing makes a committed-but-unpointed version (a
-    crash or a concurrent committer between link and pointer advance)
-    visible, and makes a briefly regressed pointer harmless."""
-    mdir = _mdir(path)
-    cands = []
-    latest = mdir / "LATEST"
-    if latest.exists():
+    version keys. The listing makes a committed-but-unpointed version (a
+    crash or a concurrent committer between the CAS and the pointer
+    advance) visible; a stale or corrupt pointer never decides anything.
+    Object-store LIST is strongly consistent on S3/GCS/Azure."""
+    st, pre = _at(path, store, key)
+    cands = list(_versions(st, pre))
+    raw = st.get(pre + "LATEST")
+    if raw is not None:
         try:
-            cands.append(int(latest.read_text().strip()))
-        except (ValueError, FileNotFoundError):
-            # corrupt/empty/mid-replace pointer: the hint must never
-            # decide anything, least of all brick the table — the listed
-            # versions below are the source of truth (the objectstore
-            # twin already guards this identically)
+            cands.append(int(raw.decode().strip()))
+        except ValueError:
             pass
-    if mdir.exists():
-        cands.extend(int(p.stem[1:]) for p in mdir.glob("v*.json"))
-    return max(cands) if cands else None
+    return max(cands, default=None)
 
 
-def _read_doc(path: str, version: int) -> dict:
-    return json.loads((_mdir(path) / f"v{version}.json").read_text())
+def has_manifest(
+    path: str, *, store: ObjectStore | None = None, key: str = POINTS_KEY
+) -> bool:
+    return latest_version(path, store=store, key=key) is not None
 
 
-def read_files(path: str, version: int | None = None) -> list[str]:
+def _read_doc(st: ObjectStore, pre: str, version: int) -> dict:
+    raw = st.get(pre + f"v{version}.json")
+    if raw is None:
+        raise FileNotFoundError(f"missing manifest {pre}v{version}.json")
+    return json.loads(raw)
+
+
+def read_files(
+    path: str,
+    version: int | None = None,
+    *,
+    store: ObjectStore | None = None,
+    key: str = POINTS_KEY,
+) -> list[str]:
     """Relative data-file paths of ``version`` (default: latest)."""
-    v = version if version is not None else latest_version(path)
+    v = version if version is not None else latest_version(path, store=store, key=key)
     if v is None:
         raise FileNotFoundError(f"no manifest at {path}")
-    return list(_read_doc(path, v)["files"])
+    return list(_read_doc(*_at(path, store, key), v)["files"])
 
 
-def read_txn(path: str, app_id: str) -> int | None:
-    """Highest transaction version committed for ``app_id`` (None when the
-    table has no manifest or the app has never committed). The txn ledger is
-    the streaming sink's replay guard — the Spark-side twin of the
-    reference's WAL highwater-mark replay cutoff (engine.zig:406-437): a
-    foreachBatch re-delivery of an already-durable ``batch_id`` is detected
-    here and becomes a no-op instead of a duplicate append."""
-    v = latest_version(path)
-    if v is None:
-        return None
-    val = (_read_doc(path, v).get("txn") or {}).get(app_id)
-    return None if val is None else int(val)
-
-
-def read_ledger(path: str, version: int | None = None) -> dict[str, int]:
-    """The full txn ledger of ``version`` (default: latest; {} when absent)."""
-    v = version if version is not None else latest_version(path)
+def read_ledger(
+    path: str,
+    version: int | None = None,
+    *,
+    store: ObjectStore | None = None,
+    key: str = POINTS_KEY,
+) -> dict[str, int]:
+    """The txn ledger of ``version`` (default: latest; {} when absent)."""
+    v = version if version is not None else latest_version(path, store=store, key=key)
     if v is None:
         return {}
-    return {k: int(t) for k, t in (_read_doc(path, v).get("txn") or {}).items()}
+    doc = _read_doc(*_at(path, store, key), v)
+    return {k: int(t) for k, t in (doc.get("txn") or {}).items()}
 
 
-def commit_replace(path: str, files: list[str], txn_map: dict[str, int] | None) -> int:
-    """Full-replacement commit that also REPLACES the txn ledger — the
-    restore path (r14): rewinding a table to a snapshot must rewind the
-    replay guard WITH it, so a streaming batch delivered after the snapshot
-    re-appends into the restored table instead of no-op'ing against the
-    future ledger (and a ledger the snapshot never had doesn't survive the
-    rewind). Offline-maintenance context: single committer, one publish
-    attempt."""
-    mdir = _mdir(path)
-    mdir.mkdir(parents=True, exist_ok=True)
-    cur = latest_version(path)
-    nv = 1 if cur is None else cur + 1
-    if not _publish_version(mdir, nv, files, dict(txn_map or {})):
-        raise RuntimeError(f"commit_replace lost a version race at {path}")
-    _advance_pointer(mdir, nv)
-    return nv
+def read_txn(
+    path: str, app_id: str, *, store: ObjectStore | None = None, key: str = POINTS_KEY
+) -> int | None:
+    """Highest txn version committed for ``app_id`` (None when the table has
+    no manifest or the app never committed) — the streaming sink's replay
+    guard: a re-delivered, already-durable batch is detected here."""
+    return read_ledger(path, store=store, key=key).get(app_id)
 
 
-def carry_ledger(src_path: str, dst_path: str) -> bool:
-    """Copy ``src_path``'s txn ledger into ``dst_path``'s next manifest
-    version (file list unchanged). Whole-table rewrites that STAGE a fresh
-    table and swap it in (``storage.compact_storage``) would otherwise
-    discard the ledger — and with it the streaming replay guard: a batch
-    whose checkpoint commit is still pending would re-append after the
-    compaction. Same-table commits don't need this (``commit_cas`` always
-    carries the ledger forward). Returns False when there is nothing to
-    carry. Offline-maintenance context: single committer assumed, one
-    publish attempt."""
-    v = latest_version(src_path)
-    if v is None:
-        return False
-    txn_map = {k: int(t) for k, t in (_read_doc(src_path, v).get("txn") or {}).items()}
-    if not txn_map:
-        return False
-    mdir = _mdir(dst_path)
-    mdir.mkdir(parents=True, exist_ok=True)
-    dv = latest_version(dst_path)
-    files = read_files(dst_path, dv) if dv is not None else []
-    nv = 1 if dv is None else dv + 1
-    if not _publish_version(mdir, nv, files, txn_map):
-        raise RuntimeError(f"carry_ledger lost a version race at {dst_path}")
-    _advance_pointer(mdir, nv)
-    return True
-
-
-def data_files(path: str) -> list[str]:
-    """Every parquet data file currently on disk (relative paths)."""
-    root = _root(path)
-    return sorted(
-        str(f.relative_to(root)) for f in root.glob("hour_bucket=*/*.parquet")
-    )
-
-
-def _publish_version(
-    mdir: Path, v: int, files: list[str], txn_map: dict[str, int] | None = None
+def _publish(
+    st: ObjectStore, pre: str, v: int, files: list[str], txn_map: dict[str, int]
 ) -> bool:
-    """CAS: atomically publish ``v{v}.json`` iff no other committer already
-    has. The payload is fully written to a temp file first, then ``link(2)``
-    exposes it under the version name — link is atomic-exclusive (EEXIST
-    when the version is taken) and never exposes a partial file, on local
-    POSIX filesystems and NFS alike."""
-    import os
-    import uuid
-
+    """CAS: create ``v{v}.json`` iff no committer already has, then advance
+    the pointer hint. False when the version was taken."""
     doc: dict = {"version": v, "files": sorted(files)}
     if txn_map:
         doc["txn"] = txn_map
-    tmp = mdir / f".v{v}.{uuid.uuid4().hex}.tmp"
-    tmp.write_text(json.dumps(doc))
-    try:
-        os.link(tmp, mdir / f"v{v}.json")
-        return True
-    except FileExistsError:
+    if not st.put_if_absent(pre + f"v{v}.json", json.dumps(doc).encode()):
         return False
-    finally:
-        tmp.unlink(missing_ok=True)
+    _advance_pointer(st, pre, v)
+    return True
 
 
-def _advance_pointer(mdir: Path, v: int) -> None:
+def _advance_pointer(st: ObjectStore, pre: str, v: int) -> None:
     """Best-effort monotonic advance of the LATEST hint. Two racing winners
-    can briefly regress it (check-then-replace is not atomic across hosts);
-    ``latest_version`` maxes the pointer with the listed versions, so the
-    hint only ever speeds reads up, never decides correctness."""
-    import uuid
-
-    latest = mdir / "LATEST"
-    try:
-        if latest.exists() and int(latest.read_text().strip()) >= v:
-            return
-    except (ValueError, FileNotFoundError):
-        pass
-    tmp = mdir / f".LATEST.{uuid.uuid4().hex}.tmp"
-    tmp.write_text(str(v))
-    tmp.replace(latest)
+    can briefly regress it (check-then-put is not atomic); ``latest_version``
+    maxes the pointer with the listing, so the hint only speeds reads up."""
+    raw = st.get(pre + "LATEST")
+    if raw is not None:
+        try:
+            if int(raw.decode().strip()) >= v:
+                return
+        except ValueError:
+            pass
+    st.put(pre + "LATEST", str(v).encode())
 
 
-def commit_cas(
+def commit(
     path: str,
     files: list[str] | None = None,
     *,
     mutate=None,
     txn: tuple[str, int] | None = None,
+    store: ObjectStore | None = None,
+    key: str = POINTS_KEY,
     max_retries: int = 16,
 ) -> int | None:
-    """CAS-with-retry commit: the multi-host protocol (no locks).
+    """Commit the next version; returns it, or None for a replayed txn.
 
-    Each attempt reads the current version, computes the new file list, and
-    tries to win ``v{N+1}.json`` via exclusive link; on losing the race it
-    re-reads and retries with linear backoff, so a concurrent committer's
-    files are never dropped. ``mutate(old_files) -> new_files`` may run once
-    PER ATTEMPT against a fresh list — it must be a pure function of its
-    input (every call site here appends/merges literals, which is).
+    Two forms:
 
-    ``txn=(app_id, txn_version)`` makes the commit idempotent per app: the
-    txn ledger (carried forward version-to-version) records the highest
-    committed txn_version per app_id, and an attempt whose txn_version is
-    already <= the ledger entry returns None WITHOUT committing — the
-    re-check happens inside the CAS loop, so a racing duplicate committer
-    loses either the version link or the ledger check, never both ways."""
-    import time
+    - ``commit(path, files)`` — full replacement; for overwrite / fresh
+      tables where the new list doesn't depend on the old one.
+    - ``commit(path, mutate=fn)`` — read-modify-write; ``fn(old_files) ->
+      new_files`` sees the list actually being replaced. Appenders and
+      compactors must use this form: computing the merged list outside the
+      commit lets a concurrent committer's files be dropped (lost-append).
 
+    Each attempt reads the current version, computes the new list and tries
+    to win ``v{N+1}.json``; a loser re-reads and retries with linear
+    backoff, so ``mutate`` may run once PER ATTEMPT and must be a pure
+    function of its input. ``txn=(app_id, txn_version)`` makes the commit
+    idempotent per app: an attempt whose txn_version is already <= the
+    ledger entry returns None without committing — re-checked inside the
+    loop, so a racing duplicate loses either the version or the ledger
+    check, never both ways."""
     if (files is None) == (mutate is None):
         raise ValueError("pass exactly one of files= or mutate=")
-    mdir = _mdir(path)
-    mdir.mkdir(parents=True, exist_ok=True)
+    st, pre = _at(path, store, key)
     for attempt in range(max_retries):
-        cur = latest_version(path)
-        v = 1 if cur is None else cur + 1
+        cur = latest_version(path, store=store, key=key)
         try:
-            cur_doc = _read_doc(path, cur) if cur is not None else {}
+            cur_doc = _read_doc(st, pre, cur) if cur is not None else {}
         except FileNotFoundError:
-            # a concurrent committer advanced LATEST and a concurrent
-            # vacuum(keep_versions small) pruned v{cur} between our
-            # latest_version() and the read — re-read and retry, exactly
-            # like losing the version race
+            # a concurrent committer advanced the version and a concurrent
+            # vacuum pruned v{cur} between the listing and this read —
+            # re-read and retry, exactly like losing the version race
             time.sleep(0.005 * (attempt + 1))
             continue
         txn_map = {k: int(tv) for k, tv in (cur_doc.get("txn") or {}).items()}
@@ -306,8 +241,8 @@ def commit_cas(
             if mutate is not None
             else list(files)  # type: ignore[arg-type]
         )
-        if _publish_version(mdir, v, new, txn_map):
-            _advance_pointer(mdir, v)
+        v = 1 if cur is None else cur + 1
+        if _publish(st, pre, v, new, txn_map):
             return v
         time.sleep(0.005 * (attempt + 1))
     raise RuntimeError(
@@ -316,146 +251,100 @@ def commit_cas(
     )
 
 
-def commit(
+def commit_replace(
     path: str,
-    files: list[str] | None = None,
+    files: list[str],
+    txn_map: dict[str, int] | None,
     *,
-    mutate=None,
-    txn: tuple[str, int] | None = None,
-) -> int | None:
-    """Write the next version's file list and advance LATEST.
-
-    Two forms:
-
-    - ``commit(path, files)`` — full replacement; for overwrite / fresh
-      tables where the new list doesn't depend on the old one.
-    - ``commit(path, mutate=fn)`` — read-modify-write; ``fn(old_files) ->
-      new_files`` sees the list actually being replaced. Appenders and
-      compactors must use this form: computing the merged list outside the
-      commit lets a concurrent committer's files be dropped (lost-append).
-
-    ``txn=(app_id, txn_version)`` adds idempotency (see ``commit_cas``);
-    returns None when the txn was already applied and nothing committed.
-
-    Same-host committers serialize on an advisory flock (keeps local
-    retries at zero); the commit point itself is ``commit_cas``'s exclusive
-    version-file link, which stays correct when committers are on
-    DIFFERENT hosts sharing the filesystem and flock is a no-op."""
-    import fcntl
-
-    if (files is None) == (mutate is None):
-        raise ValueError("pass exactly one of files= or mutate=")
-    mdir = _mdir(path)
-    mdir.mkdir(parents=True, exist_ok=True)
-    with open(mdir / "COMMIT_LOCK", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        return commit_cas(path, files, mutate=mutate, txn=txn)
+    store: ObjectStore | None = None,
+    key: str = POINTS_KEY,
+) -> int:
+    """Full-replacement commit that also REPLACES the txn ledger — the
+    restore path: rewinding a table to a snapshot must rewind the replay
+    guard WITH it, so a streaming batch delivered after the snapshot
+    re-appends instead of no-op'ing against the future ledger. Offline
+    maintenance: single committer, one publish attempt."""
+    cur = latest_version(path, store=store, key=key)
+    v = 1 if cur is None else cur + 1
+    ledger = {k: int(t) for k, t in (txn_map or {}).items()}
+    if not _publish(*_at(path, store, key), v, files, ledger):
+        raise RuntimeError(f"commit_replace lost a version race at {path}")
+    return v
 
 
-def vacuum(
-    path: str, keep_versions: int = 2, min_age_seconds: int = 600
-) -> list[str]:
-    """Remove data files unreferenced by the retained manifests (and the
-    older manifest jsons). Returns removed file paths.
+def prune_versions(
+    path: str,
+    keep_versions: int = 2,
+    min_age_seconds: int = 600,
+    *,
+    store: ObjectStore | None = None,
+    key: str = POINTS_KEY,
+) -> set[str] | None:
+    """Delete old manifest versions and crashed writers' temp files; return
+    the keep-set — every file a retained version references — or None when
+    the table has no manifest at all. The caller's data pass reclaims only
+    what ``reclaimable`` allows.
 
-    Retained = the last ``keep_versions`` versions PLUS any version whose
-    manifest is younger than ``min_age_seconds``. The age window is the
-    local-race guard: a time-travel reader holding version N−k, or an
-    appender that has staged data files but not yet committed, survives a
-    concurrent vacuum as long as it started within the window. Files whose
-    own mtime is inside the window are likewise never deleted (they may be
-    a live writer's staged output). Set ``min_age_seconds=0`` only in
-    offline maintenance where no concurrent readers/writers exist."""
-    import time
-
-    v = latest_version(path)
-    if v is None:
-        return []
+    Retained = the last ``keep_versions`` versions up to the LATEST this
+    vacuum read PLUS any version younger than ``min_age_seconds`` (the store's
+    ``mtime``; a store without one gives no ages). The age window is the
+    reader guard: a time-travel reader holding version N−k survives a
+    concurrent vacuum as long as it started within the window. Only listed
+    versions at or below the snapshot are candidates, so a version
+    committed during the vacuum survives; holes left by earlier vacuums are
+    never read. Raises when a version is named but none is readable — an
+    emptied or failed listing would otherwise reclaim every data file,
+    committed ones included. Set ``min_age_seconds=0`` only in offline
+    maintenance."""
+    st, pre = _at(path, store, key)
+    latest = latest_version(path, store=store, key=key)
+    if latest is None:
+        return None
+    versions = _versions(st, pre)
     now = time.time()
-    mdir = _mdir(path)
+    mtime = getattr(st, "mtime", None)
 
-    def _young(p: Path) -> bool:
+    def young(k: str) -> bool:
+        if mtime is None:
+            return False
+        t = mtime(k)
+        return t is None or now - t < min_age_seconds  # None: racing its creator
+
+    kept = [
+        v
+        for v, k in sorted(versions.items())
+        if v > latest - keep_versions or young(k)
+    ]
+    keep: set[str] = set()
+    readable = 0
+    for v in kept:
         try:
-            return now - p.stat().st_mtime < min_age_seconds
+            keep.update(_read_doc(st, pre, v)["files"])
+            readable += 1
         except FileNotFoundError:
-            return True  # racing with its creator — leave it alone
-    keep = set()
-    # a version file already pruned by an earlier vacuum must be SKIPPED,
-    # not treated as young (the missing-file fallback is for data files
-    # racing their creator) — repeated vacuums leave holes below the kept
-    # window, and reading a hole crashed the second maintenance pass
-    kept_versions = {
-        kv
-        for kv in range(1, v + 1)
-        if (mdir / f"v{kv}.json").exists()
-        and (kv > v - keep_versions or _young(mdir / f"v{kv}.json"))
-    }
-    if not kept_versions:
-        # LATEST names a version but no version file is listed: without a
-        # keep-set every data file past the age window would be reclaimed,
-        # committed ones included
+            continue  # lost a race with a concurrent vacuum
+    if not readable:
         raise RuntimeError(
-            f"vacuum({path!r}): no manifest version file is listed under "
-            f"LATEST={v} — refusing to reclaim data files without a keep-set"
+            f"vacuum({path!r}): no readable manifest version is listed "
+            f"(LATEST={latest}) — refusing to reclaim data files without a keep-set"
         )
-    for kv in kept_versions:
-        try:
-            keep.update(read_files(path, kv))
-        except FileNotFoundError:
-            continue  # lost a race with a concurrent vacuum — nothing to keep
-    removed = []
-    root = _root(path)
-    for rel in data_files(path):
-        if rel not in keep and not _young(root / rel):
-            f = root / rel
-            # missing_ok: two concurrent maintenance vacuums (two streams,
-            # one table) may both list the same unreferenced file — the
-            # loser of the unlink race must not fail the batch (r13 review)
-            f.unlink(missing_ok=True)
-            crc = f.with_name(f".{f.name}.crc")  # local-FS checksum sibling
-            crc.unlink(missing_ok=True)
-            removed.append(rel)
-    # prune partition dirs holding nothing but leftover hidden files —
-    # age-guarded and race-tolerant (r13 review): a concurrent appender
-    # renames the hidden .crc sibling BEFORE its parquet file, so a fresh
-    # dir can legitimately hold only young hidden files; deleting them and
-    # rmdir'ing would yank the parent from under the in-flight rename
-    for d in root.glob("hour_bucket=*"):
-        try:
-            entries = list(d.iterdir()) if d.is_dir() else None
-        except FileNotFoundError:
-            continue  # racing another vacuum
-        if entries is None or any(p.name[0] != "." for p in entries):
-            continue
-        if any(_young(p) for p in entries) or _young(d):
-            continue  # possibly an appender's just-renamed .crc
-        try:
-            for p in entries:
-                p.unlink(missing_ok=True)
-            d.rmdir()
-        except OSError:
-            pass  # a file landed between the listing and the rmdir — keep
-    for mf in _mdir(path).glob("v*.json"):
-        # prune only versions from OUR snapshot's past (<= v) that are
-        # neither kept nor young: a version committed concurrently during
-        # this vacuum is > v (or young) and must survive — unlinking it
-        # left LATEST pointing at a deleted manifest, making the table
-        # unreadable AND uncommittable (r13 review, the severe one)
-        kv = int(mf.stem[1:])
-        if kv <= v and kv not in kept_versions and not _young(mf):
-            mf.unlink(missing_ok=True)
-    # orphaned commit temp files (a committer died between write and link)
-    for tmp in _mdir(path).glob(".*.tmp"):
-        if not _young(tmp):
-            tmp.unlink(missing_ok=True)
-    # crashed private append staging (a writer died before its renames —
-    # storage.write_points r12); age-guarded by the NEWEST mtime within the
-    # staging tree, not the root dir's own mtime — during a long Spark
-    # write only leaf mtimes advance, and an append outliving the window
-    # must not have its live staging reclaimed mid-write (ADVICE r12)
-    import shutil
+    for v in versions.keys() - set(kept):
+        st.delete(versions[v])
+    for k in st.list(pre + "."):
+        if k.endswith(".tmp") and not young(k):
+            st.delete(k)
+    return keep
 
-    for stg in root.glob(".staging-*"):
-        if stg.is_dir() and now - _tree_mtime(stg) >= min_age_seconds:
-            shutil.rmtree(stg, ignore_errors=True)
-    return sorted(removed)
+
+def reclaimable(kept: set[str] | None, name: str, path: str) -> bool:
+    """Whether a vacuum's data pass may reclaim ``name`` (a data file or
+    entry past the age window) against ``kept``, ``prune_versions``'
+    result. A table with no manifest has no keep-set, and nothing is
+    reclaimed without one: a manifest whose every file was lost would
+    otherwise let the vacuum delete committed data."""
+    if kept is None:
+        raise RuntimeError(
+            f"vacuum({path!r}): no manifest version is listed — refusing to "
+            f"reclaim {name!r} without a keep-set"
+        )
+    return name not in kept

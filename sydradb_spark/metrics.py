@@ -56,6 +56,7 @@ def storage_gauges(
     number, live files, hour partitions and bytes. Files no version
     references — orphans, staged leftovers, files waiting for vacuum — are
     not counted. A pre-manifest table is its directory."""
+    from sydradb_spark import manifest as mf
     from sydradb_spark import storage
 
     if not path:
@@ -70,7 +71,7 @@ def storage_gauges(
             str(f.relative_to(local)) for f in Path(local).glob("hour_bucket=*/*.parquet")
         ]
     else:
-        files = storage._pm_files(path if store is not None else local, store, version)
+        files = mf.read_files(path, version, store=store)
     out = {
         "sydra_storage_partitions": float(len({f.split("/", 1)[0] for f in files})),
         "sydra_storage_files": float(len(files)),

@@ -95,7 +95,7 @@ def get_spark(app_name: str = "sydradb-spark", master: str | None = None) -> Spa
         # commit (storage.write_points), so v2's weaker job-level
         # atomicity (task files appear in the staging dir as tasks commit)
         # changes nothing a reader can observe; a crashed job leaves
-        # orphans in a hidden dir that manifest.vacuum already reclaims.
+        # orphans in a hidden dir that storage.vacuum_points reclaims.
         # At 10^4-10^5 files per write the v1 driver-side rename pass is
         # a real serial bottleneck (§7.3 commit-protocol stalls).
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")

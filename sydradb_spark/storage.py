@@ -32,13 +32,15 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sydradb_spark import manifest as mf
 from sydradb_spark.model import SECONDS_PER_HOUR
 
 POINT_COLS = ["series_id", "series", "tags", "ts", "value", "hour_bucket"]
 
-# the table key the objectstore points manifest is kept under; scope the
-# store to ONE table (mirrors rollup_stream.STORE_TABLE's one-table scoping)
-POINTS_STORE_TABLE = "points"
+# the store key a caller-supplied ObjectStore keeps the points manifest
+# under; scope the store to ONE table (rollup_stream.STORE_TABLE is the
+# rollup's)
+POINTS_STORE_TABLE = mf.POINTS_KEY
 
 
 def _posix_table_path(path: str) -> str | None:
@@ -67,70 +69,40 @@ def _require_posix(path: str, op: str) -> Path:
     return Path(local)
 
 
-# --- points-manifest backend dispatch (r14, VERDICT r13 item 1) ---------------
-# The same two-backend seam the rollup table got in r13
-# (streaming/rollup_stream._mf_commit): store=None → the local link(2)-CAS
-# protocol (sydradb_spark.manifest, POSIX paths only — URIs rejected loudly
-# by manifest._root); store=<ObjectStore> → the conditional-PUT protocol
-# (sydradb_spark.objectstore) under the table key "points", with the DATA
-# files living wherever ``path`` points (local or any Hadoop-reachable URI).
+# --- manifest ----------------------------------------------------------------
+# Every table commits through the one protocol in ``sydradb_spark.manifest``,
+# resolved from (path, store): ``store=None`` → the table directory's own
+# ``_manifest/`` (POSIX paths only — a URI is rejected loudly by the
+# resolver); ``store=<ObjectStore>`` → the store's ``points/_manifest/``,
+# with the DATA files living wherever ``path`` points (local or any
+# Hadoop-reachable URI). Storage calls ``mf.commit`` as a module attribute,
+# so a tracer that wraps it sees every commit.
 
 
-def _pm_has(path: str, store) -> bool:
-    if store is None:
-        from sydradb_spark import manifest as mf
+def data_files(path: str, spark: SparkSession | None = None) -> list[str]:
+    """Every parquet data file in the table's hour partitions, committed or
+    not (relative paths): a local listing, or the Hadoop FS API for a URI
+    location (needs ``spark``)."""
+    local = _posix_table_path(path)
+    if local is not None:
+        root = Path(local)
+        return sorted(
+            str(f.relative_to(root)) for f in root.glob("hour_bucket=*/*.parquet")
+        )
+    from sydradb_spark.util import hadoop_fs
 
-        return mf.has_manifest(path)
-    from sydradb_spark import objectstore as obs
-
-    return obs.latest_version(store, POINTS_STORE_TABLE) is not None
-
-
-def _pm_latest(path: str, store) -> int | None:
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        return mf.latest_version(path)
-    from sydradb_spark import objectstore as obs
-
-    return obs.latest_version(store, POINTS_STORE_TABLE)
-
-
-def _pm_files(path: str, store, version: int | None = None) -> list[str]:
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        return mf.read_files(path, version=version)
-    from sydradb_spark import objectstore as obs
-
-    return obs.read_files(store, POINTS_STORE_TABLE, version)
-
-
-def _pm_read_txn(path: str, store, app_id: str) -> int | None:
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        return mf.read_txn(path, app_id)
-    from sydradb_spark import objectstore as obs
-
-    return obs.read_txn(store, POINTS_STORE_TABLE, app_id)
-
-
-def _pm_commit(
-    path: str,
-    store,
-    files: list[str] | None = None,
-    *,
-    mutate=None,
-    txn: tuple[str, int] | None = None,
-) -> int | None:
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        return mf.commit(path, files, mutate=mutate, txn=txn)
-    from sydradb_spark import objectstore as obs
-
-    return obs.commit_cas(store, POINTS_STORE_TABLE, files, mutate=mutate, txn=txn)
+    _, fs, jroot = hadoop_fs(spark, path)
+    out = []
+    if fs.exists(jroot):
+        for part in fs.listStatus(jroot):
+            pname = part.getPath().getName()
+            if not (part.isDirectory() and pname.startswith("hour_bucket=")):
+                continue
+            for f in fs.listStatus(part.getPath()):
+                name = f.getPath().getName()
+                if name.endswith(".parquet") and not name.startswith("."):
+                    out.append(f"{pname}/{name}")
+    return sorted(out)
 
 
 def _write_tasks(spark: SparkSession) -> int:
@@ -204,44 +176,46 @@ def write_points(
     their driver-side batch as one slice — is only sorted, and a 240-point
     append is one job with one task (``_shaped``).
 
-    Commits a file manifest (sydradb_spark.manifest) so readers flip between
-    consistent versions atomically: overwrite and new-table writes always
-    commit; appends extend the table's manifest when it has one. Appending
-    to a pre-manifest table keeps plain directory semantics.
+    One path for every table and mode: stage, then commit. The rows are
+    written through a PRIVATE ``.staging-<uuid>/`` dir and the part files
+    renamed into the live layout (``_publish_staged``), then one manifest
+    commit (``mf.commit``) publishes them, so readers flip between
+    consistent versions atomically:
 
-    ``txn=(app_id, txn_version)`` makes the append idempotent: a write whose
+    - an append to a manifested table commits ``mutate=old + moved``, so a
+      concurrent committer's files are never dropped;
+    - any other write commits a full list: ``moved`` for an overwrite (a
+      manifest-level flip — old files stay until vacuum and readers mid-scan
+      keep them; a Spark directory truncation would delete ``_manifest/``,
+      the version history and every app's txn ledger with them), and for an
+      append to a table without a manifest, the files already there plus
+      ``moved`` — the plain directory is adopted, as ``init_points_table``
+      adopts it.
+
+    Private staging is what makes concurrent appends safe (r12): Spark's
+    ``mode("append")`` shares Hadoop's ``_temporary/0`` staging across
+    jobs, so two appenders to one table destroyed each other's in-flight
+    staging. It also gives the commit the EXACT moved file list, and a
+    crash between the renames and the commit leaves only unreferenced
+    orphans. Hidden dot-dirs are invisible to Spark's file index and to
+    ``data_files``; crashed staging dirs are reclaimed by ``vacuum_points``.
+
+    ``txn=(app_id, txn_version)`` makes the write idempotent: a write whose
     txn is already in the manifest's ledger (a replayed streaming batch —
     reference WAL replay-above-highwater guard, engine.zig:406-437) is a
     no-op. The pre-check skips the parquet write entirely on the common
-    replay path; the commit itself re-checks inside the CAS loop, so a
-    replay that staged files but loses the ledger check leaves only
-    unreferenced orphans for ``manifest.vacuum`` — LATEST never sees a
-    duplicate row.
+    replay path (in every mode: an overwrite replay must not stage over a
+    ledger that already holds it); the commit re-checks inside the CAS
+    loop, so a replay that staged files but loses the ledger check leaves
+    only unreferenced orphans — LATEST never sees a duplicate row. An empty
+    batch still commits, so the ledger records it.
 
-    Appends to a MANIFESTED table stage through a PRIVATE
-    ``.staging-<uuid>/`` dir and rename the part files into the layout
-    before committing (r12): Spark's ``mode("append")`` shares Hadoop's
-    ``_temporary/0`` staging across jobs, so two concurrent appenders to
-    one table destroy each other's in-flight staging when either commits
-    (found by the two-streams-one-table soak test). Private staging makes
-    concurrent appends collision-free, gives the commit the EXACT moved
-    file list instead of a directory-listing diff, and a crash between the
-    renames and the manifest commit leaves only unreferenced orphans —
-    same contract as before. Hidden dot-dirs are invisible to Spark's file
-    index and to ``manifest.data_files``; crashed staging dirs are
-    reclaimed by ``manifest.vacuum``.
-
-    Backends (r14, VERDICT r13 item 1): ``store=None`` is the local
-    link-CAS manifest protocol and REQUIRES a POSIX table path — a URI
-    location raises instead of silently committing the exactly-once ledger
-    to a relative local ``s3a:/...`` junk directory while the data goes to
-    the store. Object-store tables pass ``store=`` (an
-    ``objectstore.ObjectStore`` scoped to this table): every write then
-    stages privately and commits the manifest through the store's
-    conditional PUT, with data staging routed through the Hadoop FS API
-    when ``path`` is a URI."""
-    from sydradb_spark import manifest as mf
-
+    ``store=None`` keeps the manifest in the table directory and REQUIRES a
+    POSIX path — a URI location raises instead of committing the
+    exactly-once ledger to a relative local ``s3a:/...`` directory while
+    the data goes to the store. Object-store tables pass ``store=`` (an
+    ``objectstore.ObjectStore`` scoped to this table); the data staging
+    then routes through the Hadoop FS API when ``path`` is a URI."""
     # __ns/__tsr/__ssrc are the events-adapter pushdown hints
     # (tables.normalize_events / events_points) — redundant with ts/series;
     # stored tables prune via hour_bucket, and series is a real stored
@@ -249,60 +223,18 @@ def write_points(
     for hint in ("__ns", "__tsr", "__ssrc"):
         if hint in df.columns:
             df = df.drop(hint)
-    local = _posix_table_path(path)
-    if store is None and local is None:
-        raise ValueError(
-            f"write_points on the URI location {path!r} needs store=: the "
-            "POSIX manifest protocol would silently commit the exactly-once "
-            "ledger to a relative LOCAL directory while the data goes to "
-            "the store (VERDICT r13 item 1) — pass an objectstore-backed "
-            "store scoped to this table"
-        )
-    if store is not None:
-        # store-manifested tables are ALWAYS manifested (v1 on first write)
-        manifested = _pm_latest(path, store) is not None
-        fresh = not manifested
-    else:
-        path = str(local)
-        fresh = not Path(path).exists()
-        manifested = mf.has_manifest(path)
-    if txn is not None and manifested:
-        # the pre-check applies to EVERY mode: in overwrite mode especially,
-        # the destructive parquet rewrite would otherwise run before the
-        # ledger check, and a replayed txn's commit would no-op while LATEST
-        # kept referencing the pre-overwrite files the rewrite just deleted
-        last = _pm_read_txn(path, store, txn[0])
+    spark = df.sparkSession
+    cur = mf.latest_version(path, store=store)  # a URI without store= raises
+    if txn is not None and cur is not None:
+        last = mf.read_txn(path, txn[0], store=store)
         if last is not None and last >= txn[1]:
             return  # replayed batch — this txn is already durable
-    shaped = _shaped(df)
-    if store is not None:
-        moved = _publish_staged(shaped, path, df.sparkSession)
-        if mode == "append" and manifested:
-            # an empty batch still commits (txn ledger must record the batch)
-            _pm_commit(path, store, mutate=lambda old: old + moved, txn=txn)
-        else:
-            # overwrite (and any first write): full-replacement flip — old
-            # files stay on the store until vacuum, readers stay atomic
-            _pm_commit(path, store, files=moved, txn=txn)
-    elif manifested and not fresh:
-        moved = _stage_and_publish(shaped, path)
-        if mode == "append":
-            # an empty batch still commits (txn ledger must record the batch)
-            mf.commit(path, mutate=lambda old: old + moved, txn=txn)
-        else:
-            # overwrite on a LIVE manifested table is a manifest-level flip,
-            # NOT a Spark directory truncation (r13 review): static
-            # partitionOverwriteMode deletes the whole path — _manifest/,
-            # version history, and BOTH apps' txn ledgers included — and
-            # readers crash mid-scan on the vanished files. Staging the new
-            # files in and committing a full-replacement list keeps readers
-            # atomic (old files stay until vacuum) and commit_cas carries
-            # the ledger forward.
-            mf.commit(path, files=moved, txn=txn)
+    adopted = data_files(path, spark) if mode == "append" and cur is None else []
+    moved = _publish_staged(_shaped(df), path, spark)
+    if mode == "append" and cur is not None:
+        mf.commit(path, mutate=lambda old: old + moved, txn=txn, store=store)
     else:
-        shaped.mode(mode).parquet(path)
-        if mode == "overwrite" or fresh:
-            mf.commit(path, mf.data_files(path), txn=txn)
+        mf.commit(path, adopted + moved, txn=txn, store=store)
 
 
 def _stage_and_publish(shaped_writer, path: str) -> list[str]:
@@ -314,7 +246,7 @@ def _stage_and_publish(shaped_writer, path: str) -> list[str]:
     before/after ``data_files()`` diff double-commits (or drops) a
     concurrent appender's files. Publication time is stamped on every
     renamed file — rename(2) preserves the staging mtime, which would void
-    ``manifest.vacuum``'s age guard for writes longer than the window."""
+    ``vacuum_points``' age guard for writes longer than the window."""
     import os
     import uuid
 
@@ -396,10 +328,9 @@ def table_version(path: str, store=None) -> int | None:
     """The table's LATEST manifest version; None for a pre-manifest table
     (or a URI location read without its store, which cannot carry a POSIX
     manifest)."""
-    local = _posix_table_path(path)
-    if store is None and local is None:
+    if store is None and _posix_table_path(path) is None:
         return None
-    return _pm_latest(path if store is not None else local, store)
+    return mf.latest_version(path, store=store)
 
 
 def read_points(
@@ -407,11 +338,10 @@ def read_points(
 ) -> DataFrame:
     """Read the table's manifest ``version``, LATEST by default (plain
     directory read for pre-manifest tables). ``store=`` reads a
-    store-manifested table's entry list through the objectstore protocol;
-    a URI path WITHOUT a store reads as a plain directory (no POSIX
-    manifest can exist there — a store-manifested URI table must be read
-    with its store, or the read would include uncommitted staged
-    orphans)."""
+    store-manifested table's entry list from the store; a URI path WITHOUT
+    a store reads LATEST as a plain directory (no manifest can live there —
+    a store-manifested URI table must be read with its store, or the read
+    would include uncommitted staged orphans)."""
     return _open(spark, path, store, version)
 
 
@@ -419,9 +349,7 @@ def read_points_version(
     spark: SparkSession, path: str, version: int, store=None
 ) -> DataFrame:
     """Time travel: read a specific committed manifest version (files are
-    immutable and retained until vacuum). Both manifest backends."""
-    if store is None:
-        _require_posix(path, "read_points_version(store=None)")
+    immutable and retained until vacuum)."""
     return _open(spark, path, store, version)
 
 
@@ -436,20 +364,18 @@ def _open(
     from sydradb_spark.model import POINTS_SCHEMA
 
     local = _posix_table_path(path)
-    if store is None:
-        if local is None:
-            return _canonical(spark.read.parquet(path))  # plain URI directory
-        path = str(local)
     if version is None:
-        version = _pm_latest(path, store)
+        if store is None and local is None:
+            return _canonical(spark.read.parquet(path))  # plain URI directory
+        version = mf.latest_version(path, store=store)
         if version is None:
             if store is not None:
                 return spark.createDataFrame([], POINTS_SCHEMA)
-            return _canonical(spark.read.parquet(path))  # pre-manifest table
-    files = _pm_files(path, store, version=version)
+            return _canonical(spark.read.parquet(local))  # pre-manifest table
+    files = mf.read_files(path, version, store=store)  # a URI w/o store raises
     if not files:
         return spark.createDataFrame([], POINTS_SCHEMA)
-    return _read_files(spark, path, files)
+    return _read_files(spark, local or path, files)
 
 
 def _read_files(spark: SparkSession, path: str, files: list[str]) -> DataFrame:
@@ -607,47 +533,30 @@ def compact_storage(
 ) -> None:
     """Rewrite the stored table deduped (the reference's segment-merge job).
 
-    Manifested tables (either backend) compact through a STAGED MANIFEST
-    FLIP (r14, VERDICT r13 item 2): the deduped rows stage into the live
-    layout and ONE commit swaps the file list — readers never see the
-    table absent (the old ``_swap_dir`` left a crash window where the live
-    directory did not exist, and a concurrent reader mid-scan crashed).
-    The commit's ``mutate`` drops exactly the snapshot-version files this
-    rewrite read, so a concurrent append mid-compaction rides through to
-    the new version instead of being lost, and ``commit_cas`` carries the
-    txn ledger forward — a streaming batch whose checkpoint commit is
-    still pending cannot re-append after compaction (replay guard
-    survives rewrites). Old files are reclaimed by vacuum.
-
-    Pre-manifest plain tables keep the legacy staged-copy + dir swap (the
-    best a bare filesystem gives without a manifest to flip)."""
-    from sydradb_spark import manifest as mf
-
-    local = _posix_table_path(path)
-    if store is None:
-        _require_posix(path, "compact_storage(store=None)")
-        path = str(local)
-        manifested = mf.has_manifest(path)
-    else:
-        manifested = _pm_latest(path, store) is not None
-    if manifested:
-        snap_v = _pm_latest(path, store)
-        compacted = compact_points(
-            read_points_version(spark, path, snap_v, store=store), order_col
-        )
-        moved = _publish_staged(_shaped(compacted), path, spark)
-        rewritten = set(_pm_files(path, store, version=snap_v))
-        _pm_commit(
-            path,
-            store,
-            mutate=lambda old: [f for f in old if f not in rewritten] + moved,
-        )
-        return
-    compacted = compact_points(read_points(spark, path), order_col)
-    tmp = path.rstrip("/") + ".compact.tmp"
-    write_points(compacted, tmp, mode="overwrite")
-    mf.carry_ledger(path, tmp)
-    _swap_dir(Path(tmp), Path(path))
+    Compaction is a STAGED MANIFEST FLIP (r14, VERDICT r13 item 2): the
+    deduped rows stage into the live layout and ONE commit swaps the file
+    list — readers never see the table absent (a directory swap left a
+    crash window where the live directory did not exist, and a concurrent
+    reader mid-scan crashed). The commit's ``mutate`` drops exactly the
+    snapshot-version files this rewrite read, so a concurrent append
+    mid-compaction rides through to the new version instead of being lost,
+    and the commit carries the txn ledger forward — a streaming batch whose
+    checkpoint commit is still pending cannot re-append after compaction.
+    Old files are reclaimed by vacuum. A table without a manifest is
+    adopted first (its current listing committed as a version)."""
+    snap_v = mf.latest_version(path, store=store)
+    if snap_v is None:
+        snap_v = mf.commit(path, data_files(path, spark), store=store)
+    compacted = compact_points(
+        read_points_version(spark, path, snap_v, store=store), order_col
+    )
+    moved = _publish_staged(_shaped(compacted), path, spark)
+    rewritten = set(mf.read_files(path, snap_v, store=store))
+    mf.commit(
+        path,
+        mutate=lambda old: [f for f in old if f not in rewritten] + moved,
+        store=store,
+    )
 
 
 # --- retention (TTL) ----------------------------------------------------------
@@ -687,44 +596,35 @@ def drop_expired_partitions(
     Manifest tables (either backend) commit a filtered file list (one
     atomic pointer flip; physical files go with vacuum); plain tables
     remove the directories. Returns the dropped bucket values."""
-    from sydradb_spark import manifest as mf
 
-    def _expired(bucket: int) -> bool:
-        return bucket + SECONDS_PER_HOUR <= cutoff_hour_bucket
+    def _expired(rel: str) -> bool:  # "hour_bucket=N[/file]"
+        return _bucket(rel) + SECONDS_PER_HOUR <= cutoff_hour_bucket
 
-    if store is None:
-        path = str(_require_posix(path, "drop_expired_partitions(store=None)"))
-    if _pm_has(path, store):
-        files = _pm_files(path, store)
+    if mf.has_manifest(path, store=store):
         dropped = sorted(
-            {
-                int(f.split("=", 1)[1].split("/", 1)[0])
-                for f in files
-                if _expired(int(f.split("=", 1)[1].split("/", 1)[0]))
-            }
+            {_bucket(f) for f in mf.read_files(path, store=store) if _expired(f)}
         )
         if dropped:
-            _pm_commit(
+            mf.commit(
                 path,
-                store,
-                mutate=lambda old: [
-                    f
-                    for f in old
-                    if not _expired(int(f.split("=", 1)[1].split("/", 1)[0]))
-                ],
+                mutate=lambda old: [f for f in old if not _expired(f)],
+                store=store,
             )
         return dropped
     if store is not None:
         return []  # store-manifested table with no manifest yet: nothing
-
+    root = _require_posix(path, "drop_expired_partitions")
     dropped = []
-    root = Path(path)
     for d in root.glob("hour_bucket=*"):
-        bucket = int(d.name.split("=", 1)[1])
-        if _expired(bucket):
+        if _expired(d.name):
             shutil.rmtree(d)
-            dropped.append(bucket)
+            dropped.append(_bucket(d.name))
     return sorted(dropped)
+
+
+def _bucket(rel: str) -> int:
+    """The hour_bucket of a relative data path or partition dir name."""
+    return int(rel.split("=", 1)[1].split("/", 1)[0])
 
 
 def optimize_partitions(
@@ -742,14 +642,11 @@ def optimize_partitions(
     optimized hour_bucket values. Plain tables: use ``compact_storage``."""
     from collections import defaultdict
 
-    if store is None:
-        path = str(_require_posix(path, "optimize_partitions(store=None)"))
-    if not _pm_has(path, store):
+    if not mf.has_manifest(path, store=store):
         raise ValueError("optimize_partitions requires a manifest table")
-    files = _pm_files(path, store)
     by_part: dict[int, list[str]] = defaultdict(list)
-    for f in files:
-        by_part[int(f.split("=", 1)[1].split("/", 1)[0])].append(f)
+    for f in mf.read_files(path, store=store):
+        by_part[_bucket(f)].append(f)
     targets = sorted(
         b for b, fs in by_part.items() if len(fs) > max_files_per_partition
     )
@@ -763,8 +660,8 @@ def optimize_partitions(
     # any file they rename in during this job's window
     new = _publish_staged(shaped, path, spark)
     dropped = set(target_files)
-    _pm_commit(
-        path, store, mutate=lambda old: [f for f in old if f not in dropped] + new
+    mf.commit(
+        path, mutate=lambda old: [f for f in old if f not in dropped] + new, store=store
     )
     return targets
 
@@ -783,27 +680,22 @@ def snapshot(path: str, dest: str, store=None) -> None:
     a local path (the snapshot itself is always a local-manifested table);
     URI data locations are rejected loudly — hardlinks don't exist there,
     and a full remote copy is a job, not a metadata operation."""
-    from sydradb_spark import manifest as mf
-    from sydradb_spark import objectstore as obs
+    import os
 
-    local = _require_posix(path, "snapshot (hardlink clone of the data files)")
-    dest = str(_require_posix(dest, "snapshot destination"))
-    path = str(local)
-    if Path(dest).exists():
+    src_root = _require_posix(path, "snapshot (hardlink clone of the data files)")
+    dst_root = _require_posix(dest, "snapshot destination")
+    if dst_root.exists():
         raise FileExistsError(f"snapshot destination exists: {dest}")
-    if store is None and not mf.has_manifest(path):
-        shutil.copytree(path, dest)
-        return
-    src_root, dst_root = Path(path), Path(dest)
     # ONE pinned version for the file list AND the ledger: resolving LATEST
     # twice lets a commit landing in between pair version N's files with
     # version N+1's ledger — a replay guard claiming batches whose rows the
     # snapshot does not hold
-    version = _pm_latest(path, store)
-    files = _pm_files(path, store, version=version)
+    version = mf.latest_version(path, store=store)
+    if version is None and store is None:
+        shutil.copytree(src_root, dst_root)  # plain table: full copy
+        return
+    files = mf.read_files(path, version, store=store)
     dst_root.mkdir(parents=True)
-    import os
-
     for rel in files:
         target = dst_root / rel
         target.parent.mkdir(parents=True, exist_ok=True)
@@ -816,12 +708,7 @@ def snapshot(path: str, dest: str, store=None) -> None:
     # ledger erases the streaming replay guard — a checkpoint-replayed
     # batch would re-append after the restore. Same reason compact_storage
     # carries it through whole-table rewrites.
-    ledger = (
-        mf.read_ledger(path, version)
-        if store is None
-        else obs.read_ledger(store, POINTS_STORE_TABLE, version)
-    )
-    mf.commit_replace(dest, files, ledger)
+    mf.commit_replace(str(dst_root), files, mf.read_ledger(path, version, store=store))
 
 
 def restore(snapshot_path: str, path: str, store=None) -> None:
@@ -841,19 +728,10 @@ def restore(snapshot_path: str, path: str, store=None) -> None:
     ``store=`` restores a store-manifested live table (local data path)."""
     import os
 
-    from sydradb_spark import manifest as mf
-    from sydradb_spark import objectstore as obs
-
     snap_local = _require_posix(snapshot_path, "restore (snapshot source)")
     live_local = _require_posix(path, "restore (live table data)")
-    path = str(live_local)
-    live_manifested = (
-        _pm_latest(path, store) is not None
-        if store is not None
-        else (live_local.exists() and mf.has_manifest(path))
-    )
-    snap_manifested = mf.has_manifest(str(snap_local))
-    if store is not None and not snap_manifested:
+    snap_v = mf.latest_version(str(snap_local))
+    if store is not None and snap_v is None:
         # the legacy dir-swap fallback would replace the data while the
         # STORE manifest kept referencing the removed files — store-mode
         # readers would break silently (r14 self-review)
@@ -861,8 +739,9 @@ def restore(snapshot_path: str, path: str, store=None) -> None:
             f"restore(store=...) needs a manifested snapshot; {snapshot_path!r} "
             "has no _manifest (pre-manifest copytree snapshot)"
         )
-    if (live_manifested or store is not None) and snap_manifested:
-        files = mf.read_files(str(snap_local))
+    live_manifested = store is not None or mf.has_manifest(path)
+    if live_manifested and snap_v is not None:
+        files = mf.read_files(str(snap_local), snap_v)
         for rel in files:
             dst = live_local / rel
             if dst.exists():
@@ -873,18 +752,14 @@ def restore(snapshot_path: str, path: str, store=None) -> None:
             except OSError:  # cross-device etc. → real copy
                 shutil.copy2(snap_local / rel, dst)
             os.utime(dst)  # publication stamp for the vacuum age guard
-        ledger = mf.read_ledger(str(snap_local))
-        if store is None:
-            mf.commit_replace(path, files, ledger)
-        else:
-            obs.commit_replace(store, POINTS_STORE_TABLE, files, ledger)
+        ledger = mf.read_ledger(str(snap_local), snap_v)
+        mf.commit_replace(path, files, ledger, store=store)
         return
-    live = Path(path)
-    tmp = Path(path.rstrip("/") + ".restore.tmp")
+    tmp = live_local.with_name(live_local.name + ".restore.tmp")
     if tmp.exists():
         shutil.rmtree(tmp)
-    shutil.copytree(str(snap_local), tmp)
-    _swap_dir(tmp, live)
+    shutil.copytree(snap_local, tmp)
+    _swap_dir(tmp, live_local)
 
 
 # --- durable DELETE -----------------------------------------------------------
@@ -906,13 +781,10 @@ def delete_where(
     ones — a crash at any point leaves LATEST on a fully consistent version
     (the reference's MANIFEST swap; what Delta/Iceberg REPLACE WHERE does).
     Pre-manifest tables keep the staged rename-before-remove dir swap."""
-    if store is None:
-        path = str(_require_posix(path, "delete_where(store=None)"))
-
     # pin ONE manifest snapshot for both the read plan and the commit's
     # drop list — read_points would take its own LATEST, and a commit
     # landing between two listings would desynchronize them
-    snapshot_version = _pm_latest(path, store) if _pm_has(path, store) else None
+    snapshot_version = mf.latest_version(path, store=store)
     df = (
         read_points_version(spark, path, snapshot_version, store=store)
         if snapshot_version is not None
@@ -935,24 +807,25 @@ def delete_where(
         affected_dirs = tuple(f"hour_bucket={b}/" for b in affected)
         rewritten = {
             f
-            for f in _pm_files(path, store, version=snapshot_version)
+            for f in mf.read_files(path, snapshot_version, store=store)
             if f.startswith(affected_dirs)
         }
         new = _publish_staged(_shaped(remaining), path, spark)
-        _pm_commit(
+        mf.commit(
             path,
-            store,
             mutate=lambda old: [f for f in old if f not in rewritten] + new,
+            store=store,
         )
         return
 
-    tmp = path.rstrip("/") + ".delete.tmp"
-    if Path(tmp).exists():
+    live = _require_posix(path, "delete_where on a table without a manifest")
+    tmp = live.with_name(live.name + ".delete.tmp")
+    if tmp.exists():
         shutil.rmtree(tmp)
-    write_points(remaining, tmp, mode="overwrite")
+    write_points(remaining, str(tmp), mode="overwrite")
     for bucket in affected:
-        live_dir = Path(path) / f"hour_bucket={bucket}"
-        staged = Path(tmp) / f"hour_bucket={bucket}"
+        live_dir = live / f"hour_bucket={bucket}"
+        staged = tmp / f"hour_bucket={bucket}"
         if staged.exists():
             _swap_dir(staged, live_dir)
         elif live_dir.exists():  # absent = every row in the partition deleted
@@ -960,7 +833,7 @@ def delete_where(
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-# --- vacuum (backend-dispatched) -----------------------------------------------
+# --- vacuum ------------------------------------------------------------------
 def vacuum_points(
     path: str,
     store=None,
@@ -969,75 +842,32 @@ def vacuum_points(
     spark: SparkSession | None = None,
 ) -> list[str]:
     """Reclaim data files unreferenced by the retained manifest versions —
-    the points-table twin of ``rollup_stream.vacuum_rollup`` (r14).
+    the points-table twin of ``rollup_stream.vacuum_rollup``. Returns the
+    removed relative paths.
 
-    ``store=None`` delegates to ``manifest.vacuum`` (POSIX paths only —
-    URIs rejected loudly by the manifest module). With ``store=``, version
-    pruning runs through the objectstore protocol and the DATA pass walks
-    local paths with the stdlib or URI locations through the Hadoop FS API
-    via ``spark``; without a session a non-local data pass is SKIPPED with
-    a logged warning (version pruning still runs; entries wait for a
-    vacuum that has one — the streaming sink's in-sink maintenance always
-    passes its session). Age guards mirror ``manifest.vacuum``: files and
-    staging trees younger than ``min_age_seconds`` (newest mtime anywhere
-    inside) are never touched."""
+    ``mf.prune_versions`` prunes old versions and returns the keep-set;
+    nothing is reclaimed without one (``mf.reclaimable``: an emptied or
+    unreadable version listing raises). The DATA pass walks a local
+    table with the stdlib — also deleting each removed file's ``.crc``
+    sibling, partition dirs left holding only stale hidden files, and
+    crashed ``.staging-*`` trees — and a URI location through the Hadoop FS
+    API via ``spark``; without a session a URI data pass is SKIPPED with a
+    logged warning (entries wait for a vacuum that has one — the streaming
+    sink's in-sink maintenance always passes its session). The age window
+    guards both passes: versions, files and staging trees younger than
+    ``min_age_seconds`` (a tree's newest mtime anywhere inside) are never
+    touched — a time-travel reader or an appender that has staged but not
+    committed survives a concurrent vacuum inside the window. Set
+    ``min_age_seconds=0`` only in offline maintenance."""
     import time
 
-    from sydradb_spark import manifest as mf
-    from sydradb_spark.manifest import _tree_mtime
-
-    if store is None:
-        return mf.vacuum(
-            path, keep_versions=keep_versions, min_age_seconds=min_age_seconds
-        )
-    from sydradb_spark import objectstore as obs
-
-    obs.vacuum_versions(store, POINTS_STORE_TABLE, keep_versions=keep_versions)
-    kept: set[str] = set()
-    read_versions = 0
-    pre = f"{POINTS_STORE_TABLE}/_manifest/"
-    for key in store.list(pre + "v"):
-        try:
-            kept.update(
-                obs.read_files(store, POINTS_STORE_TABLE, int(key[len(pre) + 1 : -5]))
-            )
-            read_versions += 1
-        except (ValueError, FileNotFoundError):
-            continue  # racing a concurrent vacuum
-    if not read_versions:
-        # no readable version = no keep-set at all, not an empty table: an
-        # emptied or failed listing would otherwise reclaim EVERY data file
-        # past the age window, committed ones included
-        raise RuntimeError(
-            f"vacuum_points({path!r}): the store lists no readable manifest "
-            "version — refusing to reclaim data files without a keep-set"
-        )
+    kept = mf.prune_versions(path, keep_versions, min_age_seconds, store=store)
     now = time.time()
     removed: list[str] = []
     local = _posix_table_path(path)
     if local is not None:
-        root = Path(local)
-        if not root.exists():
-            return []
-
-        def _young(p: Path) -> bool:
-            try:
-                return now - p.stat().st_mtime < min_age_seconds
-            except FileNotFoundError:
-                return True  # racing its creator — leave it alone
-
-        for f in root.glob("hour_bucket=*/*.parquet"):
-            rel = str(f.relative_to(root))
-            if rel in kept or _young(f):
-                continue
-            f.unlink(missing_ok=True)
-            crc = f.with_name(f".{f.name}.crc")
-            crc.unlink(missing_ok=True)
-            removed.append(rel)
-        for stg in root.glob(".staging-*"):
-            if stg.is_dir() and now - _tree_mtime(stg) >= min_age_seconds:
-                shutil.rmtree(stg, ignore_errors=True)
-    elif spark is not None:
+        return _vacuum_local(Path(local), kept, now - min_age_seconds)
+    if spark is not None:
         from sydradb_spark.util import hadoop_fs
 
         jvm, fs, jroot = hadoop_fs(spark, path)
@@ -1060,7 +890,9 @@ def vacuum_points(
                 if not name.endswith(".parquet") or name.startswith("."):
                     continue
                 rel = f"{pname}/{name}"
-                if rel in kept or now - f.getModificationTime() / 1000.0 < min_age_seconds:
+                if now - f.getModificationTime() / 1000.0 < min_age_seconds:
+                    continue
+                if not mf.reclaimable(kept, rel, path):
                     continue
                 fs.delete(f.getPath(), False)
                 removed.append(rel)
@@ -1073,4 +905,53 @@ def vacuum_points(
             "SparkSession to reach it; only manifest versions were pruned",
             path,
         )
+    return sorted(removed)
+
+
+def _vacuum_local(root: Path, kept: set[str] | None, cutoff: float) -> list[str]:
+    """The local data pass of ``vacuum_points``: only entries last modified
+    before ``cutoff`` are touched; one that vanishes mid-pass (racing its
+    creator or another vacuum) counts as young."""
+    from sydradb_spark.util import tree_mtime
+
+    def _young(p: Path) -> bool:
+        try:
+            return p.stat().st_mtime > cutoff
+        except FileNotFoundError:
+            return True
+
+    removed = []
+    for rel in data_files(str(root)):
+        f = root / rel
+        if _young(f) or not mf.reclaimable(kept, rel, str(root)):
+            continue
+        # missing_ok: two concurrent vacuums may both list the same file
+        f.unlink(missing_ok=True)
+        f.with_name(f".{f.name}.crc").unlink(missing_ok=True)  # checksum sibling
+        removed.append(rel)
+    # prune partition dirs holding nothing but leftover hidden files —
+    # age-guarded (r13 review): an appender renames the hidden .crc sibling
+    # BEFORE its parquet file, so a fresh dir can legitimately hold only
+    # young hidden files, and rmdir'ing it would yank the in-flight rename's
+    # parent
+    for d in root.glob("hour_bucket=*"):
+        try:
+            entries = list(d.iterdir()) if d.is_dir() else None
+        except FileNotFoundError:
+            continue  # racing another vacuum
+        if entries is None or any(p.name[0] != "." for p in entries):
+            continue
+        if any(_young(p) for p in entries) or _young(d):
+            continue
+        try:
+            for p in entries:
+                p.unlink(missing_ok=True)
+            d.rmdir()
+        except OSError:
+            pass  # a file landed between the listing and the rmdir — keep
+    # crashed private append staging, judged by the NEWEST mtime inside: a
+    # long Spark write advances only leaf mtimes (ADVICE r12)
+    for stg in root.glob(".staging-*"):
+        if stg.is_dir() and tree_mtime(stg) <= cutoff:
+            shutil.rmtree(stg, ignore_errors=True)
     return sorted(removed)

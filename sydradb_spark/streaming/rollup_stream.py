@@ -35,12 +35,12 @@ Manifest-protocol folding (r13 — VERDICT r12 item 1): on object stores
 flock path above provides NO serialization there. The manifested variants
 (``write_rollup_batch_manifested`` / ``compact_rollup_manifested`` /
 ``read_rollup_manifested`` / ``vacuum_rollup``) need no locks anywhere:
-the table's live entry list is a versioned manifest (the points sink's
-protocol — ``manifest.commit_cas`` locally, ``objectstore.commit_cas``
-through a conditional-PUT store), a fold is a CAS'd version swap whose
-``mutate`` removes exactly the entries it folded, and a batch committed
-mid-fold simply lands in the next version — never lost, never
-double-counted. Two concurrent folds can't double-count either: the
+the table's live entry list is a versioned manifest (the points table's
+one protocol, ``manifest.commit`` — in the table directory, or under the
+``rollup`` key of a caller-supplied object store), a fold is a CAS'd
+version swap whose ``mutate`` removes exactly the entries it folded, and
+a batch committed mid-fold simply lands in the next version — never
+lost, never double-counted. Two concurrent folds can't double-count either: the
 second fold's mutate sees its sources already gone and aborts. Replay
 safety is unchanged (deterministic overwrite targets + each app's newest
 batch carried unfolded) and additionally txn-ledgered: a replayed batch's
@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from sydradb_spark import manifest as mf
 from sydradb_spark.ingest import (
     NDJSON_SCHEMA,
     note_maintenance_failure,
@@ -187,7 +188,7 @@ def stream_rollup(
     ``read_rollup_manifested``. Required for object-store rollup locations
     (no flock there); pass ``store`` (an ``objectstore.ObjectStore`` scoped
     to this table) when the manifest itself must live in an object store,
-    else the local manifest protocol is used.
+    else it lives in the table directory.
 
     ``maintenance_every=k`` (manifested mode only) runs ``vacuum_rollup``
     every k batches — same rationale as the points sink's in-sink vacuum: a
@@ -362,8 +363,9 @@ def compact_rollup(spark: SparkSession, rollup_path: str, step_s: int) -> None:
 # points table already uses, applied to the rollup's entry list.
 # ---------------------------------------------------------------------------
 
-# the table key the objectstore manifest is kept under; scope the store to
-# ONE rollup table (mirrors ingest.mint_app_id's one-checkpoint scoping)
+# the store key a caller-supplied ObjectStore keeps the rollup manifest
+# under; scope the store to ONE rollup table (mirrors ingest.mint_app_id's
+# one-checkpoint scoping)
 STORE_TABLE = "rollup"
 
 
@@ -372,60 +374,11 @@ class _ConcurrentFold(Exception):
     read and our commit — committing would double-count the folded rows."""
 
 
-def _local_manifest_path(rollup_path: str) -> str:
-    """The local path the POSIX manifest protocol operates on. Rejects URI
-    locations: ``manifest.commit_cas`` on 's3a://…' would mkdir a RELATIVE
-    local junk directory and 'commit' into it — the object-store protocol
-    (pass ``store=``) is the only correct manifest home there."""
-    from sydradb_spark.ingest import _posix_checkpoint_path
-
-    local = _posix_checkpoint_path(rollup_path)
-    if local is None:
-        raise ValueError(
-            f"the local manifest protocol cannot live on {rollup_path!r}: "
-            "pass store= (an objectstore.ObjectStore) for object-store "
-            "rollup tables"
-        )
-    return local
-
-
-def _mf_commit(rollup_path: str, store, *, mutate, txn=None):
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        return mf.commit_cas(_local_manifest_path(rollup_path), mutate=mutate, txn=txn)
-    from sydradb_spark import objectstore as obs
-
-    return obs.commit_cas(store, STORE_TABLE, mutate=mutate, txn=txn)
-
-
-def _mf_read_txn(rollup_path: str, store, app_id: str) -> int | None:
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        local = _local_manifest_path(rollup_path)
-        if mf.latest_version(local) is None:
-            return None
-        return mf.read_txn(local, app_id)
-    from sydradb_spark import objectstore as obs
-
-    return obs.read_txn(store, STORE_TABLE, app_id)
-
-
-def _mf_files(rollup_path: str, store) -> list[str] | None:
-    """Current manifest entry list (relative names), or None pre-manifest."""
-    if store is None:
-        from sydradb_spark import manifest as mf
-
-        local = _local_manifest_path(rollup_path)
-        if mf.latest_version(local) is None:
-            return None
-        return mf.read_files(local)
-    from sydradb_spark import objectstore as obs
-
-    if obs.latest_version(store, STORE_TABLE) is None:
-        return None
-    return obs.read_files(store, STORE_TABLE)
+def _entries(rollup_path: str, store) -> list[str]:
+    """The manifest's live entry names ([] before the first commit)."""
+    if not mf.has_manifest(rollup_path, store=store, key=STORE_TABLE):
+        return []
+    return mf.read_files(rollup_path, store=store, key=STORE_TABLE)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -498,10 +451,13 @@ def init_rollup_manifest(
         if (is_dir and (name.startswith("b_") or name.startswith("c_")))
         or (not is_dir and name.endswith(".parquet") and name[0] != ".")
     )
-    if not entries and _mf_files(rollup_path, store) is None:
+    if not entries and not mf.has_manifest(rollup_path, store=store, key=STORE_TABLE):
         return None
-    return _mf_commit(
-        rollup_path, store, mutate=lambda cur: sorted(set(cur) | set(entries))
+    return mf.commit(
+        rollup_path,
+        mutate=lambda cur: sorted(set(cur) | set(entries)),
+        store=store,
+        key=STORE_TABLE,
     )
 
 
@@ -529,17 +485,18 @@ def write_rollup_batch_manifested(
     touches nothing readers can see; a crash BETWEEN write and commit
     still re-writes, but that dir was never manifest-referenced. Same
     pattern as ``storage.write_points``' replay pre-check."""
-    last = _mf_read_txn(rollup_path, store, app_id)
+    last = mf.read_txn(rollup_path, app_id, store=store, key=STORE_TABLE)
     if last is not None and last >= batch_id:
         return None  # replayed batch — already durable and folded-safe
     target = _batch_dir(rollup_path, batch_id, app_id)
     partial.write.mode("overwrite").parquet(target)
     name = target.rsplit("/", 1)[1]
-    return _mf_commit(
+    return mf.commit(
         rollup_path,
-        store,
         mutate=lambda cur: sorted(set(cur) | {name}),
         txn=(app_id, batch_id),
+        store=store,
+        key=STORE_TABLE,
     )
 
 
@@ -549,7 +506,7 @@ def read_rollup_manifested(
     """Fold the MANIFESTED entries (batch partials + compacted sets) into
     the canonical one-row-per-bucket rollup. Reads only what the manifest
     references — orphaned dirs awaiting ``vacuum_rollup`` are invisible."""
-    names = _mf_files(rollup_path, store) or []
+    names = _entries(rollup_path, store)
     if not names:
         # empty table: an empty rollup frame with the canonical schema
         empty = spark.createDataFrame(
@@ -600,7 +557,7 @@ def compact_rollup_manifested(
     None when there was nothing to fold or a concurrent fold won."""
     import uuid
 
-    names = _mf_files(rollup_path, store)
+    names = _entries(rollup_path, store)
     if not names:
         return None
     live = _live_tail_names([n for n in names if n.startswith("b_")])
@@ -630,7 +587,7 @@ def compact_rollup_manifested(
         return sorted((cur_set - folded_set) | {out})
 
     try:
-        return _mf_commit(rollup_path, store, mutate=mutate)
+        return mf.commit(rollup_path, mutate=mutate, store=store, key=STORE_TABLE)
     except _ConcurrentFold:
         # backend-aware removal: shutil against an s3a:// string would be a
         # silent no-op and leak the aborted fold's output forever
@@ -652,54 +609,27 @@ def vacuum_rollup(
     inside — a fold or batch write advances leaf mtimes, not necessarily
     the dir's own) is never deleted. Returns the removed entry names.
 
-    Backends: the MANIFEST side needs ``store`` for object-store manifests
-    (``store=None`` + a non-POSIX ``rollup_path`` is rejected — the local
-    link-CAS protocol cannot live on s3://). The DATA side walks local
-    paths with the stdlib and URI locations through the Hadoop FileSystem
-    API via ``spark`` — without a session, a non-local data pass is SKIPPED
-    (version pruning still runs; entries wait for a vacuum that has one).
-    The streaming sink's in-sink maintenance always passes its session."""
+    ``mf.prune_versions`` builds the keep-set — with every guard of the
+    points vacuum: young versions kept, pruned holes skipped, and nothing
+    reclaimed without a keep-set (``mf.reclaimable``) — so a store-backed
+    and a local rollup vacuum alike refuse to reclaim committed entries on
+    an emptied listing or manifest directory. The
+    MANIFEST side needs ``store`` for an object-store rollup location. The
+    DATA side walks local paths with the stdlib and URI locations through
+    the Hadoop FileSystem API via ``spark`` — without a session, a
+    non-local data pass is SKIPPED (version pruning still runs; entries
+    wait for a vacuum that has one). The streaming sink's in-sink
+    maintenance always passes its session."""
     import shutil
     import time
 
-    from sydradb_spark import manifest as mf
     from sydradb_spark.ingest import _posix_checkpoint_path
-    from sydradb_spark.manifest import _tree_mtime
+    from sydradb_spark.util import tree_mtime
 
+    kept = mf.prune_versions(
+        rollup_path, keep_versions, min_age_seconds, store=store, key=STORE_TABLE
+    )
     local = _posix_checkpoint_path(rollup_path)
-    kept: set[str] = set()
-    if store is None:
-        if local is None:
-            raise ValueError(
-                f"vacuum_rollup with store=None needs a local rollup path, "
-                f"got {rollup_path!r}: the link-CAS manifest protocol has no "
-                "object-store primitive — pass an objectstore-backed store"
-            )
-        # manifest.vacuum's data pass globs hour_bucket=* (a no-op on a
-        # rollup table); it prunes old v*.json + commit temp files for us
-        mf.vacuum(
-            local, keep_versions=keep_versions, min_age_seconds=min_age_seconds
-        )
-        mdir = Path(local) / mf.MANIFEST_DIR
-        if not mdir.exists():
-            return []
-        for p in mdir.glob("v*.json"):
-            try:
-                kept.update(mf.read_files(local, int(p.stem[1:])))
-            except FileNotFoundError:
-                continue  # racing a concurrent vacuum
-    else:
-        from sydradb_spark import objectstore as obs
-
-        obs.vacuum_versions(store, STORE_TABLE, keep_versions=keep_versions)
-        pre = f"{STORE_TABLE}/_manifest/"
-        for key in store.list(pre + "v"):
-            try:
-                kept.update(
-                    obs.read_files(store, STORE_TABLE, int(key[len(pre) + 1 : -5]))
-                )
-            except (ValueError, FileNotFoundError):
-                continue
 
     def _is_entry(name: str, is_dir: bool) -> bool:
         if is_dir:
@@ -716,10 +646,12 @@ def vacuum_rollup(
         if not root.exists():
             return []
         for p in root.iterdir():
-            if not _is_entry(p.name, p.is_dir()) or p.name in kept:
+            if not _is_entry(p.name, p.is_dir()):
                 continue
-            if now - _tree_mtime(p) < min_age_seconds:
+            if now - tree_mtime(p) < min_age_seconds:
                 continue  # possibly a live writer's target or a fresh fold
+            if not mf.reclaimable(kept, p.name, rollup_path):
+                continue
             if p.is_dir():
                 shutil.rmtree(p, ignore_errors=True)
             else:
@@ -734,7 +666,7 @@ def vacuum_rollup(
             return []
         for st in fs.listStatus(jroot):
             name = st.getPath().getName()
-            if not _is_entry(name, st.isDirectory()) or name in kept:
+            if not _is_entry(name, st.isDirectory()):
                 continue
             newest = st.getModificationTime() / 1000.0
             if st.isDirectory():
@@ -742,6 +674,8 @@ def vacuum_rollup(
                 while it.hasNext():
                     newest = max(newest, it.next().getModificationTime() / 1000.0)
             if now - newest < min_age_seconds:
+                continue
+            if not mf.reclaimable(kept, name, rollup_path):
                 continue
             fs.delete(st.getPath(), True)
             removed.append(name)

@@ -18,6 +18,30 @@ def hadoop_fs(spark, path: str):
     return jvm, jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
+def tree_mtime(root) -> float:
+    """Newest mtime anywhere inside ``root`` (a ``Path``; the dir itself
+    included). A long-running Spark write into a staging tree advances only
+    LEAF mtimes — judging liveness by the root dir's own mtime would let a
+    vacuum rmtree a live writer's staging mid-write. Missing entries
+    (racing their creator/deleter) count as 'now' = maximally young, so
+    races always err toward keeping."""
+    import time
+
+    newest = 0.0
+    try:
+        newest = root.stat().st_mtime
+        for p in root.rglob("*"):
+            try:
+                m = p.stat().st_mtime
+            except FileNotFoundError:
+                return time.time()
+            if m > newest:
+                newest = m
+    except FileNotFoundError:
+        return time.time()
+    return newest
+
+
 def write_marker(path: str, text: str) -> None:
     """Write the file ``path`` whole or not at all: a temp file beside it,
     then ``os.replace``. An index writes its commit marker this way AFTER

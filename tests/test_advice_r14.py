@@ -108,7 +108,7 @@ def test_sink_maintenance_failure_logged_stream_survives(
     def boom(*a, **k):
         raise OSError("store permissions")
 
-    monkeypatch.setattr(mf, "vacuum", boom)
+    monkeypatch.setattr(mf, "prune_versions", boom)
     src = tmp_path / "src"
     src.mkdir()
     (src / "a.ndjson").write_text('{"series": "m.x", "ts": 100, "value": 1.0}\n')

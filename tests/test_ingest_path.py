@@ -17,7 +17,7 @@ from sydradb_spark import manifest as mf
 from sydradb_spark import objectstore as obs
 from sydradb_spark import storage
 from sydradb_spark.model import INPUT_SCHEMA, driver_batch, with_identity
-from sydradb_spark.storage import POINT_COLS, POINTS_STORE_TABLE
+from sydradb_spark.storage import POINT_COLS
 from sydradb_spark.sydraql.engine import SydraQLEngine
 
 T0 = 1_704_067_200  # an hour boundary
@@ -193,7 +193,7 @@ def test_vacuum_points_refuses_an_empty_version_listing(spark, tmp_path, monkeyp
     store = obs.MemoryObjectStore()
     path = str(tmp_path / "tbl")
     storage.write_points(with_identity(driver_batch(spark, _rows("s", T0, 5))), path, store=store)
-    files = storage._pm_files(path, store)
+    files = mf.read_files(path, store=store)
     real_list = store.list
     monkeypatch.setattr(
         store, "list", lambda prefix: [] if "_manifest/v" in prefix else real_list(prefix)
@@ -211,7 +211,7 @@ def test_manifest_vacuum_refuses_a_missing_version_listing(spark, tmp_path):
     for v in mdir.glob("v*.json"):
         v.rename(mdir / f"moved-{v.name}")  # LATEST stays, listing is empty
     with pytest.raises(RuntimeError, match="keep-set"):
-        mf.vacuum(path, min_age_seconds=0)
+        storage.vacuum_points(path, min_age_seconds=0)
     assert all((Path(path) / f).exists() for f in files)
 
 
@@ -223,20 +223,19 @@ def test_snapshot_pins_one_version_for_files_and_ledger(spark, tmp_path, monkeyp
     path = str(tmp_path / "src")
     batch = with_identity(driver_batch(spark, _rows("s", T0, 5)))
     storage.write_points(batch, path, store=store, txn=("app", 1))
-    pinned_files = sorted(storage._pm_files(path, store))
-    real_files = storage._pm_files
+    pinned_files = sorted(mf.read_files(path, store=store))
+    real_files = mf.read_files
 
-    def files_then_commit(p, s, version=None):
-        out = real_files(p, s, version=version)
-        storage._pm_commit(p, s, mutate=lambda old: old, txn=("app", 2))
+    def files_then_commit(p, version=None, **kw):
+        out = real_files(p, version, **kw)
+        if p == path:
+            mf.commit(p, mutate=lambda old: old, txn=("app", 2), store=store)
         return out
 
-    monkeypatch.setattr(storage, "_pm_files", files_then_commit)
+    monkeypatch.setattr(mf, "read_files", files_then_commit)
     dest = str(tmp_path / "snap")
     storage.snapshot(path, dest, store=store)
     assert sorted(mf.read_files(dest)) == pinned_files
     assert mf.read_ledger(dest) == {"app": 1}
-    ledger = (
-        mf.read_ledger(path) if store is None else obs.read_ledger(store, POINTS_STORE_TABLE)
-    )
+    ledger = mf.read_ledger(path, store=store)
     assert ledger == {"app": 2}  # the commit did land in between

@@ -76,7 +76,7 @@ def test_retention_filter_and_partition_drop(spark, points, tmp_path, stored):
     assert dropped
     assert storage.read_points(spark, stored).count() == 0
     assert mf.read_files(stored) == []
-    mf.vacuum(stored, keep_versions=1, min_age_seconds=0)
+    storage.vacuum_points(stored, keep_versions=1, min_age_seconds=0)
     assert all(not d.startswith("hour_bucket=") for d in os.listdir(stored))
 
 
@@ -489,10 +489,10 @@ def test_delete_where_commit_spares_concurrent_appends(spark, tmp_path, monkeypa
     captured = {}
     real_commit = mf.commit
 
-    def spy(p, files=None, *, mutate=None, txn=None):
+    def spy(p, files=None, *, mutate=None, **kw):
         if mutate is not None:
             captured["mutate"] = mutate
-        return real_commit(p, files, mutate=mutate, txn=txn)
+        return real_commit(p, files, mutate=mutate, **kw)
 
     monkeypatch.setattr(mf, "commit", spy)
     storage.delete_where(

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from sydradb_spark import manifest as mf
+from sydradb_spark import objectstore as obs
 from sydradb_spark import storage
 from sydradb_spark.sydraql.engine import SydraQLEngine
 
@@ -59,8 +60,8 @@ def test_crash_before_commit_preserves_old_version(spark, points, table):
     )
     assert storage.read_points(spark, table).count() == n0  # unchanged
     # the next real commit simply ignores the orphaned files; vacuum reaps
-    assert len(mf.data_files(table)) > len(mf.read_files(table))
-    removed = mf.vacuum(table, keep_versions=1, min_age_seconds=0)
+    assert len(storage.data_files(table)) > len(mf.read_files(table))
+    removed = storage.vacuum_points(table, keep_versions=1, min_age_seconds=0)
     assert removed
     assert storage.read_points(spark, table).count() == n0
 
@@ -70,7 +71,7 @@ def test_vacuum_keeps_recent_versions(spark, points, table):
     eng.query("delete from cpu.total where time >= 0 and time < 2000000")
     eng.query("delete from weather.room2 where time >= 0 and time < 2000000")
     assert mf.latest_version(table) == 3
-    mf.vacuum(table, keep_versions=2, min_age_seconds=0)
+    storage.vacuum_points(table, keep_versions=2, min_age_seconds=0)
     # latest and latest-1 remain readable; v1's exclusive files are gone
     for v in (2, 3):
         files = mf.read_files(table, version=v)
@@ -105,7 +106,7 @@ def test_snapshot_is_metadata_only_and_isolated(spark, points, table):
 
     eng = SydraQLEngine(spark, storage_path=table)
     eng.query("delete from cpu.total where time >= 0 and time < 2000000")
-    mf.vacuum(table, keep_versions=1, min_age_seconds=0)
+    storage.vacuum_points(table, keep_versions=1, min_age_seconds=0)
     # live table changed; the snapshot still reads the original rows
     assert storage.read_points(spark, dest).count() == n0
     assert storage.read_points(spark, table).count() < n0
@@ -113,10 +114,11 @@ def test_snapshot_is_metadata_only_and_isolated(spark, points, table):
 
 def test_commit_mutate_merges_under_lock(tmp_path):
     """Concurrent appenders commit via mutate= so the read-modify-write of
-    the file list happens under the flock: no writer's files are dropped
+    the file list happens inside the CAS loop: no writer's files are dropped
     from LATEST (the lost-append race ADVICE flagged). With the pre-fix
-    pattern (read_files() outside the lock, then commit(files)) interleaved
-    appenders routinely lose each other's files."""
+    pattern (read_files() outside the commit, then commit(files))
+    interleaved appenders routinely lose each other's files. No lock: the
+    16 CAS retries absorb the contention of two unsynchronized appenders."""
     import threading
 
     path = str(tmp_path / "mut")
@@ -162,7 +164,7 @@ def test_vacuum_age_window_protects_live_readers(spark, points, table):
     eng.query("delete from weather.room2 where time >= 0 and time < 2000000")
     assert mf.latest_version(table) == 3
     n1 = storage.read_points_version(spark, table, version=1).count()
-    removed = mf.vacuum(table, keep_versions=1)  # default min_age_seconds
+    removed = storage.vacuum_points(table, keep_versions=1)  # default min_age_seconds
     assert removed == []
     # every version is still fully readable, not just the kept ones
     for v in (1, 2, 3):
@@ -232,20 +234,43 @@ def test_optimize_partitions_merges_small_files(spark, points, tmp_path):
     assert all(per_part_after[b] == 1 for b in optimized)
     assert storage.read_points(spark, path).count() == n0
     # old small files reaped by vacuum, rows unchanged
-    mf.vacuum(path, keep_versions=1, min_age_seconds=0)
+    storage.vacuum_points(path, keep_versions=1, min_age_seconds=0)
     assert storage.read_points(spark, path).count() == n0
 
 
-def test_commit_cas_concurrent_committers(tmp_path):
-    """VERDICT r05 item 8 (multi-host commits): commit_cas is the lockless
-    protocol — a barrier forces both committers to read the SAME base
-    version, so both race for v+1; exactly one wins the exclusive version-
-    file link, the loser retries against the fresh list. No append is lost
-    and every version number is won exactly once."""
+# ---------------------------------------------------------------------------
+# The protocol on every backend: a POSIX table (the manifest in its own
+# directory), a separate LocalFSObjectStore and a MemoryObjectStore (the
+# object-store shape) run each test body through the same functions.
+# ---------------------------------------------------------------------------
+
+BACKENDS = ("posix", "localfs", "memory")
+OBJECT_STORES = ("localfs", "memory")
+
+
+def _backend(name: str, tmp_path) -> tuple[str, object]:
+    """(table path, store) of an empty table on backend ``name``."""
+    root = tmp_path / name
+    store = {
+        "posix": lambda: None,
+        "localfs": lambda: obs.LocalFSObjectStore(str(root / "store")),
+        "memory": obs.MemoryObjectStore,
+    }[name]()
+    return str(root / "t"), store
+
+
+@pytest.mark.parametrize("make_store", BACKENDS)
+def test_objectstore_concurrent_committers_no_lost_appends(tmp_path, make_store):
+    """Multi-host commits (VERDICT r05 item 8): the commit is lockless on
+    every backend. A barrier forces both committers to read the SAME base
+    version each round, so both race for v+1; exactly one wins the
+    conditional put (exclusive link on POSIX), the loser re-reads and
+    retries against the fresh list. No append is lost and every version
+    number is won exactly once."""
     import threading
 
-    path = str(tmp_path / "cas")
-    mf.commit_cas(path, ["hour_bucket=0/base.parquet"])
+    path, store = _backend(make_store, tmp_path)
+    mf.commit(path, ["hour_bucket=0/base.parquet"], store=store)
     collide = threading.Barrier(2)
     errors: list[Exception] = []
 
@@ -263,7 +288,7 @@ def test_commit_cas_concurrent_committers(tmp_path):
                         pass
                     return old + [r]
 
-                mf.commit_cas(path, mutate=merge)
+                mf.commit(path, mutate=merge, store=store)
         except Exception as e:  # surfaced below — don't swallow in a thread
             errors.append(e)
 
@@ -274,59 +299,92 @@ def test_commit_cas_concurrent_committers(tmp_path):
         t.join(timeout=120)
     collide.abort()
     assert not errors
-    files = set(mf.read_files(path))
+    files = set(mf.read_files(path, store=store))
     assert len(files) == 11  # base + 5 per committer — none lost
-    assert mf.latest_version(path) == 11
-    # every version file exists exactly once, 1..11 with no gaps
-    versions = sorted(
-        int(p.stem[1:]) for p in (tmp_path / "cas" / "_manifest").glob("v*.json")
-    )
-    assert versions == list(range(1, 12))
+    assert mf.latest_version(path, store=store) == 11
+    # every version exists exactly once, 1..11 with no gaps
+    assert sorted(mf._versions(*mf._at(path, store))) == list(range(1, 12))
+    if make_store == "memory":
+        # the race actually happened: at least one conditional PUT lost
+        assert store.cas_losses >= 1
+
+
+def _check_stale_pointer(tmp_path, backends):
+    for name in backends:
+        path, store = _backend(name, tmp_path)
+        st, pre = mf._at(path, store)
+        mf.commit(path, ["hour_bucket=0/a.parquet"], store=store)
+        mf.commit(path, mutate=lambda old: old + ["hour_bucket=0/b.parquet"], store=store)
+        st.put(pre + "LATEST", b"1")  # the crash window: pointer regressed
+        assert mf.latest_version(path, store=store) == 2, name
+        assert "hour_bucket=0/b.parquet" in mf.read_files(path, store=store), name
+        mf.commit(path, mutate=lambda old: old + ["hour_bucket=0/c.parquet"], store=store)
+        assert st.get(pre + "LATEST") == b"3", name
 
 
 def test_latest_version_survives_stale_pointer(tmp_path):
     """A committed-but-unpointed version (crash or concurrent committer
-    between link and pointer advance) is still visible: readers take
-    max(pointer hint, listed versions)."""
-    path = str(tmp_path / "stale")
-    mf.commit(path, ["hour_bucket=0/a.parquet"])
-    mf.commit(path, mutate=lambda old: old + ["hour_bucket=0/b.parquet"])
-    # simulate the crash window: pointer regressed to v1
-    (tmp_path / "stale" / "_manifest" / "LATEST").write_text("1")
-    assert mf.latest_version(path) == 2
-    assert "hour_bucket=0/b.parquet" in mf.read_files(path)
-    # the next commit lands on v3 and repairs the pointer
-    mf.commit(path, mutate=lambda old: old + ["hour_bucket=0/c.parquet"])
-    assert (tmp_path / "stale" / "_manifest" / "LATEST").read_text() == "3"
+    between the CAS and the pointer advance) is still visible: readers take
+    max(pointer hint, listed versions), and the next commit repairs the
+    pointer."""
+    _check_stale_pointer(tmp_path, ["posix"])
 
 
-# ---------------------------------------------------------------------------
-# Object-store commit backend (sydradb_spark.objectstore): the same protocol
-# with the CAS re-based on conditional PUT — VERDICT r06 item 2.
-# ---------------------------------------------------------------------------
-
-from sydradb_spark import objectstore as obs
+def test_objectstore_stale_pointer_harmless(tmp_path):
+    """The same on the object-store backends: a regressed LATEST hint never
+    decides correctness, the listing does."""
+    _check_stale_pointer(tmp_path, OBJECT_STORES)
 
 
-def _store_roundtrip(store):
-    assert obs.latest_version(store, "tbl") is None
-    v1 = obs.commit_cas(store, "tbl", ["hour_bucket=0/a.parquet"])
+def test_latest_version_survives_corrupt_pointer(tmp_path):
+    """r13 review: a truncated/empty LATEST hint must not brick the table —
+    the listed versions are the source of truth."""
+    for name in BACKENDS:
+        path, store = _backend(name, tmp_path)
+        st, pre = mf._at(path, store)
+        mf.commit(path, ["f0"], store=store)
+        mf.commit(path, ["f0", "f1"], store=store)
+        st.put(pre + "LATEST", b"")  # corrupt
+        assert mf.latest_version(path, store=store) == 2, name
+        assert mf.read_files(path, store=store) == ["f0", "f1"], name
+        assert mf.commit(path, mutate=lambda old: old + ["f2"], store=store) == 3, name
+
+
+def test_objectstore_crashed_committer_visible(tmp_path):
+    """A committer that died between the conditional put and the pointer
+    advance left a committed-but-unpointed version — readers still see it."""
+    import json as _json
+
+    for name in BACKENDS:
+        path, store = _backend(name, tmp_path)
+        st, pre = mf._at(path, store)
+        mf.commit(path, ["a.parquet"], store=store)
+        doc = {"version": 2, "files": ["a.parquet", "b.parquet"]}
+        assert st.put_if_absent(pre + "v2.json", _json.dumps(doc).encode()), name
+        assert mf.latest_version(path, store=store) == 2, name
+        assert "b.parquet" in mf.read_files(path, store=store), name
+
+
+def _store_roundtrip(store, path="unused"):
+    assert mf.latest_version(path, store=store, key="tbl") is None
+    v1 = mf.commit(path, ["hour_bucket=0/a.parquet"], store=store, key="tbl")
     assert v1 == 1
-    v2 = obs.commit_cas(
-        store, "tbl", mutate=lambda old: old + ["hour_bucket=1/b.parquet"]
+    v2 = mf.commit(
+        path, mutate=lambda old: old + ["hour_bucket=1/b.parquet"], store=store, key="tbl"
     )
     assert v2 == 2
-    assert obs.latest_version(store, "tbl") == 2
-    assert obs.read_files(store, "tbl") == [
+    assert mf.latest_version(path, store=store, key="tbl") == 2
+    assert mf.read_files(path, store=store, key="tbl") == [
         "hour_bucket=0/a.parquet",
         "hour_bucket=1/b.parquet",
     ]
     # time travel to v1 still works
-    assert obs.read_files(store, "tbl", 1) == ["hour_bucket=0/a.parquet"]
+    assert mf.read_files(path, 1, store=store, key="tbl") == ["hour_bucket=0/a.parquet"]
+    assert store.get("tbl/_manifest/LATEST") == b"2"  # the store key layout
     with pytest.raises(ValueError):
-        obs.commit_cas(store, "tbl")  # neither files nor mutate
+        mf.commit(path, store=store, key="tbl")  # neither files nor mutate
     with pytest.raises(ValueError):
-        obs.commit_cas(store, "tbl", ["x"], mutate=lambda o: o)  # both
+        mf.commit(path, ["x"], mutate=lambda o: o, store=store, key="tbl")  # both
 
 
 def test_objectstore_commit_roundtrip_memory():
@@ -335,98 +393,6 @@ def test_objectstore_commit_roundtrip_memory():
 
 def test_objectstore_commit_roundtrip_localfs(tmp_path):
     _store_roundtrip(obs.LocalFSObjectStore(str(tmp_path / "store")))
-
-
-def test_objectstore_stale_pointer_harmless():
-    """A regressed/lost LATEST hint never decides correctness: the listing
-    is the source of truth and the next commit repairs the pointer."""
-    store = obs.MemoryObjectStore()
-    obs.commit_cas(store, "t", ["a.parquet"])
-    obs.commit_cas(store, "t", mutate=lambda old: old + ["b.parquet"])
-    store.put("t/_manifest/LATEST", b"1")  # simulate last-wins regression
-    assert obs.latest_version(store, "t") == 2
-    assert set(obs.read_files(store, "t")) == {"a.parquet", "b.parquet"}
-    obs.commit_cas(store, "t", mutate=lambda old: old + ["c.parquet"])
-    assert store.get("t/_manifest/LATEST") == b"3"
-
-
-def test_objectstore_crashed_committer_visible():
-    """A committer that died between conditional PUT and pointer advance
-    left a committed-but-unpointed version — readers still see it."""
-    store = obs.MemoryObjectStore()
-    obs.commit_cas(store, "t", ["a.parquet"])
-    # hand-craft the crash: v2 exists, pointer still says 1
-    import json as _json
-
-    assert store.put_if_absent(
-        "t/_manifest/v2.json",
-        _json.dumps({"version": 2, "files": ["a.parquet", "b.parquet"]}).encode(),
-    )
-    assert obs.latest_version(store, "t") == 2
-    assert "b.parquet" in obs.read_files(store, "t")
-
-
-@pytest.mark.parametrize("make_store", ["memory", "localfs"])
-def test_objectstore_concurrent_committers_no_lost_appends(tmp_path, make_store):
-    """The backend-swap twin of test_commit_cas_concurrent_committers: two
-    threads race append commits through the object-store protocol (no
-    flock exists there — contention is absorbed entirely by the
-    conditional-PUT retry loop). A barrier forces both committers to read
-    the SAME base version each round; exactly one wins each conditional
-    PUT, the loser re-reads and retries. No append lost, every version won
-    exactly once."""
-    import threading
-
-    store = (
-        obs.MemoryObjectStore()
-        if make_store == "memory"
-        else obs.LocalFSObjectStore(str(tmp_path / "store"))
-    )
-    obs.commit_cas(store, "tbl", ["hour_bucket=0/base.parquet"])
-    collide = threading.Barrier(2)
-    errors: list[Exception] = []
-
-    def appender(name: str):
-        try:
-            for i in range(5):
-                rel = f"hour_bucket=0/{name}{i}.parquet"
-
-                def merge(old, r=rel):
-                    try:
-                        collide.wait(timeout=5)
-                    except threading.BrokenBarrierError:
-                        pass
-                    return old + [r]
-
-                obs.commit_cas(store, "tbl", mutate=merge)
-        except Exception as e:
-            errors.append(e)
-
-    threads = [threading.Thread(target=appender, args=(n,)) for n in "ab"]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=120)
-    collide.abort()
-    assert not errors
-    files = set(obs.read_files(store, "tbl"))
-    assert len(files) == 11  # base + 5 per committer — none lost
-    assert obs.latest_version(store, "tbl") == 11
-    if make_store == "memory":
-        # the race actually happened: at least one conditional PUT lost
-        assert store.cas_losses >= 1
-
-
-def test_objectstore_vacuum_versions():
-    store = obs.MemoryObjectStore()
-    for i in range(5):
-        obs.commit_cas(store, "t", mutate=lambda old, i=i: old + [f"f{i}.parquet"])
-    removed = obs.vacuum_versions(store, "t", keep_versions=2)
-    assert removed == ["t/_manifest/v1.json", "t/_manifest/v2.json", "t/_manifest/v3.json"]
-    assert obs.latest_version(store, "t") == 5
-    assert len(obs.read_files(store, "t")) == 5
-    with pytest.raises(FileNotFoundError):
-        obs.read_files(store, "t", 1)  # vacuumed past the reader horizon
 
 
 def test_localfs_store_key_escape_rejected(tmp_path):
@@ -439,20 +405,35 @@ def test_localfs_store_key_escape_rejected(tmp_path):
 # --- reference WAL replay-above-highwater cutoff engine.zig:406-437) -------
 
 
+def _check_txn_replay(tmp_path, backends):
+    for name in backends:
+        path, store = _backend(name, tmp_path)
+        assert mf.commit(path, ["a.parquet"], txn=("app", 0), store=store) == 1, name
+        assert mf.read_txn(path, "app", store=store) == 0, name
+        # replaying the same txn commits nothing and bumps no version
+        dup = mf.commit(path, mutate=lambda old: old + ["dup"], txn=("app", 0), store=store)
+        assert dup is None, name
+        assert mf.latest_version(path, store=store) == 1, name
+        assert mf.read_files(path, store=store) == ["a.parquet"], name
+        # the NEXT txn goes through and the ledger advances
+        nxt = mf.commit(path, mutate=lambda old: old + ["b"], txn=("app", 1), store=store)
+        assert nxt == 2, name
+        assert mf.read_txn(path, "app", store=store) == 1, name
+        assert mf.read_files(path, store=store) == ["a.parquet", "b"], name
+        # a LOWER txn version is also rejected (replay of an older batch)
+        old = mf.commit(path, mutate=lambda old: old + ["c"], txn=("app", 0), store=store)
+        assert old is None, name
+        # untxn'd commits carry the ledger forward
+        assert mf.commit(path, mutate=lambda old: old + ["c"], store=store) == 3, name
+        assert mf.read_txn(path, "app", store=store) == 1, name
+
+
 def test_commit_txn_replay_is_noop(tmp_path):
-    path = str(tmp_path / "t")
-    assert mf.commit(path, ["a.parquet"], txn=("app", 0)) == 1
-    assert mf.read_txn(path, "app") == 0
-    # replaying the same txn commits nothing and bumps no version
-    assert mf.commit(path, mutate=lambda old: old + ["dup.parquet"], txn=("app", 0)) is None
-    assert mf.latest_version(path) == 1
-    assert mf.read_files(path) == ["a.parquet"]
-    # the NEXT txn goes through and the ledger advances
-    assert mf.commit(path, mutate=lambda old: old + ["b.parquet"], txn=("app", 1)) == 2
-    assert mf.read_txn(path, "app") == 1
-    assert mf.read_files(path) == ["a.parquet", "b.parquet"]
-    # a LOWER txn version is also rejected (replay of an older batch)
-    assert mf.commit(path, mutate=lambda old: old + ["c"], txn=("app", 0)) is None
+    _check_txn_replay(tmp_path, ["posix"])
+
+
+def test_objectstore_commit_txn_replay_is_noop(tmp_path):
+    _check_txn_replay(tmp_path, OBJECT_STORES)
 
 
 def test_commit_txn_ledger_is_per_app(tmp_path):
@@ -499,45 +480,56 @@ def test_write_points_txn_orphan_after_commit_crash(spark, points, table, monkey
         storage.write_points(points.limit(3), table, mode="append", txn=("ck", 0))
     # durable state unchanged; staged files are unreferenced orphans
     assert storage.read_points(spark, table).count() == n
-    assert len(mf.data_files(table)) > len(mf.read_files(table))
+    assert len(storage.data_files(table)) > len(mf.read_files(table))
     # the replayed batch commits exactly once
     storage.write_points(points.limit(3), table, mode="append", txn=("ck", 0))
     assert storage.read_points(spark, table).count() == n + 3
     # vacuum reclaims the first attempt's orphans
-    removed = mf.vacuum(table, keep_versions=99, min_age_seconds=0)
+    removed = storage.vacuum_points(table, keep_versions=99, min_age_seconds=0)
     assert removed
     assert storage.read_points(spark, table).count() == n + 3
 
 
-def test_objectstore_commit_txn_replay_is_noop():
-    store = obs.MemoryObjectStore()
-    assert obs.commit_cas(store, "t", ["a"], txn=("app", 0)) == 1
-    assert obs.read_txn(store, "t", "app") == 0
-    assert (
-        obs.commit_cas(store, "t", mutate=lambda old: old + ["dup"], txn=("app", 0))
-        is None
-    )
-    assert obs.latest_version(store, "t") == 1
-    assert obs.commit_cas(store, "t", mutate=lambda old: old + ["b"], txn=("app", 1)) == 2
-    assert obs.read_files(store, "t") == ["a", "b"]
-    # untxn'd commits carry the ledger forward
-    assert obs.commit_cas(store, "t", mutate=lambda old: old + ["c"]) == 3
-    assert obs.read_txn(store, "t", "app") == 1
+def _check_version_prune(tmp_path, backends):
+    for name in backends:
+        path, store = _backend(name, tmp_path)
+        for i in range(5):
+            mf.commit(path, mutate=lambda old, i=i: old + [f"f{i}.parquet"], store=store)
+        keep = mf.prune_versions(path, keep_versions=2, min_age_seconds=0, store=store)
+        assert keep == {f"f{i}.parquet" for i in range(5)}, name
+        assert sorted(mf._versions(*mf._at(path, store))) == [4, 5], name
+        assert mf.latest_version(path, store=store) == 5, name
+        with pytest.raises(FileNotFoundError):
+            mf.read_files(path, 1, store=store)  # vacuumed past the reader horizon
+        mf.prune_versions(path, keep_versions=1, min_age_seconds=0, store=store)
+        assert sorted(mf._versions(*mf._at(path, store))) == [5], name
+        # more commits, then vacuum again across the v1-v4 hole
+        mf.commit(path, mutate=lambda old: old + ["g.parquet"], store=store)
+        mf.prune_versions(path, keep_versions=1, min_age_seconds=0, store=store)
+        assert sorted(mf._versions(*mf._at(path, store))) == [6], name
+        assert mf.read_files(path, store=store) == sorted(
+            [f"f{i}.parquet" for i in range(5)] + ["g.parquet"]
+        ), name
 
 
 def test_vacuum_repeated_with_holes(tmp_path):
-    """Repeated vacuums leave version holes below the kept window; a later
-    vacuum must skip the holes, not read them (crashed the streaming
-    sink's second maintenance pass before the r11 fix)."""
+    """Version pruning keeps the last ``keep_versions`` versions; later
+    vacuums skip the holes below the kept window instead of reading them
+    (crashed the streaming sink's second maintenance pass before the r11
+    fix), and a pruned version is gone past the reader horizon."""
+    _check_version_prune(tmp_path, ["posix"])
+    # the points vacuum over a POSIX table: data files are not touched here
     path = str(tmp_path / "t")
     for i in range(6):
         mf.commit(path, mutate=lambda old, i=i: old + [f"f{i}.parquet"])
-    assert mf.vacuum(path, keep_versions=1, min_age_seconds=0) == []
+    assert storage.vacuum_points(path, keep_versions=1, min_age_seconds=0) == []
     assert [p.name for p in (tmp_path / "t" / "_manifest").glob("v*.json")] == ["v6.json"]
-    # more commits, then vacuum again across the v1-v5 hole
-    mf.commit(path, mutate=lambda old: old + ["g.parquet"])
-    assert mf.vacuum(path, keep_versions=1, min_age_seconds=0) == []
-    assert mf.read_files(path) == sorted([f"f{i}.parquet" for i in range(6)] + ["g.parquet"])
+
+
+def test_objectstore_vacuum_versions(tmp_path):
+    """The version prune's window, reader horizon and hole skipping on the
+    object-store backends."""
+    _check_version_prune(tmp_path, OBJECT_STORES)
 
 
 def test_compact_storage_preserves_txn_ledger(spark, points, table):
@@ -558,53 +550,41 @@ def test_compact_storage_preserves_txn_ledger(spark, points, table):
     assert before <= n0 + 4  # compaction deduped, never duplicated
 
 
+def _check_cas_retry_through_vacuum(tmp_path, monkeypatch, backends):
+    real_read = mf._read_doc
+    calls = {"n": 0}
+
+    def racing_read(st, pre, version):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            # simulate the prune landing between the listing and this read
+            raise FileNotFoundError(f"v{version}.json pruned by vacuum")
+        return real_read(st, pre, version)
+
+    monkeypatch.setattr(mf, "_read_doc", racing_read)
+    for name in backends:
+        path, store = _backend(name, tmp_path)
+        mf.commit(path, ["a"], txn=("app", 0), store=store)
+        calls["n"] = 0
+        v = mf.commit(path, mutate=lambda old: old + ["b"], txn=("app", 1), store=store)
+        assert v == 2, name
+        assert calls["n"] >= 2, name  # first attempt lost, retry won
+        assert mf.read_files(path, store=store) == ["a", "b"], name
+        assert mf.read_txn(path, "app", store=store) == 1, name
+
+
 def test_commit_cas_retries_through_vacuumed_current_version(tmp_path, monkeypatch):
     """ADVICE r11 (medium): between latest_version() and the ledger read, a
     concurrent committer can advance LATEST and a concurrent vacuum can
     prune v{cur} — the read raises FileNotFoundError and must be absorbed
     as one more lost CAS attempt, not an unhandled crash."""
-    path = str(tmp_path / "t")
-    mf.commit(path, ["a"], txn=("app", 0))
-    real_read = mf._read_doc
-    calls = {"n": 0}
-
-    def racing_read(p, version):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            # simulate the prune landing between the listing and this read
-            raise FileNotFoundError(f"v{version}.json pruned by vacuum")
-        return real_read(p, version)
-
-    monkeypatch.setattr(mf, "_read_doc", racing_read)
-    assert mf.commit_cas(path, mutate=lambda old: old + ["b"], txn=("app", 1)) == 2
-    assert calls["n"] >= 2  # first attempt lost, retry won
-    assert mf.read_files(path) == ["a", "b"]
-    assert mf.read_txn(path, "app") == 1
+    _check_cas_retry_through_vacuum(tmp_path, monkeypatch, ["posix"])
 
 
-def test_objectstore_commit_cas_retries_through_vacuumed_version(monkeypatch):
-    """Same vacuum race on the object-store protocol: a pruned v{cur} GET
+def test_objectstore_commit_cas_retries_through_vacuumed_version(tmp_path, monkeypatch):
+    """Same vacuum race on the object-store backends: a pruned v{cur} GET
     inside the CAS loop retries instead of raising."""
-    import sydradb_spark.objectstore as obs_mod
-
-    store = obs_mod.MemoryObjectStore()
-    obs_mod.commit_cas(store, "t", ["a"], txn=("app", 0))
-    real_read = obs_mod._read_doc
-    calls = {"n": 0}
-
-    def racing_read(s, table, version):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise FileNotFoundError(f"missing manifest v{version} for {table}")
-        return real_read(s, table, version)
-
-    monkeypatch.setattr(obs_mod, "_read_doc", racing_read)
-    assert (
-        obs_mod.commit_cas(store, "t", mutate=lambda old: old + ["b"], txn=("app", 1))
-        == 2
-    )
-    assert calls["n"] >= 2
-    assert obs_mod.read_files(store, "t") == ["a", "b"]
+    _check_cas_retry_through_vacuum(tmp_path, monkeypatch, OBJECT_STORES)
 
 
 def test_write_points_txn_overwrite_replay_is_noop(spark, points, table):
@@ -655,7 +635,7 @@ def test_write_points_concurrent_appenders_thread_race(spark, points, table):
     expect = n0 + 2 * rounds * per_batch
     assert storage.read_points(spark, table).count() == expect
     # LATEST references exactly the files on disk (no stranded staging)
-    assert sorted(mf.read_files(table)) == mf.data_files(table)
+    assert sorted(mf.read_files(table)) == storage.data_files(table)
     assert mf.read_txn(table, "app0") == rounds - 1
     assert mf.read_txn(table, "app1") == rounds - 1
     from pathlib import Path
@@ -688,41 +668,39 @@ def test_vacuum_spares_staging_with_fresh_leaves(tmp_path):
     live.mkdir()
     (live / "part-0.parquet").write_bytes(b"x")
     os.utime(live, (old, old))
-    mf.vacuum(str(table), min_age_seconds=600)
+    storage.vacuum_points(str(table), min_age_seconds=600)
     assert not dead.exists()
     assert live.exists()  # fresh leaf kept the whole tree alive
 
 
 def test_vacuum_spares_concurrently_committed_version(tmp_path):
     """r13 review (severe): a version committed DURING a vacuum is above the
-    vacuum's snapshot and must survive the version-json prune — unlinking it
-    left LATEST pointing at a deleted manifest, bricking reads AND commits."""
-    from sydradb_spark import manifest as mf
+    vacuum's snapshot and must survive the version prune — deleting it
+    left LATEST pointing at a deleted manifest, bricking reads AND commits.
+    The commit is injected between the vacuum's LATEST snapshot and its
+    version listing, with min_age=0 so nothing is 'young'."""
+    real_versions = mf._versions
 
-    table = str(tmp_path / "tbl")
-    for i in range(5):
-        mf.commit(table, [f"f{i}"])
-    # simulate the race: the prune loop iterates glob('v*.json') AFTER a
-    # concurrent committer landed v6 — with min_age=0 nothing is 'young',
-    # so only the <= snapshot bound protects it. Patch data_files to inject
-    # the commit mid-vacuum (between the keep-set build and the prune).
-    real_data_files = mf.data_files
-    fired = {"done": False}
+    for name in BACKENDS:
+        path, store = _backend(name, tmp_path)
+        for i in range(5):
+            mf.commit(path, [f"f{i}"], store=store)
+        calls = {"n": 0}
 
-    def inject_then_list(path):
-        if not fired["done"]:
-            fired["done"] = True
-            mf.commit(path, ["f_concurrent"])
-        return real_data_files(path)
+        def inject_then_list(st, pre):
+            calls["n"] += 1
+            if calls["n"] == 2:  # the prune's own listing, after its snapshot
+                mf.commit(path, ["f_concurrent"], store=store)
+            return real_versions(st, pre)
 
-    mf.data_files = inject_then_list
-    try:
-        mf.vacuum(table, keep_versions=2, min_age_seconds=0)
-    finally:
-        mf.data_files = real_data_files
-    assert mf.latest_version(table) == 6
-    assert mf.read_files(table) == ["f_concurrent"]  # readable, not bricked
-    mf.commit(table, mutate=lambda old: old + ["f_next"])  # committable too
+        mf._versions = inject_then_list
+        try:
+            mf.prune_versions(path, keep_versions=2, min_age_seconds=0, store=store)
+        finally:
+            mf._versions = real_versions
+        assert mf.latest_version(path, store=store) == 6, name
+        assert mf.read_files(path, store=store) == ["f_concurrent"], name  # readable
+        mf.commit(path, mutate=lambda old: old + ["f_next"], store=store)  # committable
 
 
 def test_vacuum_keeps_fresh_partition_dir_with_only_hidden_crc(tmp_path):
@@ -747,18 +725,16 @@ def test_vacuum_keeps_fresh_partition_dir_with_only_hidden_crc(tmp_path):
     old = time.time() - 7200
     os.utime(stale / ".leftover.crc", (old, old))
     os.utime(stale, (old, old))
-    mf.vacuum(str(table), min_age_seconds=600)
+    storage.vacuum_points(str(table), min_age_seconds=600)
     assert (fresh / ".part-0.parquet.crc").exists()  # young: kept
     assert not stale.exists()  # genuinely stale leftovers: pruned
 
 
-def test_concurrent_vacuums_tolerate_each_other(tmp_path):
+def test_concurrent_vacuums_tolerate_each_other(tmp_path, monkeypatch):
     """r13 review: the second of two racing vacuums must not crash on a
     file the first already unlinked (missing_ok on the data prune)."""
     import os
     import time
-
-    from sydradb_spark import manifest as mf
 
     table = tmp_path / "tbl"
     d = table / "hour_bucket=0"
@@ -767,9 +743,8 @@ def test_concurrent_vacuums_tolerate_each_other(tmp_path):
     old = time.time() - 7200
     os.utime(d / "part-dead.parquet", (old, old))
     mf.commit(str(table), [])  # dead file is unreferenced
-    real_young = mf.vacuum.__globals__  # no seam needed: delete mid-listing
     # simulate the loser: remove the file after data_files() listed it
-    real_data_files = mf.data_files
+    real_data_files = storage.data_files
 
     def list_then_steal(path):
         rels = real_data_files(path)
@@ -777,26 +752,39 @@ def test_concurrent_vacuums_tolerate_each_other(tmp_path):
             (table / rel).unlink(missing_ok=True)  # the winner got there first
         return rels
 
-    mf.data_files = list_then_steal
-    try:
-        removed = mf.vacuum(str(table), min_age_seconds=600)
-    finally:
-        mf.data_files = real_data_files
+    monkeypatch.setattr(storage, "data_files", list_then_steal)
+    removed = storage.vacuum_points(str(table), min_age_seconds=600)
     # the loser neither crashes nor double-claims: the missing file stats
     # as 'young' (racing its deleter) and is skipped entirely
     assert removed == []
     assert not (d / "part-dead.parquet").exists()
 
 
-def test_latest_version_survives_corrupt_pointer(tmp_path):
-    """r13 review: a truncated/empty LATEST hint must not brick the table —
-    the listed versions are the source of truth (objectstore twin parity)."""
-    from sydradb_spark import manifest as mf
 
-    table = str(tmp_path / "tbl")
-    mf.commit(table, ["f0"])
-    mf.commit(table, ["f0", "f1"])
-    (tmp_path / "tbl" / "_manifest" / "LATEST").write_text("")  # corrupt
-    assert mf.latest_version(table) == 2
-    assert mf.read_files(table) == ["f0", "f1"]
-    assert mf.commit(table, mutate=lambda old: old + ["f2"]) == 3
+
+def test_prune_versions_age_window_on_every_backend(tmp_path):
+    """The vacuum's age guards hold on every backend: versions younger than
+    the window survive a small ``keep_versions``, and a crashed committer's
+    temp file beside the versions is reclaimed once it is older than the
+    window, while a fresh one (a commit in flight) is kept."""
+    import os
+    import time
+
+    for name in BACKENDS:
+        path, store = _backend(name, tmp_path)
+        for i in range(4):
+            mf.commit(path, mutate=lambda old, i=i: old + [f"f{i}"], store=store)
+        st, pre = mf._at(path, store)
+        mf.prune_versions(path, keep_versions=1, min_age_seconds=600, store=store)
+        assert sorted(mf._versions(st, pre)) == [1, 2, 3, 4], name  # all young
+        if name != "memory":  # only a filesystem store leaves temp files
+            root = st.root / pre
+            old, fresh = root / ".v9.json.dead.tmp", root / ".v9.json.live.tmp"
+            old.write_text("{}")
+            fresh.write_text("{}")
+            past = time.time() - 7200
+            os.utime(old, (past, past))
+            mf.prune_versions(path, keep_versions=1, min_age_seconds=600, store=store)
+            assert not old.exists() and fresh.exists(), name
+        mf.prune_versions(path, keep_versions=1, min_age_seconds=0, store=store)
+        assert sorted(mf._versions(st, pre)) == [4], name

@@ -43,7 +43,7 @@ def backend(request):
 
 
 def _latest(path, store):
-    return storage._pm_latest(path, store)
+    return mf.latest_version(path, store=store)
 
 
 # --- write/read/append/overwrite roundtrip ------------------------------------
@@ -81,7 +81,7 @@ def test_store_backend_txn_replay_is_noop(spark, tmp_path):
         txn=("app-1", 0), store=store,
     )
     assert storage.read_points(spark, path, store=store).count() == 1
-    assert obs.read_txn(store, POINTS_STORE_TABLE, "app-1") == 0
+    assert mf.read_txn(path, "app-1", store=store) == 0
 
 
 # --- loud non-POSIX rejection (VERDICT r13 item 1, minimum contract) -----------
@@ -109,7 +109,7 @@ def test_posix_only_entry_points_reject_uri_paths(spark):
     with pytest.raises(ValueError):
         mf.commit(uri, [])
     with pytest.raises(ValueError):
-        mf.vacuum(uri)
+        mf.prune_versions(uri)
     from sydradb_spark.ingest import init_points_table
 
     with pytest.raises(ValueError, match="store="):
@@ -164,7 +164,7 @@ def test_write_points_store_with_uri_data_location(spark, tmp_path):
     storage.write_points(
         _pts(spark, [("s.a", 200, 2.0)]), uri, mode="append", store=store
     )
-    assert obs.latest_version(store, POINTS_STORE_TABLE) == 2
+    assert mf.latest_version(uri, store=store) == 2
     assert storage.read_points(spark, uri, store=store).count() == 2
     # no local junk directory was created by Path('file:/...') handling
     import pathlib
@@ -177,13 +177,13 @@ def test_vacuum_points_store_reclaims_old_versions(spark, tmp_path):
     store = obs.MemoryObjectStore()
     path = str(tmp_path / "tbl")
     storage.write_points(_pts(spark, [("s.a", 100, 1.0)]), path, store=store)
-    v1_files = set(storage._pm_files(path, store, version=1))
+    v1_files = set(mf.read_files(path, 1, store=store))
     storage.write_points(_pts(spark, [("s.b", 200, 2.0)]), path, store=store)
     removed = storage.vacuum_points(
         path, store, keep_versions=1, min_age_seconds=0
     )
     assert set(removed) == v1_files
-    assert obs.latest_version(store, POINTS_STORE_TABLE) == 2
+    assert mf.latest_version(path, store=store) == 2
     assert storage.read_points(spark, path, store=store).count() == 1
     # the pruned version is gone from the store
     assert store.get(f"{POINTS_STORE_TABLE}/_manifest/v1.json") is None
@@ -193,7 +193,7 @@ def test_vacuum_points_sessionless_uri_warns(tmp_path, caplog):
     import logging
 
     store = obs.MemoryObjectStore()
-    obs.commit_cas(store, POINTS_STORE_TABLE, [])
+    mf.commit("s3a://bucket/tbl", [], store=store)
     with caplog.at_level(logging.WARNING, logger="sydradb_spark.maintenance"):
         out = storage.vacuum_points("s3a://bucket/tbl", store, min_age_seconds=0)
     assert out == []
@@ -215,7 +215,7 @@ def test_drop_expired_and_optimize_and_delete_store_backend(spark, tmp_path):
     targets = storage.optimize_partitions(spark, path, 2, store=store)
     assert targets == [3600]
     by_part = [
-        f for f in storage._pm_files(path, store) if f.startswith("hour_bucket=3600/")
+        f for f in mf.read_files(path, store=store) if f.startswith("hour_bucket=3600/")
     ]
     assert len(by_part) == 1
     assert storage.read_points(spark, path, store=store).count() == 7
@@ -272,7 +272,7 @@ def test_compact_storage_flip_no_reader_absence_window(spark, tmp_path, backend)
     got = storage.read_points(spark, path, store=store)
     assert got.count() == 2
     assert got.where("ts = 100").collect()[0]["value"] == 5.0  # last-wins
-    assert storage._pm_read_txn(path, store, "app-x") == 3  # ledger carried
+    assert mf.read_txn(path, "app-x", store=store) == 3  # ledger carried
     if store is None:
         # the live table directory was never renamed away
         assert not (tmp_path / "tbl.old").exists()
@@ -288,20 +288,20 @@ def test_compact_storage_flip_spares_concurrent_append(spark, tmp_path, backend)
     storage.write_points(
         _pts(spark, [("s.a", 100, 1.0), ("s.a", 100, 2.0)]), path, store=store
     )
-    orig_commit = storage._pm_commit
+    orig_commit = mf.commit
     raced = {"done": False}
 
-    def racing_commit(p, s, files=None, *, mutate=None, txn=None):
+    def racing_commit(p, files=None, **kw):
         if not raced["done"]:
             raced["done"] = True
             storage.write_points(
-                _pts(spark, [("s.z", 9999, 7.0)]), p, mode="append", store=s
+                _pts(spark, [("s.z", 9999, 7.0)]), p, mode="append", store=store
             )
-        return orig_commit(p, s, files, mutate=mutate, txn=txn)
+        return orig_commit(p, files, **kw)
 
     import unittest.mock as um
 
-    with um.patch.object(storage, "_pm_commit", racing_commit):
+    with um.patch.object(mf, "commit", racing_commit):
         storage.compact_storage(spark, path, store=store)
     got = storage.read_points(spark, path, store=store)
     assert got.count() == 2  # 1 deduped + the concurrent append
@@ -326,7 +326,7 @@ def test_restore_flip_rewinds_data_and_ledger(spark, tmp_path, backend):
     got = storage.read_points(spark, path, store=store)
     assert got.count() == 1 and got.collect()[0]["value"] == 1.0
     # the replay guard REWOUND with the data: batch 6 can re-append
-    assert storage._pm_read_txn(path, store, "app-s") == 5
+    assert mf.read_txn(path, "app-s", store=store) == 5
     if store is None:
         assert not (tmp_path / "tbl.old").exists()  # no swap happened
     storage.write_points(
@@ -378,14 +378,14 @@ def test_stream_points_sink_store_backend_exactly_once(spark, tmp_path):
     got = storage.read_points(spark, tbl, store=store)
     assert got.count() == 2
     assert {r["value"] for r in got.collect()} == {1.0, 2.0}
-    app = obs.read_ledger(store, POINTS_STORE_TABLE)
+    app = mf.read_ledger(tbl, store=store)
     assert list(app.values()) == [0]  # one app, batch 0 committed once
     # second file → batch 1 under the same app id
     (src / "b.ndjson").write_text('{"series": "m.x", "ts": 220, "value": 3.0}\n')
     q3 = run()
     q3.awaitTermination(120)
     assert storage.read_points(spark, tbl, store=store).count() == 3
-    assert list(obs.read_ledger(store, POINTS_STORE_TABLE).values()) == [1]
+    assert list(mf.read_ledger(tbl, store=store).values()) == [1]
 
 
 def test_restore_store_mode_requires_manifested_snapshot(spark, tmp_path):
@@ -412,7 +412,7 @@ def test_restore_store_mode_creates_v1_when_store_empty(spark, tmp_path):
     store = obs.MemoryObjectStore()
     dest = str(tmp_path / "dest")
     storage.restore(snap, dest, store=store)
-    assert obs.latest_version(store, POINTS_STORE_TABLE) == 1
+    assert mf.latest_version(dest, store=store) == 1
     assert storage.read_points(spark, dest, store=store).count() == 1
 
 
@@ -428,7 +428,7 @@ def test_write_points_store_empty_append_still_commits_txn(spark, tmp_path):
         _pts(spark, []).limit(0), path, mode="append",
         txn=("app-e", 0), store=store,
     )
-    assert obs.read_txn(store, POINTS_STORE_TABLE, "app-e") == 0
+    assert mf.read_txn(path, "app-e", store=store) == 0
     assert storage.read_points(spark, path, store=store).count() == 0
 
 
@@ -452,7 +452,7 @@ def test_engine_insert_query_delete_on_store_backed_table(spark, tmp_path):
         (100, 1.0), (200, 2.0), (3700, 3.0),
     ]
     # the write really went through the store manifest
-    assert obs.latest_version(store, POINTS_STORE_TABLE) >= 2
+    assert mf.latest_version(path, store=store) >= 2
     eng.query("delete from m.s where time >= 0 and time < 300")
     assert (
         eng.query("select count() as n from m.s where time >= 0 and time < 7200")
@@ -609,12 +609,5 @@ def test_points_table_random_op_sequence_matches_model(spark, tmp_path, backend,
             storage.restore(dest, path, store=store)
             model = list(snapshots[dest])
             # the ledger rewinds with the data: later txn versions re-apply
-            txn_high = -1 if store is None else txn_high
-            from sydradb_spark import manifest as _m
-            from sydradb_spark import objectstore as _o
-
-            txn_high = (
-                _m.read_ledger(path) if store is None
-                else _o.read_ledger(store, POINTS_STORE_TABLE)
-            ).get("app-model", -1)
+            txn_high = mf.read_ledger(path, store=store).get("app-model", -1)
         check(step, op)

@@ -432,6 +432,7 @@ def test_manifest_txn_protocol_model(tmp_path_factory, ops):
     ledger is monotone and carried through every commit and vacuum, and a
     replayed (already-ledgered) txn never commits."""
     from sydradb_spark import manifest as mf
+    from sydradb_spark import storage
 
     path = str(tmp_path_factory.mktemp("txnprop") / "t")
     model_files: list = []
@@ -452,7 +453,7 @@ def test_manifest_txn_protocol_model(tmp_path_factory, ops):
                 if txn is not None:
                     model_txn[app] = arg
         else:  # vacuum
-            mf.vacuum(path, keep_versions=arg, min_age_seconds=0)
+            storage.vacuum_points(path, keep_versions=arg, min_age_seconds=0)
         if mf.latest_version(path) is not None:
             assert sorted(mf.read_files(path)) == sorted(model_files)
             for a, v in model_txn.items():

@@ -2,10 +2,10 @@
 writes + compaction over the versioned-manifest CAS, safe on object stores
 where the flock path of `compact_rollup` has no primitive to stand on.
 
-Every test runs against BOTH manifest backends: the local POSIX protocol
-(`manifest.commit_cas`, store=None) and the object-store protocol
-(`objectstore.commit_cas` over MemoryObjectStore — conditional-PUT
-semantics, no filesystem atomicity anywhere in the commit path)."""
+Every test runs against BOTH manifest homes of the one protocol
+(`manifest.commit`): the rollup directory (store=None) and a
+MemoryObjectStore (conditional-PUT semantics, no filesystem atomicity
+anywhere in the commit path)."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ import pathlib
 
 import pytest
 
+from sydradb_spark import manifest as mf
 from sydradb_spark import objectstore as obs
 from sydradb_spark.rollup import build_rollup
 from sydradb_spark.streaming.rollup_stream import (
@@ -46,9 +47,9 @@ def backend(request):
 
 
 def _manifest_names(roll: str, store) -> list[str]:
-    from sydradb_spark.streaming.rollup_stream import _mf_files
-
-    return sorted(_mf_files(roll, store) or [])
+    if not mf.has_manifest(roll, store=store, key=STORE_TABLE):
+        return []
+    return sorted(mf.read_files(roll, store=store, key=STORE_TABLE))
 
 
 def test_manifested_write_and_read(spark, tmp_path, backend):
@@ -285,7 +286,7 @@ def test_store_table_key_is_scoped(tmp_path):
     """The objectstore manifest lives under the fixed STORE_TABLE key —
     callers scope the store to one rollup table (mint_app_id's contract)."""
     store = obs.MemoryObjectStore()
-    assert obs.latest_version(store, STORE_TABLE) is None
+    assert mf.latest_version(str(tmp_path), store=store, key=STORE_TABLE) is None
 
 
 def test_compact_rollup_rejects_non_posix_path(spark):
@@ -533,3 +534,27 @@ def test_rollup_lock_degrades_on_flockless_local_fs(tmp_path, monkeypatch):
     monkeypatch.setattr(fcntl, "flock", refuse)
     with _rollup_lock(str(tmp_path / "tbl"), exclusive=True) as lk:
         assert lk._fh is None  # degraded, not crashed
+
+
+@pytest.mark.parametrize("lose", ["listing", "manifest_files"])
+def test_vacuum_rollup_refuses_without_a_readable_version(spark, tmp_path, backend, lose, monkeypatch):
+    """A committed entry survives a vacuum that finds no readable manifest
+    version — whether the store's listing comes back empty or every file
+    under ``_manifest/`` is gone. Without a keep-set the vacuum raises
+    instead of reclaiming committed entries."""
+    store = backend()
+    roll = str(tmp_path / "roll")
+    write_rollup_batch_manifested(_mini_partial(spark, "s.a", 2), roll, 0, "x", store=store)
+    entry = "b_x_000000000000"
+    st, pre = mf._at(roll, store, STORE_TABLE)
+    if lose == "listing":
+        real_list = type(st).list
+        monkeypatch.setattr(
+            type(st), "list", lambda self, p: [] if p.startswith(pre) else real_list(self, p)
+        )
+    else:
+        for k in st.list(pre):
+            st.delete(k)
+    with pytest.raises(RuntimeError, match="keep-set"):
+        vacuum_rollup(roll, store, keep_versions=1, min_age_seconds=0)
+    assert (tmp_path / "roll" / entry).is_dir()
