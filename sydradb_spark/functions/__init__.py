@@ -9,8 +9,6 @@ from sydradb_spark.functions.timeseries import (  # noqa: F401
     last_agg,
     irate_expr,
     trapezoid_expr,
-    moving_avg,
-    fill_forward,
     with_ema,
 )
 from sydradb_spark.functions.fill import fill_buckets  # noqa: F401

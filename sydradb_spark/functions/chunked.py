@@ -1,13 +1,25 @@
-"""Chunked per-series window primitives.
+"""Per-series window primitives: chunk-and-carry forms for unbounded time
+ranges, one-pass forms for bounded ones.
 
 ``Window.partitionBy("series_id")`` binds one series to ONE task — at 100 TB
 a hot series becomes the straggler that bounds the whole stage (AQE does not
-split window partitions; it only mitigates join skew). Every per-series
-window here is therefore computed in bounded ``(series_id, time-chunk)``
+split window partitions; it only mitigates join skew). The ``with_chunked_*``
+windows are therefore computed in bounded ``(series_id, time-chunk)``
 partitions, with cross-chunk state carried through a per-chunk summary frame
 holding ONE row per chunk (a year of data is ~365 summary rows per series at
 the default day-sized chunk) — the same chunk-and-carry pattern
 ``functions/fill.py`` uses for its dense spine.
+
+When chunk-and-carry runs: the sydraQL translator picks the plan from the
+WHERE's literal time bounds (``translator.one_pass_windows``). The WHERE
+filter runs before the window pre-pass, so when both bounds exist and
+``max - min`` is at most one chunk (``WINDOW_CHUNK_S``, or ``dur`` for
+``moving_avg`` when larger), no series can hold more than one chunk of rows
+— exactly the partition limit the chunks exist to keep. Such a query runs
+the one-pass forms below (``with_lag_lead``, ``with_fill_forward``,
+``with_moving_avg``): one window partitioned by series alone, no chunk
+column, no ghost union, no summary/carry pass. A half-open or longer range
+keeps the chunked forms.
 
 Exactness: the carry reconstructs precisely the rows a global per-series
 window would see —
@@ -287,35 +299,105 @@ def with_chunked_moving_avg(
         .withColumn("__ets", ets)
         .withColumn("__ghost", F.lit(1))  # lookback mass only, never returned
     )
-    u = data.unionByName(ghosts)
+    return (
+        _with_prefix_frames(
+            data.unionByName(ghosts), src, dur_s, [partition, "__wchunk"], F.col("__ets")
+        )
+        .where(F.col("__ghost") == 0)
+        .withColumn(out, _trailing_mean())
+        .drop("__wchunk", "__ets", "__ghost", *_PREFIX_COLS)
+    )
 
-    # RANGE frames include peers at equal __ets together, so S covers
-    # [.., ts] inclusive and Sp covers [.., ts - dur - 1] — the difference is
-    # exactly the trailing [ts - dur, ts] frame
+
+_PREFIX_COLS = ("__S", "__C", "__Sp", "__Cp")
+
+
+def _with_prefix_frames(
+    df: DataFrame, src: str, dur_s: int, partition: list[str], ets: Column
+) -> DataFrame:
+    """The two add-only prefix frames of ``with_chunked_moving_avg``'s
+    docstring, as sum/count columns of one window spec. RANGE frames include
+    peers at equal ``ets`` together, so S covers [.., ts] inclusive and Sp
+    covers [.., ts - dur - 1]; ``_trailing_mean`` then reads exactly the
+    trailing [ts - dur, ts] frame. Materialized as columns so each window
+    aggregate is evaluated once."""
     w_cum = (
-        Window.partitionBy(partition, "__wchunk")
-        .orderBy("__ets")
+        Window.partitionBy(*partition)
+        .orderBy(ets)
         .rangeBetween(Window.unboundedPreceding, 0)
     )
     w_pre = (
-        Window.partitionBy(partition, "__wchunk")
-        .orderBy("__ets")
+        Window.partitionBy(*partition)
+        .orderBy(ets)
         .rangeBetween(Window.unboundedPreceding, -(dur_s + 1))
     )
-    u = (
-        u.withColumn("__S", F.sum(src).over(w_cum))
+    return (
+        df.withColumn("__S", F.sum(src).over(w_cum))
         .withColumn("__C", F.count(src).over(w_cum))
         .withColumn("__Sp", F.sum(src).over(w_pre))
         .withColumn("__Cp", F.count(src).over(w_pre))
     )
+
+
+def _trailing_mean() -> Column:
     c_frame = F.col("__C") - F.col("__Cp")
-    s_frame = F.coalesce(F.col("__S"), F.lit(0.0)) - F.coalesce(
-        F.col("__Sp"), F.lit(0.0)
+    s_frame = F.coalesce(F.col("__S"), F.lit(0.0)) - F.coalesce(F.col("__Sp"), F.lit(0.0))
+    return F.when(c_frame > 0, s_frame / c_frame.cast("double"))
+
+
+# --- one-pass forms for time-bounded queries ---------------------------------
+# Each runs ONE window partitioned by series alone and ordered by the same
+# canonical (ts, tiebreak) key as the chunked forms. All columns a call adds
+# share one window spec, so they evaluate in one WindowExec over one sort:
+# rows that tie on (ts, tiebreak) see a single order, which is what the
+# chunked lag's __rn column buys across its several windows.
+
+
+def with_lag_lead(
+    df: DataFrame,
+    requests: list[LagRequest],
+    partition: str = "series_id",
+    ts_col: str = "ts",
+    tiebreak: str = "value",
+) -> DataFrame:
+    """``lag(src, n)`` / ``lead(src, n)`` over the per-series (ts, tiebreak)
+    order, for input known to hold at most one chunk per series."""
+    w = Window.partitionBy(partition).orderBy(ts_col, tiebreak)
+    fn = {"lag": F.lag, "lead": F.lead}
+    return df.withColumns({r.out: fn[r.kind](r.src, r.n).over(w) for r in requests})
+
+
+def with_fill_forward(
+    df: DataFrame,
+    src: str,
+    out: str,
+    partition: str = "series_id",
+    ts_col: str = "ts",
+    tiebreak: str = "value",
+) -> DataFrame:
+    """Last non-null ``src`` at or before each row, per series."""
+    w = (
+        Window.partitionBy(partition)
+        .orderBy(ts_col, tiebreak)
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
+    return df.withColumn(out, F.last(src, ignorenulls=True).over(w))
+
+
+def with_moving_avg(
+    df: DataFrame,
+    src: str,
+    out: str,
+    dur_s: int,
+    partition: str = "series_id",
+    ts_col: str = "ts",
+) -> DataFrame:
+    """Trailing ``avg(src) over [ts-dur, ts]`` per series, with the same O(n)
+    prefix-difference frames as the chunked form and no ghost rows."""
     return (
-        u.where(F.col("__ghost") == 0)
-        .withColumn(out, F.when(c_frame > 0, s_frame / c_frame.cast("double")))
-        .drop("__wchunk", "__ets", "__ghost", "__S", "__C", "__Sp", "__Cp")
+        _with_prefix_frames(df, src, dur_s, [partition], F.col(ts_col).cast("long"))
+        .withColumn(out, _trailing_mean())
+        .drop(*_PREFIX_COLS)
     )
 
 

@@ -10,7 +10,7 @@ grouped-map pandas UDF.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -72,38 +72,6 @@ def trapezoid_expr(x: Column, prev_x: Column, ts: Column, prev_ts: Column) -> Co
     (x + prev) / 2 * dt. Aggregate as ``sum(...)`` per group; the first
     sample of each series contributes null → skipped by sum."""
     return (x + prev_x) / F.lit(2.0) * (ts - prev_ts)
-
-
-def series_window(order_extra: list[Column] | None = None) -> WindowSpec:
-    """Per-series time order — the implicit frame of every reference window
-    hint ``requires_sorted_input`` (functions.zig:77-82). A deterministic
-    tiebreak on value keeps lag/lead stable under duplicate timestamps."""
-    order = [F.col("ts"), F.col("value")] + (order_extra or [])
-    return Window.partitionBy("series_id").orderBy(*order)
-
-
-def moving_avg(x: Column, ts_col: str, duration_s: int, partition: list[str]) -> Column:
-    """moving_avg(x, dur): time-range windowed mean (functions.zig:373-382).
-    RANGE frame over epoch seconds: [ts - dur, ts].
-
-    NOTE: one task per partition key AND O(frame) per row — the engine path
-    uses ``chunked.with_chunked_moving_avg`` instead; this Column form
-    remains for ad-hoc frames that are known-small."""
-    w = (
-        Window.partitionBy(*partition)
-        .orderBy(F.col(ts_col).cast("long"))
-        .rangeBetween(-duration_s, 0)
-    )
-    return F.avg(x).over(w)
-
-
-def fill_forward(x: Column, w: WindowSpec) -> Column:
-    """fill_forward(x): carry last non-null forward (functions.zig:400-405).
-
-    NOTE: binds one partition key to one task — the engine path uses
-    ``chunked.with_chunked_fill_forward``; this Column form remains for
-    ad-hoc known-small frames."""
-    return F.last(x, ignorenulls=True).over(w.rowsBetween(Window.unboundedPreceding, 0))
 
 
 def with_ema(

@@ -40,6 +40,9 @@ from pyspark.sql import functions as F
 LSH_BITS = 8  # default bucket width (2^8 buckets); scale with corpus size
 LSH_SEED = 7
 EMB_DIM = 64  # the testdata embeddings table dimension
+# bytes of (rows x planes x dim) float64 products the sign-bucket kernel
+# materializes at once; a larger Arrow batch is folded in row slices
+SIGN_BUCKET_SLICE_BYTES = 16 << 20
 
 
 def hyperplanes(
@@ -304,6 +307,9 @@ def with_sign_bucket_norm(
         + f", {bucket_out} long, {norm_out} double"
     )
     emb_idx = list(in_schema.names).index(emb_col)
+    # read at plan time, not inside the kernel, so the Python workers use
+    # the value in force when the plan was built
+    slice_rows = max(1, SIGN_BUCKET_SLICE_BYTES // (8 * planes_np.size))
 
     def kern(batches):
         import pyarrow as pa
@@ -354,14 +360,19 @@ def with_sign_bucket_norm(
                     np.float64, copy=False
                 )[base : base + n * L].reshape(n, L)
                 eff = min(L, plane_len)
-                prods = mat[:, None, :eff] * P[None, :, :eff]
-                dots = np.cumsum(prods, axis=2)[:, :, -1]
-                with np.errstate(invalid="ignore"):
-                    # `| isnan`: Spark's NaN-greatest ordering makes the
-                    # HOF's `d > 0` TRUE for a NaN dot; numpy's is False
-                    bucket = (
-                        ((dots > 0) | np.isnan(dots)).astype(np.int64) * weights
-                    ).sum(axis=1)
+                bucket = np.empty(n, dtype=np.int64)
+                # row slices bound the products to SIGN_BUCKET_SLICE_BYTES;
+                # each row's folds are the same operations in the same order
+                for lo in range(0, n, slice_rows):
+                    rows = mat[lo : lo + slice_rows]
+                    prods = rows[:, None, :eff] * P[None, :, :eff]
+                    dots = np.cumsum(prods, axis=2)[:, :, -1]
+                    with np.errstate(invalid="ignore"):
+                        # `| isnan`: Spark's NaN-greatest ordering makes the
+                        # HOF's `d > 0` TRUE for a NaN dot; numpy's is False
+                        bucket[lo : lo + len(rows)] = (
+                            ((dots > 0) | np.isnan(dots)).astype(np.int64) * weights
+                        ).sum(axis=1)
                 norm = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
                 b_arr = pa.array(bucket, type=pa.int64())
                 n_arr = pa.array(norm, type=pa.float64())

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sydradb_spark.errors import SydraQLError, ValidationError
+from sydradb_spark.functions import chunked as ck
 from sydradb_spark.functions import fill as fill_mod
 from sydradb_spark.functions import timeseries as ts_fn
 from sydradb_spark.sydraql import ast
@@ -126,12 +127,49 @@ def time_bounds_from_where(where: ast.Expr | None) -> tuple[int | None, int | No
     return mn, mx
 
 
+# --- plan selection -----------------------------------------------------------
+# The per-series window pre-pass and FILL have two plans each: a one-pass plan
+# and the chunk-and-carry plan that keeps every partition bounded at any scale
+# (functions/chunked.py, functions/fill.py). The WHERE filter runs before
+# either, so the literal time bounds of a closed range bound every partition
+# the one-pass plan builds; these two predicates are the only place that
+# picks. ``span`` is ``mx - mn`` of ``time_bounds_from_where``, None unless
+# both bounds exist.
+
+
+def one_pass_windows(span: int | None, dur_s: int = 0) -> bool:
+    """Per-series windows run unchunked when the range fits one window chunk
+    (the chunk is widened to ``dur_s`` for moving_avg, as its chunked form
+    does): no series then holds more rows than one chunked partition."""
+    return span is not None and span <= max(ck.WINDOW_CHUNK_S, dur_s)
+
+
+def one_pass_fill(span: int | None, bucket: ast.Call) -> bool:
+    """FILL runs as one window pass when no group's spine can exceed one
+    spine chunk. ``bucket`` is the FILL's ``time_bucket(step, time[,
+    origin])`` grouping (the validator makes ``step`` a positive integer
+    literal); over bare ``time`` in ``[mn, mx]`` with a constant origin it
+    yields at most ``(mx - mn) // step + 2`` buckets per group. A bucket
+    over any other expression of ``time`` has no such bound."""
+    over = bucket.args[1]
+    if span is None or not (isinstance(over, ast.Identifier) and over.name == "time"):
+        return False
+    try:
+        for origin in bucket.args[2:]:
+            _literal_value(origin)
+    except ValidationError:
+        return False
+    return span // int(_literal_value(bucket.args[0])) + 2 <= fill_mod.CHUNK_BUCKETS
+
+
 @dataclass
 class _Ctx:
     """Per-query translation state."""
 
     now_epoch: int = field(default_factory=lambda: int(_time.time()))
     has_from: bool = True
+    # mx - mn of the WHERE's literal time bounds; None unless both exist
+    time_span: int | None = None
     # post-aggregation scope: canon → output Column name
     post_scope: dict[str, str] | None = None
     select_aliases: dict[str, ast.Expr] = field(default_factory=dict)
@@ -170,6 +208,8 @@ class Translator:
         base = self._resolve_selector(sel.selector)
         if sel.where is not None:
             mn, mx = time_bounds_from_where(sel.where)
+            if mn is not None and mx is not None:
+                ctx.time_span = mx - mn
             if "hour_bucket" in base.columns:
                 # derive hour_bucket partition bounds from ts bounds — the
                 # one rewrite Catalyst cannot do (SURVEY §4.1); on a stored
@@ -543,10 +583,10 @@ class Translator:
 
     def _window_call(self, e: ast.Call, a: list[Column], ctx: _Ctx) -> Column:
         # Every window function is materialized by a pre-pass
-        # (_materialize_windows / _materialize_emas) as a physical column
-        # computed in bounded (series_id, time-chunk) partitions
-        # (functions/chunked.py) — a direct Window.partitionBy("series_id")
-        # expression would bind one series to one task.
+        # (_materialize_windows / _materialize_emas) as a physical column,
+        # computed in bounded (series_id, time-chunk) partitions unless the
+        # time range fits one chunk (functions/chunked.py) — an unbounded
+        # Window.partitionBy("series_id") would bind one series to one task.
         if not ctx.has_from:
             raise ValidationError(f"window function '{e.func}' requires FROM", pos=e.pos)
         c = canon(e)
@@ -611,13 +651,13 @@ class Translator:
     _WINDOW_PREPASS = ("lag", "lead", "fill_forward", "moving_avg")
 
     def _materialize_windows(self, sel: ast.Select, ctx: _Ctx, base: DataFrame) -> DataFrame:
-        """Pre-pass: lag/lead/fill_forward/moving_avg become physical columns
-        via chunked per-series windows (functions/chunked.py). The previous
-        expression-level ``Window.partitionBy("series_id")`` bound one series
-        to one task — the one stage shape that cannot scale past one core per
-        series; chunk-and-carry removes it with identical semantics."""
-        from sydradb_spark.functions import chunked as ck
-
+        """Pre-pass: lag/lead/fill_forward/moving_avg become physical columns.
+        A query whose literal time range fits one window chunk
+        (``one_pass_windows``) runs one window per call partitioned by
+        series_id alone; any other query runs the chunk-and-carry forms
+        (functions/chunked.py), whose bounded (series_id, time-chunk)
+        partitions keep a hot series from binding to one task. Both give
+        the same rows in the same canonical (ts, value) order."""
         exprs = (
             [it.expr for it in sel.items]
             + [o.expr for o in sel.order_by]
@@ -643,16 +683,18 @@ class Translator:
                 srccol = f"__wsrc_{i}"
                 outcol = f"__win_{i}"
                 base = base.withColumn(srccol, self._row(node.args[0], ctx, base))
+                dur = int(_literal_value(node.args[1])) if node.func == "moving_avg" else 0
+                plain = one_pass_windows(ctx.time_span, dur)
                 if node.func in ("lag", "lead"):
                     n = int(_literal_value(node.args[1])) if len(node.args) > 1 else 1
-                    base = ck.with_chunked_lag_lead(
-                        base, [ck.LagRequest(srccol, outcol, n, node.func)]
-                    )
+                    lag_lead = ck.with_lag_lead if plain else ck.with_chunked_lag_lead
+                    base = lag_lead(base, [ck.LagRequest(srccol, outcol, n, node.func)])
                 elif node.func == "fill_forward":
-                    base = ck.with_chunked_fill_forward(base, srccol, outcol)
+                    ff = ck.with_fill_forward if plain else ck.with_chunked_fill_forward
+                    base = ff(base, srccol, outcol)
                 else:  # moving_avg
-                    dur = int(_literal_value(node.args[1]))
-                    base = ck.with_chunked_moving_avg(base, srccol, outcol, dur)
+                    ma = ck.with_moving_avg if plain else ck.with_chunked_moving_avg
+                    base = ma(base, srccol, outcol, dur)
                 ctx.window_requests[c] = outcol
                 i += 1
         return base
@@ -682,11 +724,10 @@ class Translator:
                 if isinstance(node, ast.Call) and node.func in AGGREGATES:
                     agg_calls.setdefault(canon(node), node)
 
-        # pre-pass: irate/integral need per-series lag columns before groupBy.
-        # Chunked (bounded-partition) lag — each call needs exactly one
-        # predecessor, carried across chunk seams (functions/chunked.py).
-        from sydradb_spark.functions import chunked as ck
-
+        # pre-pass: irate/integral/increase need per-series lag columns
+        # before groupBy — each call needs exactly one predecessor, carried
+        # across chunk seams when the range can exceed one chunk
+        # (functions/chunked.py).
         lag_cols: dict[str, tuple[str, str, str]] = {}  # canon → (argcol, prev_arg, prev_ts)
         lag_reqs: list[ck.LagRequest] = []
         li = 0
@@ -704,7 +745,8 @@ class Translator:
                     lag_cols[c] = (argcol, f"__prev_{li}", None)
                 li += 1
         if lag_reqs:
-            base = ck.with_chunked_lag_lead(base, lag_reqs)
+            plain = one_pass_windows(ctx.time_span)
+            base = (ck.with_lag_lead if plain else ck.with_chunked_lag_lead)(base, lag_reqs)
 
         # grouping columns
         grp_names: list[str] = []
@@ -913,7 +955,14 @@ class Translator:
         constant = None
         if fill.kind == "constant":
             constant = _literal_value(fill.constant)
-        return fill_mod.fill_buckets(
+        # one pass over the aggregated frame when the WHERE bounds every
+        # group's spine to one chunk (one_pass_fill); otherwise the chunked
+        # spine, which stays bounded for any range (functions/fill.py)
+        if one_pass_fill(ctx.time_span, groups[bucket_idx]):
+            fill_fn = fill_mod.fill_buckets_one_pass
+        else:
+            fill_fn = fill_mod.fill_buckets
+        return fill_fn(
             grouped,
             bucket_col=bucket_col,
             step_s=step,

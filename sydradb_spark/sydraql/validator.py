@@ -10,6 +10,7 @@ enforce for us (SURVEY §4.3), so they run on the AST before translation:
 4. Semantic pins: ``%`` is integer-only (expression.zig:124); division by a
    literal zero raises DivisionByZero (expression.zig:119-122).
 5. Aggregates may not be nested inside aggregates.
+6. A ``time_bucket`` step is a positive integer literal (seconds).
 """
 
 from __future__ import annotations
@@ -160,6 +161,20 @@ def _check_expr(expr: ast.Expr, *, in_aggregate: bool = False) -> None:
                 f"{expr.func} expects {len(sig.params)} argument(s), got {len(expr.args)}",
                 pos=expr.pos,
             )
+        if expr.func == "time_bucket":
+            # FILL's spine, the rollup fold and the one-pass plan bound all
+            # step in whole seconds; a fractional step would disagree with
+            # the bucket expression, which keeps the fraction
+            step = expr.args[0]
+            if not (
+                isinstance(step, ast.Literal)
+                and step.kind in ("int", "duration")
+                and step.value > 0
+            ):
+                raise ValidationError(
+                    "time_bucket step must be a positive integer literal (seconds)",
+                    pos=step.pos,
+                )
         if sig.kind == Kind.AGGREGATE:
             if in_aggregate:
                 raise ValidationError("nested aggregate calls are not allowed", pos=expr.pos)

@@ -21,6 +21,9 @@ import random
 import duckdb
 import pytest
 
+from sydradb_spark.functions.chunked import WINDOW_CHUNK_S
+from sydradb_spark.functions.fill import CHUNK_BUCKETS
+
 T0 = 1_000_000
 SERIES_SPAN = {
     # series -> (max offset seconds) for range generation
@@ -895,3 +898,209 @@ def test_align_asof_differential(align_df, ddb, case):
                 assert math.isclose(gv, wv, rel_tol=1e-9, abs_tol=1e-9), (g, w_, name)
             else:
                 assert gv == wv, (g, w_, name)
+
+
+# ---------------------------------------------------------------------------
+# Plan-selection boundary fuzz: the translator runs per-series windows and
+# FILL as one-pass plans when the WHERE's literal time range fits one chunk,
+# and the chunk-and-carry plans otherwise (translator.one_pass_windows /
+# one_pass_fill). Each case names the side it must land on — checked on the
+# optimized plan's chunk columns — and both sides must match DuckDB. The
+# data straddles two midnights (a chunk seam): MID, and 0 with negative
+# timestamps; it carries exact (ts, value) duplicates, same-ts rows with
+# different values, NULL values whose buckets aggregate to NULL, gaps, and
+# a few points a day or two away so that chunked plans span several chunks.
+# ---------------------------------------------------------------------------
+MID = 12 * 86_400  # a midnight
+# the largest span a 60 s FILL runs one-pass for: span // 60 + 2 <= CHUNK_BUCKETS
+FILL_LIMIT_60 = (CHUNK_BUCKETS - 2) * 60 + 59
+
+
+def _edge_rows():
+    """(series, host, ts, value) rows of the boundary fixture."""
+    rows = []
+    for i in range(-180, 181):  # edge.m host a: 60 s steps, MID +- 3 h
+        if 10 <= i < 25:
+            continue
+        v = None if -30 <= i < -20 else float((i * 37) % 101) / 4
+        if v is not None and i % 41 == 0:
+            # same ts, larger value, arriving first: only the value
+            # tiebreak orders it after the row below
+            rows.append(("edge.m", "a", MID + i * 60, v + 0.5))
+        rows.append(("edge.m", "a", MID + i * 60, v))
+        if v is not None and i % 29 == 0:
+            rows.append(("edge.m", "a", MID + i * 60, v))  # exact duplicate
+    for i in range(-80, 81):  # edge.m host b: 90 s steps, MID +- 2 h
+        if -50 <= i < -40:
+            continue
+        v = None if 20 <= i < 27 else float((i * 13) % 57) - 20
+        if v is not None and i % 17 == 0:
+            rows.append(("edge.m", "b", MID + i * 90 + 15, v + 0.25))
+        rows.append(("edge.m", "b", MID + i * 90 + 15, v))
+        if v is not None and i % 23 == 0:
+            rows.append(("edge.m", "b", MID + i * 90 + 15, v))
+    for k in range(5):  # a day or two away
+        rows.append(("edge.m", "a", MID + 86_400 + 3_600 + k * 60, float(k)))
+        rows.append(("edge.m", "a", MID - 2 * 86_400 + k * 60, k + 0.5))
+    for i in range(-240, 241):  # edge.neg: 45 s steps across 0
+        v = None if 100 <= i < 110 else float((i * 13) % 57) - 20
+        if v is not None and i % 19 == 0:
+            rows.append(("edge.neg", "a", i * 45, v + 0.25))
+        rows.append(("edge.neg", "a", i * 45, v))
+        if v is not None and i % 31 == 0:
+            rows.append(("edge.neg", "a", i * 45, v))
+    return rows
+
+
+@pytest.fixture(scope="module")
+def edge_engine(spark):
+    from sydradb_spark.model import with_identity
+    from sydradb_spark.sydraql.engine import SydraQLEngine
+
+    df = spark.createDataFrame(
+        [(s, {"host": h}, ts, v) for s, h, ts, v in _edge_rows()],
+        "series string, tags map<string,string>, ts long, value double",
+    )
+    return SydraQLEngine(spark, with_identity(df))
+
+
+@pytest.fixture(scope="module")
+def edge_ddb():
+    con = duckdb.connect()
+    con.execute("CREATE TABLE edge(series VARCHAR, host VARCHAR, ts BIGINT, value DOUBLE)")
+    con.executemany("INSERT INTO edge VALUES (?, ?, ?, ?)", _edge_rows())
+    yield con
+    con.close()
+
+
+def _window_twin(series: str, where: str, cols: str) -> str:
+    return (
+        f"SELECT ts AS time, host, value, {cols} FROM edge "
+        f"WHERE series = '{series}' AND {where} "
+        f"WINDOW w AS (PARTITION BY host ORDER BY ts, value), "
+        f"ff AS (PARTITION BY host ORDER BY ts, value "
+        f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    )
+
+
+def _fill_twin(series: str, where: str, bucket: str, w: int, strategy: str, keyed: bool) -> str:
+    """Dense per-host spine from each host's min to max bucket, left-joined
+    with the aggregate, patched per strategy (leading/trailing linear gaps
+    stay NULL)."""
+    if strategy == "previous":
+        val = "last_value(a.v IGNORE NULLS) OVER prev"
+    else:
+        pb = "last_value(CASE WHEN a.v IS NOT NULL THEN s.b END IGNORE NULLS) OVER prev"
+        nb = "first_value(CASE WHEN a.v IS NOT NULL THEN s.b END IGNORE NULLS) OVER nxt"
+        pv = "last_value(a.v IGNORE NULLS) OVER prev"
+        nv = "first_value(a.v IGNORE NULLS) OVER nxt"
+        val = (
+            f"CASE WHEN a.v IS NOT NULL THEN a.v ELSE "
+            f"{pv} + ({nv} - {pv}) * (s.b - {pb}) / ({nb} - {pb}) END"
+        )
+    return f"""WITH agg AS (
+          SELECT host, {bucket} AS b, avg(value) AS v FROM edge
+          WHERE series = '{series}' AND {where} GROUP BY 1, 2),
+        spine AS (
+          SELECT host, unnest(generate_series(mn, mx, {w})) AS b
+          FROM (SELECT host, min(b) AS mn, max(b) AS mx FROM agg GROUP BY 1))
+        SELECT {"s.host, " if keyed else ""}s.b, {val} AS v
+        FROM spine s LEFT JOIN agg a ON s.host = a.host AND s.b = a.b
+        WINDOW prev AS (PARTITION BY s.host ORDER BY s.b
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+               nxt AS (PARTITION BY s.host ORDER BY s.b
+                       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"""
+
+
+def _boundary_cases():
+    """(id, sydraQL, DuckDB twin, side) with side 'one-pass' or 'chunked'."""
+    rnd = random.Random(59)
+    cases = []
+
+    def window(name, series, lo, hi, side):
+        """lag/lead/fill_forward/moving_avg over ``series`` in
+        ``time >= lo [and time <= hi]``."""
+        k1, k2 = rnd.randint(1, 3), rnd.randint(1, 3)
+        d = rnd.choice([120, 300, 900])
+        ql_range = f"time >= {lo}" + ("" if hi is None else f" and time <= {hi}")
+        sql_range = f"ts >= {lo}" + ("" if hi is None else f" AND ts <= {hi}")
+        cases.append(
+            (
+                f"bwin-{name}-{k1}{k2}-{d}",
+                f"select time, tag.host as host, value, lag(value, {k1}) as p, "
+                f"lead(value, {k2}) as n, fill_forward(value) as f, "
+                f"moving_avg(value, {d}) as ma from {series} where {ql_range}",
+                _window_twin(
+                    series,
+                    sql_range,
+                    f"lag(value, {k1}) OVER w AS p, lead(value, {k2}) OVER w AS n, "
+                    f"last_value(value IGNORE NULLS) OVER ff AS f, "
+                    f"avg(value) OVER (PARTITION BY host ORDER BY ts RANGE BETWEEN "
+                    f"{d} PRECEDING AND CURRENT ROW) AS ma",
+                ),
+                side,
+            )
+        )
+
+    half = WINDOW_CHUNK_S // 2
+    window("at-limit", "edge.m", MID - half, MID + half, "one-pass")
+    window("over-limit", "edge.m", MID - half, MID + half + 1, "chunked")
+    window("midnight-3h", "edge.m", MID - 5_400, MID + 5_399, "one-pass")
+    window("half-open", "edge.m", MID - 7_200, None, "chunked")
+    window("dups", "edge.m", MID - 600, MID + 599, "one-pass")  # 3 rows at MID
+    window("neg-midnight-3h", "edge.neg", -5_400, 5_399, "one-pass")
+    window("neg-half-open", "edge.neg", -5_400, None, "chunked")
+
+    def fill(name, series, lo, hi, strategy, w, side, over="time", origin=0, keyed=True):
+        """Keyed (per host) or unkeyed FILL of ``time_bucket(w, over[,
+        origin])`` over ``time >= lo [and time <= hi]``."""
+        args = f"{w}, {over}" + (f", {origin}" if origin else "")
+        ts = {"time": "ts", "time + 30": "(ts + 30)"}[over]
+        bucket = f"CAST(floor(({ts} - {origin}) / {w}) AS BIGINT) * {w} + {origin}"
+        ql_range = f"time >= {lo}" + ("" if hi is None else f" and time <= {hi}")
+        sql_range = f"ts >= {lo}" + ("" if hi is None else f" AND ts <= {hi}")
+        host, group = ("tag.host as host, ", "tag.host, ") if keyed else ("", "")
+        cases.append(
+            (
+                f"bfill-{name}-{strategy}-{w}",
+                f"select {host}time_bucket({args}) as b, avg(value) as v "
+                f"from {series} where {ql_range} "
+                f"group by {group}time_bucket({args}) fill({strategy})",
+                _fill_twin(series, sql_range, bucket, w, strategy, keyed),
+                side,
+            )
+        )
+
+    lo, hi = MID - 5_400, MID + 5_399  # 3 h across midnight
+    w = rnd.choice([300, 600])  # both leave NULL-aggregate buckets per host
+    fill("keyed-3h", "edge.m", lo, hi, "previous", w, "one-pass")
+    fill("keyed-3h", "edge.m", lo, hi, "linear", w, "one-pass")
+    fill("keyed-half-open", "edge.m", lo, None, "linear", w, "chunked")
+    fill("origin", "edge.m", lo, hi, "linear", w, "one-pass", origin=rnd.randrange(1, w))
+    fill("expr-bucket", "edge.m", lo, hi, "previous", w, "chunked", over="time + 30")
+    far = MID - 2 * 86_400 - 60  # every edge.m point lies in the next 3.05 days
+    fill("at-limit", "edge.m", far, far + FILL_LIMIT_60, "linear", 60, "one-pass")
+    fill("over-limit", "edge.m", far, far + FILL_LIMIT_60 + 1, "linear", 60, "chunked")
+    fill("neg-3h", "edge.neg", -5_400, 5_399, "linear", w, "one-pass", keyed=False)
+    return cases
+
+
+BOUNDARY_CASES = _boundary_cases()
+
+
+@pytest.mark.parametrize("case", BOUNDARY_CASES, ids=[c[0] for c in BOUNDARY_CASES])
+def test_plan_selection_boundary_differential(edge_engine, edge_ddb, case):
+    _, sydraql, sql, side = case
+    df = edge_engine.query(sydraql).df
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    got_side = "chunked" if "__wchunk" in plan or "__chunk" in plan else "one-pass"
+    assert got_side == side, sydraql
+    got = _canon([list(r) for r in df.collect()])
+    want = _canon(edge_ddb.execute(sql).fetchall())
+    assert len(got) == len(want), f"rowcount {len(got)} != {len(want)}\n{sydraql}"
+    for g, w in zip(got, want):
+        for gv, wv in zip(g, w):
+            if isinstance(wv, float) and gv is not None:
+                assert math.isclose(gv, wv, rel_tol=1e-9, abs_tol=1e-9), (g, w, sydraql)
+            else:
+                assert gv == wv, (g, w, sydraql)

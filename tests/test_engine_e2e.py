@@ -5,7 +5,7 @@ import math
 
 import pytest
 
-from sydradb_spark.errors import TimeRangeRequired
+from sydradb_spark.errors import TimeRangeRequired, ValidationError
 
 
 def rows(engine, q):
@@ -494,3 +494,40 @@ def test_exact_time_equality_prunes_partitions(spark, points, tmp_path):
     assert "hour_bucket" in optimized  # partition bounds derived
     got = r.df.collect()
     assert {row["value"] for row in got} == {5 * 0.5, 999.0}  # dup ts kept
+
+
+# --- fractional time_bucket steps are rejected, not truncated -----------------
+# Before the validator rule, FILL and the rollup path stepped by int(step)
+# while the bucket expression kept the fraction.
+def test_fractional_step_fill_null_is_rejected(engine):
+    # answered 6 of its 7 data-holding buckets as NULL
+    with pytest.raises(ValidationError):
+        engine.query(
+            "select avg(value) as v from weather.room1 where time >= 1000000 "
+            "and time < 1000600 group by time_bucket(90.5, time) fill(null)"
+        )
+
+
+def test_fractional_step_fill_previous_is_rejected(engine):
+    # answered 0 rows
+    with pytest.raises(ValidationError):
+        engine.query(
+            "select avg(value) as v from weather.room1 where time >= 1000000 "
+            "and time < 1000060 group by time_bucket(0.5, time) fill(previous)"
+        )
+
+
+def test_fractional_step_on_the_rollup_path_is_rejected(spark, points):
+    # the rollup folded hour buckets by 3600 while the raw path bucketed by
+    # 3600.5: different bucket starts and counts for the same query
+    from sydradb_spark import rollup as rl
+    from sydradb_spark.sydraql.engine import SydraQLEngine
+
+    served = SydraQLEngine(
+        spark, points, rollup=rl.build_rollup(points, step_s=3600), rollup_step=3600
+    )
+    with pytest.raises(ValidationError):
+        served.query(
+            "select time_bucket(3600.5, time) as b, count() as n from weather.room1 "
+            "where time >= 997200 and time < 1004400 group by time_bucket(3600.5, time)"
+        )

@@ -2769,6 +2769,40 @@ def test_with_sign_bucket_norm_bit_exact_vs_hof(spark):
         assert hof[4][0] == (1 << len(planes)) - 1 and math.isnan(hof[4][1])
 
 
+def test_with_sign_bucket_norm_row_slices_bit_exact_vs_hof(spark, monkeypatch):
+    """The kernel's fast path folds a uniform batch in row slices bounded by
+    ``SIGN_BUCKET_SLICE_BYTES``. With the budget cut to 3 rows of products,
+    one 10-row Arrow batch spans 4 slices and must still equal the HOF folds
+    bit for bit."""
+    import struct
+
+    planes = similarity.hyperplanes()
+    dim = len(planes[0])
+    monkeypatch.setattr(similarity, "SIGN_BUCKET_SLICE_BYTES", 3 * 8 * len(planes) * dim)
+    rows = [
+        (i, [((-1.0) ** (i + j)) * (0.1 + 0.013 * i * j) for j in range(dim)])
+        for i in range(10)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
+
+    def bits(x):
+        return struct.pack(">d", x).hex()
+
+    hof = {
+        r["vec_id"]: (r["b"], bits(r["n"]))
+        for r in emb.select(
+            "vec_id",
+            similarity.sign_bucket(F.col("embedding"), planes).alias("b"),
+            similarity._norm(F.col("embedding")).alias("n"),
+        ).collect()
+    }
+    kern = {
+        r["vec_id"]: (r["b"], bits(r["n"]))
+        for r in similarity.with_sign_bucket_norm(emb, "embedding", "b", "n", planes).collect()
+    }
+    assert kern == hof and len(set(b for b, _ in hof.values())) > 1
+
+
 def test_bm25_search_duckdb_oracle(spark):
     """BM25 (Lucene-classic k1=1.2, b=0.75) against a DuckDB twin of the
     whole pipeline — tokenize, postings, df/idf, per-doc score, top-k —

@@ -121,3 +121,15 @@ def test_fill_forward_rejected_in_where():
         check("select value from a.b where time > 0 and fill_forward(value) > 1")
     with pytest.raises(ValidationError):
         check("delete from a.b where time > 0 and fill_forward(value) > 1")
+
+
+def test_time_bucket_step_must_be_a_positive_integer_literal():
+    """FILL's spine and the rollup fold step in whole seconds; a fractional,
+    zero, negative or computed step is rejected instead of truncated."""
+    for step in ("90.5", "0.5", "0", "-60", "0s", "30 * 2", "value"):
+        with pytest.raises(ValidationError):
+            check(f"select time_bucket({step}, time) as b from a.b where time > 0")
+    with pytest.raises(ValidationError):
+        check("select count() from a.b where time > 0 group by time_bucket(3600.5, time)")
+    check("select time_bucket(60, time) as b from a.b where time > 0")
+    check("select time_bucket(1h30m, time, 900) as b from a.b where time > 0")
