@@ -1,53 +1,46 @@
-"""Streaming-rollup soak: crash replays + LIVE compaction + two apps
-(round 12, proactive follow-through on r11 verdict finding 1 / advice 5).
+"""Streaming-rollup soak: crash replays + LIVE compaction and vacuum + two
+apps + a concurrent reader, all serialized only by the rollup manifest.
 
 The rollup sink's exactly-once story (batch-deterministic overwrite targets
-keyed by (app_id, batch_id)) and the r12 compaction lock (batch writes take
-the table flock shared, compact_rollup exclusive) were pinned by unit tests;
-this script is the scale evidence, mirroring `sink_soak.py`:
+keyed by (app_id, batch_id), each batch a txn-ledgered manifest commit) and
+the lock-free fold (a CAS'd manifest swap) are pinned by unit tests; this
+script is the scale evidence, mirroring `sink_soak.py`:
 
 - replay an events twin through `stream_rollup` in many micro-batches
   (maxFilesPerTrigger=1) with seeded crash injection in the
   write→checkpoint-commit gap — each crashed batch is redelivered under the
-  same batch_id and must OVERWRITE its own partial, not double-count;
+  same batch_id and its manifest commit must be a txn no-op, not a
+  double count;
 - run `compact_rollup` CONCURRENTLY from a maintenance thread while the
-  stream is live — the r12 exclusive/shared flock is what makes this safe;
-  before r12 a batch landing mid-swap was silently lost;
+  stream is live, with a periodic `vacuum_rollup` — a batch committed
+  mid-fold must land in the next version, not vanish with the fold;
 - feed the same rollup table from a SECOND stream (different checkpoint →
   different app id) over a disjoint series slice — partials must not
-  clobber across apps (ADVICE r11 medium);
+  clobber across apps;
+- loop `read_rollup` from a READER thread the whole run while folds and
+  vacuums fire (``--vacuum-min-age`` tuned DOWN so the vacuum actually
+  reclaims folded entries mid-run). Each read must be a consistent
+  committed state: no FileNotFound on a vacuumed entry, the total folded
+  count NON-DECREASING read-over-read (a fold that lost a batch would dip,
+  a double count would overshoot then dip), and never above the source
+  total;
 - assert the folded rollup equals the batch twin built directly from ALL
   input points: cnt/min/max/first/last exact, sums at 1e-9 relative;
 - assert the table stays compacted: after a final compaction, batch dirs
-  on disk ≤ one live tail per app.
+  in the manifest ≤ one live tail per app, and a final vacuum leaves disk
+  == manifest.
 
 Usage: python scripts/rollup_soak.py [--sf-dir _scratch/sf10] [--chunks 120]
-    [--crashes 8] [--compact-every-s 3.0] [--seed 11] [--backend flock]
+    [--crashes 8] [--compact-every-s 3.0] [--seed 11] [--backend local]
 Prints ONE JSON line (recorded as SOAK_rollup_*.json); exits 1 on any
 broken assertion.
 
-``--backend`` (round 13, r12 verdict item 1) selects the write/compact
-serialization under soak:
+``--backend`` selects where the manifest lives:
 
-- ``flock``      — the r12 shared/exclusive advisory lock (POSIX only);
-- ``manifested`` — the lock-free manifest-CAS protocol (local manifest);
-- ``store``      — the same protocol with the manifest in an object store
-                   (LocalFSObjectStore — conditional-PUT commit point, NO
-                   flock anywhere), i.e. the s3:// deployment shape whose
-                   serialization the flock backend silently lacked.
-Both manifested backends run live compaction AND a periodic vacuum thread
-against the streaming writes, crash-replaying through it all.
-
-Reader race (round 14, r13 verdict item 4): on manifested backends a READER
-thread loops ``read_rollup_manifested`` the whole run while folds + vacuums
-fire (``--vacuum-min-age`` tuned DOWN so the vacuum actually reclaims folded
-entries mid-run, forcing the window). Each read must be a consistent
-committed state: no FileNotFound on a vacuumed entry, the total folded
-count NON-DECREASING read-over-read (a fold that lost a batch would dip,
-a double-count would overshoot then dip), and never above the source total.
-The r14 ledger pre-check in ``write_rollup_batch_manifested`` exists
-because of this soak's design: a gap-crash replay used to delete-and-
-rewrite a manifest-referenced batch dir in place, tearing concurrent reads.
+- ``local`` — in the rollup directory (``_manifest/``);
+- ``store`` — in an object store (LocalFSObjectStore: a conditional-PUT
+  commit point, no filesystem rename anywhere in the commit), i.e. the
+  s3:// deployment shape.
 """
 
 from __future__ import annotations
@@ -72,9 +65,7 @@ from sydradb_spark.rollup import build_rollup  # noqa: E402
 from sydradb_spark.session import get_spark  # noqa: E402
 from sydradb_spark.streaming.rollup_stream import (  # noqa: E402
     compact_rollup,
-    compact_rollup_manifested,
     read_rollup,
-    read_rollup_manifested,
     stream_rollup,
     vacuum_rollup,
 )
@@ -129,9 +120,7 @@ def prepare_ndjson_chunks(spark, sf_dir: str, src_dir: str, chunks: int, half: i
     return pts
 
 
-def drive_stream(
-    spark, src, roll, ck, crash_at: set, mft: int, manifested=False, store=None
-) -> int:
+def drive_stream(spark, src, roll, ck, crash_at: set, mft: int, store=None) -> int:
     """Run the stream to drain, restarting through injected crashes.
     Returns the number of restarts."""
     remaining = set(crash_at)
@@ -146,7 +135,7 @@ def drive_stream(
         q = stream_rollup(
             spark, src, roll, ck, step_s=STEP_S,
             available_now=True, max_files_per_trigger=mft,
-            manifest_commit=manifested, store=store,
+            store=store,
             _after_write_hook=hook,
         )
         try:
@@ -169,9 +158,7 @@ def main() -> None:
     ap.add_argument("--compact-every-s", type=float, default=3.0)
     ap.add_argument("--vacuum-min-age", type=int, default=600)
     ap.add_argument("--seed", type=int, default=11)
-    ap.add_argument(
-        "--backend", choices=["flock", "manifested", "store"], default="flock"
-    )
+    ap.add_argument("--backend", choices=["local", "store"], default="local")
     args = ap.parse_args()
     if not os.path.isdir(args.sf_dir):
         sys.exit(f"{args.sf_dir} missing — scripts/gen_sf.py builds it")
@@ -180,19 +167,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     shutil.rmtree(args.work, ignore_errors=True)
     roll = f"{args.work}/roll"
-    manifested = args.backend != "flock"
     store = LocalFSObjectStore(f"{args.work}/store") if args.backend == "store" else None
-
-    def compact_once():
-        if manifested:
-            compact_rollup_manifested(spark, roll, STEP_S, store)
-        else:
-            compact_rollup(spark, roll, STEP_S)
-
-    def read_folded():
-        if manifested:
-            return read_rollup_manifested(spark, roll, STEP_S, store)
-        return read_rollup(spark, roll, STEP_S)
 
     t0 = time.perf_counter()
     pts_a = prepare_ndjson_chunks(
@@ -208,8 +183,8 @@ def main() -> None:
     crash_at = set(rng.sample(range(args.chunks), args.crashes))
 
     # live-compaction thread: folds the table on a timer while stream A
-    # runs; manifested backends also vacuum live (age-windowed — a dir
-    # between its parquet write and its manifest commit must survive)
+    # runs, and vacuums live (age-windowed — a dir between its parquet
+    # write and its manifest commit must survive)
     stop = threading.Event()
     compactions = {"n": 0, "vacuums": 0, "errors": []}
 
@@ -217,9 +192,9 @@ def main() -> None:
         while not stop.is_set():
             time.sleep(args.compact_every_s)
             try:
-                compact_once()
+                compact_rollup(spark, roll, STEP_S, store)
                 compactions["n"] += 1
-                if manifested and compactions["n"] % 3 == 0:
+                if compactions["n"] % 3 == 0:
                     vacuum_rollup(
                         roll,
                         store,
@@ -231,18 +206,15 @@ def main() -> None:
             except Exception as e:  # a failed fold is a finding, record it
                 compactions["errors"].append(repr(e))
 
-    # reader-race thread (r14, r13 verdict item 4): every read during live
-    # folds + vacuums must be a consistent committed state
+    # reader-race thread: every read during live folds + vacuums must be a
+    # consistent committed state
     total_rows = rows_a + rows_b
     reader_stats = {"reads": 0, "last_total": -1, "violations": []}
 
     def reader():
-        if not manifested:
-            return  # the flock backend's directory read has no manifest to
-            # pin a consistent state against — manifested backends only
         while not stop.is_set():
             try:
-                row = read_folded().agg(
+                row = read_rollup(spark, roll, STEP_S, store).agg(
                     F.sum("cnt").alias("c"), F.count("*").alias("w")
                 ).first()
                 total = int(row["c"] or 0)
@@ -269,12 +241,12 @@ def main() -> None:
     reader_thread.start()
     restarts = drive_stream(
         spark, f"{args.work}/src_a", roll, f"{args.work}/ck_a", crash_at, 1,
-        manifested, store,
+        store,
     )
     # second app over its disjoint slice, coarser batches, no crashes
     drive_stream(
         spark, f"{args.work}/src_b", roll, f"{args.work}/ck_b", set(), 4,
-        manifested, store,
+        store,
     )
     stop.set()
     thread.join()
@@ -282,10 +254,10 @@ def main() -> None:
     t_stream = round(time.perf_counter() - t0, 1)
 
     # final offline compaction, then the batch-twin equality check
-    compact_once()
+    compact_rollup(spark, roll, STEP_S, store)
     folded = {
         (r["series_id"], r["bucket"]): r
-        for r in read_folded().collect()
+        for r in read_rollup(spark, roll, STEP_S, store).collect()
     }
     twin = {
         (r["series_id"], r["bucket"]): r
@@ -313,28 +285,24 @@ def main() -> None:
 
     from pathlib import Path
 
-    if manifested:
-        # bound check over the MANIFEST (what readers see), then a final
-        # min_age=0 vacuum must leave disk == manifest (orphans reclaimed)
-        from sydradb_spark import manifest as mf
-        from sydradb_spark.streaming.rollup_stream import STORE_TABLE
+    from sydradb_spark import manifest as mf
+    from sydradb_spark.streaming.rollup_stream import STORE_TABLE
 
-        live_dirs = sorted(
-            n
-            for n in mf.read_files(roll, store=store, key=STORE_TABLE)
-            if n.startswith("b_")
-        )
-        vacuum_rollup(roll, store, keep_versions=1, min_age_seconds=0)
-        on_disk = {
-            p.name
-            for p in Path(roll).iterdir()
-            if p.is_dir() and p.name[0] in "bc" and p.name[1] == "_"
-        }
-        manifest_now = set(mf.read_files(roll, store=store, key=STORE_TABLE))
-        orphans_reclaimed = on_disk == manifest_now
-    else:
-        live_dirs = sorted(p.name for p in Path(roll).glob("b_*") if p.is_dir())
-        orphans_reclaimed = True  # flock backend: swap already removed them
+    # bound check over the MANIFEST (what readers see), then a final
+    # min_age=0 vacuum must leave disk == manifest (orphans reclaimed)
+    live_dirs = sorted(
+        n
+        for n in mf.read_files(roll, store=store, key=STORE_TABLE)
+        if n.startswith("b_")
+    )
+    vacuum_rollup(roll, store, keep_versions=1, min_age_seconds=0)
+    on_disk = {
+        p.name
+        for p in Path(roll).iterdir()
+        if p.is_dir() and p.name[0] in "bc" and p.name[1] == "_"
+    }
+    manifest_now = set(mf.read_files(roll, store=store, key=STORE_TABLE))
+    orphans_reclaimed = on_disk == manifest_now
 
     print(
         json.dumps(
@@ -362,7 +330,7 @@ def main() -> None:
                 "reader_final_total": reader_stats["last_total"],
                 "reader_violations": reader_stats["violations"][:5],
                 "reader_clean": not reader_stats["violations"]
-                and (not manifested or reader_stats["reads"] > 0),
+                and reader_stats["reads"] > 0,
                 "prep_s": t_prep,
                 "stream_s": t_stream,
             }
@@ -374,7 +342,7 @@ def main() -> None:
         or compactions["errors"]
         or not orphans_reclaimed
         or reader_stats["violations"]
-        or (manifested and reader_stats["reads"] == 0)
+        or reader_stats["reads"] == 0
     ):
         sys.exit(1)
 

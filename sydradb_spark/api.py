@@ -71,30 +71,6 @@ def _plan_stats(df) -> dict[str, Any]:
         return {}
 
 
-def range_response(
-    spark,
-    path: str,
-    series_id: int,
-    start: int,
-    end: int,
-    max_rows: int = 100_000,
-) -> list[dict[str, Any]]:
-    """Raw range read (reference entry point C, http.zig:714-802):
-    ``[{"ts": ..., "value": ...}, ...]`` in ascending ts order. Partition
-    pruning + row-group skipping via storage.scan_range; ``max_rows`` bounds
-    the driver (the reference streams its response)."""
-    from sydradb_spark.storage import scan_range
-
-    rows = (
-        scan_range(spark, path, series_id=series_id, start=start, end=end)
-        .orderBy("ts", "value")
-        .limit(max_rows)
-        .select("ts", "value")
-        .collect()
-    )
-    return [{"ts": r["ts"], "value": r["value"]} for r in rows]
-
-
 def to_response(result: QueryResult, max_rows: int = 10_000) -> dict[str, Any]:
     """Collect a QueryResult into the reference response shape. ``max_rows``
     bounds driver memory (the reference streams; an API layer would too)."""

@@ -780,7 +780,7 @@ def _manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         pts.where((F.col("ts") >= D3) & (F.col("ts") < D7)), table, mode="append"
     )
     v1 = (
-        storage.read_points_version(spark, table, 1)
+        storage.read_points(spark, table, version=1)
         .agg(F.count("*").alias("n"), r3_col(F.sum("value")).alias("sum_v"))
         .select(F.lit(1).cast("long").alias("version"), "n", "sum_v")
     )

@@ -43,8 +43,9 @@ ledger forward; ``commit_replace`` (restore) replaces it.
 
 Managed-table alternative: the same storage layout drops into Delta or
 Iceberg by replacing ``commit`` with the format's conditional commit;
-``storage.write_points`` is the single seam that would change. Tables
-without a manifest keep plain directory semantics in ``storage``.
+``storage.write_points`` is the single seam that would change. A table
+without a manifest reads as a plain directory in ``storage`` and is
+adopted (its listing committed as a version) by its first mutation.
 """
 
 from __future__ import annotations

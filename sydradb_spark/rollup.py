@@ -47,8 +47,8 @@ def ensure_rollup_compat(df: DataFrame) -> DataFrame:
     distinction — their served avg was sum_v/cnt — so ``cnt_v = cnt`` is
     exactly the pre-upgrade semantics for old rows, while rows written
     since keep the null-correct count. Without this every pre-existing
-    rollup table (including the legacy flock-mode tables
-    ``init_rollup_manifest`` explicitly adopts) raised AnalysisException
+    rollup table (including the earlier-release tables
+    ``init_rollup_manifest`` adopts) raised AnalysisException
     at its first post-upgrade read (ADVICE r13).
 
     New-path writes never produce a null cnt_v (``F.count``/``F.sum`` over

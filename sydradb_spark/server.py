@@ -98,6 +98,11 @@ class _Handler(BaseHTTPRequestHandler):
             self._error(411, "length required")
             return None
         n = int(length)
+        if n < 0:
+            # rfile.read(-1) reads to EOF: the handler thread would block
+            # until the client hung up
+            self._error(400, "invalid Content-Length")
+            return None
         if n > cap:
             self._error(413, "payload too large")
             return None

@@ -11,9 +11,9 @@ Spark-first translation:
   INSERT batch) is already in one task and skips the shuffle. Every
   committed file is listed in the manifest; Parquet row-group min/max
   stats on (series_id, ts) prune within files.
-- ``read_points`` / ``read_points_version``: open one manifest version —
-  its exact file list, listed on the driver and read with a declared
-  schema (one footer's stored columns, read on the driver, plus
+- ``read_points``: open one manifest version (LATEST, or ``version=`` for
+  time travel) — its exact file list, listed on the driver and read with a
+  declared schema (one footer's stored columns, read on the driver, plus
   ``hour_bucket``), so a POSIX table opens without a Spark job.
 - ``hour_bucket_bounds``: the ONE rewrite Catalyst cannot do for us (SURVEY
   §4.1): derive hour_bucket partition predicates from ts predicates so a
@@ -21,7 +21,12 @@ Spark-first translation:
 - ``compact_points`` / ``apply_retention`` / ``drop_expired_partitions``:
   the compaction dedup (compact.zig:36-49, (series_id, ts) last-wins) and
   TTL jobs (retention.zig:4-20) as batch jobs. Partition drops are
-  metadata/filesystem operations — no data rewrite.
+  manifest commits — no data rewrite.
+
+Every mutation commits through the manifest. A plain directory (written
+without one) is adopted first: its ``data_files`` listing is committed as
+a version, then the mutation commits on top of it. Reads of a plain
+directory create nothing.
 """
 
 from __future__ import annotations
@@ -337,19 +342,13 @@ def read_points(
     spark: SparkSession, path: str, store=None, version: int | None = None
 ) -> DataFrame:
     """Read the table's manifest ``version``, LATEST by default (plain
-    directory read for pre-manifest tables). ``store=`` reads a
-    store-manifested table's entry list from the store; a URI path WITHOUT
-    a store reads LATEST as a plain directory (no manifest can live there —
-    a store-manifested URI table must be read with its store, or the read
-    would include uncommitted staged orphans)."""
-    return _open(spark, path, store, version)
-
-
-def read_points_version(
-    spark: SparkSession, path: str, version: int, store=None
-) -> DataFrame:
-    """Time travel: read a specific committed manifest version (files are
-    immutable and retained until vacuum)."""
+    directory read for pre-manifest tables); an older committed version is
+    time travel (files are immutable and retained until vacuum).
+    ``store=`` reads a store-manifested table's entry list from the store;
+    a URI path WITHOUT a store reads LATEST as a plain directory (no
+    manifest can live there — a store-manifested URI table must be read
+    with its store, or the read would include uncommitted staged
+    orphans)."""
     return _open(spark, path, store, version)
 
 
@@ -512,20 +511,13 @@ def compact_points(df: DataFrame, order_col: str | None = None) -> DataFrame:
     )
 
 
-def _swap_dir(staged: Path, live: Path) -> None:
-    """Replace ``live`` with ``staged`` via rename → rename → remove. The only
-    crash window leaves ``live`` momentarily absent with the old data intact
-    at ``<live>.old`` (recoverable by hand); the previous remove-then-rename
-    order could lose the partition outright. True atomicity needs a table
-    format's commit (Delta/Iceberg) — this is the best a bare filesystem
-    rename gives."""
-    old = live.with_name(live.name + ".old")
-    if old.exists():
-        shutil.rmtree(old)
-    if live.exists():
-        live.rename(old)
-    staged.rename(live)
-    shutil.rmtree(old, ignore_errors=True)
+def _adopt(path: str, spark: SparkSession | None, store=None) -> int:
+    """The table's LATEST version; a table without a manifest is adopted
+    first by committing its ``data_files`` listing as a version."""
+    v = mf.latest_version(path, store=store)  # a URI without store= raises
+    if v is None:
+        v = mf.commit(path, data_files(path, spark), store=store)
+    return v
 
 
 def compact_storage(
@@ -543,12 +535,10 @@ def compact_storage(
     and the commit carries the txn ledger forward — a streaming batch whose
     checkpoint commit is still pending cannot re-append after compaction.
     Old files are reclaimed by vacuum. A table without a manifest is
-    adopted first (its current listing committed as a version)."""
-    snap_v = mf.latest_version(path, store=store)
-    if snap_v is None:
-        snap_v = mf.commit(path, data_files(path, spark), store=store)
+    adopted first (``_adopt``)."""
+    snap_v = _adopt(path, spark, store)
     compacted = compact_points(
-        read_points_version(spark, path, snap_v, store=store), order_col
+        read_points(spark, path, store=store, version=snap_v), order_col
     )
     moved = _publish_staged(_shaped(compacted), path, spark)
     rewritten = set(mf.read_files(path, snap_v, store=store))
@@ -592,34 +582,27 @@ def drop_expired_partitions(
 ) -> list[int]:
     """Global-TTL fast path: drop hour_bucket=N partitions with
     N + 3600 <= cutoff. Pure metadata — no data read/rewritten, which is
-    what makes retention O(partitions) instead of O(rows) at 100 TB.
-    Manifest tables (either backend) commit a filtered file list (one
-    atomic pointer flip; physical files go with vacuum); plain tables
-    remove the directories. Returns the dropped bucket values."""
+    what makes retention O(partitions) instead of O(rows) at 100 TB. The
+    drop commits a filtered file list (one atomic pointer flip; physical
+    files go with vacuum). A plain POSIX table is adopted first
+    (``_adopt``); a store-backed table with no manifest yet has no
+    committed files and drops nothing. Returns the dropped bucket
+    values."""
 
     def _expired(rel: str) -> bool:  # "hour_bucket=N[/file]"
         return _bucket(rel) + SECONDS_PER_HOUR <= cutoff_hour_bucket
 
-    if mf.has_manifest(path, store=store):
-        dropped = sorted(
-            {_bucket(f) for f in mf.read_files(path, store=store) if _expired(f)}
+    if store is not None and not mf.has_manifest(path, store=store):
+        return []
+    files = mf.read_files(path, _adopt(path, None, store), store=store)
+    dropped = sorted({_bucket(f) for f in files if _expired(f)})
+    if dropped:
+        mf.commit(
+            path,
+            mutate=lambda old: [f for f in old if not _expired(f)],
+            store=store,
         )
-        if dropped:
-            mf.commit(
-                path,
-                mutate=lambda old: [f for f in old if not _expired(f)],
-                store=store,
-            )
-        return dropped
-    if store is not None:
-        return []  # store-manifested table with no manifest yet: nothing
-    root = _require_posix(path, "drop_expired_partitions")
-    dropped = []
-    for d in root.glob("hour_bucket=*"):
-        if _expired(d.name):
-            shutil.rmtree(d)
-            dropped.append(_bucket(d.name))
-    return sorted(dropped)
+    return dropped
 
 
 def _bucket(rel: str) -> int:
@@ -671,95 +654,90 @@ def snapshot(path: str, dest: str, store=None) -> None:
     """Consistent copy of the stored table (reference snapshot.zig:3-47 copies
     MANIFEST + wal/ + segments/ + tags.json).
 
-    Manifest tables snapshot in O(metadata): hardlink the LATEST version's
-    data files (immutable once committed — writers only ever add files) and
-    commit a fresh local manifest at ``dest`` — no data bytes move, which
-    is the only snapshot that works at 100 TB (the same trick as a
-    table-format snapshot / cheap clone). Plain tables fall back to a full
-    copy. ``store=`` snapshots a store-manifested table whose DATA lives on
-    a local path (the snapshot itself is always a local-manifested table);
-    URI data locations are rejected loudly — hardlinks don't exist there,
-    and a full remote copy is a job, not a metadata operation."""
-    import os
-
+    A snapshot is O(metadata): hardlink the LATEST version's data files
+    (immutable once committed — writers only ever add files) and commit a
+    fresh local manifest at ``dest`` — no data bytes move, which is the
+    only snapshot that works at 100 TB (the same trick as a table-format
+    snapshot / cheap clone). A plain source table (no manifest) is cloned
+    the same way from its ``data_files`` listing, with an empty txn ledger,
+    and is itself left untouched. ``store=`` snapshots a store-manifested
+    table whose DATA lives on a local path (the snapshot itself is always a
+    local-manifested table); URI data locations are rejected loudly —
+    hardlinks don't exist there, and a full remote copy is a job, not a
+    metadata operation."""
     src_root = _require_posix(path, "snapshot (hardlink clone of the data files)")
     dst_root = _require_posix(dest, "snapshot destination")
     if dst_root.exists():
         raise FileExistsError(f"snapshot destination exists: {dest}")
+    if not src_root.exists():
+        raise FileNotFoundError(f"snapshot source does not exist: {path}")
     # ONE pinned version for the file list AND the ledger: resolving LATEST
     # twice lets a commit landing in between pair version N's files with
     # version N+1's ledger — a replay guard claiming batches whose rows the
     # snapshot does not hold
     version = mf.latest_version(path, store=store)
     if version is None and store is None:
-        shutil.copytree(src_root, dst_root)  # plain table: full copy
-        return
-    files = mf.read_files(path, version, store=store)
+        files, ledger = data_files(path), {}
+    else:
+        files = mf.read_files(path, version, store=store)
+        ledger = mf.read_ledger(path, version, store=store)
     dst_root.mkdir(parents=True)
-    for rel in files:
-        target = dst_root / rel
-        target.parent.mkdir(parents=True, exist_ok=True)
-        try:
-            os.link(src_root / rel, target)
-        except OSError:  # cross-device etc. → real copy
-            shutil.copy2(src_root / rel, target)
+    _link_files(src_root, dst_root, files)
     # fresh v1 manifest listing exactly the snapshotted files, plus the
     # source's txn ledger (r13 review): restoring a snapshot WITHOUT the
     # ledger erases the streaming replay guard — a checkpoint-replayed
     # batch would re-append after the restore. Same reason compact_storage
     # carries it through whole-table rewrites.
-    mf.commit_replace(str(dst_root), files, mf.read_ledger(path, version, store=store))
+    mf.commit_replace(str(dst_root), files, ledger)
+
+
+def _link_files(src_root: Path, dst_root: Path, files: list[str]) -> None:
+    """Hardlink (or, across devices, copy) each relative file of
+    ``src_root`` into ``dst_root``, stamping publication time for the
+    vacuum age guard. Part names are unique per write job, so a name
+    already present is the identical immutable file and is skipped."""
+    import os
+
+    for rel in files:
+        dst = dst_root / rel
+        if dst.exists():
+            continue
+        dst.parent.mkdir(parents=True, exist_ok=True)
+        try:
+            os.link(src_root / rel, dst)
+        except OSError:  # cross-device etc. → real copy
+            shutil.copy2(src_root / rel, dst)
+        os.utime(dst)
 
 
 def restore(snapshot_path: str, path: str, store=None) -> None:
-    """Replace the live table with a snapshot.
+    """Replace the live table with a snapshot through a STAGED MANIFEST
+    FLIP (r14, VERDICT r13 item 2): link/copy the snapshot's manifest-listed
+    files into the live layout and commit the snapshot's file list AND
+    LEDGER as a full replacement (``commit_replace`` — the replay guard
+    rewinds with the data, so a streaming batch delivered after the
+    snapshot re-appends into the restored table instead of no-op'ing
+    against a future ledger). Readers never see the table absent; the
+    pre-restore files stay until vacuum. A plain live table is adopted by
+    the same commit (its old files become unreferenced). ``store=``
+    restores a store-manifested live table (local data path).
 
-    Manifested live tables restore through a STAGED MANIFEST FLIP (r14,
-    VERDICT r13 item 2): link/copy the snapshot's manifest-listed files
-    into the live layout (part names are unique per write job, so an
-    identical name can only be the identical immutable file — skipped) and
-    commit the snapshot's file list AND LEDGER as a full replacement
-    (``commit_replace`` — the replay guard rewinds with the data, so a
-    streaming batch delivered after the snapshot re-appends into the
-    restored table instead of no-op'ing against a future ledger). Readers
-    never see the table absent; the pre-restore files stay until vacuum.
-
-    Pre-manifest live tables keep the legacy staged copy + dir swap.
-    ``store=`` restores a store-manifested live table (local data path)."""
-    import os
-
+    A snapshot without a manifest is refused on both backends — a restore
+    never guesses a file list; ``ingest.init_points_table`` adopts such a
+    directory."""
     snap_local = _require_posix(snapshot_path, "restore (snapshot source)")
     live_local = _require_posix(path, "restore (live table data)")
     snap_v = mf.latest_version(str(snap_local))
-    if store is not None and snap_v is None:
-        # the legacy dir-swap fallback would replace the data while the
-        # STORE manifest kept referencing the removed files — store-mode
-        # readers would break silently (r14 self-review)
+    if snap_v is None:
         raise ValueError(
-            f"restore(store=...) needs a manifested snapshot; {snapshot_path!r} "
-            "has no _manifest (pre-manifest copytree snapshot)"
+            f"restore needs a manifested snapshot; {snapshot_path!r} has no "
+            "_manifest — adopt it first with "
+            "ingest.init_points_table(spark, snapshot_path)"
         )
-    live_manifested = store is not None or mf.has_manifest(path)
-    if live_manifested and snap_v is not None:
-        files = mf.read_files(str(snap_local), snap_v)
-        for rel in files:
-            dst = live_local / rel
-            if dst.exists():
-                continue
-            dst.parent.mkdir(parents=True, exist_ok=True)
-            try:
-                os.link(snap_local / rel, dst)
-            except OSError:  # cross-device etc. → real copy
-                shutil.copy2(snap_local / rel, dst)
-            os.utime(dst)  # publication stamp for the vacuum age guard
-        ledger = mf.read_ledger(str(snap_local), snap_v)
-        mf.commit_replace(path, files, ledger, store=store)
-        return
-    tmp = live_local.with_name(live_local.name + ".restore.tmp")
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    shutil.copytree(snap_local, tmp)
-    _swap_dir(tmp, live_local)
+    files = mf.read_files(str(snap_local), snap_v)
+    _link_files(snap_local, live_local, files)
+    ledger = mf.read_ledger(str(snap_local), snap_v)
+    mf.commit_replace(path, files, ledger, store=store)
 
 
 # --- durable DELETE -----------------------------------------------------------
@@ -775,62 +753,42 @@ def delete_where(
     the time bounds are read and rewritten; untouched partitions are never
     opened.
 
-    Manifest tables get a true ATOMIC commit: replacement files append into
+    The rewrite is an ATOMIC manifest commit: replacement files append into
     the live layout (Parquet part names never collide), then one manifest
     commit drops every old file of the affected partitions and adds the new
     ones — a crash at any point leaves LATEST on a fully consistent version
     (the reference's MANIFEST swap; what Delta/Iceberg REPLACE WHERE does).
-    Pre-manifest tables keep the staged rename-before-remove dir swap."""
+    A plain table is adopted first (``_adopt``), so it takes the same
+    commit."""
     # pin ONE manifest snapshot for both the read plan and the commit's
     # drop list — read_points would take its own LATEST, and a commit
     # landing between two listings would desynchronize them
-    snapshot_version = mf.latest_version(path, store=store)
-    df = (
-        read_points_version(spark, path, snapshot_version, store=store)
-        if snapshot_version is not None
-        else read_points(spark, path, store=store)
-    )
+    snapshot_version = _adopt(path, spark, store)
+    df = read_points(spark, path, store=store, version=snapshot_version)
     hb = hour_bucket_bounds(ts_min, ts_max)
     scoped = df.where(hb) if hb is not None else df
     affected = [r[0] for r in scoped.select("hour_bucket").distinct().collect()]
     if not affected:
         return
     remaining = scoped.where(~F.coalesce(predicate, F.lit(False)))
-
-    if snapshot_version is not None:
-        # drop EXACTLY the files this rewrite read (the snapshot version's
-        # affected-partition files), not everything under the partition
-        # prefixes (r13 review): a concurrent append into an affected hour
-        # lands files the DELETE's predicate never evaluated — a prefix
-        # drop would silently delete those rows, and a before/after
-        # directory diff would double-commit them
-        affected_dirs = tuple(f"hour_bucket={b}/" for b in affected)
-        rewritten = {
-            f
-            for f in mf.read_files(path, snapshot_version, store=store)
-            if f.startswith(affected_dirs)
-        }
-        new = _publish_staged(_shaped(remaining), path, spark)
-        mf.commit(
-            path,
-            mutate=lambda old: [f for f in old if f not in rewritten] + new,
-            store=store,
-        )
-        return
-
-    live = _require_posix(path, "delete_where on a table without a manifest")
-    tmp = live.with_name(live.name + ".delete.tmp")
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    write_points(remaining, str(tmp), mode="overwrite")
-    for bucket in affected:
-        live_dir = live / f"hour_bucket={bucket}"
-        staged = tmp / f"hour_bucket={bucket}"
-        if staged.exists():
-            _swap_dir(staged, live_dir)
-        elif live_dir.exists():  # absent = every row in the partition deleted
-            shutil.rmtree(live_dir)
-    shutil.rmtree(tmp, ignore_errors=True)
+    # drop EXACTLY the files this rewrite read (the snapshot version's
+    # affected-partition files), not everything under the partition
+    # prefixes (r13 review): a concurrent append into an affected hour
+    # lands files the DELETE's predicate never evaluated — a prefix drop
+    # would silently delete those rows, and a before/after directory diff
+    # would double-commit them
+    affected_dirs = tuple(f"hour_bucket={b}/" for b in affected)
+    rewritten = {
+        f
+        for f in mf.read_files(path, snapshot_version, store=store)
+        if f.startswith(affected_dirs)
+    }
+    new = _publish_staged(_shaped(remaining), path, spark)
+    mf.commit(
+        path,
+        mutate=lambda old: [f for f in old if f not in rewritten] + new,
+        store=store,
+    )
 
 
 # --- vacuum ------------------------------------------------------------------

@@ -2,50 +2,39 @@
 
 Pattern: NDJSON stream → watermark on event time → per-micro-batch partial
 rollups written to a BATCH-DETERMINISTIC subdirectory of the rollup table
-(``b_<app_id>_<batch_id>/``, mode=overwrite). Readers (or a periodic
-compaction) fold the partials with ``rollup.combine_rollup`` — every rollup
-statistic is associative, so write-then-fold needs no read-modify-write
-races.
+(``b_<app_id>_<batch_id>/``, mode=overwrite) and committed to the table's
+manifest. Readers and compaction fold the partials with
+``rollup.combine_rollup`` — every rollup statistic is associative, so
+write-then-fold needs no read-modify-write races.
 
-Exactly-once (r11 — this sink previously had the same replay hole the
-points sink did, VERDICT r10 finding 1): the write target is a pure
-function of ``(app_id, batch_id)`` and the write mode is overwrite, so a
-foreachBatch replay after a crash in the write→checkpoint-commit gap
-OVERWRITES its own output instead of appending a second copy — the fold
-counts each batch exactly once. The app id (minted inside the checkpoint,
-``ingest._checkpoint_app_id``) is part of the target since r12: batch ids
-restart at 0 after a checkpoint reset, and keying by batch id alone would
-let the reset stream's b_0 overwrite-destroy the previous incarnation's
-(or a second stream's) unfolded b_0 partial. Compaction preserves the
-replay guarantee by never folding the newest batch directory of EACH app
-(the only batch that app's restarted stream can still replay); see
-``compact_rollup``.
+One commit protocol: the table's live entry list is a versioned manifest
+(the points table's ``manifest.commit`` — in the table directory, or under
+the ``rollup`` key of a caller-supplied object store), and nothing else
+serializes writers, on one host or across hosts. A fold is a CAS'd version
+swap whose ``mutate`` removes exactly the entries it folded, so a batch
+committed mid-fold lands in the next version — never lost, never
+double-counted — and of two concurrent folds the second finds its sources
+gone and aborts. Folded entries stay on disk until ``vacuum_rollup``
+reclaims them past an age window, so a reader holding the previous version
+never loses a file mid-scan.
 
-Compaction vs a live stream (r12): batch writes take a SHARED advisory
-flock on ``<rollup_path>.lock`` and ``compact_rollup`` takes it EXCLUSIVE
-for the whole list→fold→swap, so on one host a batch can no longer start
-writing mid-compaction and be lost with the directory swap, and a replay
-overwrite can no longer race the live-batch copy — the write simply blocks
-until the swap lands, then targets the new root. Across hosts on a shared
-filesystem the offline-maintenance caveat still applies (flock is advisory
-and historically unreliable on NFS).
+Exactly-once: the write target is a pure function of ``(app_id,
+batch_id)`` and every batch commit is txn-ledgered by that pair, so a
+foreachBatch replay after a crash in the write→checkpoint-commit gap finds
+its batch in the ledger and touches nothing — the fold counts each batch
+exactly once, and a batch dir recreated after a fold never re-enters the
+manifest. The app id (minted inside the checkpoint,
+``ingest._checkpoint_app_id``) is part of the target because batch ids
+restart at 0 after a checkpoint reset: keyed by batch id alone, the reset
+stream's b_0 would overwrite another incarnation's (or a second stream's)
+unfolded b_0. Compaction never folds the newest batch directory of EACH
+app, the only batch that app's restarted stream can still replay.
 
-Manifest-protocol folding (r13 — VERDICT r12 item 1): on object stores
-(``s3://``-style rollup locations) no flock primitive exists at all, so the
-flock path above provides NO serialization there. The manifested variants
-(``write_rollup_batch_manifested`` / ``compact_rollup_manifested`` /
-``read_rollup_manifested`` / ``vacuum_rollup``) need no locks anywhere:
-the table's live entry list is a versioned manifest (the points table's
-one protocol, ``manifest.commit`` — in the table directory, or under the
-``rollup`` key of a caller-supplied object store), a fold is a CAS'd
-version swap whose ``mutate`` removes exactly the entries it folded, and
-a batch committed mid-fold simply lands in the next version — never
-lost, never double-counted. Two concurrent folds can't double-count either: the
-second fold's mutate sees its sources already gone and aborts. Replay
-safety is unchanged (deterministic overwrite targets + each app's newest
-batch carried unfolded) and additionally txn-ledgered: a replayed batch's
-manifest commit is a no-op, so a batch dir recreated AFTER it was folded
-away never re-enters the manifest readers see.
+A directory written without a manifest (an earlier release's
+lock-serialized sink: ``b_*`` batch dirs plus top-level compacted
+``*.parquet`` files) is adopted by ``init_rollup_manifest``, which
+``stream_rollup`` runs before its first batch; ``read_rollup`` refuses such
+a directory instead of answering empty.
 
 The watermark bounds state for Spark's own windowed mode; here aggregation
 happens inside foreachBatch (per-batch partials), so the watermark's role is
@@ -87,59 +76,65 @@ def _batch_dir(rollup_path: str, batch_id: int, app_id: str = DEFAULT_APP) -> st
     return f"{rollup_path.rstrip('/')}/b_{app_id}_{batch_id:012d}"
 
 
-def _lock_path(rollup_path: str) -> Path:
-    # OUTSIDE the table dir so compaction's directory swap can't destroy it
-    return Path(rollup_path.rstrip("/") + ".lock")
+# the store key a caller-supplied ObjectStore keeps the rollup manifest
+# under; scope the store to ONE rollup table (mirrors ingest.mint_app_id's
+# one-checkpoint scoping)
+STORE_TABLE = "rollup"
 
 
-class _rollup_lock:
-    """Advisory flock serializing batch writes (shared) against compaction
-    (exclusive) on one host. Context manager; blocking."""
+def _is_entry(name: str, is_dir: bool) -> bool:
+    """A rollup table entry: a ``b_*`` batch or ``c_*`` compacted dir, or a
+    top-level compacted ``*.parquet`` file of an adopted earlier-release
+    table."""
+    if is_dir:
+        return name.startswith("b_") or name.startswith("c_")
+    return name.endswith(".parquet") and name[0] != "."
 
-    def __init__(self, rollup_path: str, exclusive: bool) -> None:
-        # scheme guard, not OSError-catching (ADVICE r12): a non-POSIX
-        # location like "s3://bucket/tbl" would otherwise become the
-        # RELATIVE local path "s3:/bucket/tbl.lock" on which mkdir/open/
-        # flock all SUCCEED — a stray cwd-dependent lock file instead of
-        # the intended graceful degrade. URI schemes have no flock; the
-        # manifested fold (compact_rollup_manifested) is the correct path
-        # for them, and this lock becomes an explicit no-op.
-        from sydradb_spark.ingest import _posix_checkpoint_path
 
-        local = _posix_checkpoint_path(rollup_path)
-        self.path = _lock_path(local) if local is not None else None
-        self.exclusive = exclusive
-        self._fh = None
+def _listing(rollup_path: str, spark: SparkSession | None) -> list[tuple[str, bool]]:
+    """``(name, is_dir)`` of everything at the top of the table directory
+    ([] when it does not exist): local paths via the stdlib, URI locations
+    via the Hadoop FileSystem API, which needs ``spark``."""
+    from sydradb_spark.ingest import _posix_checkpoint_path
+    from sydradb_spark.util import hadoop_fs
 
-    def __enter__(self):
-        import fcntl
+    local = _posix_checkpoint_path(rollup_path)
+    if local is not None:
+        root = Path(local)
+        return [(p.name, p.is_dir()) for p in root.iterdir()] if root.exists() else []
+    if spark is None:
+        raise ValueError(
+            f"listing the URI rollup location {rollup_path!r} needs a "
+            "SparkSession (Hadoop FileSystem listing)"
+        )
+    _, fs, jroot = hadoop_fs(spark, rollup_path)
+    if not fs.exists(jroot):
+        return []
+    return [(st.getPath().getName(), st.isDirectory()) for st in fs.listStatus(jroot)]
 
-        if self.path is None:
-            return self  # non-POSIX rollup location: no lock primitive
-        try:
-            self.path.parent.mkdir(parents=True, exist_ok=True)
-            self._fh = open(self.path, "w")
-            fcntl.flock(self._fh, fcntl.LOCK_EX if self.exclusive else fcntl.LOCK_SH)
-        except OSError:
-            # local path whose filesystem refuses flock (NFS mounted
-            # nolock, some containers): degrade to unlocked rather than
-            # kill the stream — writes are idempotent overwrites, and the
-            # module docstring routes lock-less deployments to the
-            # manifested protocol. The URI case above never reaches here
-            # (the scheme guard is what prevents the stray local
-            # 's3:/...' lock file, ADVICE r12).
-            if self._fh is not None:
-                self._fh.close()
-            self._fh = None
-        return self
 
-    def __exit__(self, *exc):
-        import fcntl
-
-        if self._fh is not None:
-            fcntl.flock(self._fh, fcntl.LOCK_UN)
-            self._fh.close()
-        return False
+def init_rollup_manifest(
+    rollup_path: str, store=None, spark: SparkSession | None = None
+) -> int:
+    """Ensure the rollup table has a manifest before anything mutates it —
+    the rollup twin of ``ingest.init_points_table``. A fresh or empty path
+    gets an empty v1; a directory written without a manifest (an earlier
+    release's lock-serialized table: ``b_*`` batch dirs plus top-level
+    compacted ``*.parquet`` files) is adopted by committing its entries. A
+    table that already has a manifest is left as it is: its folded dirs
+    stay on disk until vacuum, and listing them again would count them
+    twice. Local paths list via the stdlib; URI locations need ``spark``.
+    Returns the table's latest version."""
+    entries = sorted(n for n, d in _listing(rollup_path, spark) if _is_entry(n, d))
+    cur = mf.latest_version(rollup_path, store=store, key=STORE_TABLE)
+    if cur is not None:
+        return cur
+    return mf.commit(
+        rollup_path,
+        mutate=lambda old: sorted(set(old) | set(entries)),
+        store=store,
+        key=STORE_TABLE,
+    )
 
 
 def write_rollup_batch(
@@ -147,15 +142,33 @@ def write_rollup_batch(
     rollup_path: str,
     batch_id: int,
     app_id: str = DEFAULT_APP,
-) -> None:
-    """Idempotent per-batch partial write: deterministic (app, batch) target
-    + overwrite means a replayed batch converges instead of double-counting.
-    Holds the table's shared lock so the write cannot interleave with a
-    ``compact_rollup`` swap."""
-    with _rollup_lock(rollup_path, exclusive=False):
-        partial.write.mode("overwrite").parquet(
-            _batch_dir(rollup_path, batch_id, app_id)
-        )
+    store=None,
+) -> int | None:
+    """Idempotent batch write: a deterministic ``(app_id, batch_id)``
+    overwrite target plus a txn-ledgered manifest commit adding the batch
+    dir to the table's live entry list. Returns the committed manifest
+    version (None on a replayed txn).
+
+    A batch already in the txn ledger skips the parquet write entirely: a
+    replayed overwrite would delete-then-rewrite a dir the manifest still
+    references, and a concurrent reader scanning it mid-overwrite tears
+    (FileNotFound / partial read). So a gap-crash replay touches nothing
+    readers can see; a crash BETWEEN write and commit still re-writes, but
+    that dir was never manifest-referenced. Same pattern as
+    ``storage.write_points``' replay pre-check."""
+    last = mf.read_txn(rollup_path, app_id, store=store, key=STORE_TABLE)
+    if last is not None and last >= batch_id:
+        return None  # replayed batch — already durable and folded-safe
+    target = _batch_dir(rollup_path, batch_id, app_id)
+    partial.write.mode("overwrite").parquet(target)
+    name = target.rsplit("/", 1)[1]
+    return mf.commit(
+        rollup_path,
+        mutate=lambda cur: sorted(set(cur) | {name}),
+        txn=(app_id, batch_id),
+        store=store,
+        key=STORE_TABLE,
+    )
 
 
 def stream_rollup(
@@ -167,7 +180,6 @@ def stream_rollup(
     watermark: str = "1 hour",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    manifest_commit: bool = False,
     store=None,
     maintenance_every: int | None = 256,
     maintenance_keep_versions: int = 8,
@@ -181,21 +193,20 @@ def stream_rollup(
     same rollup table gets fresh targets instead of clobbering b_0/b_1/...
     partials.
 
-    ``manifest_commit=True`` switches the sink to the lock-free manifested
-    protocol (module docstring): each batch write is followed by a
-    txn-ledgered manifest commit, compaction runs through
-    ``compact_rollup_manifested``, and readers use
-    ``read_rollup_manifested``. Required for object-store rollup locations
-    (no flock there); pass ``store`` (an ``objectstore.ObjectStore`` scoped
-    to this table) when the manifest itself must live in an object store,
-    else it lives in the table directory.
+    ``init_rollup_manifest`` runs before the first batch, so every batch is
+    a txn-ledgered manifest commit (``write_rollup_batch``); read the table
+    with ``read_rollup`` and fold it with ``compact_rollup``. ``store`` (an
+    ``objectstore.ObjectStore`` scoped to this table) keeps the manifest in
+    an object store, which a URI rollup location requires; without it the
+    manifest lives in the table directory.
 
-    ``maintenance_every=k`` (manifested mode only) runs ``vacuum_rollup``
-    every k batches — same rationale as the points sink's in-sink vacuum: a
-    continuous stream otherwise accumulates one manifest version per batch
-    FOREVER, and the commit path's version listing is O(versions), a
-    quadratic stream lifetime. The vacuum also reclaims orphaned batch/
-    compacted dirs outside the ``_vacuum_min_age`` window (test seam)."""
+    ``maintenance_every=k`` runs ``vacuum_rollup`` every k batches — same
+    rationale as the points sink's in-sink vacuum: a continuous stream
+    otherwise accumulates one manifest version per batch FOREVER, and the
+    commit path's version listing is O(versions), a quadratic stream
+    lifetime. The vacuum also reclaims folded and orphaned batch/compacted
+    dirs outside the ``_vacuum_min_age`` window (test seam)."""
+    init_rollup_manifest(rollup_path, store, spark)
     ident = {"app_id": resolve_app_id(checkpoint_dir)}
     reader = spark.readStream.schema(NDJSON_SCHEMA)
     if max_files_per_trigger is not None:
@@ -224,34 +235,23 @@ def stream_rollup(
                     "inside a running batch"
                 )
         partial = build_rollup(batch.drop("__event_time"), step_s=step_s)
-        if manifest_commit:
-            write_rollup_batch_manifested(
-                partial, rollup_path, batch_id, ident["app_id"], store=store
-            )
-            if (
-                maintenance_every
-                and batch_id > 0
-                and batch_id % maintenance_every == 0
-            ):
-                try:
-                    vacuum_rollup(
-                        rollup_path,
-                        store,
-                        keep_versions=maintenance_keep_versions,
-                        min_age_seconds=_vacuum_min_age,
-                        spark=batch.sparkSession,  # URI data locations
-                        # reclaim through the Hadoop FS API (r13 review)
-                    )
-                    note_maintenance_ok(ident)
-                except Exception as exc:
-                    # advisory maintenance must not kill the stream — the
-                    # batch's write + manifest commit already succeeded —
-                    # but a persistent failure must be visible (ADVICE r13)
-                    note_maintenance_failure(
-                        ident, f"vacuum_rollup({rollup_path})", exc
-                    )
-        else:
-            write_rollup_batch(partial, rollup_path, batch_id, ident["app_id"])
+        write_rollup_batch(partial, rollup_path, batch_id, ident["app_id"], store=store)
+        if maintenance_every and batch_id > 0 and batch_id % maintenance_every == 0:
+            try:
+                vacuum_rollup(
+                    rollup_path,
+                    store,
+                    keep_versions=maintenance_keep_versions,
+                    min_age_seconds=_vacuum_min_age,
+                    spark=batch.sparkSession,  # URI data locations
+                    # reclaim through the Hadoop FS API (r13 review)
+                )
+                note_maintenance_ok(ident)
+            except Exception as exc:
+                # advisory maintenance must not kill the stream — the
+                # batch's write + manifest commit already succeeded — but
+                # a persistent failure must be visible (ADVICE r13)
+                note_maintenance_failure(ident, f"vacuum_rollup({rollup_path})", exc)
         if _after_write_hook is not None:
             # test seam: after the durable partial write, before Spark's
             # checkpoint commit (crash injection — same seam as the points
@@ -266,24 +266,51 @@ def stream_rollup(
     return writer.start()
 
 
-def _read_partials(spark: SparkSession, rollup_path: str) -> DataFrame:
-    # recursiveFileLookup: the table mixes top-level compacted files with
-    # b_* batch subdirs; plain partition discovery would reject the mix.
-    # mergeSchema + ensure_rollup_compat: a table upgraded mid-life mixes
-    # pre-cnt_v and post-cnt_v files — without the merge Spark takes ONE
-    # file's footer as the schema, silently dropping cnt_v (or nulling it
-    # on legacy rows, undercounting the avg divisor); rollup entries are
-    # ~3600x smaller than raw points, so the footer merge is cheap
-    return ensure_rollup_compat(
-        spark.read.option("recursiveFileLookup", "true")
-        .option("mergeSchema", "true")
-        .parquet(rollup_path)
-    ).select(*ROLLUP_COLS)
+def _fold(spark: SparkSession, srcs: list[str], step_s: int) -> DataFrame:
+    # recursiveFileLookup: an entry is a batch/compacted dir or a top-level
+    # compacted file. mergeSchema + ensure_rollup_compat: a table upgraded
+    # mid-life mixes pre-cnt_v and post-cnt_v files — without the merge
+    # Spark takes ONE file's footer as the schema, silently dropping cnt_v
+    # (or nulling it on legacy rows, undercounting the avg divisor); rollup
+    # entries are ~3600x smaller than raw points, so the footer merge is
+    # cheap
+    return combine_rollup(
+        ensure_rollup_compat(
+            spark.read.option("recursiveFileLookup", "true")
+            .option("mergeSchema", "true")
+            .parquet(*srcs)
+        ).select(*ROLLUP_COLS),
+        step_s,
+    )
 
 
-def read_rollup(spark: SparkSession, rollup_path: str, step_s: int) -> DataFrame:
-    """Fold the partials into the canonical one-row-per-bucket rollup."""
-    return combine_rollup(_read_partials(spark, rollup_path), step_s)
+def read_rollup(
+    spark: SparkSession, rollup_path: str, step_s: int, store=None
+) -> DataFrame:
+    """Fold the manifest's entries (batch partials + compacted sets) into
+    the canonical one-row-per-bucket rollup. Reads only what the manifest
+    lists — orphaned and folded dirs awaiting ``vacuum_rollup`` are
+    invisible. A directory holding rollup entries but no manifest raises
+    (``init_rollup_manifest`` adopts it) instead of answering empty."""
+    if mf.has_manifest(rollup_path, store=store, key=STORE_TABLE):
+        names = mf.read_files(rollup_path, store=store, key=STORE_TABLE)
+    elif any(_is_entry(n, d) for n, d in _listing(rollup_path, spark)):
+        raise ValueError(
+            f"rollup table {rollup_path!r} has entries but no manifest (written "
+            "by an earlier release); adopt it with init_rollup_manifest first"
+        )
+    else:
+        names = []
+    if not names:
+        # empty table: an empty rollup frame with the canonical schema
+        empty = spark.createDataFrame(
+            [],
+            "series_id long, series string, bucket long, cnt long, "
+            "cnt_v long, sum_v double, min_v double, max_v double, "
+            "first_ts long, first_v double, last_ts long, last_v double",
+        )
+        return combine_rollup(empty.select(*ROLLUP_COLS), step_s)
+    return _fold(spark, [f"{rollup_path.rstrip('/')}/{n}" for n in names], step_s)
 
 
 def _live_tail_names(batch_names: list[str]) -> set[str]:
@@ -298,95 +325,9 @@ def _live_tail_names(batch_names: list[str]) -> set[str]:
     return set(newest.values())
 
 
-def _live_tails(batch_dirs: list[Path]) -> set[Path]:
-    by_name = {p.name: p for p in batch_dirs}
-    return {by_name[n] for n in _live_tail_names(list(by_name))}
-
-
-def compact_rollup(spark: SparkSession, rollup_path: str, step_s: int) -> None:
-    """Periodic job: rewrite the partials as folded rows (rename-before-
-    remove swap — the old rollup stays recoverable through a mid-swap
-    crash, storage._swap_dir).
-
-    The NEWEST batch directory of each app id is carried through UNFOLDED
-    (see ``_live_tails``); folding it would let a replay's overwrite re-add
-    what the fold already counted. The whole list→fold→swap runs under the
-    table's EXCLUSIVE lock, so a concurrent batch write on this host blocks
-    at the lock instead of being created-then-lost between the listing and
-    the swap (pinned by test_compact_rollup_concurrent_batch_not_lost)."""
-    import shutil
-
-    from sydradb_spark.ingest import _posix_checkpoint_path
-
-    if _posix_checkpoint_path(rollup_path) is None:
-        # Path('s3://...').glob would silently list NOTHING — a no-op fold
-        # masquerading as maintenance; the object-store path is the
-        # manifested protocol, not this directory swap
-        raise ValueError(
-            f"compact_rollup requires a local rollup path, got {rollup_path!r}; "
-            "use compact_rollup_manifested (manifest-CAS fold) for object-store "
-            "locations"
-        )
-    root = Path(rollup_path)
-    with _rollup_lock(rollup_path, exclusive=True):
-        batch_dirs = sorted(p for p in root.glob("b_*") if p.is_dir())
-        live = _live_tails(batch_dirs)
-        srcs = [
-            str(p)
-            for p in root.iterdir()
-            if p not in live and (p.is_dir() or p.suffix == ".parquet")
-        ]
-        if not srcs:
-            return
-        folded = combine_rollup(
-            ensure_rollup_compat(
-                spark.read.option("recursiveFileLookup", "true")
-                .option("mergeSchema", "true")
-                .parquet(*srcs)
-            ).select(*ROLLUP_COLS),
-            step_s,
-        )
-        from sydradb_spark.storage import _swap_dir
-
-        tmp = rollup_path.rstrip("/") + ".compact.tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        folded.write.mode("overwrite").parquet(tmp)
-        for tail in sorted(live):
-            shutil.copytree(tail, Path(tmp) / tail.name)
-        _swap_dir(Path(tmp), root)
-
-
-# ---------------------------------------------------------------------------
-# Manifest-protocol folding — lock-free, object-store-safe (VERDICT r12
-# item 1). Reference parallel: the single-node MANIFEST swap in
-# src/sydra/storage/manifest.zig — here generalized to the CAS protocol the
-# points table already uses, applied to the rollup's entry list.
-# ---------------------------------------------------------------------------
-
-# the store key a caller-supplied ObjectStore keeps the rollup manifest
-# under; scope the store to ONE rollup table (mirrors ingest.mint_app_id's
-# one-checkpoint scoping)
-STORE_TABLE = "rollup"
-
-
 class _ConcurrentFold(Exception):
     """A competing compaction removed our fold sources between our manifest
     read and our commit — committing would double-count the folded rows."""
-
-
-def _entries(rollup_path: str, store) -> list[str]:
-    """The manifest's live entry names ([] before the first commit)."""
-    if not mf.has_manifest(rollup_path, store=store, key=STORE_TABLE):
-        return []
-    return mf.read_files(rollup_path, store=store, key=STORE_TABLE)
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(jvm, FileSystem, Path) for ``path`` — shared with the points table
-    since r14; see ``util.hadoop_fs``."""
-    from sydradb_spark.util import hadoop_fs
-
-    return hadoop_fs(spark, path)
 
 
 def _remove_entry(spark: SparkSession | None, rollup_path: str, name: str) -> None:
@@ -397,6 +338,7 @@ def _remove_entry(spark: SparkSession | None, rollup_path: str, name: str) -> No
     import shutil
 
     from sydradb_spark.ingest import _posix_checkpoint_path
+    from sydradb_spark.util import hadoop_fs
 
     local = _posix_checkpoint_path(rollup_path)
     if local is not None:
@@ -408,126 +350,11 @@ def _remove_entry(spark: SparkSession | None, rollup_path: str, name: str) -> No
         return
     if spark is None:
         return  # caller has no session — entry stays until a vacuum with one
-    _, fs, jpath = _hadoop_fs(spark, f"{rollup_path.rstrip('/')}/{name}")
+    _, fs, jpath = hadoop_fs(spark, f"{rollup_path.rstrip('/')}/{name}")
     fs.delete(jpath, True)
 
 
-def init_rollup_manifest(
-    rollup_path: str, store=None, spark: SparkSession | None = None
-) -> int | None:
-    """Adopt an existing flock-mode rollup table into the manifested
-    protocol: commit the current on-disk entries (``b_*``/``c_*`` batch
-    dirs plus any top-level compacted ``*.parquet`` files the directory-swap
-    compactor left) as the next manifest version. Idempotent — entries
-    already present stay present; safe to run before pointing a
-    ``manifest_commit=True`` stream at the table. Local paths list via the
-    stdlib; URI locations need ``spark`` (Hadoop FileSystem listing).
-    Returns the committed version, or None when the table is empty and has
-    no manifest yet."""
-    from sydradb_spark.ingest import _posix_checkpoint_path
-
-    local = _posix_checkpoint_path(rollup_path)
-    if local is not None:
-        root = Path(local)
-        if not root.exists():
-            return None
-        listing = [(p.name, p.is_dir()) for p in root.iterdir()]
-    elif spark is not None:
-        _, fs, jroot = _hadoop_fs(spark, rollup_path)
-        if not fs.exists(jroot):
-            return None
-        listing = [
-            (st.getPath().getName(), st.isDirectory())
-            for st in fs.listStatus(jroot)
-        ]
-    else:
-        raise ValueError(
-            f"init_rollup_manifest on the URI location {rollup_path!r} needs "
-            "a SparkSession (Hadoop FileSystem listing)"
-        )
-    entries = sorted(
-        name
-        for name, is_dir in listing
-        if (is_dir and (name.startswith("b_") or name.startswith("c_")))
-        or (not is_dir and name.endswith(".parquet") and name[0] != ".")
-    )
-    if not entries and not mf.has_manifest(rollup_path, store=store, key=STORE_TABLE):
-        return None
-    return mf.commit(
-        rollup_path,
-        mutate=lambda cur: sorted(set(cur) | set(entries)),
-        store=store,
-        key=STORE_TABLE,
-    )
-
-
-def write_rollup_batch_manifested(
-    partial: DataFrame,
-    rollup_path: str,
-    batch_id: int,
-    app_id: str = DEFAULT_APP,
-    store=None,
-) -> int | None:
-    """Lock-free idempotent batch write: the deterministic overwrite target
-    of ``write_rollup_batch`` plus a txn-ledgered manifest commit adding the
-    batch dir to the table's live entry list. A foreachBatch replay
-    converges twice over — the parquet overwrite rewrites the same dir, and
-    the ``(app_id, batch_id)`` txn makes the manifest commit a no-op, so a
-    batch dir recreated AFTER compaction folded it away never re-enters the
-    list readers see. Returns the committed manifest version (None on a
-    replayed txn).
-
-    Ledger PRE-CHECK (r14, found preparing the reader-race soak): a batch
-    already in the txn ledger skips the parquet write entirely — the
-    replayed overwrite would delete-then-rewrite a dir the manifest still
-    REFERENCES, and a concurrent reader scanning it mid-overwrite tears
-    (FileNotFound / partial read). With the pre-check a gap-crash replay
-    touches nothing readers can see; a crash BETWEEN write and commit
-    still re-writes, but that dir was never manifest-referenced. Same
-    pattern as ``storage.write_points``' replay pre-check."""
-    last = mf.read_txn(rollup_path, app_id, store=store, key=STORE_TABLE)
-    if last is not None and last >= batch_id:
-        return None  # replayed batch — already durable and folded-safe
-    target = _batch_dir(rollup_path, batch_id, app_id)
-    partial.write.mode("overwrite").parquet(target)
-    name = target.rsplit("/", 1)[1]
-    return mf.commit(
-        rollup_path,
-        mutate=lambda cur: sorted(set(cur) | {name}),
-        txn=(app_id, batch_id),
-        store=store,
-        key=STORE_TABLE,
-    )
-
-
-def read_rollup_manifested(
-    spark: SparkSession, rollup_path: str, step_s: int, store=None
-) -> DataFrame:
-    """Fold the MANIFESTED entries (batch partials + compacted sets) into
-    the canonical one-row-per-bucket rollup. Reads only what the manifest
-    references — orphaned dirs awaiting ``vacuum_rollup`` are invisible."""
-    names = _entries(rollup_path, store)
-    if not names:
-        # empty table: an empty rollup frame with the canonical schema
-        empty = spark.createDataFrame(
-            [],
-            "series_id long, series string, bucket long, cnt long, "
-            "cnt_v long, sum_v double, min_v double, max_v double, "
-            "first_ts long, first_v double, last_ts long, last_v double",
-        )
-        return combine_rollup(empty.select(*ROLLUP_COLS), step_s)
-    srcs = [f"{rollup_path.rstrip('/')}/{n}" for n in names]
-    return combine_rollup(
-        ensure_rollup_compat(
-            spark.read.option("recursiveFileLookup", "true")
-            .option("mergeSchema", "true")
-            .parquet(*srcs)
-        ).select(*ROLLUP_COLS),
-        step_s,
-    )
-
-
-def compact_rollup_manifested(
+def compact_rollup(
     spark: SparkSession,
     rollup_path: str,
     step_s: int,
@@ -547,8 +374,9 @@ def compact_rollup_manifested(
     - two concurrent folds can't double-count — the loser's mutate finds
       its sources already removed and raises, the fold aborts and removes
       its own orphaned output (test_manifested_concurrent_fold_aborts);
-    - replays stay convergent — live tails are excluded exactly as in
-      ``compact_rollup``, and a replayed batch's commit is a txn no-op.
+    - replays stay convergent — each app's newest batch is carried
+      unfolded (``_live_tail_names``), and a replayed batch's commit is a
+      txn no-op.
 
     Folded source dirs are NOT deleted here (a reader holding the previous
     version may still be scanning them) — ``vacuum_rollup`` reclaims them
@@ -557,24 +385,18 @@ def compact_rollup_manifested(
     None when there was nothing to fold or a concurrent fold won."""
     import uuid
 
-    names = _entries(rollup_path, store)
-    if not names:
+    if not mf.has_manifest(rollup_path, store=store, key=STORE_TABLE):
         return None
+    names = mf.read_files(rollup_path, store=store, key=STORE_TABLE)
     live = _live_tail_names([n for n in names if n.startswith("b_")])
     folded_srcs = sorted(n for n in names if n not in live)
     if len(folded_srcs) < 2 and not any(n.startswith("b_") for n in folded_srcs):
         return None  # just one compacted entry (or nothing) — no work
     root = rollup_path.rstrip("/")
     out = f"c_{uuid.uuid4().hex}"
-    folded = combine_rollup(
-        ensure_rollup_compat(
-            spark.read.option("recursiveFileLookup", "true")
-            .option("mergeSchema", "true")
-            .parquet(*[f"{root}/{n}" for n in folded_srcs])
-        ).select(*ROLLUP_COLS),
-        step_s,
-    )
-    folded.write.mode("overwrite").parquet(f"{root}/{out}")
+    _fold(spark, [f"{root}/{n}" for n in folded_srcs], step_s).write.mode(
+        "overwrite"
+    ).parquet(f"{root}/{out}")
     if _pre_commit_hook is not None:
         _pre_commit_hook()
 
@@ -602,12 +424,14 @@ def vacuum_rollup(
     min_age_seconds: int = 600,
     spark: SparkSession | None = None,
 ) -> list[str]:
-    """Reclaim rollup entries (``b_*``/``c_*`` dirs and legacy top-level
-    ``*.parquet`` files) unreferenced by the retained manifest versions,
-    and prune old version files. The age window is the reader/replayer
-    guard: an entry whose tree was touched within it (newest mtime anywhere
-    inside — a fold or batch write advances leaf mtimes, not necessarily
-    the dir's own) is never deleted. Returns the removed entry names.
+    """Reclaim rollup entries (``b_*``/``c_*`` dirs and adopted top-level
+    ``*.parquet`` files) unreferenced by the retained manifest versions —
+    the folded sources ``compact_rollup`` leaves behind, and orphans of
+    crashed writes — and prune old version files. The age window is the
+    reader/replayer guard: an entry whose tree was touched within it
+    (newest mtime anywhere inside — a fold or batch write advances leaf
+    mtimes, not necessarily the dir's own) is never deleted. Returns the
+    removed entry names.
 
     ``mf.prune_versions`` builds the keep-set — with every guard of the
     points vacuum: young versions kept, pruned holes skipped, and nothing
@@ -624,21 +448,12 @@ def vacuum_rollup(
     import time
 
     from sydradb_spark.ingest import _posix_checkpoint_path
-    from sydradb_spark.util import tree_mtime
+    from sydradb_spark.util import hadoop_fs, tree_mtime
 
     kept = mf.prune_versions(
         rollup_path, keep_versions, min_age_seconds, store=store, key=STORE_TABLE
     )
     local = _posix_checkpoint_path(rollup_path)
-
-    def _is_entry(name: str, is_dir: bool) -> bool:
-        if is_dir:
-            return name.startswith("b_") or name.startswith("c_")
-        # legacy flock-mode compacted files adopted by init_rollup_manifest
-        # are top-level *.parquet — once a manifested fold replaces them
-        # they are reclaimable exactly like a folded batch dir
-        return name.endswith(".parquet") and name[0] != "."
-
     now = time.time()
     removed = []
     if local is not None:
@@ -656,12 +471,14 @@ def vacuum_rollup(
                 shutil.rmtree(p, ignore_errors=True)
             else:
                 p.unlink(missing_ok=True)
+                # an adopted top-level file's local-FS checksum sibling
+                p.with_name(f".{p.name}.crc").unlink(missing_ok=True)
             removed.append(p.name)
     elif spark is not None:
         # URI data location: list/age/delete through the Hadoop FS API —
         # Path('s3a://…').iterdir() resolves to a NONEXISTENT local path
         # and previously crashed the in-sink maintenance (r13 review)
-        _, fs, jroot = _hadoop_fs(spark, rollup_path)
+        _, fs, jroot = hadoop_fs(spark, rollup_path)
         if not fs.exists(jroot):
             return []
         for st in fs.listStatus(jroot):

@@ -34,13 +34,15 @@ def _partial(spark, series: str, rows):
 
 # --- 1. cnt_v read-compat ---------------------------------------------------
 def test_rollup_cnt_v_compat_legacy_only_table(spark, tmp_path):
-    """A table written entirely before cnt_v existed reads and folds; the
-    synthesized cnt_v equals cnt (the pre-upgrade avg semantics)."""
-    from sydradb_spark.streaming.rollup_stream import read_rollup
+    """A table written entirely before cnt_v existed is adopted, reads and
+    folds; the synthesized cnt_v equals cnt (the pre-upgrade avg
+    semantics)."""
+    from sydradb_spark.streaming.rollup_stream import init_rollup_manifest, read_rollup
 
     roll = tmp_path / "roll"
     legacy = _partial(spark, "s.a", [(100, 1.0), (200, 3.0)]).drop("cnt_v")
     legacy.write.parquet(str(roll / "b_app-legacy_000000000000"))
+    init_rollup_manifest(str(roll))
     folded = read_rollup(spark, str(roll), 3600).collect()
     assert len(folded) == 1
     assert folded[0]["cnt"] == 2 and folded[0]["cnt_v"] == 2
@@ -51,10 +53,7 @@ def test_rollup_cnt_v_compat_mixed_table_manifested(spark, tmp_path):
     """Legacy (no cnt_v) and new (null-bearing, cnt_v < cnt) entries in ONE
     manifested table: the fold must keep the new entry's real cnt_v and
     synthesize cnt for the legacy rows — not null either out."""
-    from sydradb_spark.streaming.rollup_stream import (
-        init_rollup_manifest,
-        read_rollup_manifested,
-    )
+    from sydradb_spark.streaming.rollup_stream import init_rollup_manifest, read_rollup
 
     roll = tmp_path / "roll"
     legacy = _partial(spark, "s.a", [(100, 1.0), (200, 3.0)]).drop("cnt_v")
@@ -63,7 +62,7 @@ def test_rollup_cnt_v_compat_mixed_table_manifested(spark, tmp_path):
     assert new.collect()[0]["cnt_v"] == 1  # the null is excluded
     new.write.parquet(str(roll / "b_app-new_000000000000"))
     init_rollup_manifest(str(roll))
-    folded = read_rollup_manifested(spark, str(roll), 3600).collect()
+    folded = read_rollup(spark, str(roll), 3600).collect()
     assert len(folded) == 1
     # legacy contributes cnt_v=cnt=2, new contributes cnt=2/cnt_v=1
     assert folded[0]["cnt"] == 4 and folded[0]["cnt_v"] == 3

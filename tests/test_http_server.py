@@ -166,6 +166,16 @@ def test_not_found_and_length_required(http):
     with pytest.raises(urllib.error.HTTPError) as e2:
         _post(http, "/api/v1/query/range", json.dumps({"series": "x"}).encode())
     assert e2.value.code == 400
+    # a negative Content-Length answers 400 at once; read(-1) would block the
+    # handler until the client hung up (urllib rejects the header, so raw)
+    import socket
+
+    with socket.create_connection(http.addr, timeout=3) as sock:
+        sock.sendall(
+            b"POST /api/v1/query/find HTTP/1.1\r\nHost: x\r\n"
+            b"Content-Length: -1\r\n\r\n{}"
+        )
+        assert sock.recv(64).startswith(b"HTTP/1.1 400")
 
 
 def test_cli_csv_import_and_query(spark, tmp_path):

@@ -144,7 +144,7 @@ def test_extra_column_reads_back_through_every_open(spark, points, tmp_path):
     version = mf.latest_version(path)
     expected = sorted(seqd.collect())
     latest = storage.read_points(spark, path)
-    pinned = storage.read_points_version(spark, path, version)
+    pinned = storage.read_points(spark, path, version=version)
     engine = SydraQLEngine(spark, storage_path=path)
     engine.ingest_points(driver_batch(spark, [("new.s", {}, 9_000_000, 1.0)]))
     refreshed = engine.points

@@ -261,9 +261,12 @@ def test_drop_hot_keys_semantics_and_plan(spark):
 def test_range_response_shape(spark, points, stored):
     sid = points.where(F.col("series") == "cpu.total").select("series_id").first()[0]
     # end-inclusive, like the reference queryRange [start, end]
-    out = api.range_response(spark, stored, series_id=sid, start=1_000_000, end=1_000_045)
-    assert [p["ts"] for p in out] == [1_000_000, 1_000_000, 1_000_015, 1_000_030, 1_000_045]
-    assert all(set(p) == {"ts", "value"} for p in out)
+    out = storage.scan_range(
+        spark, stored, series_id=sid, start=1_000_000, end=1_000_045
+    ).orderBy("ts", "value")
+    assert [r["ts"] for r in out.collect()] == [
+        1_000_000, 1_000_000, 1_000_015, 1_000_030, 1_000_045
+    ]
 
 
 def test_csv_ingest(spark, tmp_path):
@@ -473,7 +476,7 @@ def test_overwrite_on_live_manifested_table_is_a_manifest_flip(spark, tmp_path):
     assert [(r["series"], r["ts"]) for r in back.collect()] == [("s.b", 300)]
     # old files still on disk (time travel until vacuum), just unreferenced
     assert all((tmp_path / "tbl" / f).exists() for f in old_files)
-    assert storage.read_points_version(spark, path, v_before).count() == 2
+    assert storage.read_points(spark, path, version=v_before).count() == 2
 
 
 def test_delete_where_commit_spares_concurrent_appends(spark, tmp_path, monkeypatch):

@@ -42,7 +42,7 @@ def test_delete_commits_atomically_with_time_travel(spark, points, table):
     n_after = after.count()
     assert 0 < n_after < n0
     # previous version still fully readable (old files retained until vacuum)
-    assert storage.read_points_version(spark, table, version=1).count() == n0
+    assert storage.read_points(spark, table, version=1).count() == n0
 
 
 def test_crash_before_commit_preserves_old_version(spark, points, table):
@@ -163,13 +163,13 @@ def test_vacuum_age_window_protects_live_readers(spark, points, table):
     eng.query("delete from cpu.total where time >= 0 and time < 2000000")
     eng.query("delete from weather.room2 where time >= 0 and time < 2000000")
     assert mf.latest_version(table) == 3
-    n1 = storage.read_points_version(spark, table, version=1).count()
+    n1 = storage.read_points(spark, table, version=1).count()
     removed = storage.vacuum_points(table, keep_versions=1)  # default min_age_seconds
     assert removed == []
     # every version is still fully readable, not just the kept ones
     for v in (1, 2, 3):
-        assert storage.read_points_version(spark, table, version=v).count() > 0
-    assert storage.read_points_version(spark, table, version=1).count() == n1
+        assert storage.read_points(spark, table, version=v).count() > 0
+    assert storage.read_points(spark, table, version=1).count() == n1
 
 
 def test_delete_preserves_extra_columns(spark, points, tmp_path):

@@ -1,5 +1,6 @@
 """The on-disk manifest format is pinned, and a plain directory is adopted
-on its first append.
+on its first mutation: an append, a DELETE, a partition drop, or a restore
+onto it; a snapshot of it commits a manifest at the destination only.
 
 The manifest documents below are written literally, byte for byte as
 earlier releases wrote them — ``<table>/_manifest/v1.json`` + ``LATEST``
@@ -14,6 +15,7 @@ import json
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from sydradb_spark import manifest as mf
 from sydradb_spark import objectstore as obs
@@ -100,3 +102,66 @@ def test_append_adopts_a_plain_directory(spark, tmp_path):
     assert mf.latest_version(str(path)) == 1
     assert set(old) < set(files) and len(files) == len(old) + 1  # one new hour
     assert storage.read_points(spark, str(path)).count() == 6 + 4
+
+
+def _rows(spark, path, store=None) -> list[tuple[int, float]]:
+    df = storage.read_points(spark, str(path), store=store)
+    return sorted((r["ts"], r["value"]) for r in df.select("ts", "value").collect())
+
+
+def _reference(n: int) -> list[tuple[int, float]]:
+    """The rows ``_plain_table(spark, path, n)`` writes, in Python."""
+    return [(T0 + 60 * i, float(i)) for i in range(n)]
+
+
+def test_delete_where_adopts_a_plain_directory(spark, tmp_path):
+    path = tmp_path / "plain"
+    _plain_table(spark, path, 150)  # 2.5 hours: three partitions
+    storage.delete_where(
+        spark, str(path), F.col("value") >= 100.0, ts_min=T0, ts_max=T0 + 10800
+    )
+    assert mf.has_manifest(str(path))
+    assert _rows(spark, path) == [r for r in _reference(150) if r[1] < 100.0]
+
+
+def test_drop_expired_partitions_adopts_a_plain_directory(tmp_path, spark):
+    path = tmp_path / "plain"
+    files = _plain_table(spark, path, 150)
+    dropped = storage.drop_expired_partitions(str(path), T0 + 7200)
+    assert dropped == [T0, T0 + 3600]
+    assert mf.has_manifest(str(path))
+    assert _rows(spark, path) == [r for r in _reference(150) if r[0] >= T0 + 7200]
+    # a manifest commit, not a removal: the files wait for vacuum
+    on_disk = path.glob("hour_bucket=*/*.parquet")
+    assert sorted(str(f.relative_to(path)) for f in on_disk) == files
+
+
+def test_snapshot_and_restore_adopt_plain_directories(spark, tmp_path):
+    path, snap, other = tmp_path / "plain", tmp_path / "snap", tmp_path / "other"
+    files = _plain_table(spark, path, 150)
+    storage.snapshot(str(path), str(snap))
+    assert not mf.has_manifest(str(path))  # the source is left as it was
+    assert mf.read_files(str(snap)) == files and mf.read_ledger(str(snap)) == {}
+    assert _rows(spark, snap) == _reference(150)
+    # mutate the live table, then restore it from the snapshot
+    storage.delete_where(spark, str(path), F.col("value") >= 0.0)
+    assert _rows(spark, path) == []
+    storage.restore(str(snap), str(path))
+    assert _rows(spark, path) == _reference(150)
+    # restoring onto another plain table adopts it by the same commit
+    _plain_table(spark, other, 3)
+    storage.restore(str(snap), str(other))
+    assert mf.read_files(str(other)) == files
+    assert _rows(spark, other) == _reference(150)
+
+
+@pytest.mark.parametrize("backend", ["posix", "store"])
+def test_restore_refuses_a_snapshot_without_a_manifest(spark, tmp_path, backend):
+    store = obs.MemoryObjectStore() if backend == "store" else None
+    live, snap = tmp_path / "live", tmp_path / "snap"
+    storage.write_points(_batch(spark, "s.live", 4), str(live), store=store)
+    _plain_table(spark, snap, 5)
+    with pytest.raises(ValueError, match="init_points_table"):
+        storage.restore(str(snap), str(live), store=store)
+    assert storage.read_points(spark, str(live), store=store).count() == 4
+    assert mf.latest_version(str(live), store=store) == 1

@@ -65,7 +65,7 @@ def test_write_read_roundtrip_both_backends(spark, tmp_path, backend):
     # overwrite = full-replacement flip; old version stays time-travelable
     storage.write_points(_pts(spark, [("s.b", 200, 9.0)]), path, store=store)
     assert storage.read_points(spark, path, store=store).count() == 1
-    old = storage.read_points_version(spark, path, v, store=store)
+    old = storage.read_points(spark, path, store=store, version=v)
     assert old.count() == 2
 
 
@@ -91,7 +91,7 @@ def test_posix_only_entry_points_reject_uri_paths(spark):
     with pytest.raises(ValueError, match="store="):
         storage.write_points(df, uri)
     with pytest.raises(ValueError):
-        storage.read_points_version(spark, uri, 1)
+        storage.read_points(spark, uri, version=1)
     with pytest.raises(ValueError):
         storage.compact_storage(spark, uri)
     with pytest.raises(ValueError):
@@ -389,15 +389,14 @@ def test_stream_points_sink_store_backend_exactly_once(spark, tmp_path):
 
 
 def test_restore_store_mode_requires_manifested_snapshot(spark, tmp_path):
-    """r14 self-review: the legacy dir-swap fallback under store= would
-    replace the data while the STORE manifest kept referencing removed
-    files — rejected loudly instead."""
+    """A snapshot without a manifest is refused — a restore never guesses
+    a file list — and the error names the way to adopt one."""
     store = obs.MemoryObjectStore()
     path = str(tmp_path / "tbl")
     storage.write_points(_pts(spark, [("s.a", 100, 1.0)]), path, store=store)
     plain_snap = tmp_path / "plain_snap"
-    plain_snap.mkdir()  # no _manifest dir — a pre-manifest copytree snapshot
-    with pytest.raises(ValueError, match="manifested snapshot"):
+    plain_snap.mkdir()  # no _manifest dir
+    with pytest.raises(ValueError, match="manifested snapshot.*init_points_table"):
         storage.restore(str(plain_snap), path, store=store)
 
 

@@ -1,6 +1,5 @@
-"""Manifest-protocol rollup folding (VERDICT r12 item 1): lock-free batch
-writes + compaction over the versioned-manifest CAS, safe on object stores
-where the flock path of `compact_rollup` has no primitive to stand on.
+"""Manifest-protocol rollup folding: lock-free batch writes + compaction
+over the versioned-manifest CAS, the rollup table's one commit protocol.
 
 Every test runs against BOTH manifest homes of the one protocol
 (`manifest.commit`): the rollup directory (store=None) and a
@@ -18,11 +17,12 @@ from sydradb_spark import objectstore as obs
 from sydradb_spark.rollup import build_rollup
 from sydradb_spark.streaming.rollup_stream import (
     STORE_TABLE,
-    compact_rollup_manifested,
-    read_rollup_manifested,
+    compact_rollup,
+    init_rollup_manifest,
+    read_rollup,
     stream_rollup,
     vacuum_rollup,
-    write_rollup_batch_manifested,
+    write_rollup_batch,
 )
 
 
@@ -53,28 +53,32 @@ def _manifest_names(roll: str, store) -> list[str]:
 
 
 def test_manifested_write_and_read(spark, tmp_path, backend):
+    """Batch targets are keyed by (app_id, batch_id): a checkpoint-reset
+    stream (batch ids restart at 0) or a second stream feeding the same
+    table must not overwrite-destroy another app's unfolded partial, and
+    each app's replay converges onto its own target."""
     store = backend()
     roll = str(tmp_path / "roll")
-    v1 = write_rollup_batch_manifested(
+    v1 = write_rollup_batch(
         _mini_partial(spark, "s.a", 2), roll, 0, "stream-one", store=store
     )
-    v2 = write_rollup_batch_manifested(
+    v2 = write_rollup_batch(
         _mini_partial(spark, "s.b", 3), roll, 0, "stream-two", store=store
     )
     assert (v1, v2) == (1, 2)
     folded = {
-        r["series"]: r for r in read_rollup_manifested(spark, roll, 3600, store).collect()
+        r["series"]: r for r in read_rollup(spark, roll, 3600, store).collect()
     }
     assert folded["s.a"]["cnt"] == 2 and folded["s.b"]["cnt"] == 3
     # a replay is a txn no-op at the manifest level AND converges on disk
     assert (
-        write_rollup_batch_manifested(
+        write_rollup_batch(
             _mini_partial(spark, "s.b", 3), roll, 0, "stream-two", store=store
         )
         is None
     )
     folded = {
-        r["series"]: r for r in read_rollup_manifested(spark, roll, 3600, store).collect()
+        r["series"]: r for r in read_rollup(spark, roll, 3600, store).collect()
     }
     assert folded["s.b"]["cnt"] == 3  # not 6
 
@@ -84,10 +88,10 @@ def test_manifested_compaction_folds_and_keeps_tails(spark, tmp_path, backend):
     roll = str(tmp_path / "roll")
     for app, series in (("stream-one", "s.a"), ("stream-two", "s.b")):
         for b in (0, 1):
-            write_rollup_batch_manifested(
+            write_rollup_batch(
                 _mini_partial(spark, series, 2), roll, b, app, store=store
             )
-    assert compact_rollup_manifested(spark, roll, 3600, store) is not None
+    assert compact_rollup(spark, roll, 3600, store) is not None
     names = _manifest_names(roll, store)
     batches = [n for n in names if n.startswith("b_")]
     compacted = [n for n in names if n.startswith("c_")]
@@ -98,43 +102,42 @@ def test_manifested_compaction_folds_and_keeps_tails(spark, tmp_path, backend):
     ]
     assert len(compacted) == 1
     folded = {
-        r["series"]: r for r in read_rollup_manifested(spark, roll, 3600, store).collect()
+        r["series"]: r for r in read_rollup(spark, roll, 3600, store).collect()
     }
     assert folded["s.a"]["cnt"] == 4 and folded["s.b"]["cnt"] == 4
     # post-compaction replay of each app's live tail still converges
-    write_rollup_batch_manifested(
+    write_rollup_batch(
         _mini_partial(spark, "s.a", 2), roll, 1, "stream-one", store=store
     )
     folded = {
-        r["series"]: r for r in read_rollup_manifested(spark, roll, 3600, store).collect()
+        r["series"]: r for r in read_rollup(spark, roll, 3600, store).collect()
     }
     assert folded["s.a"]["cnt"] == 4
 
 
 def test_manifested_batch_mid_fold_not_lost(spark, tmp_path, backend):
-    """THE object-store race the flock used to close: a batch committed
-    between compaction's manifest read and its commit must land in the new
-    version, not vanish with the fold. No locks — the CAS mutate removes
+    """A batch committed between compaction's manifest read and its commit
+    must land in the new version, not vanish with the fold. No locks — the CAS mutate removes
     only the exact entries the fold read, so the mid-fold entry rides
     through."""
     store = backend()
     roll = str(tmp_path / "roll")
     for b in (0, 1):
-        write_rollup_batch_manifested(
+        write_rollup_batch(
             _mini_partial(spark, "s.a", 2), roll, b, "stream-one", store=store
         )
     late = _mini_partial(spark, "s.a", 5)
 
     def mid_fold():
-        write_rollup_batch_manifested(late, roll, 2, "stream-one", store=store)
+        write_rollup_batch(late, roll, 2, "stream-one", store=store)
 
     assert (
-        compact_rollup_manifested(spark, roll, 3600, store, _pre_commit_hook=mid_fold)
+        compact_rollup(spark, roll, 3600, store, _pre_commit_hook=mid_fold)
         is not None
     )
     names = _manifest_names(roll, store)
     assert "b_stream-one_000000000002" in names  # the mid-fold batch survived
-    folded = read_rollup_manifested(spark, roll, 3600, store).collect()
+    folded = read_rollup(spark, roll, 3600, store).collect()
     assert folded[0]["cnt"] == 2 + 2 + 5
 
 
@@ -145,23 +148,23 @@ def test_manifested_concurrent_fold_aborts(spark, tmp_path, backend):
     store = backend()
     roll = str(tmp_path / "roll")
     for b in (0, 1, 2):
-        write_rollup_batch_manifested(
+        write_rollup_batch(
             _mini_partial(spark, "s.a", 2), roll, b, "stream-one", store=store
         )
 
     def competing_fold():
         # a full competing compaction commits FIRST
-        assert compact_rollup_manifested(spark, roll, 3600, store) is not None
+        assert compact_rollup(spark, roll, 3600, store) is not None
 
     assert (
-        compact_rollup_manifested(
+        compact_rollup(
             spark, roll, 3600, store, _pre_commit_hook=competing_fold
         )
         is None  # loser detects the conflict and aborts
     )
     names = _manifest_names(roll, store)
     assert len([n for n in names if n.startswith("c_")]) == 1
-    folded = read_rollup_manifested(spark, roll, 3600, store).collect()
+    folded = read_rollup(spark, roll, 3600, store).collect()
     assert folded[0]["cnt"] == 6  # three batches, once each
     # the loser's orphaned c_ dir is gone from disk
     on_disk = {p.name for p in pathlib.Path(roll).glob("c_*")}
@@ -176,27 +179,27 @@ def test_manifested_replay_after_fold_never_resurfaces(spark, tmp_path, backend)
     store = backend()
     roll = str(tmp_path / "roll")
     for b in (0, 1):
-        write_rollup_batch_manifested(
+        write_rollup_batch(
             _mini_partial(spark, "s.a", 2), roll, b, "stream-one", store=store
         )
-    compact_rollup_manifested(spark, roll, 3600, store)  # folds batch 0
+    compact_rollup(spark, roll, 3600, store)  # folds batch 0
     assert "b_stream-one_000000000000" not in _manifest_names(roll, store)
     # replay batch 0: the r14 ledger pre-check skips the write entirely
     # (the original orphan dir stays for vacuum); return value is None
     assert (
-        write_rollup_batch_manifested(
+        write_rollup_batch(
             _mini_partial(spark, "s.a", 2), roll, 0, "stream-one", store=store
         )
         is None
     )
     assert "b_stream-one_000000000000" not in _manifest_names(roll, store)
-    folded = read_rollup_manifested(spark, roll, 3600, store).collect()
+    folded = read_rollup(spark, roll, 3600, store).collect()
     assert folded[0]["cnt"] == 4  # batches 0+1 exactly once
     removed = vacuum_rollup(roll, store, keep_versions=1, min_age_seconds=0)
     assert "b_stream-one_000000000000" in removed
     assert not (pathlib.Path(roll) / "b_stream-one_000000000000").exists()
     # referenced entries survive the vacuum
-    folded = read_rollup_manifested(spark, roll, 3600, store).collect()
+    folded = read_rollup(spark, roll, 3600, store).collect()
     assert folded[0]["cnt"] == 4
 
 
@@ -208,14 +211,14 @@ def test_manifested_replay_skips_data_write(spark, tmp_path, backend):
     write and commit) still rewrites."""
     store = backend()
     roll = str(tmp_path / "roll")
-    write_rollup_batch_manifested(
+    write_rollup_batch(
         _mini_partial(spark, "s.a", 2), roll, 0, "stream-one", store=store
     )
     target = pathlib.Path(roll) / "b_stream-one_000000000000"
     before = sorted((p.name, p.stat().st_mtime_ns) for p in target.rglob("*.parquet"))
     # replay: ledger has batch 0 → no parquet job, dir untouched, None back
     assert (
-        write_rollup_batch_manifested(
+        write_rollup_batch(
             _mini_partial(spark, "s.a", 2), roll, 0, "stream-one", store=store
         )
         is None
@@ -224,12 +227,12 @@ def test_manifested_replay_skips_data_write(spark, tmp_path, backend):
     assert after == before  # bit-identical dir: no delete-then-rewrite window
     # a NEW batch id (not in the ledger) does write
     assert (
-        write_rollup_batch_manifested(
+        write_rollup_batch(
             _mini_partial(spark, "s.a", 3), roll, 1, "stream-one", store=store
         )
         is not None
     )
-    folded = read_rollup_manifested(spark, roll, 3600, store).collect()
+    folded = read_rollup(spark, roll, 3600, store).collect()
     assert folded[0]["cnt"] == 5
 
 
@@ -238,7 +241,7 @@ def test_manifested_vacuum_age_guard(spark, tmp_path, backend):
     live writer's target whose manifest commit hasn't landed yet)."""
     store = backend()
     roll = str(tmp_path / "roll")
-    write_rollup_batch_manifested(
+    write_rollup_batch(
         _mini_partial(spark, "s.a", 2), roll, 0, "stream-one", store=store
     )
     # an on-disk dir with NO manifest entry (simulates crash between the
@@ -253,9 +256,9 @@ def test_manifested_vacuum_age_guard(spark, tmp_path, backend):
 
 
 def test_stream_rollup_manifest_commit_end_to_end(spark, tmp_path, backend):
-    """The streaming sink in manifest_commit mode: every micro-batch write
-    is followed by a txn-ledgered manifest commit; the manifested reader
-    sees exactly the committed batches and compaction works mid-stream."""
+    """The streaming sink: every micro-batch write is followed by a
+    txn-ledgered manifest commit; the reader sees exactly the committed
+    batches and compaction works mid-stream."""
     store = backend()
     src = tmp_path / "src"
     src.mkdir()
@@ -266,16 +269,16 @@ def test_stream_rollup_manifest_commit_end_to_end(spark, tmp_path, backend):
     roll = str(tmp_path / "roll")
     ck = str(tmp_path / "ck")
     q = stream_rollup(
-        spark, str(src), roll, ck, manifest_commit=True, store=store
+        spark, str(src), roll, ck, store=store
     )
     q.awaitTermination(60)
     (src / "b2.ndjson").write_text('{"series": "s.a", "ts": 150, "value": 7.0}\n')
     q2 = stream_rollup(
-        spark, str(src), roll, ck, manifest_commit=True, store=store
+        spark, str(src), roll, ck, store=store
     )
     q2.awaitTermination(60)
-    compact_rollup_manifested(spark, roll, 3600, store)
-    folded = read_rollup_manifested(spark, roll, 3600, store).collect()
+    compact_rollup(spark, roll, 3600, store)
+    folded = read_rollup(spark, roll, 3600, store).collect()
     assert len(folded) == 1
     assert folded[0]["cnt"] == 3 and folded[0]["sum_v"] == pytest.approx(11.0)
     names = _manifest_names(roll, store)
@@ -290,20 +293,18 @@ def test_store_table_key_is_scoped(tmp_path):
 
 
 def test_compact_rollup_rejects_non_posix_path(spark):
-    """`compact_rollup`'s Path-glob fold would silently list NOTHING on an
-    object-store URI (a no-op masquerading as maintenance) — it must raise
-    and route to the manifested fold instead."""
-    from sydradb_spark.streaming.rollup_stream import compact_rollup
-
-    with pytest.raises(ValueError, match="compact_rollup_manifested"):
+    """A fold of an object-store URI with no store= must raise — the
+    manifest cannot live beside the data there, and a silent no-op would
+    masquerade as maintenance."""
+    with pytest.raises(ValueError, match="store="):
         compact_rollup(spark, "s3://bucket/rollup", 3600)
 
 
 def test_stream_rollup_manifested_crash_replay_converges(spark, tmp_path, backend):
-    """Pytest-scale twin of the soak's crash schedule: a crash in the
-    write→checkpoint gap redelivers the batch; in manifest_commit mode the
-    replay overwrites its dir AND its manifest commit is a txn no-op — the
-    folded result counts every input row exactly once."""
+    """Pytest-scale twin of the soak's crash schedule: kill the stream
+    AFTER the durable partial write but BEFORE the checkpoint commit; the
+    restart redelivers the same batch_id, whose manifest commit is a txn
+    no-op — the folded result counts every input row exactly once."""
     store = backend()
     src = tmp_path / "src"
     src.mkdir()
@@ -322,17 +323,16 @@ def test_stream_rollup_manifested_crash_replay_converges(spark, tmp_path, backen
 
     q = stream_rollup(
         spark, str(src), roll, ck,
-        manifest_commit=True, store=store,
-        max_files_per_trigger=1, _after_write_hook=hook,
+        store=store, max_files_per_trigger=1, _after_write_hook=hook,
     )
     with pytest.raises(Exception, match="injected"):
         q.awaitTermination(120)
     q2 = stream_rollup(
         spark, str(src), roll, ck,
-        manifest_commit=True, store=store, max_files_per_trigger=1,
+        store=store, max_files_per_trigger=1,
     )
     q2.awaitTermination(120)
-    folded = read_rollup_manifested(spark, roll, 3600, store).collect()
+    folded = read_rollup(spark, roll, 3600, store).collect()
     assert len(folded) == 1
     assert folded[0]["cnt"] == 4  # batch 1 replayed, counted once
 
@@ -358,9 +358,9 @@ def test_manifested_threaded_writers_vs_fold_vs_vacuum(spark, tmp_path, backend)
     def writer(app: str) -> None:
         try:
             for b in range(n_batches):
-                write_rollup_batch_manifested(partials[app][b], roll, b, app, store=store)
+                write_rollup_batch(partials[app][b], roll, b, app, store=store)
                 if b % 3 == 1:  # crash-replay twin: re-deliver the same batch
-                    write_rollup_batch_manifested(
+                    write_rollup_batch(
                         partials[app][b], roll, b, app, store=store
                     )
         except Exception as e:  # pragma: no cover - surfaced by the assert
@@ -372,7 +372,7 @@ def test_manifested_threaded_writers_vs_fold_vs_vacuum(spark, tmp_path, backend)
         while not stop.is_set():
             time.sleep(0.3)
             try:
-                compact_rollup_manifested(spark, roll, 3600, store)
+                compact_rollup(spark, roll, 3600, store)
                 vacuum_rollup(roll, store, keep_versions=2, min_age_seconds=600)
             except Exception as e:  # pragma: no cover
                 errors.append(e)
@@ -387,8 +387,8 @@ def test_manifested_threaded_writers_vs_fold_vs_vacuum(spark, tmp_path, backend)
     stop.set()
     maint.join()
     assert not errors, errors
-    compact_rollup_manifested(spark, roll, 3600, store)
-    folded = {r["series"]: r for r in read_rollup_manifested(spark, roll, 3600, store).collect()}
+    compact_rollup(spark, roll, 3600, store)
+    folded = {r["series"]: r for r in read_rollup(spark, roll, 3600, store).collect()}
     # per app: batches of sizes 1..8, each counted exactly once = 36 rows
     assert folded["s.a"]["cnt"] == sum(range(1, n_batches + 1))
     assert folded["s.b"]["cnt"] == sum(range(1, n_batches + 1))
@@ -411,7 +411,7 @@ def test_stream_rollup_manifested_maintenance_bounds_versions(spark, tmp_path, b
     roll = str(tmp_path / "roll")
     q = stream_rollup(
         spark, str(src), roll, str(tmp_path / "ck"),
-        manifest_commit=True, store=store, max_files_per_trigger=1,
+        store=store, max_files_per_trigger=1,
         maintenance_every=3, maintenance_keep_versions=2, _vacuum_min_age=0,
     )
     q.awaitTermination(120)
@@ -422,45 +422,74 @@ def test_stream_rollup_manifested_maintenance_bounds_versions(spark, tmp_path, b
     # 8 commits would be 8 versions unvacuumed; the bound is keep + the
     # commits since the last vacuum (fired at batch 6) + slack
     assert len(versions) <= 2 + 2 + 1, sorted(str(v) for v in versions)
-    folded = read_rollup_manifested(spark, roll, 3600, store).collect()
+    folded = read_rollup(spark, roll, 3600, store).collect()
     assert folded[0]["cnt"] == 8  # every batch still counted exactly once
 
 
 def test_init_rollup_manifest_adopts_flock_table(spark, tmp_path, backend):
-    """Migration path: a flock-mode table (top-level compacted parquet from
-    the directory-swap compactor + unfolded batch dirs) is adopted by
-    committing its on-disk entries as the first manifest version; folds and
-    vacuums then treat the legacy compacted files like any folded entry."""
-    from sydradb_spark.streaming.rollup_stream import (
-        compact_rollup,
-        init_rollup_manifest,
-        write_rollup_batch,
-    )
-
+    """Migration path. An earlier release serialized rollup writers with a
+    flock and compacted by swapping directories, and left tables with no
+    manifest: ``b_<app>_<batch>`` dirs plus the compactor's top-level
+    ``*.parquet`` output. That layout is written literally here. A read
+    refuses it instead of answering empty; a stream adopts it and counts
+    every legacy batch exactly once; a fold plus vacuum reclaims the legacy
+    file without changing any count."""
     store = backend()
-    roll = str(tmp_path / "roll")
-    # build a flock-mode table: two batches, compact (top-level parquet +
-    # one live tail), then one more batch
-    write_rollup_batch(_mini_partial(spark, "s.a", 2), roll, 0, "stream-one")
-    write_rollup_batch(_mini_partial(spark, "s.a", 2), roll, 1, "stream-one")
-    compact_rollup(spark, roll, 3600)
-    write_rollup_batch(_mini_partial(spark, "s.a", 2), roll, 2, "stream-one")
+    roll = tmp_path / "roll"
+    # the directory-swap compactor's output: folded batches 0 and 1 of
+    # stream-one (2 points each) as top-level part files
+    _mini_partial(spark, "s.a", 4).coalesce(1).write.parquet(str(roll))
+    for name, series, n in (
+        ("b_stream-one_000000000002", "s.a", 2),
+        ("b_stream-one_000000000003", "s.a", 2),
+        ("b_stream-two_000000000000", "s.b", 3),
+    ):
+        _mini_partial(spark, series, n).write.parquet(str(roll / name))
+    (tmp_path / "roll.lock").write_text("")  # the flock file beside the table
+    assert len(list(roll.glob("*.parquet"))) == 1
+    assert not (roll / "_manifest").exists()
 
-    assert init_rollup_manifest(roll, store) is not None
-    names = _manifest_names(roll, store)
-    assert any(n.endswith(".parquet") for n in names)  # legacy compacted file
-    assert "b_stream-one_000000000002" in names
-    folded = read_rollup_manifested(spark, roll, 3600, store).collect()
-    assert folded[0]["cnt"] == 6  # all three batches, once each
-    # idempotent re-adoption
-    init_rollup_manifest(roll, store)
-    assert _manifest_names(roll, store) == names
-    # a manifested fold replaces the legacy file; vacuum reclaims it
-    assert compact_rollup_manifested(spark, roll, 3600, store) is not None
-    removed = vacuum_rollup(roll, store, keep_versions=1, min_age_seconds=0)
-    assert any(n.endswith(".parquet") for n in removed)
-    folded = read_rollup_manifested(spark, roll, 3600, store).collect()
-    assert folded[0]["cnt"] == 6  # nothing lost through migrate+fold+vacuum
+    with pytest.raises(ValueError, match="init_rollup_manifest"):
+        read_rollup(spark, str(roll), 3600, store)
+    assert not (roll / "_manifest").exists()  # the refused read created nothing
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "b1.ndjson").write_text(
+        '{"series": "s.a", "ts": 100, "value": 1.0}\n'
+        '{"series": "s.a", "ts": 101, "value": 1.0}\n'
+    )
+    q = stream_rollup(spark, str(src), str(roll), str(tmp_path / "ck"), store=store)
+    q.awaitTermination(60)
+    names = _manifest_names(str(roll), store)
+    assert [n for n in names if n.endswith(".parquet")] == [
+        p.name for p in roll.glob("*.parquet")
+    ]
+    assert len([n for n in names if n.startswith("b_")]) == 4  # 3 legacy + 1 new
+
+    def counts():
+        # the stream derives series_id from series + tags, the literal
+        # partials from series alone: total per series name
+        out: dict[str, int] = {}
+        for r in read_rollup(spark, str(roll), 3600, store).collect():
+            out[r["series"]] = out.get(r["series"], 0) + r["cnt"]
+        return out
+
+    assert counts() == {"s.a": 4 + 2 + 2 + 2, "s.b": 3}
+    # adoption is idempotent: an adopted table is left as it is
+    v = mf.latest_version(str(roll), store=store, key=STORE_TABLE)
+    assert init_rollup_manifest(str(roll), store) == v
+    assert _manifest_names(str(roll), store) == names
+
+    # the fold takes the legacy file and stream-one's older batch; each
+    # app's newest batch rides through
+    assert compact_rollup(spark, str(roll), 3600, store) is not None
+    assert counts() == {"s.a": 10, "s.b": 3}
+    removed = vacuum_rollup(str(roll), store, keep_versions=1, min_age_seconds=0)
+    assert len([n for n in removed if n.endswith(".parquet")]) == 1
+    assert "b_stream-one_000000000002" in removed
+    assert not list(roll.glob("*.parquet")) and not list(roll.glob(".*.parquet.crc"))
+    assert counts() == {"s.a": 10, "s.b": 3}
 
 
 def test_manifested_uri_paths_guarded_and_hadoop_routed(spark, tmp_path, monkeypatch):
@@ -472,20 +501,17 @@ def test_manifested_uri_paths_guarded_and_hadoop_routed(spark, tmp_path, monkeyp
     forcing the non-POSIX branch while the URI is a real file:// location
     Hadoop can serve."""
     from sydradb_spark import ingest
-    from sydradb_spark.streaming.rollup_stream import (
-        _remove_entry,
-        init_rollup_manifest,
-    )
+    from sydradb_spark.streaming.rollup_stream import _remove_entry
 
     roll_local = tmp_path / "roll"
     store = obs.MemoryObjectStore()
-    write_rollup_batch_manifested(
+    write_rollup_batch(
         _mini_partial(spark, "s.a", 2), str(roll_local), 0, "stream-one", store=store
     )
-    write_rollup_batch_manifested(
+    write_rollup_batch(
         _mini_partial(spark, "s.a", 2), str(roll_local), 1, "stream-one", store=store
     )
-    compact_rollup_manifested(spark, str(roll_local), 3600, store)  # folds b_0
+    compact_rollup(spark, str(roll_local), 3600, store)  # folds b_0
 
     uri = f"file://{roll_local}"
     real = ingest._posix_checkpoint_path
@@ -494,7 +520,7 @@ def test_manifested_uri_paths_guarded_and_hadoop_routed(spark, tmp_path, monkeyp
     )
     # (a) local protocol rejected on the 'object-store' location
     with pytest.raises(ValueError, match="object-store"):
-        write_rollup_batch_manifested(
+        write_rollup_batch(
             _mini_partial(spark, "s.a", 2), uri, 2, "stream-one", store=None
         )
     with pytest.raises(ValueError, match="store"):
@@ -516,24 +542,8 @@ def test_manifested_uri_paths_guarded_and_hadoop_routed(spark, tmp_path, monkeyp
         init_rollup_manifest(uri, store)
     assert init_rollup_manifest(uri, store, spark=spark) is not None
     # data intact through it all
-    folded = read_rollup_manifested(spark, str(roll_local), 3600, store).collect()
+    folded = read_rollup(spark, str(roll_local), 3600, store).collect()
     assert folded[0]["cnt"] == 4
-
-
-def test_rollup_lock_degrades_on_flockless_local_fs(tmp_path, monkeypatch):
-    """r13 review finding: a LOCAL path whose filesystem refuses flock
-    (NFS mounted nolock) must degrade to unlocked — the scheme guard alone
-    turned that previously-working deployment into a stream-killing crash."""
-    import fcntl
-
-    from sydradb_spark.streaming.rollup_stream import _rollup_lock
-
-    def refuse(*a, **k):
-        raise OSError(37, "No locks available")
-
-    monkeypatch.setattr(fcntl, "flock", refuse)
-    with _rollup_lock(str(tmp_path / "tbl"), exclusive=True) as lk:
-        assert lk._fh is None  # degraded, not crashed
 
 
 @pytest.mark.parametrize("lose", ["listing", "manifest_files"])
@@ -544,7 +554,7 @@ def test_vacuum_rollup_refuses_without_a_readable_version(spark, tmp_path, backe
     instead of reclaiming committed entries."""
     store = backend()
     roll = str(tmp_path / "roll")
-    write_rollup_batch_manifested(_mini_partial(spark, "s.a", 2), roll, 0, "x", store=store)
+    write_rollup_batch(_mini_partial(spark, "s.a", 2), roll, 0, "x", store=store)
     entry = "b_x_000000000000"
     st, pre = mf._at(roll, store, STORE_TABLE)
     if lose == "listing":

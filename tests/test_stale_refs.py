@@ -2,9 +2,10 @@
 
 No linter runs here, and the test suite never imports ``scripts/``: a
 renamed or deleted function in ``manifest`` / ``objectstore`` / ``storage``
-/ ``rollup_stream`` would surface only when an operator runs a soak script
-or the benchmark. This test parses (never imports or runs) every Python
-file under ``sydradb_spark/``, ``scripts/`` and ``perfbench/``, finds the
+/ ``rollup_stream`` / ``api`` would surface only when an operator runs a
+soak script or the benchmark. This test parses (never imports or runs)
+every Python file under ``sydradb_spark/``, ``scripts/`` and
+``perfbench/``, plus ``bench.py`` and ``__spark_entry__.py``, finds the
 names each file binds to those modules, and asserts that every attribute
 it reads from them exists:
 
@@ -22,7 +23,9 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 SCANNED = ("sydradb_spark", "scripts", "perfbench")
+SCANNED_FILES = ("bench.py", "__spark_entry__.py")
 MODULES = (
+    "sydradb_spark.api",
     "sydradb_spark.manifest",
     "sydradb_spark.objectstore",
     "sydradb_spark.storage",
@@ -66,7 +69,10 @@ def _uses(tree: ast.AST) -> list[tuple[str, str, int]]:
 
 
 def _files() -> list[Path]:
-    return sorted(p for d in SCANNED for p in (ROOT / d).rglob("*.py"))
+    return sorted(
+        [p for d in SCANNED for p in (ROOT / d).rglob("*.py")]
+        + [ROOT / f for f in SCANNED_FILES]
+    )
 
 
 def test_scan_finds_the_storage_modules():

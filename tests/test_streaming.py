@@ -9,6 +9,7 @@ from sydradb_spark.streaming.rollup_stream import (
     compact_rollup,
     read_rollup,
     stream_rollup,
+    vacuum_rollup,
 )
 from sydradb_spark.streaming.stateful import streaming_ema
 
@@ -39,17 +40,17 @@ def test_stream_rollup_fold(spark, tmp_path):
     refolded = {r["bucket"]: r for r in read_rollup(spark, rollup_path, 3600).collect()}
     assert refolded[0]["cnt"] == 3 and refolded[0]["sum_v"] == pytest.approx(11.0)
     assert refolded[3600]["cnt"] == 1
-    # everything except the newest (still-replayable) batch dir is folded
+    # everything except the newest (still-replayable) batch dir is folded;
+    # the folded dir stays on disk until a vacuum reclaims it
     import pathlib
 
-    top_files = [
-        p
-        for p in pathlib.Path(rollup_path).iterdir()
-        if p.suffix == ".parquet"
-    ]
-    live = [p for p in pathlib.Path(rollup_path).glob("b_*") if p.is_dir()]
-    assert len(live) == 1  # only the newest batch survives unfolded
-    assert spark.read.parquet(*[str(p) for p in top_files]).count() == 2
+    def on_disk(prefix):
+        return [p for p in pathlib.Path(rollup_path).glob(prefix) if p.is_dir()]
+
+    assert len(on_disk("b_*")) == 2 and len(on_disk("c_*")) == 1
+    vacuum_rollup(rollup_path, keep_versions=1, min_age_seconds=0)
+    assert len(on_disk("b_*")) == 1  # only the newest batch survives unfolded
+    assert spark.read.parquet(*[str(p) for p in on_disk("c_*")]).count() == 2
 
 
 def test_streaming_ema_state_across_batches(spark, tmp_path):
@@ -699,11 +700,11 @@ def test_stream_sink_maintenance_prunes_manifest_versions(spark, tmp_path):
 
 
 def test_stream_rollup_replay_is_idempotent(spark, tmp_path):
-    """A replayed rollup batch (crash in the write->checkpoint gap)
-    overwrites its own deterministic target instead of appending a second
-    copy — the fold counts every batch exactly once (VERDICT r10 finding 1
-    applied to the rollup sink), and the guarantee survives compaction
-    because the newest batch dir is never folded."""
+    """A replayed rollup batch (crash in the write->checkpoint gap) finds
+    its (app, batch) txn in the manifest ledger and writes nothing — the
+    fold counts every batch exactly once (VERDICT r10 finding 1 applied to
+    the rollup sink), and the guarantee survives compaction because the
+    newest batch dir is never folded."""
     from sydradb_spark.rollup import build_rollup
     from sydradb_spark.streaming.rollup_stream import (
         compact_rollup,
@@ -747,45 +748,21 @@ def _mini_partial(spark, series: str, n: int):
     return build_rollup(pts, step_s=3600)
 
 
-def test_rollup_batch_dirs_keyed_by_app_id(spark, tmp_path):
-    """ADVICE r11 (medium): batch targets keyed by batch_id alone let a
-    checkpoint-reset stream (batch ids restart at 0) or a second stream
-    feeding the same rollup table overwrite-destroy prior unfolded partials.
-    With (app_id, batch_id) targets, each incarnation/stream owns its dirs."""
-    from sydradb_spark.streaming.rollup_stream import (
-        read_rollup,
-        write_rollup_batch,
-    )
-
-    roll = str(tmp_path / "roll")
-    write_rollup_batch(_mini_partial(spark, "s.a", 2), roll, 0, "stream-one")
-    # second stream's batch 0 must NOT clobber the first's unfolded partial
-    write_rollup_batch(_mini_partial(spark, "s.b", 3), roll, 0, "stream-two")
-    folded = {r["series"]: r for r in read_rollup(spark, roll, 3600).collect()}
-    assert folded["s.a"]["cnt"] == 2 and folded["s.b"]["cnt"] == 3
-    # each app's replay still converges onto its own target
-    write_rollup_batch(_mini_partial(spark, "s.b", 3), roll, 0, "stream-two")
-    folded = {r["series"]: r for r in read_rollup(spark, roll, 3600).collect()}
-    assert folded["s.b"]["cnt"] == 3  # overwrite, not append
-
-
 def test_compact_rollup_keeps_each_apps_live_tail(spark, tmp_path):
     """Compaction carries the NEWEST batch dir of EVERY app unfolded — each
     restarted stream can replay only its own newest batch, and a replay
-    after compaction must converge, per app."""
+    after compaction must converge, per app. A vacuum after the fold leaves
+    exactly those tails on disk."""
     import pathlib
 
-    from sydradb_spark.streaming.rollup_stream import (
-        compact_rollup,
-        read_rollup,
-        write_rollup_batch,
-    )
+    from sydradb_spark.streaming.rollup_stream import write_rollup_batch
 
     roll = str(tmp_path / "roll")
     for app, series in (("stream-one", "s.a"), ("stream-two", "s.b")):
         write_rollup_batch(_mini_partial(spark, series, 2), roll, 0, app)
         write_rollup_batch(_mini_partial(spark, series, 2), roll, 1, app)
     compact_rollup(spark, roll, 3600)
+    vacuum_rollup(roll, keep_versions=1, min_age_seconds=0)
     live = sorted(p.name for p in pathlib.Path(roll).glob("b_*") if p.is_dir())
     assert live == ["b_stream-one_000000000001", "b_stream-two_000000000001"]
     # post-compaction replay of each app's newest batch still converges
@@ -793,58 +770,6 @@ def test_compact_rollup_keeps_each_apps_live_tail(spark, tmp_path):
     write_rollup_batch(_mini_partial(spark, "s.b", 2), roll, 1, "stream-two")
     folded = {r["series"]: r for r in read_rollup(spark, roll, 3600).collect()}
     assert folded["s.a"]["cnt"] == 4 and folded["s.b"]["cnt"] == 4
-
-
-def test_compact_rollup_concurrent_batch_not_lost(spark, tmp_path):
-    """ADVICE r11 (low) / VERDICT r11 item 3: a batch write that starts
-    while compaction is folding must not be lost with the directory swap.
-    The exclusive/shared flock serializes them: the write either lands
-    before the fold's listing or blocks until after the swap — both are
-    counted. Interleaves a real write against a real compaction."""
-    import threading
-    import time
-
-    from sydradb_spark.streaming.rollup_stream import (
-        _rollup_lock,
-        compact_rollup,
-        read_rollup,
-        write_rollup_batch,
-    )
-
-    roll = str(tmp_path / "roll")
-    write_rollup_batch(_mini_partial(spark, "s.a", 2), roll, 0, "stream-one")
-    write_rollup_batch(_mini_partial(spark, "s.a", 2), roll, 1, "stream-one")
-    late = _mini_partial(spark, "s.a", 5).persist()
-    late.count()  # materialize so the threaded write is cheap
-
-    started = threading.Event()
-    done = threading.Event()
-
-    def compact_holding_lock():
-        # deterministic interleave: grab the exclusive lock FIRST, signal,
-        # linger so the batch write provably arrives mid-"compaction",
-        # then run the real compaction (reentrant flock on a fresh fd
-        # would deadlock, so release before calling compact_rollup —
-        # the lingering window is what the batch write must survive)
-        with _rollup_lock(roll, exclusive=True):
-            started.set()
-            time.sleep(1.0)
-        compact_rollup(spark, roll, 3600)
-        done.set()
-
-    t = threading.Thread(target=compact_holding_lock)
-    t.start()
-    started.wait(10)
-    t0 = time.monotonic()
-    # arrives while the exclusive lock is held → must block, not interleave
-    write_rollup_batch(late, roll, 2, "stream-one")
-    blocked_for = time.monotonic() - t0
-    t.join(120)
-    assert done.is_set()
-    assert blocked_for > 0.3, "batch write should have blocked on the lock"
-    folded = read_rollup(spark, roll, 3600).collect()
-    assert folded[0]["cnt"] == 9  # 2 + 2 + 5: nothing lost, nothing doubled
-    late.unpersist()
 
 
 def test_mint_app_id_store_converges_under_races():
@@ -978,39 +903,6 @@ def test_stream_sink_lazy_spark_metadata_app_id(spark, tmp_path, monkeypatch):
     assert mf.read_txn(table, meta_id) == 0
 
 
-def test_stream_rollup_crash_replay_converges(spark, tmp_path):
-    """Kill the rollup stream AFTER the durable partial write but BEFORE the
-    checkpoint commit; the restart redelivers the same batch_id and the
-    (app_id, batch_id)-keyed overwrite converges instead of double-counting
-    — the stream-level twin of scripts/rollup_soak.py."""
-    from sydradb_spark.streaming.rollup_stream import read_rollup, stream_rollup
-
-    src = tmp_path / "src"
-    src.mkdir()
-    for i in range(3):
-        (src / f"b{i}.ndjson").write_text(
-            f'{{"series": "s.a", "ts": {100 + i}, "value": 1.0}}\n'
-        )
-    roll, ck = str(tmp_path / "roll"), str(tmp_path / "ck")
-
-    def crash(batch_id):
-        if batch_id == 1:
-            raise RuntimeError("injected crash in rollup write->checkpoint gap")
-
-    q = stream_rollup(
-        spark, str(src), roll, ck, available_now=True,
-        max_files_per_trigger=1, _after_write_hook=crash,
-    )
-    with pytest.raises(Exception, match="injected crash"):
-        q.awaitTermination(120)
-    q2 = stream_rollup(
-        spark, str(src), roll, ck, available_now=True, max_files_per_trigger=1
-    )
-    q2.awaitTermination(120)
-    folded = read_rollup(spark, roll, 3600).collect()
-    assert len(folded) == 1 and folded[0]["cnt"] == 3  # batch 1 counted once
-
-
 def test_two_streams_append_same_table_concurrently(spark, tmp_path):
     """Two live streams (distinct checkpoints → distinct app ids) append to
     ONE points table at the same time: the manifest CAS must lose no
@@ -1054,24 +946,6 @@ def test_two_streams_append_same_table_concurrently(spark, tmp_path):
         for app in ("a", "b")
     ]
     assert mf.read_txn(table, ids[0]) == 3 and mf.read_txn(table, ids[1]) == 2
-
-
-def test_rollup_lock_skips_non_posix_uri(tmp_path, monkeypatch):
-    """ADVICE r12: Path('s3://b/tbl.lock') silently becomes the RELATIVE
-    local path 's3:/b/tbl.lock', so the old OSError-based degrade never
-    fired — mkdir/flock succeeded on a stray cwd-local file. The lock now
-    guards by URI scheme: non-POSIX locations get an explicit no-op (their
-    serialization is the manifested fold), and no local droppings appear."""
-    from sydradb_spark.streaming.rollup_stream import _rollup_lock
-
-    monkeypatch.chdir(tmp_path)
-    with _rollup_lock("s3://bucket/tbl", exclusive=True) as lk:
-        assert lk._fh is None  # explicit no-op, not an accidental local lock
-    assert not (tmp_path / "s3:").exists()  # no stray 's3:/' directory
-    # local paths (plain and file://) still take the real flock
-    with _rollup_lock(str(tmp_path / "tbl"), exclusive=False) as lk:
-        assert lk._fh is not None
-    assert (tmp_path / "tbl.lock").exists()
 
 
 def test_stream_rollup_raises_on_unresolvable_app_id(spark, tmp_path, monkeypatch):
