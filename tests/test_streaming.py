@@ -748,6 +748,26 @@ def _mini_partial(spark, series: str, n: int):
     return build_rollup(pts, step_s=3600)
 
 
+def test_rollup_batch_dirs_keyed_by_app_id(spark, tmp_path):
+    """Batch targets keyed by batch_id alone would let a checkpoint-reset
+    stream (batch ids restart at 0) or a second stream feeding the same
+    rollup table destroy another's unfolded partial. With (app_id,
+    batch_id) targets each stream owns its dirs, and each app's replay of
+    its batch is a txn no-op that converges."""
+    from sydradb_spark.streaming.rollup_stream import write_rollup_batch
+
+    roll = str(tmp_path / "roll")
+    write_rollup_batch(_mini_partial(spark, "s.a", 2), roll, 0, "stream-one")
+    # second stream's batch 0 must NOT clobber the first's unfolded partial
+    write_rollup_batch(_mini_partial(spark, "s.b", 3), roll, 0, "stream-two")
+    folded = {r["series"]: r for r in read_rollup(spark, roll, 3600).collect()}
+    assert folded["s.a"]["cnt"] == 2 and folded["s.b"]["cnt"] == 3
+    # each app's replay still converges onto its own target
+    write_rollup_batch(_mini_partial(spark, "s.b", 3), roll, 0, "stream-two")
+    folded = {r["series"]: r for r in read_rollup(spark, roll, 3600).collect()}
+    assert folded["s.b"]["cnt"] == 3  # counted once, not appended
+
+
 def test_compact_rollup_keeps_each_apps_live_tail(spark, tmp_path):
     """Compaction carries the NEWEST batch dir of EVERY app unfolded — each
     restarted stream can replay only its own newest batch, and a replay
@@ -901,6 +921,38 @@ def test_stream_sink_lazy_spark_metadata_app_id(spark, tmp_path, monkeypatch):
     )["id"]
     assert ingest.spark_checkpoint_metadata_id(spark, "file://" + ck) == meta_id
     assert mf.read_txn(table, meta_id) == 0
+
+
+def test_stream_rollup_crash_replay_converges(spark, tmp_path):
+    """Kill the rollup stream AFTER the durable partial write but BEFORE the
+    checkpoint commit; the restart redelivers the same batch_id, whose
+    (app_id, batch_id) txn is already in the manifest ledger, so the batch
+    converges instead of double-counting — the stream-level twin of
+    scripts/rollup_soak.py, here with the default local table."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(3):
+        (src / f"b{i}.ndjson").write_text(
+            f'{{"series": "s.a", "ts": {100 + i}, "value": 1.0}}\n'
+        )
+    roll, ck = str(tmp_path / "roll"), str(tmp_path / "ck")
+
+    def crash(batch_id):
+        if batch_id == 1:
+            raise RuntimeError("injected crash in rollup write->checkpoint gap")
+
+    q = stream_rollup(
+        spark, str(src), roll, ck, available_now=True,
+        max_files_per_trigger=1, _after_write_hook=crash,
+    )
+    with pytest.raises(Exception, match="injected crash"):
+        q.awaitTermination(120)
+    q2 = stream_rollup(
+        spark, str(src), roll, ck, available_now=True, max_files_per_trigger=1
+    )
+    q2.awaitTermination(120)
+    folded = read_rollup(spark, roll, 3600).collect()
+    assert len(folded) == 1 and folded[0]["cnt"] == 3  # batch 1 counted once
 
 
 def test_two_streams_append_same_table_concurrently(spark, tmp_path):
