@@ -26,6 +26,9 @@ script is the scale evidence, mirroring `sink_soak.py`:
   total;
 - assert the folded rollup equals the batch twin built directly from ALL
   input points: cnt/min/max/first/last exact, sums at 1e-9 relative;
+- assert the reader converges: once both streams stop, one more
+  `read_rollup` totals exactly the input rows of both apps
+  (`reader_converged`);
 - assert the table stays compacted: after a final compaction, batch dirs
   in the manifest ≤ one live tail per app, and a final vacuum leaves disk
   == manifest.
@@ -253,6 +256,13 @@ def main() -> None:
     reader_thread.join()
     t_stream = round(time.perf_counter() - t0, 1)
 
+    # convergence: with both streams stopped, one more read must see every
+    # input row — a reader stuck on an old manifest version would pass the
+    # monotone/overcount checks above but fail here
+    converged_total = int(
+        read_rollup(spark, roll, STEP_S, store).agg(F.sum("cnt")).first()[0] or 0
+    )
+
     # final offline compaction, then the batch-twin equality check
     compact_rollup(spark, roll, STEP_S, store)
     folded = {
@@ -283,8 +293,7 @@ def main() -> None:
             )
     extra = [list(k) for k in folded if k not in twin]
 
-    from pathlib import Path
-
+    from sydradb_spark import datafs
     from sydradb_spark import manifest as mf
     from sydradb_spark.streaming.rollup_stream import STORE_TABLE
 
@@ -297,9 +306,9 @@ def main() -> None:
     )
     vacuum_rollup(roll, store, keep_versions=1, min_age_seconds=0)
     on_disk = {
-        p.name
-        for p in Path(roll).iterdir()
-        if p.is_dir() and p.name[0] in "bc" and p.name[1] == "_"
+        name
+        for name, is_dir, _ in datafs.open_fs(roll, spark).list("")
+        if is_dir and name.startswith(("b_", "c_"))
     }
     manifest_now = set(mf.read_files(roll, store=store, key=STORE_TABLE))
     orphans_reclaimed = on_disk == manifest_now
@@ -331,6 +340,8 @@ def main() -> None:
                 "reader_violations": reader_stats["violations"][:5],
                 "reader_clean": not reader_stats["violations"]
                 and reader_stats["reads"] > 0,
+                "reader_converged_total": converged_total,
+                "reader_converged": converged_total == total_rows,
                 "prep_s": t_prep,
                 "stream_s": t_stream,
             }
@@ -343,6 +354,7 @@ def main() -> None:
         or not orphans_reclaimed
         or reader_stats["violations"]
         or reader_stats["reads"] == 0
+        or converged_total != total_rows
     ):
         sys.exit(1)
 

@@ -73,18 +73,24 @@ def _plan_stats(df) -> dict[str, Any]:
 
 def to_response(result: QueryResult, max_rows: int = 10_000) -> dict[str, Any]:
     """Collect a QueryResult into the reference response shape. ``max_rows``
-    bounds driver memory (the reference streams; an API layer would too)."""
-    df = result.df.limit(max_rows)
+    bounds driver memory (the reference streams; an API layer would too).
+    One row past the cap is fetched so a cut is detected, not guessed: a
+    result with more than ``max_rows`` rows returns the first ``max_rows``
+    and ``stats["truncated"] = True``."""
+    df = result.df.limit(max_rows + 1)
     t0 = time.perf_counter()
     collected = df.collect()
     exec_us = int((time.perf_counter() - t0) * 1e6)
+    truncated = len(collected) > max_rows
     columns = [
         {"name": f.name, "type": f.dataType.simpleString(), "nullable": f.nullable}
         for f in df.schema.fields
     ]
-    rows = [[row[c["name"]] for c in columns] for row in collected]
+    rows = [[row[c["name"]] for c in columns] for row in collected[:max_rows]]
     stats = dict(result.stats)
     stats["execute_us"] = exec_us
     stats["rows_returned"] = len(rows)
+    if truncated:
+        stats["truncated"] = True
     stats.update(_plan_stats(df))
     return {"columns": columns, "rows": rows, "stats": stats}

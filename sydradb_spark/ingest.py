@@ -29,6 +29,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from sydradb_spark import datafs
 from sydradb_spark.model import with_identity
 from sydradb_spark.storage import write_points
 
@@ -124,22 +125,6 @@ def ingest_batch(spark: SparkSession, ndjson_path: str, table_path: str) -> None
     write_points(read_ndjson(spark, ndjson_path), table_path, mode="append")
 
 
-def _posix_checkpoint_path(checkpoint_dir: str) -> str | None:
-    """Local-filesystem path of the checkpoint location, or None when it is
-    a non-POSIX URI (``s3://``, ``hdfs://``, ...) — production checkpoints
-    commonly live in object stores, where ``os.link``-based minting is
-    impossible and the app id must come from an object-store CAS or from
-    Spark's own checkpoint metadata (``spark_checkpoint_metadata_id``)."""
-    from urllib.parse import urlparse
-
-    parsed = urlparse(checkpoint_dir)
-    if parsed.scheme == "file":
-        return parsed.path
-    if parsed.scheme == "":
-        return checkpoint_dir
-    return None
-
-
 def _checkpoint_app_id(checkpoint_dir: str) -> str:
     """Stable identity for the streaming query, stored INSIDE the checkpoint
     dir so it survives restarts (and travels with the checkpoint if it is
@@ -151,7 +136,7 @@ def _checkpoint_app_id(checkpoint_dir: str) -> str:
     import uuid
     from pathlib import Path
 
-    local = _posix_checkpoint_path(checkpoint_dir)
+    local = datafs.local_path(checkpoint_dir)
     if local is None:
         raise ValueError(
             f"non-POSIX checkpoint location {checkpoint_dir!r}: mint the app "
@@ -201,9 +186,7 @@ def spark_checkpoint_metadata_id(spark: SparkSession, checkpoint_dir: str) -> st
     batch 0, by which point Spark has written it."""
     import json
 
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(checkpoint_dir.rstrip("/") + "/metadata")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm, fs, jpath = datafs.hadoop_fs(spark, checkpoint_dir.rstrip("/") + "/metadata")
     if not fs.exists(jpath):
         return None
     reader = jvm.java.io.BufferedReader(
@@ -233,7 +216,7 @@ def resolve_app_id(
         return app_id
     if app_id_store is not None:
         return mint_app_id(app_id_store)
-    if _posix_checkpoint_path(checkpoint_dir) is not None:
+    if datafs.local_path(checkpoint_dir) is not None:
         return _checkpoint_app_id(checkpoint_dir)
     return None
 

@@ -65,9 +65,9 @@ def _at(
     """(store, key prefix) holding the manifest of the table at ``path``."""
     if store is not None:
         return store, f"{key}/{MANIFEST_DIR}/"
-    from sydradb_spark.ingest import _posix_checkpoint_path
+    from sydradb_spark.datafs import local_path
 
-    local = _posix_checkpoint_path(path)
+    local = local_path(path)
     if local is None:
         raise ValueError(
             f"{path!r} is not a POSIX path, so its manifest cannot live beside "

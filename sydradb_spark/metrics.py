@@ -56,20 +56,18 @@ def storage_gauges(
     number, live files, hour partitions and bytes. Files no version
     references — orphans, staged leftovers, files waiting for vacuum — are
     not counted. A pre-manifest table is its directory."""
+    from sydradb_spark import datafs, storage
     from sydradb_spark import manifest as mf
-    from sydradb_spark import storage
 
     if not path:
         return {}
-    local = storage._posix_table_path(path)
+    local = datafs.local_path(path)
     if version is None:
         version = storage.table_version(path, store=store)
     if version is None:
         if local is None or not Path(local).exists():
             return {}
-        files = [
-            str(f.relative_to(local)) for f in Path(local).glob("hour_bucket=*/*.parquet")
-        ]
+        files = storage.data_files(local)
     else:
         files = mf.read_files(path, version, store=store)
     out = {

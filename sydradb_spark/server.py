@@ -195,8 +195,9 @@ class _Handler(BaseHTTPRequestHandler):
             return
         from sydradb_spark.api import to_response
 
-        result = self.app.engine.query(sydraql)
-        self._send_json(200, to_response(result, max_rows=self.app.max_rows))
+        resp = to_response(self.app.engine.query(sydraql), max_rows=self.app.max_rows)
+        headers = {"X-Sydra-Truncated": "true"} if resp["stats"].get("truncated") else None
+        self._send_json(200, resp, headers=headers)
 
     def _ingest(self) -> None:
         body = self._body(_MAX_SYDRAQL)

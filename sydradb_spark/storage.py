@@ -27,6 +27,10 @@ Every mutation commits through the manifest. A plain directory (written
 without one) is adopted first: its ``data_files`` listing is committed as
 a version, then the mutation commits on top of it. Reads of a plain
 directory create nothing.
+
+Data files are listed, published, deleted and vacuumed through
+``datafs``, once for a local path and a Hadoop-reachable URI alike; only
+``snapshot``/``restore`` (hardlinks) are POSIX-only.
 """
 
 from __future__ import annotations
@@ -37,6 +41,7 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sydradb_spark import datafs
 from sydradb_spark import manifest as mf
 from sydradb_spark.model import SECONDS_PER_HOUR
 
@@ -48,21 +53,13 @@ POINT_COLS = ["series_id", "series", "tags", "ts", "value", "hour_bucket"]
 POINTS_STORE_TABLE = mf.POINTS_KEY
 
 
-def _posix_table_path(path: str) -> str | None:
-    """Local-filesystem form of ``path`` (plain or file://), or None for a
-    non-POSIX URI (s3a://, hdfs://, ...)."""
-    from sydradb_spark.ingest import _posix_checkpoint_path
-
-    return _posix_checkpoint_path(path)
-
-
 def _require_posix(path: str, op: str) -> Path:
     """Loud non-POSIX triage (VERDICT r13 item 1): ``Path('s3a://b/t')`` is
     the RELATIVE local directory ``s3a:/b/t`` on which mkdir/rename/link all
     SUCCEED — a POSIX-only operation fed a URI silently splits the table
     across two filesystems instead of failing. Every Path/shutil-based
     entry point triages here first."""
-    local = _posix_table_path(path)
+    local = datafs.local_path(path)
     if local is None:
         raise ValueError(
             f"{op} is a POSIX-filesystem operation and cannot run on "
@@ -85,29 +82,23 @@ def _require_posix(path: str, op: str) -> Path:
 
 
 def data_files(path: str, spark: SparkSession | None = None) -> list[str]:
-    """Every parquet data file in the table's hour partitions, committed or
-    not (relative paths): a local listing, or the Hadoop FS API for a URI
-    location (needs ``spark``)."""
-    local = _posix_table_path(path)
-    if local is not None:
-        root = Path(local)
-        return sorted(
-            str(f.relative_to(root)) for f in root.glob("hour_bucket=*/*.parquet")
-        )
-    from sydradb_spark.util import hadoop_fs
+    """Every visible parquet data file in the table's hour partitions,
+    committed or not (relative paths). A URI location needs ``spark``."""
+    fs = datafs.open_fs(path, spark)
+    return sorted(_parts(fs, ""))
 
-    _, fs, jroot = hadoop_fs(spark, path)
-    out = []
-    if fs.exists(jroot):
-        for part in fs.listStatus(jroot):
-            pname = part.getPath().getName()
-            if not (part.isDirectory() and pname.startswith("hour_bucket=")):
-                continue
-            for f in fs.listStatus(part.getPath()):
-                name = f.getPath().getName()
-                if name.endswith(".parquet") and not name.startswith("."):
-                    out.append(f"{pname}/{name}")
-    return sorted(out)
+
+def _parts(fs, root: str) -> list[str]:
+    """The visible ``hour_bucket=*/*.parquet`` files under ``root``,
+    relative to it (Spark's file index skips hidden names too)."""
+    pre = f"{root}/" if root else ""
+    return [
+        f"{part}/{name}"
+        for part, is_dir, _ in fs.list(root)
+        if is_dir and part.startswith("hour_bucket=")
+        for name, f_dir, _ in fs.list(pre + part)
+        if not f_dir and name.endswith(".parquet") and name[0] != "."
+    ]
 
 
 def _write_tasks(spark: SparkSession) -> int:
@@ -183,7 +174,7 @@ def write_points(
 
     One path for every table and mode: stage, then commit. The rows are
     written through a PRIVATE ``.staging-<uuid>/`` dir and the part files
-    renamed into the live layout (``_publish_staged``), then one manifest
+    renamed into the live layout (``_stage_and_publish``), then one manifest
     commit (``mf.commit``) publishes them, so readers flip between
     consistent versions atomically:
 
@@ -235,105 +226,40 @@ def write_points(
         if last is not None and last >= txn[1]:
             return  # replayed batch — this txn is already durable
     adopted = data_files(path, spark) if mode == "append" and cur is None else []
-    moved = _publish_staged(_shaped(df), path, spark)
+    moved = _stage_and_publish(_shaped(df), path, spark)
     if mode == "append" and cur is not None:
         mf.commit(path, mutate=lambda old: old + moved, txn=txn, store=store)
     else:
         mf.commit(path, adopted + moved, txn=txn, store=store)
 
 
-def _stage_and_publish(shaped_writer, path: str) -> list[str]:
-    """Write through a PRIVATE ``.staging-<uuid>/`` dir and rename the part
-    files into the live layout, returning the EXACT moved-file list for the
-    manifest commit. This is the only safe append shape under concurrent
-    committers (r12 + r13 reviews): Spark's ``mode("append")`` into the
-    live path shares Hadoop's ``_temporary/0`` staging across jobs, and a
-    before/after ``data_files()`` diff double-commits (or drops) a
-    concurrent appender's files. Publication time is stamped on every
-    renamed file — rename(2) preserves the staging mtime, which would void
-    ``vacuum_points``' age guard for writes longer than the window."""
-    import os
+def _stage_and_publish(shaped_writer, path: str, spark: SparkSession) -> list[str]:
+    """Write through a PRIVATE ``.staging-<uuid>/`` dir inside the table and
+    rename the part files into the live layout, returning the EXACT
+    moved-file list for the manifest commit. This is the only safe append
+    shape under concurrent committers (r12 + r13 reviews): Spark's
+    ``mode("append")`` into the live path shares Hadoop's ``_temporary/0``
+    staging across jobs, and a before/after ``data_files()`` diff
+    double-commits (or drops) a concurrent appender's files."""
     import uuid
 
-    stage = Path(path) / f".staging-{uuid.uuid4().hex}"
+    fs = datafs.open_fs(path, spark)
+    stage = f".staging-{uuid.uuid4().hex}"
     try:
-        shaped_writer.mode("overwrite").parquet(str(stage))
-        moved: list[str] = []
-        for f in sorted(stage.glob("hour_bucket=*/*.parquet")):
-            rel = f.relative_to(stage)
-            dst = Path(path) / rel
-            dst.parent.mkdir(exist_ok=True)
-            crc = f.with_name(f".{f.name}.crc")  # local-FS checksum sibling
-            if crc.exists():
-                crc_dst = dst.with_name(f".{dst.name}.crc")
-                crc.rename(crc_dst)
-                os.utime(crc_dst)
-            f.rename(dst)
-            os.utime(dst)
-            moved.append(str(rel))
+        shaped_writer.mode("overwrite").parquet(fs.path(stage))
+        moved = sorted(_parts(fs, stage))
+        for rel in moved:
+            fs.rename(f"{stage}/{rel}", rel)
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        fs.delete(stage)
     return moved
-
-
-def _stage_and_publish_hadoop(shaped_writer, path: str, spark: SparkSession) -> list[str]:
-    """URI twin of ``_stage_and_publish``: private ``.staging-<uuid>/`` dir
-    inside the table, renames through the Hadoop FileSystem API (a real
-    metadata rename on HDFS/ABFS; copy+delete on S3A — slower, but the
-    commit unit is the MANIFEST, so a slow publish only widens the orphan
-    window for vacuum, never the correctness window readers see).
-    Publication time is re-stamped via ``setTimes`` where the store
-    supports it — HDFS rename preserves mtime exactly like rename(2), and
-    the vacuum age-guard must see just-published files as fresh."""
-    import time
-    import uuid
-
-    from sydradb_spark.util import hadoop_fs
-
-    root = path.rstrip("/")
-    stage = f"{root}/.staging-{uuid.uuid4().hex}"
-    jvm, fs, jstage = hadoop_fs(spark, stage)
-    try:
-        shaped_writer.mode("overwrite").parquet(stage)
-        moved: list[str] = []
-        now_ms = int(time.time() * 1000)
-        for part in fs.listStatus(jstage):
-            pname = part.getPath().getName()
-            if not (part.isDirectory() and pname.startswith("hour_bucket=")):
-                continue
-            dst_dir = jvm.org.apache.hadoop.fs.Path(f"{root}/{pname}")
-            fs.mkdirs(dst_dir)
-            for f in fs.listStatus(part.getPath()):
-                name = f.getPath().getName()
-                if not name.endswith(".parquet") or name.startswith("."):
-                    continue
-                dst = jvm.org.apache.hadoop.fs.Path(dst_dir, name)
-                if not fs.rename(f.getPath(), dst):
-                    raise IOError(f"hadoop rename failed: {f.getPath()} -> {dst}")
-                try:
-                    fs.setTimes(dst, now_ms, -1)
-                except Exception:
-                    pass  # stores without setTimes: the PUT time is fresh
-                moved.append(f"{pname}/{name}")
-        return sorted(moved)
-    finally:
-        fs.delete(jstage, True)
-
-
-def _publish_staged(shaped_writer, path: str, spark: SparkSession) -> list[str]:
-    """Backend dispatch for the staged publish: POSIX paths use rename(2),
-    URI locations the Hadoop FS API."""
-    local = _posix_table_path(path)
-    if local is not None:
-        return _stage_and_publish(shaped_writer, local)
-    return _stage_and_publish_hadoop(shaped_writer, path, spark)
 
 
 def table_version(path: str, store=None) -> int | None:
     """The table's LATEST manifest version; None for a pre-manifest table
     (or a URI location read without its store, which cannot carry a POSIX
     manifest)."""
-    if store is None and _posix_table_path(path) is None:
+    if store is None and datafs.local_path(path) is None:
         return None
     return mf.latest_version(path, store=store)
 
@@ -362,7 +288,7 @@ def _open(
     Tables without a manifest read as a plain directory."""
     from sydradb_spark.model import POINTS_SCHEMA
 
-    local = _posix_table_path(path)
+    local = datafs.local_path(path)
     if version is None:
         if store is None and local is None:
             return _canonical(spark.read.parquet(path))  # plain URI directory
@@ -408,7 +334,7 @@ def _declared_schema(spark: SparkSession, data_file: str):
     from pyspark.sql.types import LongType, StructField, StructType
 
     stored = None
-    local = _posix_table_path(data_file)
+    local = datafs.local_path(data_file)
     if local is not None:
         import pyarrow.parquet as pq
 
@@ -540,7 +466,7 @@ def compact_storage(
     compacted = compact_points(
         read_points(spark, path, store=store, version=snap_v), order_col
     )
-    moved = _publish_staged(_shaped(compacted), path, spark)
+    moved = _stage_and_publish(_shaped(compacted), path, spark)
     rewritten = set(mf.read_files(path, snap_v, store=store))
     mf.commit(
         path,
@@ -641,7 +567,7 @@ def optimize_partitions(
     # mode("append") with a before/after data_files() diff both shares
     # Hadoop's _temporary/0 with concurrent appenders AND double-commits
     # any file they rename in during this job's window
-    new = _publish_staged(shaped, path, spark)
+    new = _stage_and_publish(shaped, path, spark)
     dropped = set(target_files)
     mf.commit(
         path, mutate=lambda old: [f for f in old if f not in dropped] + new, store=store
@@ -783,7 +709,7 @@ def delete_where(
         for f in mf.read_files(path, snapshot_version, store=store)
         if f.startswith(affected_dirs)
     }
-    new = _publish_staged(_shaped(remaining), path, spark)
+    new = _stage_and_publish(_shaped(remaining), path, spark)
     mf.commit(
         path,
         mutate=lambda old: [f for f in old if f not in rewritten] + new,
@@ -805,111 +731,56 @@ def vacuum_points(
 
     ``mf.prune_versions`` prunes old versions and returns the keep-set;
     nothing is reclaimed without one (``mf.reclaimable``: an emptied or
-    unreadable version listing raises). The DATA pass walks a local
-    table with the stdlib — also deleting each removed file's ``.crc``
-    sibling, partition dirs left holding only stale hidden files, and
-    crashed ``.staging-*`` trees — and a URI location through the Hadoop FS
-    API via ``spark``; without a session a URI data pass is SKIPPED with a
-    logged warning (entries wait for a vacuum that has one — the streaming
-    sink's in-sink maintenance always passes its session). The age window
-    guards both passes: versions, files and staging trees younger than
-    ``min_age_seconds`` (a tree's newest mtime anywhere inside) are never
-    touched — a time-travel reader or an appender that has staged but not
-    committed survives a concurrent vacuum inside the window. Set
-    ``min_age_seconds=0`` only in offline maintenance."""
+    unreadable version listing raises). The DATA pass is one walk over
+    ``datafs`` — a local table through the stdlib, a URI location through
+    the Hadoop FS API via ``spark`` — and removes unreferenced part files,
+    partition dirs left holding only hidden files, and crashed
+    ``.staging-*`` trees. Without a session a URI data pass is SKIPPED with
+    a logged warning (``datafs.vacuum_fs``); the streaming sink's in-sink
+    maintenance always passes its session. The age window guards both
+    passes: versions, files and trees younger than ``min_age_seconds`` (a
+    tree's newest mtime anywhere inside) are never touched — a time-travel
+    reader or an appender that has staged but not committed survives a
+    concurrent vacuum inside the window. Set ``min_age_seconds=0`` only in
+    offline maintenance."""
     import time
 
     kept = mf.prune_versions(path, keep_versions, min_age_seconds, store=store)
-    now = time.time()
-    removed: list[str] = []
-    local = _posix_table_path(path)
-    if local is not None:
-        return _vacuum_local(Path(local), kept, now - min_age_seconds)
-    if spark is not None:
-        from sydradb_spark.util import hadoop_fs
-
-        jvm, fs, jroot = hadoop_fs(spark, path)
-        if not fs.exists(jroot):
-            return []
-        for part in fs.listStatus(jroot):
-            pname = part.getPath().getName()
-            if part.isDirectory() and pname.startswith(".staging-"):
-                newest = part.getModificationTime() / 1000.0
-                it = fs.listFiles(part.getPath(), True)
-                while it.hasNext():
-                    newest = max(newest, it.next().getModificationTime() / 1000.0)
-                if now - newest >= min_age_seconds:
-                    fs.delete(part.getPath(), True)
-                continue
-            if not (part.isDirectory() and pname.startswith("hour_bucket=")):
-                continue
-            for f in fs.listStatus(part.getPath()):
-                name = f.getPath().getName()
-                if not name.endswith(".parquet") or name.startswith("."):
-                    continue
-                rel = f"{pname}/{name}"
-                if now - f.getModificationTime() / 1000.0 < min_age_seconds:
-                    continue
-                if not mf.reclaimable(kept, rel, path):
-                    continue
-                fs.delete(f.getPath(), False)
-                removed.append(rel)
-    else:
-        # no session to reach the URI filesystem — manifest-only vacuum;
-        # NOT silent (VERDICT r13 item 4's pattern): a bare cron-style call
-        # would otherwise reclaim nothing forever without a signal
-        __import__("logging").getLogger("sydradb_spark.maintenance").warning(
-            "vacuum_points(%s): data pass SKIPPED — URI data location and no "
-            "SparkSession to reach it; only manifest versions were pruned",
-            path,
-        )
-    return sorted(removed)
-
-
-def _vacuum_local(root: Path, kept: set[str] | None, cutoff: float) -> list[str]:
-    """The local data pass of ``vacuum_points``: only entries last modified
-    before ``cutoff`` are touched; one that vanishes mid-pass (racing its
-    creator or another vacuum) counts as young."""
-    from sydradb_spark.util import tree_mtime
-
-    def _young(p: Path) -> bool:
-        try:
-            return p.stat().st_mtime > cutoff
-        except FileNotFoundError:
-            return True
-
+    fs = datafs.vacuum_fs(path, spark, "vacuum_points")
+    if fs is None:
+        return []
+    cutoff = time.time() - min_age_seconds
     removed = []
-    for rel in data_files(str(root)):
-        f = root / rel
-        if _young(f) or not mf.reclaimable(kept, rel, str(root)):
+    for rel in data_files(path, spark):
+        if rel in (kept or ()):
+            continue  # live: skip the stat (None: reclaimable raises below)
+        # a fresh stat, not the listing's: a file another vacuum deleted
+        # since the listing stats as 'now' and is neither re-deleted nor
+        # double-claimed
+        if fs.newest_mtime(rel) > cutoff or not mf.reclaimable(kept, rel, path):
             continue
-        # missing_ok: two concurrent vacuums may both list the same file
-        f.unlink(missing_ok=True)
-        f.with_name(f".{f.name}.crc").unlink(missing_ok=True)  # checksum sibling
+        fs.delete(rel)
         removed.append(rel)
-    # prune partition dirs holding nothing but leftover hidden files —
-    # age-guarded (r13 review): an appender renames the hidden .crc sibling
-    # BEFORE its parquet file, so a fresh dir can legitimately hold only
-    # young hidden files, and rmdir'ing it would yank the in-flight rename's
-    # parent
-    for d in root.glob("hour_bucket=*"):
-        try:
-            entries = list(d.iterdir()) if d.is_dir() else None
-        except FileNotFoundError:
-            continue  # racing another vacuum
-        if entries is None or any(p.name[0] != "." for p in entries):
+    for part, is_dir, _ in fs.list(""):
+        if not is_dir:
             continue
-        if any(_young(p) for p in entries) or _young(d):
+        if part.startswith(".staging-"):
+            # crashed private append staging, judged by the NEWEST mtime
+            # inside: a long Spark write advances only leaf mtimes
+            if fs.newest_mtime(part) <= cutoff:
+                fs.delete(part)
             continue
-        try:
-            for p in entries:
-                p.unlink(missing_ok=True)
-            d.rmdir()
-        except OSError:
-            pass  # a file landed between the listing and the rmdir — keep
-    # crashed private append staging, judged by the NEWEST mtime inside: a
-    # long Spark write advances only leaf mtimes (ADVICE r12)
-    for stg in root.glob(".staging-*"):
-        if stg.is_dir() and tree_mtime(stg) <= cutoff:
-            shutil.rmtree(stg, ignore_errors=True)
+        if not part.startswith("hour_bucket="):
+            continue
+        # prune a partition dir holding nothing but leftover hidden files —
+        # age-guarded (r13 review): an appender renames the hidden .crc
+        # sibling BEFORE its parquet file, so a fresh dir can legitimately
+        # hold only young hidden files; and rmdir, not a recursive delete,
+        # so a file landing after the listing keeps the dir
+        left = fs.list(part)
+        if any(n[0] != "." for n, _, _ in left) or fs.newest_mtime(part) > cutoff:
+            continue
+        for n, _, _ in left:
+            fs.delete(f"{part}/{n}")
+        fs.rmdir(part)
     return sorted(removed)

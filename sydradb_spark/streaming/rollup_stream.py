@@ -45,12 +45,11 @@ engine.zig:327-331) but monitoring can alert on them.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from sydradb_spark import datafs
 from sydradb_spark import manifest as mf
 from sydradb_spark.ingest import (
     NDJSON_SCHEMA,
@@ -82,35 +81,16 @@ def _batch_dir(rollup_path: str, batch_id: int, app_id: str = DEFAULT_APP) -> st
 STORE_TABLE = "rollup"
 
 
-def _is_entry(name: str, is_dir: bool) -> bool:
-    """A rollup table entry: a ``b_*`` batch or ``c_*`` compacted dir, or a
-    top-level compacted ``*.parquet`` file of an adopted earlier-release
-    table."""
-    if is_dir:
-        return name.startswith("b_") or name.startswith("c_")
-    return name.endswith(".parquet") and name[0] != "."
-
-
-def _listing(rollup_path: str, spark: SparkSession | None) -> list[tuple[str, bool]]:
-    """``(name, is_dir)`` of everything at the top of the table directory
-    ([] when it does not exist): local paths via the stdlib, URI locations
-    via the Hadoop FileSystem API, which needs ``spark``."""
-    from sydradb_spark.ingest import _posix_checkpoint_path
-    from sydradb_spark.util import hadoop_fs
-
-    local = _posix_checkpoint_path(rollup_path)
-    if local is not None:
-        root = Path(local)
-        return [(p.name, p.is_dir()) for p in root.iterdir()] if root.exists() else []
-    if spark is None:
-        raise ValueError(
-            f"listing the URI rollup location {rollup_path!r} needs a "
-            "SparkSession (Hadoop FileSystem listing)"
-        )
-    _, fs, jroot = hadoop_fs(spark, rollup_path)
-    if not fs.exists(jroot):
-        return []
-    return [(st.getPath().getName(), st.isDirectory()) for st in fs.listStatus(jroot)]
+def _entries(listing) -> list[str]:
+    """The rollup table entries in ``listing`` (``datafs`` ``list`` of the
+    table root): ``b_*`` batch and ``c_*`` compacted dirs, and an adopted
+    earlier-release table's top-level compacted ``*.parquet`` files."""
+    return [
+        name
+        for name, is_dir, _ in listing
+        if (name.startswith(("b_", "c_")) if is_dir else name.endswith(".parquet"))
+        and name[0] != "."
+    ]
 
 
 def init_rollup_manifest(
@@ -123,9 +103,9 @@ def init_rollup_manifest(
     compacted ``*.parquet`` files) is adopted by committing its entries. A
     table that already has a manifest is left as it is: its folded dirs
     stay on disk until vacuum, and listing them again would count them
-    twice. Local paths list via the stdlib; URI locations need ``spark``.
-    Returns the table's latest version."""
-    entries = sorted(n for n, d in _listing(rollup_path, spark) if _is_entry(n, d))
+    twice. A URI location needs ``spark`` to list it. Returns the table's
+    latest version."""
+    entries = sorted(_entries(datafs.open_fs(rollup_path, spark).list("")))
     cur = mf.latest_version(rollup_path, store=store, key=STORE_TABLE)
     if cur is not None:
         return cur
@@ -294,7 +274,7 @@ def read_rollup(
     (``init_rollup_manifest`` adopts it) instead of answering empty."""
     if mf.has_manifest(rollup_path, store=store, key=STORE_TABLE):
         names = mf.read_files(rollup_path, store=store, key=STORE_TABLE)
-    elif any(_is_entry(n, d) for n, d in _listing(rollup_path, spark)):
+    elif _entries(datafs.open_fs(rollup_path, spark).list("")):
         raise ValueError(
             f"rollup table {rollup_path!r} has entries but no manifest (written "
             "by an earlier release); adopt it with init_rollup_manifest first"
@@ -328,30 +308,6 @@ def _live_tail_names(batch_names: list[str]) -> set[str]:
 class _ConcurrentFold(Exception):
     """A competing compaction removed our fold sources between our manifest
     read and our commit — committing would double-count the folded rows."""
-
-
-def _remove_entry(spark: SparkSession | None, rollup_path: str, name: str) -> None:
-    """Delete one table entry (dir or file) on whichever filesystem holds
-    the table: local paths via the stdlib, URI locations via the Hadoop
-    FileSystem API (shutil against 's3a://…' is a SILENT no-op — the
-    aborted-fold leak the r13 review caught)."""
-    import shutil
-
-    from sydradb_spark.ingest import _posix_checkpoint_path
-    from sydradb_spark.util import hadoop_fs
-
-    local = _posix_checkpoint_path(rollup_path)
-    if local is not None:
-        p = Path(local) / name
-        if p.is_dir():
-            shutil.rmtree(p, ignore_errors=True)
-        else:
-            p.unlink(missing_ok=True)
-        return
-    if spark is None:
-        return  # caller has no session — entry stays until a vacuum with one
-    _, fs, jpath = hadoop_fs(spark, f"{rollup_path.rstrip('/')}/{name}")
-    fs.delete(jpath, True)
 
 
 def compact_rollup(
@@ -411,9 +367,7 @@ def compact_rollup(
     try:
         return mf.commit(rollup_path, mutate=mutate, store=store, key=STORE_TABLE)
     except _ConcurrentFold:
-        # backend-aware removal: shutil against an s3a:// string would be a
-        # silent no-op and leak the aborted fold's output forever
-        _remove_entry(spark, rollup_path, out)
+        datafs.open_fs(rollup_path, spark).delete(out)  # the aborted fold's output
         return None
 
 
@@ -427,83 +381,42 @@ def vacuum_rollup(
     """Reclaim rollup entries (``b_*``/``c_*`` dirs and adopted top-level
     ``*.parquet`` files) unreferenced by the retained manifest versions —
     the folded sources ``compact_rollup`` leaves behind, and orphans of
-    crashed writes — and prune old version files. The age window is the
-    reader/replayer guard: an entry whose tree was touched within it
-    (newest mtime anywhere inside — a fold or batch write advances leaf
-    mtimes, not necessarily the dir's own) is never deleted. Returns the
-    removed entry names.
+    crashed writes — and prune old version files. Once no kept version
+    lists a top-level file, an adopted table's top-level ``_SUCCESS``
+    marker goes too. The age window is the reader/replayer guard: an entry
+    whose tree was touched within it (newest mtime anywhere inside — a fold
+    or batch write advances leaf mtimes, not necessarily the dir's own) is
+    never deleted. Returns the removed entry names.
 
     ``mf.prune_versions`` builds the keep-set — with every guard of the
     points vacuum: young versions kept, pruned holes skipped, and nothing
     reclaimed without a keep-set (``mf.reclaimable``) — so a store-backed
     and a local rollup vacuum alike refuse to reclaim committed entries on
-    an emptied listing or manifest directory. The
-    MANIFEST side needs ``store`` for an object-store rollup location. The
-    DATA side walks local paths with the stdlib and URI locations through
-    the Hadoop FileSystem API via ``spark`` — without a session, a
-    non-local data pass is SKIPPED (version pruning still runs; entries
-    wait for a vacuum that has one). The streaming sink's in-sink
-    maintenance always passes its session."""
-    import shutil
+    an emptied listing or manifest directory. The MANIFEST side needs
+    ``store`` for an object-store rollup location. The DATA side is one
+    pass over ``datafs``: a URI location needs ``spark``, and without one
+    the data pass is SKIPPED with a logged warning (version pruning still
+    runs; entries wait for a vacuum that has one). The streaming sink's
+    in-sink maintenance always passes its session."""
     import time
-
-    from sydradb_spark.ingest import _posix_checkpoint_path
-    from sydradb_spark.util import hadoop_fs, tree_mtime
 
     kept = mf.prune_versions(
         rollup_path, keep_versions, min_age_seconds, store=store, key=STORE_TABLE
     )
-    local = _posix_checkpoint_path(rollup_path)
+    fs = datafs.vacuum_fs(rollup_path, spark, "vacuum_rollup")
+    if fs is None:
+        return []
+    listing = fs.list("")
+    names = _entries(listing)
+    if kept is not None and not any(n.endswith(".parquet") for n in kept):
+        names += [n for n, is_dir, _ in listing if n == "_SUCCESS" and not is_dir]
     now = time.time()
     removed = []
-    if local is not None:
-        root = Path(local)
-        if not root.exists():
-            return []
-        for p in root.iterdir():
-            if not _is_entry(p.name, p.is_dir()):
-                continue
-            if now - tree_mtime(p) < min_age_seconds:
-                continue  # possibly a live writer's target or a fresh fold
-            if not mf.reclaimable(kept, p.name, rollup_path):
-                continue
-            if p.is_dir():
-                shutil.rmtree(p, ignore_errors=True)
-            else:
-                p.unlink(missing_ok=True)
-                # an adopted top-level file's local-FS checksum sibling
-                p.with_name(f".{p.name}.crc").unlink(missing_ok=True)
-            removed.append(p.name)
-    elif spark is not None:
-        # URI data location: list/age/delete through the Hadoop FS API —
-        # Path('s3a://…').iterdir() resolves to a NONEXISTENT local path
-        # and previously crashed the in-sink maintenance (r13 review)
-        _, fs, jroot = hadoop_fs(spark, rollup_path)
-        if not fs.exists(jroot):
-            return []
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if not _is_entry(name, st.isDirectory()):
-                continue
-            newest = st.getModificationTime() / 1000.0
-            if st.isDirectory():
-                it = fs.listFiles(st.getPath(), True)
-                while it.hasNext():
-                    newest = max(newest, it.next().getModificationTime() / 1000.0)
-            if now - newest < min_age_seconds:
-                continue
-            if not mf.reclaimable(kept, name, rollup_path):
-                continue
-            fs.delete(st.getPath(), True)
-            removed.append(name)
-    else:
-        # no session to reach the URI filesystem — manifest-only vacuum;
-        # NOT silent (VERDICT r13 item 4): a bare cron-style
-        # vacuum_rollup(store=...) call would otherwise reclaim nothing
-        # forever with zero operator signal
-        __import__("logging").getLogger("sydradb_spark.maintenance").warning(
-            "vacuum_rollup(%s): data pass SKIPPED — URI data location and no "
-            "SparkSession to reach it; only manifest versions were pruned",
-            rollup_path,
-        )
+    for name in names:
+        if now - fs.newest_mtime(name) < min_age_seconds:
+            continue  # possibly a live writer's target or a fresh fold
+        if not mf.reclaimable(kept, name, rollup_path):
+            continue
+        fs.delete(name)
+        removed.append(name)
     return sorted(removed)

@@ -1,45 +1,11 @@
-"""Small shared helpers."""
+"""Small shared helpers: DataFrame shaping (``spread``, ``salted_agg``,
+``drop_hot_keys``) and the index commit marker. Operations on a table's
+data files live in ``datafs``."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def hadoop_fs(spark, path: str):
-    """(jvm, FileSystem, Path) for ``path`` on whatever filesystem Spark can
-    reach — the backend-generic escape hatch for data operations on
-    non-POSIX table locations (s3a://, hdfs://, file://). Python's ``Path``
-    / ``shutil`` against a URI string silently operate on a RELATIVE local
-    path (the r13 bug class); every data-side URI operation must go through
-    this instead."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def tree_mtime(root) -> float:
-    """Newest mtime anywhere inside ``root`` (a ``Path``; the dir itself
-    included). A long-running Spark write into a staging tree advances only
-    LEAF mtimes — judging liveness by the root dir's own mtime would let a
-    vacuum rmtree a live writer's staging mid-write. Missing entries
-    (racing their creator/deleter) count as 'now' = maximally young, so
-    races always err toward keeping."""
-    import time
-
-    newest = 0.0
-    try:
-        newest = root.stat().st_mtime
-        for p in root.rglob("*"):
-            try:
-                m = p.stat().st_mtime
-            except FileNotFoundError:
-                return time.time()
-            if m > newest:
-                newest = m
-    except FileNotFoundError:
-        return time.time()
-    return newest
 
 
 def write_marker(path: str, text: str) -> None:

@@ -71,6 +71,40 @@ def test_sydraql_roundtrip(http):
     assert out["stats"]["rows_returned"] == 5
 
 
+def test_sydraql_truncation_signaled(spark):
+    """A sydraQL result longer than max_rows is cut to max_rows AND says so
+    (stats.truncated + X-Sydra-Truncated, as the range route does); a
+    result at or under the cap carries no signal."""
+    from sydradb_spark.model import with_identity
+
+    df = with_identity(
+        spark.createDataFrame(
+            [("t.metric", {"host": "a"}, 1_000_000 + 10 * i, float(i)) for i in range(10)],
+            "series string, tags map<string,string>, ts long, value double",
+        )
+    )
+    server = SydraHttpServer(SydraQLEngine(spark, df), max_rows=5).start()
+    try:
+
+        def post(q: bytes):
+            req = urllib.request.Request(_url(server, "/api/v1/sydraql"), data=q, method="POST")
+            with urllib.request.urlopen(req, timeout=60) as r:
+                return json.loads(r.read()), dict(r.headers)
+
+        out, hdrs = post(b"select time, value from t.metric where time >= 1000000 and time < 1000100")
+        assert [r[1] for r in out["rows"]] == [0.0, 1.0, 2.0, 3.0, 4.0]
+        assert out["stats"]["rows_returned"] == 5
+        assert out["stats"]["truncated"] is True
+        assert hdrs.get("X-Sydra-Truncated") == "true"
+
+        out, hdrs = post(b"select time, value from t.metric where time >= 1000000 and time < 1000050")
+        assert len(out["rows"]) == 5
+        assert "truncated" not in out["stats"]
+        assert "X-Sydra-Truncated" not in hdrs
+    finally:
+        server.stop()
+
+
 def test_sydraql_error_shape(http):
     with pytest.raises(urllib.error.HTTPError) as e:
         _post(http, "/api/v1/sydraql", b"select value from cpu.total")  # no time pred

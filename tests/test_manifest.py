@@ -746,8 +746,8 @@ def test_concurrent_vacuums_tolerate_each_other(tmp_path, monkeypatch):
     # simulate the loser: remove the file after data_files() listed it
     real_data_files = storage.data_files
 
-    def list_then_steal(path):
-        rels = real_data_files(path)
+    def list_then_steal(path, spark=None):
+        rels = real_data_files(path, spark)
         for rel in rels:
             (table / rel).unlink(missing_ok=True)  # the winner got there first
         return rels

@@ -126,10 +126,17 @@ def test_file_uri_is_a_local_path(spark, tmp_path):
 
 
 # --- Hadoop-FS staging (the URI data path, exercised via file:/) ---------------
-def test_stage_and_publish_hadoop_renames_into_layout(spark, tmp_path):
-    """The URI staging twin runs REAL Hadoop FileSystem renames (local FS
-    via file:/): files land in the live hour_bucket layout, the staging
-    dir is gone, and the returned moved-list is exact."""
+def test_stage_and_publish_hadoop_renames_into_layout(spark, tmp_path, monkeypatch):
+    """The staged publish on a URI location runs REAL Hadoop FileSystem
+    renames (``datafs.HadoopFS`` over the local FS via file:/): files land
+    in the live hour_bucket layout with their checksum siblings, the
+    staging dir is gone, and the returned moved-list is exact."""
+    from sydradb_spark import datafs
+
+    real = datafs.local_path
+    monkeypatch.setattr(
+        datafs, "local_path", lambda p: None if p.startswith("file://") else real(p)
+    )
     tbl = tmp_path / "tbl"
     df = _pts(spark, [("s.a", 100, 1.0), ("s.a", 3700, 2.0)])
     extra = [c for c in df.columns if c not in storage.POINT_COLS]
@@ -139,11 +146,13 @@ def test_stage_and_publish_hadoop_renames_into_layout(spark, tmp_path):
         .sortWithinPartitions("series_id", "ts")
         .write.partitionBy("hour_bucket")
     )
-    moved = storage._stage_and_publish_hadoop(shaped, f"file://{tbl}", spark)
+    moved = storage._stage_and_publish(shaped, f"file://{tbl}", spark)
     assert len(moved) >= 2  # two hour partitions
     for rel in moved:
         assert (tbl / rel).exists()
         assert rel.startswith("hour_bucket=")
+        f = tbl / rel
+        assert f.with_name(f".{f.name}.crc").exists()  # Hadoop moved it
     assert not list(tbl.glob(".staging-*"))
     got = spark.read.parquet(str(tbl))
     assert got.count() == 2

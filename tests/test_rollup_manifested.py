@@ -489,6 +489,11 @@ def test_init_rollup_manifest_adopts_flock_table(spark, tmp_path, backend):
     assert len([n for n in removed if n.endswith(".parquet")]) == 1
     assert "b_stream-one_000000000002" in removed
     assert not list(roll.glob("*.parquet")) and not list(roll.glob(".*.parquet.crc"))
+    # the legacy _SUCCESS marker and its checksum go with the last legacy
+    # file: the root holds only the manifest and the listed entries
+    assert "_SUCCESS" in removed
+    on_disk = {p.name for p in roll.iterdir()} - {"_manifest"}
+    assert on_disk == set(_manifest_names(str(roll), store))
     assert counts() == {"s.a": 10, "s.b": 3}
 
 
@@ -500,8 +505,7 @@ def test_manifested_uri_paths_guarded_and_hadoop_routed(spark, tmp_path, monkeyp
     Path('s3a://...').iterdir() or silently no-op'ing shutil. Simulated by
     forcing the non-POSIX branch while the URI is a real file:// location
     Hadoop can serve."""
-    from sydradb_spark import ingest
-    from sydradb_spark.streaming.rollup_stream import _remove_entry
+    from sydradb_spark import datafs
 
     roll_local = tmp_path / "roll"
     store = obs.MemoryObjectStore()
@@ -514,9 +518,9 @@ def test_manifested_uri_paths_guarded_and_hadoop_routed(spark, tmp_path, monkeyp
     compact_rollup(spark, str(roll_local), 3600, store)  # folds b_0
 
     uri = f"file://{roll_local}"
-    real = ingest._posix_checkpoint_path
+    real = datafs.local_path
     monkeypatch.setattr(
-        ingest, "_posix_checkpoint_path", lambda p: None if p.startswith("file://") else real(p)
+        datafs, "local_path", lambda p: None if p.startswith("file://") else real(p)
     )
     # (a) local protocol rejected on the 'object-store' location
     with pytest.raises(ValueError, match="object-store"):
@@ -535,7 +539,9 @@ def test_manifested_uri_paths_guarded_and_hadoop_routed(spark, tmp_path, monkeyp
     # Hadoop-routed single-entry removal (the loser-fold cleanup path)
     (roll_local / "c_orphan").mkdir()
     (roll_local / "c_orphan" / "x").write_text("x")
-    _remove_entry(spark, uri, "c_orphan")
+    fs = datafs.open_fs(uri, spark)
+    assert isinstance(fs, datafs.HadoopFS)
+    fs.delete("c_orphan")
     assert not (roll_local / "c_orphan").exists()
     # init_rollup_manifest: URI listing needs a session, then works
     with pytest.raises(ValueError, match="SparkSession"):

@@ -2,8 +2,9 @@
 
 No linter runs here, and the test suite never imports ``scripts/``: a
 renamed or deleted function in ``manifest`` / ``objectstore`` / ``storage``
-/ ``rollup_stream`` / ``api`` would surface only when an operator runs a
-soak script or the benchmark. This test parses (never imports or runs)
+/ ``rollup_stream`` / ``api`` / ``datafs`` / ``ingest`` / ``metrics`` /
+``util`` would surface only when an operator runs a soak script or the
+benchmark. This test parses (never imports or runs)
 every Python file under ``sydradb_spark/``, ``scripts/`` and
 ``perfbench/``, plus ``bench.py`` and ``__spark_entry__.py``, finds the
 names each file binds to those modules, and asserts that every attribute
@@ -26,10 +27,14 @@ SCANNED = ("sydradb_spark", "scripts", "perfbench")
 SCANNED_FILES = ("bench.py", "__spark_entry__.py")
 MODULES = (
     "sydradb_spark.api",
+    "sydradb_spark.datafs",
+    "sydradb_spark.ingest",
     "sydradb_spark.manifest",
+    "sydradb_spark.metrics",
     "sydradb_spark.objectstore",
     "sydradb_spark.storage",
     "sydradb_spark.streaming.rollup_stream",
+    "sydradb_spark.util",
 )
 
 

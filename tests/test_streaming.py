@@ -882,8 +882,8 @@ def test_stream_sink_lazy_spark_metadata_app_id(spark, tmp_path, monkeypatch):
     the first batch, and the identity is stable across restarts — so the
     exactly-once ledger engages on s3://-style deployments (VERDICT r11
     item 2). Simulated by forcing the eager app-id resolution to defer (as
-    it does on a URI checkpoint) — patching _posix_checkpoint_path itself
-    would also poison the TABLE-path triage storage shares since r14."""
+    it does on a URI checkpoint) — patching datafs.local_path itself would
+    also poison the TABLE-path triage every data-file operation shares."""
     from sydradb_spark import ingest
     from sydradb_spark import manifest as mf
     from sydradb_spark.ingest import NDJSON_SCHEMA, parse_ndjson, stream_points_sink
