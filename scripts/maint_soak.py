@@ -51,11 +51,12 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from sydradb_spark import manifest as mf  # noqa: E402
 from sydradb_spark import storage  # noqa: E402
-from sydradb_spark.ingest import _checkpoint_app_id, stream_points_sink  # noqa: E402
+from sydradb_spark.ingest import stream_points_sink  # noqa: E402
 from sydradb_spark.session import get_spark  # noqa: E402
 from sydradb_spark.tables import events_points  # noqa: E402
 
 from scripts.sink_soak import prepare_chunks  # noqa: E402
+from scripts.soak_common import AppIds  # noqa: E402
 
 
 def main() -> None:
@@ -106,11 +107,13 @@ def main() -> None:
     lo, hi = twin.agg(F.min("ts"), F.max("ts")).first()
     span = (hi - lo + 1) / args.chunks
 
+    # an app's id is its checkpoint's own id, which exists only once its
+    # stream has started: crash schedules key by app index
     cks = [f"{ck}_{k}" for k in range(args.apps)]
-    app_ids = [_checkpoint_app_id(c) for c in cks]
+    app_ids = AppIds(spark, cks)
     rng = random.Random(args.seed)
     crash_at = {
-        app: set(rng.sample(range(args.chunks), args.crashes)) for app in app_ids
+        k: set(rng.sample(range(args.chunks), args.crashes)) for k in range(args.apps)
     }
 
     findings: list[str] = []
@@ -122,10 +125,10 @@ def main() -> None:
     # by design, which would resurrect rows a delete removed in between —
     # that interleaving is out of the twin's model; the crash-replay soak
     # covers mid-write crashes separately) --------------------------------
-    def make_hook(app: str):
+    def make_hook(k: int):
         def hook(batch_id: int) -> None:
-            if batch_id in crash_at[app]:
-                crash_at[app].discard(batch_id)
+            if batch_id in crash_at[k]:
+                crash_at[k].discard(batch_id)
                 raise RuntimeError(f"injected crash after batch {batch_id}")
 
         return hook
@@ -149,7 +152,7 @@ def main() -> None:
 
     def drive(k: int) -> int:
         restarts = 0
-        hook = make_hook(app_ids[k])
+        hook = make_hook(k)
         while True:
             q = stream_points_sink(
                 points_stream(k),
@@ -205,8 +208,9 @@ def main() -> None:
         """Highest ts fully durable for EVERY app (ledger highwater N =>
         chunks 0..N committed => rows below lo + (N+1)*span durable)."""
         lows = []
-        for app in app_ids:
-            n = mf.read_txn(table, app)
+        for k in range(args.apps):
+            app = app_ids[k]
+            n = None if app is None else mf.read_txn(table, app)
             if n is None:
                 return None
             lows.append(n)
@@ -324,7 +328,8 @@ def main() -> None:
     # --- verdict 4: restore flip round-trips ----------------------------------
     final_snap = f"{args.work}/snap_final"
     storage.snapshot(table, final_snap)
-    pre_ledger = {app: mf.read_txn(table, app) for app in app_ids}
+    ids = [app_ids[k] for k in range(args.apps)]
+    pre_ledger = {app: mf.read_txn(table, app) for app in ids}
     storage.delete_where(
         spark, table, F.abs(F.xxhash64("series")) % 2 == 0,
         ts_min=int(lo), ts_max=int(hi),
@@ -332,7 +337,7 @@ def main() -> None:
     mangled_rows = storage.read_points(spark, table).count()
     storage.restore(final_snap, table)
     restored_rows = storage.read_points(spark, table).count()
-    post_ledger = {app: mf.read_txn(table, app) for app in app_ids}
+    post_ledger = {app: mf.read_txn(table, app) for app in ids}
     restore_ok = restored_rows == got_rows and post_ledger == pre_ledger
 
     # file counts per partition after the final optimize (small-file bound)

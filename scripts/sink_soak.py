@@ -63,11 +63,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from sydradb_spark import manifest as mf  # noqa: E402
-from sydradb_spark.ingest import _checkpoint_app_id, stream_points_sink  # noqa: E402
+from sydradb_spark.ingest import stream_points_sink  # noqa: E402
 from sydradb_spark.model import with_identity  # noqa: E402
 from sydradb_spark.storage import read_points  # noqa: E402
 from sydradb_spark.session import get_spark  # noqa: E402
 from sydradb_spark.tables import events_points  # noqa: E402
+
+from scripts.soak_common import AppIds  # noqa: E402
 
 
 def prepare_chunks(
@@ -201,10 +203,10 @@ def main() -> None:
     total_rows = sum(totals)
     t_prep = round(time.perf_counter() - t0, 1)
 
-    # pre-mint each app's identity (the stream re-reads the same marker) so
-    # the crash schedules and ledger traces key by the REAL app id
+    # an app's id is its checkpoint's own id, which exists only once its
+    # stream has started: crash schedules and ledger traces key by app index
     cks = [f"{ck}_{k}" for k in range(args.apps)]
-    app_ids = [_checkpoint_app_id(c) for c in cks]
+    app_ids = AppIds(spark, cks)
 
     # two seeded crash sets PER APP, both redelivered under the SAME
     # batch_id:
@@ -219,18 +221,21 @@ def main() -> None:
     midwrite_at: dict = {}
     remaining: dict = {}
     mid_remaining: dict = {}
-    for app in app_ids:
+    for k in range(args.apps):
         sampled = rng.sample(range(args.chunks), args.crashes)
-        crash_at[app] = sorted(sampled[:gap_n])
-        midwrite_at[app] = sorted(sampled[gap_n:])
-        remaining[app] = set(crash_at[app])
-        mid_remaining[app] = set(midwrite_at[app])
+        crash_at[k] = sorted(sampled[:gap_n])
+        midwrite_at[k] = sorted(sampled[gap_n:])
+        remaining[k] = set(crash_at[k])
+        mid_remaining[k] = set(midwrite_at[k])
 
     def _mid_crash(txn) -> None:
-        if txn is not None and txn[1] in mid_remaining.get(txn[0], ()):
-            mid_remaining[txn[0]].discard(txn[1])
+        if txn is None:
+            return
+        k = app_ids.index(txn[0])
+        if k is not None and txn[1] in mid_remaining[k]:
+            mid_remaining[k].discard(txn[1])
             raise RuntimeError(
-                f"injected mid-write crash at batch {txn[1]} of {txn[0]}"
+                f"injected mid-write crash at batch {txn[1]} of app {k}"
             )
 
     real_commit = mf.commit
@@ -242,7 +247,7 @@ def main() -> None:
 
     mf.commit = crashing_commit  # storage calls mf.commit as a module attribute
 
-    ledger_trace: dict = {app: [] for app in app_ids}
+    ledger_trace: dict = {k: [] for k in range(args.apps)}
     version_counts: list[int] = []
     violations: list[str] = []
 
@@ -257,22 +262,22 @@ def main() -> None:
                 time.sleep(0.01)
         return be_read_txn(app)
 
-    def make_hook(app: str):
+    def make_hook(k: int):
         def hook(batch_id: int) -> None:
             # observe AFTER the durable write: ledger holds batch_id already
-            seen = read_txn_retry(app)
+            seen = read_txn_retry(app_ids[k])
             if seen != batch_id:
                 violations.append(
-                    f"{app}: ledger {seen} != just-written batch {batch_id}"
+                    f"app {k}: ledger {seen} != just-written batch {batch_id}"
                 )
-            if ledger_trace[app] and seen < ledger_trace[app][-1]:
+            if ledger_trace[k] and seen < ledger_trace[k][-1]:
                 violations.append(
-                    f"{app}: ledger regressed {ledger_trace[app][-1]} -> {seen}"
+                    f"app {k}: ledger regressed {ledger_trace[k][-1]} -> {seen}"
                 )
-            ledger_trace[app].append(seen)
+            ledger_trace[k].append(seen)
             version_counts.append(be_version_count())
-            if batch_id in remaining[app]:
-                remaining[app].discard(batch_id)
+            if batch_id in remaining[k]:
+                remaining[k].discard(batch_id)
                 raise RuntimeError(f"injected crash after batch {batch_id}")
 
         return hook
@@ -294,7 +299,7 @@ def main() -> None:
 
     def drive(k: int) -> int:
         restarts = 0
-        hook = make_hook(app_ids[k])
+        hook = make_hook(k)
         while True:
             q = stream_points_sink(
                 points_stream(k),
@@ -393,7 +398,7 @@ def main() -> None:
 
     # --- assertion 4: every app's ledger monotone, finished at the last
     # batch ------------------------------------------------------------------
-    final_txns = {app: be_read_txn(app) for app in app_ids}
+    final_txns = {app_ids[k]: be_read_txn(app_ids[k]) for k in range(args.apps)}
     ledgers_ok = not violations and all(
         v == args.chunks - 1 for v in final_txns.values()
     )

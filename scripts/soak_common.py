@@ -48,3 +48,31 @@ def concat_files(parts: list[str], dst: str) -> None:
         for p in parts:
             with open(p, "rb") as fh:
                 shutil.copyfileobj(fh, out)
+
+
+class AppIds:
+    """Each soak app's stream identity by app index: its checkpoint's own id
+    (``ingest.checkpoint_app_id``), which exists only once that app's stream
+    has started. Crash schedules therefore key by app index; ids are read
+    here on demand and cached once known."""
+
+    def __init__(self, spark, checkpoints: list[str]):
+        self._spark = spark
+        self._checkpoints = checkpoints
+        self._ids: dict[int, str] = {}
+
+    def __getitem__(self, k: int) -> str | None:
+        if k not in self._ids:
+            from sydradb_spark.ingest import checkpoint_app_id
+
+            got = checkpoint_app_id(self._spark, self._checkpoints[k])
+            if got is None:
+                return None  # not started yet
+            self._ids[k] = got
+        return self._ids[k]
+
+    def index(self, app_id: str) -> int | None:
+        """The app index whose checkpoint carries ``app_id``."""
+        return next(
+            (k for k in range(len(self._checkpoints)) if self[k] == app_id), None
+        )

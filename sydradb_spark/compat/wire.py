@@ -101,6 +101,17 @@ def _notice_response(message: str) -> bytes:
     return _msg(b"N", b"S" + b"NOTICE\x00" + b"M" + message.encode() + b"\x00" + b"\x00")
 
 
+def _cap(rows: list, max_rows: int) -> tuple[list, bytes]:
+    """The first ``max_rows`` of ``rows``, collected from a frame limited to
+    ``max_rows + 1`` so that a cut is detected, not guessed, plus the
+    NoticeResponse a cut sends before CommandComplete (b"" for none)."""
+    if len(rows) <= max_rows:
+        return rows, b""
+    return rows[:max_rows], _notice_response(
+        f"truncated: result has more than {max_rows} rows"
+    )
+
+
 def _diagnostic_notices(
     fields: list[tuple[str, str]],
     result_stats: dict,
@@ -477,7 +488,7 @@ class _Handler(socketserver.BaseRequestHandler):
             raise _WireError(t.message or "not supported", t.sqlstate or "0A000")
         try:
             result = server.engine.query(t.sydraql)
-            df = result.df.limit(server.max_rows)
+            df = result.df.limit(server.max_rows + 1)
             fields = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
         except Exception as exc:  # noqa: BLE001
             raise _WireError(str(exc).split("\n")[0][:500], "42601") from None
@@ -552,13 +563,15 @@ class _Handler(socketserver.BaseRequestHandler):
         rfmts = portal.get("rfmts")
         types = [t for _, t in fields]
         if "out_rows" not in portal:
-            # one materialization per portal, already capped at max_rows by
-            # _prepare_portal's limit(); suspension resumes from this cache
+            # one materialization per portal, capped at max_rows (a cut is
+            # noticed at completion); suspension resumes from this cache
             if portal["kind"] == "catalog":
                 portal["out_rows"] = [list(r) for r in portal["rows"]]
             else:
                 try:
-                    collected = portal["df"].collect()
+                    collected, portal["cut"] = _cap(
+                        portal["df"].collect(), server.max_rows
+                    )
                 except Exception as exc:  # noqa: BLE001
                     raise _WireError(str(exc).split("\n")[0][:500], "42601") from None
                 portal["out_rows"] = [[row[n] for n, _ in fields] for row in collected]
@@ -575,7 +588,8 @@ class _Handler(socketserver.BaseRequestHandler):
         portal["done"] = True
         # tag counts rows processed in THIS run (pg's nprocessed semantics),
         # not the portal lifetime total
-        sock.sendall(_msg(b"C", f"SELECT {end - pos}".encode() + b"\x00"))
+        done = _msg(b"C", f"SELECT {end - pos}".encode() + b"\x00")
+        sock.sendall(portal.get("cut", b"") + done)
 
     def _ext_close(self, sock, payload: bytes) -> None:
         try:
@@ -745,8 +759,8 @@ class _Handler(socketserver.BaseRequestHandler):
             )
             stmt = f"select {cols} from {table} where time >= 0"
         try:
-            df = server.engine.query(stmt).df.limit(server.max_rows)
-            rows = df.collect()
+            df = server.engine.query(stmt).df.limit(server.max_rows + 1)
+            rows, cut = _cap(df.collect(), server.max_rows)
             names = df.columns
         except Exception as exc:  # noqa: BLE001 — surface as pg error
             sock.sendall(_error_response(str(exc).split("\n")[0][:500], "42601"))
@@ -772,7 +786,7 @@ class _Handler(socketserver.BaseRequestHandler):
                 )
                 sock.sendall(_msg(b"d", line.encode() + b"\n"))
         sock.sendall(_msg(b"c", b""))
-        sock.sendall(_msg(b"C", f"COPY {len(rows)}".encode() + b"\x00"))
+        sock.sendall(cut + _msg(b"C", f"COPY {len(rows)}".encode() + b"\x00"))
 
     @staticmethod
     def _query(sock: socket.socket, server: "PgWireServer", sql: str) -> None:
@@ -812,9 +826,9 @@ class _Handler(socketserver.BaseRequestHandler):
         t0 = time.perf_counter()
         try:
             result = server.engine.query(t.sydraql)
-            df = result.df.limit(server.max_rows)
+            df = result.df.limit(server.max_rows + 1)
             fields = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
-            rows = df.collect()
+            rows, cut = _cap(df.collect(), server.max_rows)
         except Exception as exc:  # noqa: BLE001 — surface as pg error
             sock.sendall(_error_response(str(exc).split("\n")[0][:500], "42601"))
             return
@@ -833,7 +847,7 @@ class _Handler(socketserver.BaseRequestHandler):
             trace_id=uuid.uuid4().hex[:16],
         ):
             sock.sendall(notice)
-        sock.sendall(_msg(b"C", f"SELECT {len(rows)}".encode() + b"\x00"))
+        sock.sendall(cut + _msg(b"C", f"SELECT {len(rows)}".encode() + b"\x00"))
 
 
 class PgWireServer:

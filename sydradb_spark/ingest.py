@@ -13,9 +13,17 @@ segment flush (engine.zig:263-369); Spark-first that whole pipeline is:
            ``withWatermark`` example lives in the streaming test — the
            reference has NO late-data policy (SURVEY §2.11), late points are
            simply accepted, so no watermark is applied by default.
+
+The points sink and ``streaming.rollup_stream`` run one foreachBatch driver
+(``_ledgered_stream``), keyed by one identity that travels with the
+checkpoint: ``checkpoint_app_id``, Spark's own checkpoint id.
 """
 
 from __future__ import annotations
+
+import json
+import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,8 +38,9 @@ from pyspark.sql.types import (
 )
 
 from sydradb_spark import datafs
+from sydradb_spark import manifest as mf
 from sydradb_spark.model import with_identity
-from sydradb_spark.storage import write_points
+from sydradb_spark.storage import data_files, vacuum_points, write_points
 
 _MAINT_LOG = __import__("logging").getLogger("sydradb_spark.maintenance")
 
@@ -125,100 +134,32 @@ def ingest_batch(spark: SparkSession, ndjson_path: str, table_path: str) -> None
     write_points(read_ndjson(spark, ndjson_path), table_path, mode="append")
 
 
-def _checkpoint_app_id(checkpoint_dir: str) -> str:
-    """Stable identity for the streaming query, stored INSIDE the checkpoint
-    dir so it survives restarts (and travels with the checkpoint if it is
-    relocated). Created once with an atomic exclusive link — two racing
-    starters converge on one id. POSIX checkpoint locations only (accepts a
-    plain path or a ``file://`` URI); see ``resolve_app_id`` for the full
-    resolution order covering object-store checkpoints."""
-    import os
-    import uuid
-    from pathlib import Path
-
+def checkpoint_app_id(spark: SparkSession, checkpoint_dir: str) -> str | None:
+    """The stream's identity, the txn ledger's key: one value that travels
+    with the checkpoint. Structured Streaming writes ``<checkpoint>/metadata``
+    (``{"id": "<uuid>"}``) at a query's first start and keeps it for the
+    checkpoint's lifetime, on whatever filesystem holds it, so reading it
+    through the Hadoop FileSystem API gives ``stream-<uuid>`` (no ``_``, as
+    ``rollup_stream._live_tail_names`` needs) on local and s3a/hdfs
+    checkpoints alike. A local checkpoint an earlier release started holds
+    a ``_sydra_app_id`` marker instead; its text wins, so that stream's
+    ledger stays valid across the upgrade. None before the query's first
+    start."""
     local = datafs.local_path(checkpoint_dir)
-    if local is None:
-        raise ValueError(
-            f"non-POSIX checkpoint location {checkpoint_dir!r}: mint the app "
-            "id through mint_app_id(store) or let the sink resolve it from "
-            "Spark's checkpoint metadata"
-        )
-    p = Path(local)
-    p.mkdir(parents=True, exist_ok=True)
-    marker = p / "_sydra_app_id"
-    if not marker.exists():
-        tmp = p / f".appid.{uuid.uuid4().hex}.tmp"
-        tmp.write_text(f"stream-{uuid.uuid4().hex}")
-        try:
-            os.link(tmp, marker)
-        except FileExistsError:
-            pass  # a concurrent starter won — use theirs
-        finally:
-            tmp.unlink(missing_ok=True)
-    return marker.read_text().strip()
-
-
-def mint_app_id(store, key: str = "_sydra_app_id") -> str:
-    """Mint-or-read the stream's stable app id through an object store's
-    conditional PUT (``objectstore.ObjectStore.put_if_absent``) — the
-    non-POSIX twin of ``_checkpoint_app_id`` for deployments whose
-    checkpoint location is ``s3://``/``gs://``. Two racing starters
-    converge: the CAS admits exactly one candidate, both read it back.
-    Scope the store (or the key) to ONE checkpoint — the id is the replay
-    ledger's identity, and sharing it across streams merges their ledgers."""
-    import uuid
-
-    existing = store.get(key)
-    if existing is None:
-        store.put_if_absent(key, f"stream-{uuid.uuid4().hex}".encode())
-        existing = store.get(key)
-    return existing.decode().strip()
-
-
-def spark_checkpoint_metadata_id(spark: SparkSession, checkpoint_dir: str) -> str | None:
-    """App id derived from Spark's OWN checkpoint identity: Structured
-    Streaming writes ``<checkpoint>/metadata`` (``{"id": "<uuid>"}``) at
-    first start and keeps it for the checkpoint's lifetime, on WHATEVER
-    filesystem the checkpoint lives on — so reading it through the Hadoop
-    FileSystem API gives a stable, restart-surviving identity on s3a/hdfs
-    paths where no POSIX mint is possible. Returns None before the query's
-    first start (the file doesn't exist yet) — the sink resolves lazily on
-    batch 0, by which point Spark has written it."""
-    import json
-
+    if local is not None:
+        legacy = os.path.join(local, "_sydra_app_id")
+        if os.path.isfile(legacy):
+            with open(legacy) as f:
+                return f.read().strip()
     jvm, fs, jpath = datafs.hadoop_fs(spark, checkpoint_dir.rstrip("/") + "/metadata")
     if not fs.exists(jpath):
         return None
-    reader = jvm.java.io.BufferedReader(
-        jvm.java.io.InputStreamReader(fs.open(jpath), "UTF-8")
-    )
+    stream = fs.open(jpath)
     try:
-        lines = []
-        line = reader.readLine()
-        while line is not None:
-            lines.append(line)
-            line = reader.readLine()
+        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
     finally:
-        reader.close()
-    return "stream-" + str(json.loads("\n".join(lines))["id"])
-
-
-def resolve_app_id(
-    checkpoint_dir: str, app_id: str | None = None, app_id_store=None
-) -> str | None:
-    """The sink's app-id resolution order: explicit ``app_id`` wins; else an
-    object-store CAS mint when ``app_id_store`` is given (s3:// checkpoints
-    with a store client at hand); else the POSIX in-checkpoint mint when the
-    location is a local path; else None — meaning DEFER to Spark's own
-    checkpoint metadata, read lazily inside the first batch (the one source
-    of identity that exists on every Hadoop-supported filesystem)."""
-    if app_id is not None:
-        return app_id
-    if app_id_store is not None:
-        return mint_app_id(app_id_store)
-    if datafs.local_path(checkpoint_dir) is not None:
-        return _checkpoint_app_id(checkpoint_dir)
-    return None
+        stream.close()
+    return "stream-" + str(json.loads(text)["id"])
 
 
 def init_points_table(spark: SparkSession, table_path: str, store=None) -> None:
@@ -229,11 +170,69 @@ def init_points_table(spark: SparkSession, table_path: str, store=None) -> None:
     first batch so every batch append — including batch 0 — goes through
     the txn-ledgered commit path. ``store=`` keeps the manifest in an
     object store (required for URI table locations)."""
-    from sydradb_spark import manifest as mf
-    from sydradb_spark.storage import data_files
-
     if not mf.has_manifest(table_path, store=store):
         mf.commit(table_path, data_files(table_path, spark), store=store)
+
+
+def _ledgered_stream(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    write,
+    vacuum,
+    available_now: bool,
+    maintenance_every: int | None,
+    after_write_hook,
+) -> StreamingQuery:
+    """The one exactly-once foreachBatch driver both streams run. The
+    source's replayable offsets + checkpoint give at-least-once batch
+    delivery; ``write(batch, app_id, batch_id)`` must make the batch
+    idempotent under its ``(app_id, batch_id)`` txn, so a replay after a
+    crash in the write→checkpoint-commit gap is a no-op — the Spark-side
+    twin of the reference's WAL replay-above-highwater guard
+    (engine.zig:406-437).
+
+    The app id is ``checkpoint_app_id``, resolved on the first batch (by
+    then Spark has written the checkpoint's metadata); none there fails the
+    batch loudly rather than keying the ledger by None. Each batch runs the
+    write, then ``after_write_hook(batch_id)`` (the crash-injection seam,
+    after the durable write and before Spark's checkpoint commit), then
+    every ``maintenance_every`` batches ``vacuum(spark=...)``: a
+    ``functools.partial`` of ``vacuum_points`` or ``vacuum_rollup`` bound to
+    its table. Without it a continuous stream accumulates one manifest
+    version per batch FOREVER, and the commit path's version listing is
+    O(versions) — a quadratic stream lifetime. Maintenance is advisory (the
+    batch is already durable, and a transient FS race must not kill the
+    stream) but a failure is logged, never silent.
+
+    ``available_now=True`` drains what's there and stops (test/cron mode);
+    False runs continuously (micro-batch service mode)."""
+    state: dict = {"app_id": None}
+
+    def sink(batch: DataFrame, batch_id: int) -> None:
+        if state["app_id"] is None:
+            state["app_id"] = checkpoint_app_id(batch.sparkSession, checkpoint_dir)
+            if state["app_id"] is None:
+                raise RuntimeError(
+                    f"no app identity resolvable for checkpoint {checkpoint_dir!r}: "
+                    "Spark checkpoint metadata missing inside a running batch"
+                )
+        write(batch, state["app_id"], batch_id)
+        if after_write_hook is not None:
+            after_write_hook(batch_id)
+        if maintenance_every and batch_id > 0 and batch_id % maintenance_every == 0:
+            try:
+                vacuum(spark=batch.sparkSession)
+                note_maintenance_ok(state)
+            except Exception as exc:
+                where = f"{vacuum.func.__name__}({vacuum.args[0]})"
+                note_maintenance_failure(state, where, exc)
+
+    writer = stream.writeStream.foreachBatch(sink).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_points_sink(
@@ -243,107 +242,42 @@ def stream_points_sink(
     available_now: bool = True,
     maintenance_every: int | None = 256,
     maintenance_keep_versions: int = 8,
-    app_id: str | None = None,
-    app_id_store=None,
     store=None,
     _after_write_hook=None,
     _vacuum_min_age: int = 600,
 ) -> StreamingQuery:
-    """The shared streaming sink: canonical points stream → foreachBatch
-    hourly-partitioned append. Every streaming source (file NDJSON, Kafka)
-    funnels through this one writer, so exactly-once semantics are pinned in
-    one place: the source's replayable offsets + checkpoint give at-least-
-    once batch delivery, and the manifest txn ledger keyed by
-    ``(app_id, batch_id)`` (manifest.read_txn / commit txn=) makes the
-    append idempotent — a foreachBatch replay after a crash in the
-    write→checkpoint-commit gap is detected and becomes a no-op, the
-    Spark-side twin of the reference's WAL replay-above-highwater guard
-    (engine.zig:406-437). Pinned by
-    tests/test_streaming.py::test_stream_sink_exactly_once_replay.
+    """The shared streaming sink: canonical points stream → hourly-partitioned
+    append. Every points source (file NDJSON, Kafka) funnels through it, and
+    it runs the one exactly-once driver (``_ledgered_stream``): each batch
+    is a ``write_points`` append whose manifest commit is txn-ledgered by
+    ``(checkpoint_app_id, batch_id)``, so a replayed batch appends nothing.
+    Pinned by tests/test_streaming.py::test_stream_sink_exactly_once_replay.
 
-    ``available_now=True`` drains what's there and stops (test/cron mode);
-    False runs continuously (micro-batch service mode).
-
-    ``maintenance_every=k`` vacuums the table every k batches (keeping
+    ``maintenance_every=k`` runs ``vacuum_points`` every k batches, keeping
     ``maintenance_keep_versions`` manifest versions plus the usual age
-    window): a continuous stream otherwise accumulates one manifest
-    version per batch FOREVER, and the commit path's version listing is
-    O(versions) — a year at one batch/minute is ~500k version files and a
-    quadratic stream lifetime. Appends never unreference data files, so
-    the vacuum only prunes old version jsons and crashed-attempt orphans;
-    time travel on the stream table is bounded to the kept window.
-
-    App identity (the txn ledger's key) resolves via ``resolve_app_id``:
-    pass ``app_id`` explicitly, or ``app_id_store`` (an
-    ``objectstore.ObjectStore`` scoped to this checkpoint) for object-store
-    deployments, or leave both unset — POSIX checkpoint paths mint an id
-    inside the checkpoint dir, and non-POSIX URIs (s3://, hdfs://) fall back
-    to Spark's own checkpoint metadata id, read lazily on the first batch.
-    Exactly-once therefore engages on EVERY checkpoint filesystem, not just
-    local paths (VERDICT r11 item 2).
-
-    ``_after_write_hook(batch_id)`` is a test seam: it runs after the
-    durable write but before Spark's checkpoint commit (crash injection);
-    ``_vacuum_min_age`` is the vacuum age window (test seam).
-
-    ``store=`` (r14, VERDICT r13 item 1) keeps the table's manifest — init,
-    every txn-ledgered batch commit, and the maintenance vacuum — in an
-    object store, making the exactly-once contract real on object-store
-    table locations, where a manifest without a store is rejected loudly
-    instead of silently splitting ledger and data across filesystems."""
-    from sydradb_spark.storage import vacuum_points
-
+    window. Appends never unreference data files, so it only prunes old
+    version jsons and crashed-attempt orphans; time travel on the stream
+    table is bounded to the kept window. ``store=`` keeps the manifest in an
+    object store, which an object-store table location requires.
+    ``_after_write_hook`` and ``_vacuum_min_age`` are test seams."""
     init_points_table(points.sparkSession, table_path, store=store)
-    resolved = resolve_app_id(checkpoint_dir, app_id, app_id_store)
-    ident = {"app_id": resolved}
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if ident["app_id"] is None:
-            # deferred mint: by the first batch Spark has written the
-            # checkpoint's metadata file on its (possibly non-POSIX) fs
-            ident["app_id"] = spark_checkpoint_metadata_id(
-                batch.sparkSession, checkpoint_dir
-            )
-            if ident["app_id"] is None:
-                raise RuntimeError(
-                    f"no app identity resolvable for checkpoint {checkpoint_dir!r}: "
-                    "Spark checkpoint metadata missing inside a running batch"
-                )
-        write_points(
-            batch,
+    return _ledgered_stream(
+        points,
+        checkpoint_dir,
+        lambda batch, app_id, batch_id: write_points(
+            batch, table_path, mode="append", txn=(app_id, batch_id), store=store
+        ),
+        partial(
+            vacuum_points,
             table_path,
-            mode="append",
-            txn=(ident["app_id"], batch_id),
-            store=store,
-        )
-        if _after_write_hook is not None:
-            _after_write_hook(batch_id)
-        if maintenance_every and batch_id > 0 and batch_id % maintenance_every == 0:
-            try:
-                vacuum_points(
-                    table_path,
-                    store,
-                    keep_versions=maintenance_keep_versions,
-                    min_age_seconds=_vacuum_min_age,
-                    spark=batch.sparkSession,  # URI data locations reclaim
-                    # through the Hadoop FS API
-                )
-                note_maintenance_ok(ident)
-            except Exception as exc:
-                # maintenance is advisory: the durable write + ledger commit
-                # already succeeded above, and a vacuum hiccup (a transient
-                # FS race with a concurrent writer's vacuum) must not kill
-                # the continuous streaming query — the next boundary
-                # retries (r13 review). But NOT silent (ADVICE r13): a
-                # persistent failure is logged with a consecutive count.
-                note_maintenance_failure(ident, f"vacuum_points({table_path})", exc)
-
-    writer = points.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+            store,
+            keep_versions=maintenance_keep_versions,
+            min_age_seconds=_vacuum_min_age,
+        ),
+        available_now,
+        maintenance_every,
+        _after_write_hook,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dedupe_stream(points: DataFrame, watermark: str = "1 hour") -> DataFrame:

@@ -23,8 +23,8 @@ batch_id)`` and every batch commit is txn-ledgered by that pair, so a
 foreachBatch replay after a crash in the write→checkpoint-commit gap finds
 its batch in the ledger and touches nothing — the fold counts each batch
 exactly once, and a batch dir recreated after a fold never re-enters the
-manifest. The app id (minted inside the checkpoint,
-``ingest._checkpoint_app_id``) is part of the target because batch ids
+manifest. The app id (the checkpoint's own id,
+``ingest.checkpoint_app_id``) is part of the target because batch ids
 restart at 0 after a checkpoint reset: keyed by batch id alone, the reset
 stream's b_0 would overwrite another incarnation's (or a second stream's)
 unfolded b_0. Compaction never folds the newest batch directory of EACH
@@ -45,20 +45,15 @@ engine.zig:327-331) but monitoring can alert on them.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from sydradb_spark import datafs
 from sydradb_spark import manifest as mf
-from sydradb_spark.ingest import (
-    NDJSON_SCHEMA,
-    note_maintenance_failure,
-    note_maintenance_ok,
-    parse_ndjson,
-    resolve_app_id,
-    spark_checkpoint_metadata_id,
-)
+from sydradb_spark.ingest import NDJSON_SCHEMA, _ledgered_stream, parse_ndjson
 from sydradb_spark.rollup import (
     ROLLUP_COLS,
     build_rollup,
@@ -76,8 +71,7 @@ def _batch_dir(rollup_path: str, batch_id: int, app_id: str = DEFAULT_APP) -> st
 
 
 # the store key a caller-supplied ObjectStore keeps the rollup manifest
-# under; scope the store to ONE rollup table (mirrors ingest.mint_app_id's
-# one-checkpoint scoping)
+# under; scope the store to ONE rollup table
 STORE_TABLE = "rollup"
 
 
@@ -166,9 +160,9 @@ def stream_rollup(
     _after_write_hook=None,
     _vacuum_min_age: int = 600,
 ) -> StreamingQuery:
-    """Maintain an hourly rollup from an NDJSON point stream. The stream's
-    identity (checkpoint-minted app id, ``ingest.resolve_app_id`` — lazy
-    Spark-metadata fallback on non-POSIX checkpoint URIs) keys its batch
+    """Maintain an hourly rollup from an NDJSON point stream, through the
+    points sink's exactly-once driver (``ingest._ledgered_stream``). The
+    stream's identity (``ingest.checkpoint_app_id``) keys its batch
     subdirectories, so a checkpoint reset or a second stream feeding the
     same rollup table gets fresh targets instead of clobbering b_0/b_1/...
     partials.
@@ -180,14 +174,10 @@ def stream_rollup(
     an object store, which a URI rollup location requires; without it the
     manifest lives in the table directory.
 
-    ``maintenance_every=k`` runs ``vacuum_rollup`` every k batches — same
-    rationale as the points sink's in-sink vacuum: a continuous stream
-    otherwise accumulates one manifest version per batch FOREVER, and the
-    commit path's version listing is O(versions), a quadratic stream
-    lifetime. The vacuum also reclaims folded and orphaned batch/compacted
-    dirs outside the ``_vacuum_min_age`` window (test seam)."""
+    ``maintenance_every=k`` runs ``vacuum_rollup`` every k batches; it also
+    reclaims folded and orphaned batch/compacted dirs outside the
+    ``_vacuum_min_age`` window (test seam)."""
     init_rollup_manifest(rollup_path, store, spark)
-    ident = {"app_id": resolve_app_id(checkpoint_dir)}
     reader = spark.readStream.schema(NDJSON_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -197,53 +187,25 @@ def stream_rollup(
         "__event_time", F.timestamp_seconds(F.col("ts"))
     ).withWatermark("__event_time", watermark)
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if ident["app_id"] is None:
-            # deferred mint: by the first batch Spark has written the
-            # checkpoint's metadata file on its (possibly non-POSIX) fs
-            ident["app_id"] = spark_checkpoint_metadata_id(
-                batch.sparkSession, checkpoint_dir
-            )
-            if ident["app_id"] is None:
-                # mirror stream_points_sink (ADVICE r12): silently keeping
-                # None would target 'b_None_<batch>' dirs — two streams or
-                # a reset hitting this fallback would clobber each other's
-                # partials, the exact bug the app-keyed dirs fixed
-                raise RuntimeError(
-                    f"no app identity resolvable for checkpoint "
-                    f"{checkpoint_dir!r}: Spark checkpoint metadata missing "
-                    "inside a running batch"
-                )
-        partial = build_rollup(batch.drop("__event_time"), step_s=step_s)
-        write_rollup_batch(partial, rollup_path, batch_id, ident["app_id"], store=store)
-        if maintenance_every and batch_id > 0 and batch_id % maintenance_every == 0:
-            try:
-                vacuum_rollup(
-                    rollup_path,
-                    store,
-                    keep_versions=maintenance_keep_versions,
-                    min_age_seconds=_vacuum_min_age,
-                    spark=batch.sparkSession,  # URI data locations
-                    # reclaim through the Hadoop FS API (r13 review)
-                )
-                note_maintenance_ok(ident)
-            except Exception as exc:
-                # advisory maintenance must not kill the stream — the
-                # batch's write + manifest commit already succeeded — but
-                # a persistent failure must be visible (ADVICE r13)
-                note_maintenance_failure(ident, f"vacuum_rollup({rollup_path})", exc)
-        if _after_write_hook is not None:
-            # test seam: after the durable partial write, before Spark's
-            # checkpoint commit (crash injection — same seam as the points
-            # sink, ingest.stream_points_sink)
-            _after_write_hook(batch_id)
+    def write(batch: DataFrame, app_id: str, batch_id: int) -> None:
+        partial_rollup = build_rollup(batch.drop("__event_time"), step_s=step_s)
+        write_rollup_batch(partial_rollup, rollup_path, batch_id, app_id, store=store)
 
-    writer = pts.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return _ledgered_stream(
+        pts,
+        checkpoint_dir,
+        write,
+        partial(
+            vacuum_rollup,
+            rollup_path,
+            store,
+            keep_versions=maintenance_keep_versions,
+            min_age_seconds=_vacuum_min_age,
+        ),
+        available_now,
+        maintenance_every,
+        _after_write_hook,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _fold(spark: SparkSession, srcs: list[str], step_s: int) -> DataFrame:

@@ -244,6 +244,41 @@ def test_pgwire_notice_diagnostics(wire):
     sock.close()
 
 
+def test_pgwire_truncation_noticed(engine):
+    """A result longer than ``max_rows`` is cut at ``max_rows``, and the cut
+    is said: one NoticeResponse ``truncated: ...`` right before the
+    CommandComplete of the simple query, the extended protocol's Execute
+    and COPY TO STDOUT. A result that fits sends none."""
+    server = PgWireServer(engine, max_rows=5).start()
+    try:
+        sock = _connect(server.addr)
+        sql = "SELECT time, value FROM cpu.total WHERE time >= 1000000 AND time < 1000300"
+        cut = "truncated: result has more than 5 rows"
+        notices, n_rows, err = _query_with_notices(sock, sql)
+        assert err is None and n_rows == 5
+        assert [n["M"] for n in notices][-1] == cut
+        notices, _, err = _query_with_notices(sock, f"COPY ({sql}) TO STDOUT")
+        assert err is None and [n["M"] for n in notices] == [cut]
+        data, complete, err = _copy_out(sock, f"COPY ({sql}) TO STDOUT")
+        assert err is None and complete == "COPY 5" and data.count(b"\n") == 5
+        _send(sock, b"P", b"st\x00" + sql.encode() + b"\x00" + struct.pack("!H", 0))
+        _ext_bind(sock, portal=b"pt", stmt=b"st")
+        _send(sock, b"E", b"pt\x00" + struct.pack("!i", 0))
+        sock.sendall(b"S" + struct.pack("!I", 4))
+        msgs = _drain_to_ready(sock)
+        assert b"".join(t for t, _ in msgs) == b"12DDDDDNCZ", msgs
+        assert cut.encode() in msgs[-3][1] and msgs[-2][1] == b"SELECT 5\x00"
+        # a result that fits: no cut notice
+        notices, n_rows, err = _query_with_notices(
+            sock, sql.replace("1000300", "1000060")
+        )
+        assert err is None and n_rows == 5
+        assert not any(n["M"].startswith("truncated") for n in notices)
+        sock.close()
+    finally:
+        server.stop()
+
+
 def _send(sock, tag, body):
     sock.sendall(tag + struct.pack("!I", len(body) + 4) + body)
 

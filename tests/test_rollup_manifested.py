@@ -287,7 +287,7 @@ def test_stream_rollup_manifest_commit_end_to_end(spark, tmp_path, backend):
 
 def test_store_table_key_is_scoped(tmp_path):
     """The objectstore manifest lives under the fixed STORE_TABLE key —
-    callers scope the store to one rollup table (mint_app_id's contract)."""
+    callers scope the store to one rollup table."""
     store = obs.MemoryObjectStore()
     assert mf.latest_version(str(tmp_path), store=store, key=STORE_TABLE) is None
 

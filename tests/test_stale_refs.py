@@ -14,12 +14,18 @@ it reads from them exists:
 - ``from sydradb_spark.manifest import commit``;
 - ``wrap(manifest, "commit")`` / ``setattr(mf, "commit", ...)`` — a call
   whose first argument is the module and second a string literal.
+
+It also checks keyword names: a call ``mf.commit(txn=...)``, or
+``commit(txn=...)`` after ``from sydradb_spark.manifest import commit``,
+must pass only keywords in ``inspect.signature(commit)``, unless that takes
+``**kwargs``. A script still passing a deleted option then fails here.
 """
 
 from __future__ import annotations
 
 import ast
 import importlib
+import inspect
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -38,9 +44,12 @@ MODULES = (
 )
 
 
-def _uses(tree: ast.AST) -> list[tuple[str, str, int]]:
-    """(module, attribute, line) for every reference in ``tree``."""
+def _bindings(tree: ast.AST):
+    """The names ``tree`` binds to the modules: ``{alias: module}`` and
+    ``{local name: (module, attribute)}`` for ``from module import name``,
+    plus ``(module, attribute, line)`` for each such import."""
     aliases: dict[str, str] = {}  # local name → module
+    imported: dict[str, tuple[str, str]] = {}  # local name → (module, attr)
     out = []
     for node in ast.walk(tree):
         if isinstance(node, ast.ImportFrom) and node.module:
@@ -49,11 +58,18 @@ def _uses(tree: ast.AST) -> list[tuple[str, str, int]]:
                 if full in MODULES:
                     aliases[a.asname or a.name] = full
                 elif node.module in MODULES:
+                    imported[a.asname or a.name] = (node.module, a.name)
                     out.append((node.module, a.name, node.lineno))
         elif isinstance(node, ast.Import):
             for a in node.names:
                 if a.name in MODULES and a.asname:
                     aliases[a.asname] = a.name
+    return aliases, imported, out
+
+
+def _uses(tree: ast.AST) -> list[tuple[str, str, int]]:
+    """(module, attribute, line) for every reference in ``tree``."""
+    aliases, _, out = _bindings(tree)
     for node in ast.walk(tree):
         if (
             isinstance(node, ast.Attribute)
@@ -71,6 +87,43 @@ def _uses(tree: ast.AST) -> list[tuple[str, str, int]]:
         ):
             out.append((aliases[node.args[0].id], node.args[1].value, node.lineno))
     return out
+
+
+def _keywords(tree: ast.AST) -> list[tuple[str, str, str, int]]:
+    """(module, attribute, keyword, line) for every keyword argument of a
+    call into the modules: ``mf.commit(txn=...)`` or, after ``from
+    sydradb_spark.manifest import commit``, ``commit(txn=...)``."""
+    aliases, imported, _ = _bindings(tree)
+    out = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name):
+            target = (aliases[f.value.id], f.attr) if f.value.id in aliases else None
+        elif isinstance(f, ast.Name):
+            target = imported.get(f.id)
+        else:
+            target = None
+        if target is not None:
+            out += [(*target, kw.arg, node.lineno) for kw in node.keywords if kw.arg]
+    return out
+
+
+def _bad_keywords(tree: ast.AST) -> list[tuple[str, str, str, int]]:
+    """The keyword uses in ``tree`` the called function does not accept."""
+    bad = []
+    for mod, attr, kw, line in _keywords(tree):
+        fn = getattr(importlib.import_module(mod), attr, None)
+        try:
+            params = inspect.signature(fn).parameters
+        except (TypeError, ValueError):
+            continue  # missing (the attribute check reports it) or opaque
+        if kw not in params and not any(
+            p.kind is inspect.Parameter.VAR_KEYWORD for p in params.values()
+        ):
+            bad.append((mod, attr, kw, line))
+    return bad
 
 
 def _files() -> list[Path]:
@@ -100,3 +153,28 @@ def test_no_stale_storage_references():
         if not hasattr(importlib.import_module(mod), attr)
     ]
     assert not stale, "\n".join(stale)
+
+
+def test_no_stale_keyword_arguments():
+    stale = [
+        f"{p.relative_to(ROOT)}:{line}: {mod}.{attr}({kw}=...)"
+        for p in _files()
+        for mod, attr, kw, line in _bad_keywords(ast.parse(p.read_text(), str(p)))
+    ]
+    assert not stale, "\n".join(stale)
+
+
+def test_keyword_check_flags_a_deleted_option():
+    """The keyword check is not vacuous: a call passing an option the
+    function does not take is flagged, in both call forms, and the
+    accepted keywords are not."""
+    snippet = (
+        "from sydradb_spark.ingest import stream_points_sink\n"
+        "from sydradb_spark import manifest as mf\n"
+        "stream_points_sink(p, t, c, store=s, app_id='stream-x')\n"
+        "mf.commit(t, files, txn=(a, 0), store=s, retries=3)\n"
+    )
+    assert _bad_keywords(ast.parse(snippet)) == [
+        ("sydradb_spark.ingest", "stream_points_sink", "app_id", 3),
+        ("sydradb_spark.manifest", "commit", "retries", 4),
+    ]

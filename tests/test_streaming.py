@@ -664,7 +664,12 @@ def test_stream_sink_maintenance_prunes_manifest_versions(spark, tmp_path):
     with maintenance_every set, the sink vacuums old version files while
     the data (append-only, always referenced by LATEST) stays intact."""
     from sydradb_spark import manifest as mf
-    from sydradb_spark.ingest import NDJSON_SCHEMA, parse_ndjson, stream_points_sink
+    from sydradb_spark.ingest import (
+        NDJSON_SCHEMA,
+        checkpoint_app_id,
+        parse_ndjson,
+        stream_points_sink,
+    )
     from sydradb_spark.storage import read_points
 
     src = tmp_path / "src"
@@ -695,7 +700,7 @@ def test_stream_sink_maintenance_prunes_manifest_versions(spark, tmp_path):
     assert len(versions) <= 3, sorted(p.name for p in versions)
     # data intact, replay guard intact
     assert read_points(spark, table).count() == 5
-    app_id = (tmp_path / "ck" / "_sydra_app_id").read_text().strip()
+    app_id = checkpoint_app_id(spark, ck)
     assert mf.read_txn(table, app_id) == 4
 
 
@@ -792,55 +797,34 @@ def test_compact_rollup_keeps_each_apps_live_tail(spark, tmp_path):
     assert folded["s.a"]["cnt"] == 4 and folded["s.b"]["cnt"] == 4
 
 
-def test_mint_app_id_store_converges_under_races():
-    """Object-store app-id mint (VERDICT r11 item 2): racing starters all
-    converge on one id via the store's conditional PUT."""
-    import threading
+def test_checkpoint_identity_order(spark, tmp_path):
+    """One identity per checkpoint: an earlier release's ``_sydra_app_id``
+    marker wins; else Spark's own checkpoint id; else None before the
+    query's first start."""
+    import json
 
-    from sydradb_spark.ingest import mint_app_id
-    from sydradb_spark.objectstore import MemoryObjectStore
+    from sydradb_spark.ingest import checkpoint_app_id
 
-    store = MemoryObjectStore()
-    got: list[str] = []
-
-    def starter():
-        got.append(mint_app_id(store))
-
-    threads = [threading.Thread(target=starter) for _ in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert len(set(got)) == 1 and got[0].startswith("stream-")
-    # restarts read the same identity back
-    assert mint_app_id(store) == got[0]
+    ck = tmp_path / "ck"
+    assert checkpoint_app_id(spark, str(ck)) is None  # never started
+    ck.mkdir()
+    (ck / "metadata").write_text(json.dumps({"id": "0f-meta"}) + "\n")
+    assert checkpoint_app_id(spark, str(ck)) == "stream-0f-meta"
+    assert checkpoint_app_id(spark, "file://" + str(ck)) == "stream-0f-meta"
+    (ck / "_sydra_app_id").write_text("stream-legacy\n")
+    assert checkpoint_app_id(spark, str(ck)) == "stream-legacy"
+    assert checkpoint_app_id(spark, "file://" + str(ck)) == "stream-legacy"
 
 
-def test_resolve_app_id_order(tmp_path):
-    """Explicit id > store mint > POSIX checkpoint mint > defer (None)."""
-    from sydradb_spark.ingest import resolve_app_id
-    from sydradb_spark.objectstore import LocalFSObjectStore
+def test_stream_sink_exactly_once_replay_with_legacy_app_id(spark, tmp_path):
+    """A checkpoint an earlier release started holds a ``_sydra_app_id``
+    marker, and its ledger entries are keyed by it. The sink keeps that id
+    across the upgrade: a crash in the write->checkpoint gap replays as a
+    no-op under the same ledger key, and nothing rewrites the marker."""
+    import pathlib
 
-    ck = str(tmp_path / "ck")
-    store = LocalFSObjectStore(str(tmp_path / "store"))
-    assert resolve_app_id(ck, app_id="stream-me") == "stream-me"
-    minted = resolve_app_id("s3://bucket/ck", app_id_store=store)
-    assert minted.startswith("stream-")
-    assert resolve_app_id("s3://bucket/ck", app_id_store=store) == minted
-    posix = resolve_app_id(ck)
-    assert posix.startswith("stream-") and posix != minted
-    # file:// URI is still POSIX — same marker, same id
-    assert resolve_app_id("file://" + ck) == posix
-    # non-POSIX with no store: defer to Spark's checkpoint metadata
-    assert resolve_app_id("s3://bucket/ck") is None
-
-
-def test_stream_sink_exactly_once_replay_with_store_minted_id(spark, tmp_path):
-    """The kill-in-the-gap replay guard with the app id minted through the
-    object-store CAS instead of the POSIX in-checkpoint marker — the path an
-    s3:// checkpoint deployment takes (VERDICT r11 item 2 done-criterion)."""
+    from sydradb_spark import manifest as mf
     from sydradb_spark.ingest import NDJSON_SCHEMA, parse_ndjson, stream_points_sink
-    from sydradb_spark.objectstore import LocalFSObjectStore
     from sydradb_spark.storage import read_points
 
     src = tmp_path / "src"
@@ -850,7 +834,8 @@ def test_stream_sink_exactly_once_replay_with_store_minted_id(spark, tmp_path):
         '{"series": "s.b", "ts": 3700, "value": 3.0}\n'
     )
     table, ck = str(tmp_path / "tbl"), str(tmp_path / "ck")
-    store = LocalFSObjectStore(str(tmp_path / "idstore"))
+    pathlib.Path(ck).mkdir()
+    (pathlib.Path(ck) / "_sydra_app_id").write_text("stream-legacy")
 
     def points_stream():
         return parse_ndjson(spark.readStream.schema(NDJSON_SCHEMA).json(str(src)))
@@ -858,40 +843,36 @@ def test_stream_sink_exactly_once_replay_with_store_minted_id(spark, tmp_path):
     def crash(_batch_id):
         raise RuntimeError("injected crash in the write->checkpoint gap")
 
-    q = stream_points_sink(
-        points_stream(), table, ck, app_id_store=store, _after_write_hook=crash
-    )
+    q = stream_points_sink(points_stream(), table, ck, _after_write_hook=crash)
     with pytest.raises(Exception, match="injected crash"):
         q.awaitTermination(120)
     assert read_points(spark, table).count() == 2
-    # restart mints the SAME id from the store -> replayed batch 0 no-ops
-    q2 = stream_points_sink(points_stream(), table, ck, app_id_store=store)
+    q2 = stream_points_sink(points_stream(), table, ck)
     q2.awaitTermination(120)
     got = read_points(spark, table)
     assert got.count() == 2
     assert got.dropDuplicates(["series_id", "ts", "value"]).count() == 2
-    # no POSIX marker was ever written — the store carried the identity
+    assert mf.read_txn(table, "stream-legacy") == 0
+    assert mf.read_ledger(table) == {"stream-legacy": 0}
+    assert (pathlib.Path(ck) / "_sydra_app_id").read_text() == "stream-legacy"
+
+
+def test_stream_sink_lazy_spark_metadata_app_id(spark, tmp_path):
+    """The ledger key is Spark's own checkpoint metadata id, read through
+    the Hadoop FS API on the first batch, and it is stable across restarts
+    — the identity every checkpoint filesystem (local, s3a, hdfs) has. A
+    crash in the write->checkpoint gap replays as a no-op under it."""
+    import json as _json
     import pathlib
 
-    assert not (pathlib.Path(ck) / "_sydra_app_id").exists()
-
-
-def test_stream_sink_lazy_spark_metadata_app_id(spark, tmp_path, monkeypatch):
-    """Non-POSIX checkpoint URI with no store client: the sink defers to
-    Spark's own checkpoint metadata id, read through the Hadoop FS API on
-    the first batch, and the identity is stable across restarts — so the
-    exactly-once ledger engages on s3://-style deployments (VERDICT r11
-    item 2). Simulated by forcing the eager app-id resolution to defer (as
-    it does on a URI checkpoint) — patching datafs.local_path itself would
-    also poison the TABLE-path triage every data-file operation shares."""
-    from sydradb_spark import ingest
     from sydradb_spark import manifest as mf
-    from sydradb_spark.ingest import NDJSON_SCHEMA, parse_ndjson, stream_points_sink
-    from sydradb_spark.storage import read_points
-
-    monkeypatch.setattr(
-        ingest, "resolve_app_id", lambda ck, app_id=None, app_id_store=None: None
+    from sydradb_spark.ingest import (
+        NDJSON_SCHEMA,
+        checkpoint_app_id,
+        parse_ndjson,
+        stream_points_sink,
     )
+    from sydradb_spark.storage import read_points
 
     src = tmp_path / "src"
     src.mkdir()
@@ -912,15 +893,48 @@ def test_stream_sink_lazy_spark_metadata_app_id(spark, tmp_path, monkeypatch):
     q2.awaitTermination(120)
     assert read_points(spark, table).count() == 1  # replay no-op'd
 
-    # the ledger key IS Spark's metadata id (file read back via Hadoop FS)
-    import json as _json
-    import pathlib
-
     meta_id = "stream-" + _json.loads(
         (pathlib.Path(ck) / "metadata").read_text()
     )["id"]
-    assert ingest.spark_checkpoint_metadata_id(spark, "file://" + ck) == meta_id
+    assert checkpoint_app_id(spark, "file://" + ck) == meta_id
     assert mf.read_txn(table, meta_id) == 0
+
+
+def test_fresh_streams_write_no_app_id_marker(spark, tmp_path):
+    """Nothing writes ``_sydra_app_id`` any more: a fresh points stream and
+    a fresh rollup stream each key their ledger by the checkpoint's own id
+    and leave no marker in their checkpoint."""
+    import pathlib
+
+    from sydradb_spark import manifest as mf
+    from sydradb_spark.ingest import (
+        NDJSON_SCHEMA,
+        checkpoint_app_id,
+        parse_ndjson,
+        stream_points_sink,
+    )
+    from sydradb_spark.streaming.rollup_stream import STORE_TABLE
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "b1.ndjson").write_text('{"series": "s.a", "ts": 100, "value": 1.0}\n')
+    table, roll = str(tmp_path / "tbl"), str(tmp_path / "roll")
+    ck_points, ck_roll = str(tmp_path / "ck_points"), str(tmp_path / "ck_roll")
+    stream_points_sink(
+        parse_ndjson(spark.readStream.schema(NDJSON_SCHEMA).json(str(src))),
+        table,
+        ck_points,
+    ).awaitTermination(120)
+    stream_rollup(spark, str(src), roll, ck_roll).awaitTermination(120)
+    ids = [checkpoint_app_id(spark, ck) for ck in (ck_points, ck_roll)]
+    for ck, app_id in zip((ck_points, ck_roll), ids):
+        assert not (pathlib.Path(ck) / "_sydra_app_id").exists()
+        # stream-<uuid>, no '_': the rollup's live-tail grouping rsplits
+        # batch dir names on their last '_'
+        assert app_id.startswith("stream-") and "_" not in app_id
+    assert ids[0] != ids[1]
+    assert mf.read_txn(table, ids[0]) == 0
+    assert mf.read_txn(roll, ids[1], key=STORE_TABLE) == 0
 
 
 def test_stream_rollup_crash_replay_converges(spark, tmp_path):
@@ -991,12 +1005,10 @@ def test_two_streams_append_same_table_concurrently(spark, tmp_path):
     assert got.where("series = 's.a'").count() == 4
     assert got.where("series = 's.b'").count() == 3
     # independent per-app ledgers, both at their last batch id
-    from pathlib import Path
+    from sydradb_spark.ingest import checkpoint_app_id
 
-    ids = [
-        (Path(str(tmp_path / f"ck_{app}")) / "_sydra_app_id").read_text().strip()
-        for app in ("a", "b")
-    ]
+    ids = [checkpoint_app_id(spark, str(tmp_path / f"ck_{app}")) for app in ("a", "b")]
+    assert ids[0] != ids[1]
     assert mf.read_txn(table, ids[0]) == 3 and mf.read_txn(table, ids[1]) == 2
 
 
@@ -1004,10 +1016,10 @@ def test_stream_rollup_raises_on_unresolvable_app_id(spark, tmp_path, monkeypatc
     """ADVICE r12: the rollup sink must mirror stream_points_sink and FAIL
     when the lazy app-id resolution yields None, instead of silently keying
     batch dirs 'b_None_<batch>' (which two streams/resets would clobber)."""
+    from sydradb_spark import ingest
     from sydradb_spark.streaming import rollup_stream as rs
 
-    monkeypatch.setattr(rs, "resolve_app_id", lambda *a, **k: None)
-    monkeypatch.setattr(rs, "spark_checkpoint_metadata_id", lambda *a, **k: None)
+    monkeypatch.setattr(ingest, "checkpoint_app_id", lambda *a, **k: None)
     src = tmp_path / "src"
     src.mkdir()
     (src / "b1.ndjson").write_text('{"series": "s.a", "ts": 100, "value": 1.0}\n')
